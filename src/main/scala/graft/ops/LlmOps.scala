@@ -242,7 +242,7 @@ object LlmOps {
     // metadata, memoized), never from the core count, so the same
     // formula right-sizes at any scale.
     val n = core.statCount(dir + "#embeddings", e)
-    val parts = core.pairScanPartitions(n * math.max(0L, n - 1))
+    val parts = core.pairScanPartitions(core.pairCount(n, n - 1))
     val a0 = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0
     val b = e.select($"vec_id".as("b_id"), $"label".as("b_label"),

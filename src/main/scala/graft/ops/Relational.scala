@@ -255,7 +255,7 @@ object Relational {
     val n = core.statCount(dir + "#part", t(s, dir, "part"))
     val nBrands = core.statCount(dir + "#part_brands",
       t(s, dir, "part").select($"p_brand").distinct())
-    val parts = core.pairScanPartitions(n * n / math.max(1L, nBrands))
+    val parts = core.pairScanPartitions(core.pairCount(n, n) / math.max(1L, nBrands))
     val a0 = t(s, dir, "part")
       .select($"p_brand", $"p_partkey".as("a_key"),
         cents($"p_retailprice").as("a_price_c"))

@@ -418,7 +418,7 @@ object TrainingOps {
     // the whole pair loop ran single-task (the cosineTopk fix;
     // guide §2). n(n−1)/2 ordered pairs survive the a < b condition.
     val n = core.statCount(dir + "#embeddings", e)
-    val parts = core.pairScanPartitions(n * math.max(0L, n - 1) / 2)
+    val parts = core.pairScanPartitions(core.pairCount(n, n - 1) / 2)
     val a0 = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0
     val b = e.select($"vec_id".as("b_id"), $"emb".as("b_emb"), $"nrm".as("b_nrm"))

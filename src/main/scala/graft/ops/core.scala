@@ -19,8 +19,13 @@ import org.apache.spark.sql.functions._
   * materialize) in `core.withCaches(spark) { … }` and get back to
   * zero retained storage deterministically (ComposedSessionSpec pins
   * this); Bench/Verify wrap every key execution. Calling ops with no
-  * scope open still works — the caches simply live until
-  * `spark.catalog.clearCache()`, the pre-r5 contract.
+  * scope open still works, but only [[cached]] frames are then
+  * released by `spark.catalog.clearCache()`: the `localCheckpoint`
+  * blocks of the iterative ops (the doubled edge list of
+  * `Relational.qSqlRecursive`, the edge and per-round label frames of
+  * TrainingOps' connected-components loop) are persisted RDDs that
+  * `clearCache()` does not reach — only a [[withCaches]] scope
+  * releases them.
   */
 object core {
 
@@ -346,7 +351,18 @@ object core {
     */
   def pairScanPartitions(pairs: Long, perTask: Long = 250000L): Int =
     if (pairs < 3000000L) 1
-    else math.min((pairs + perTask - 1) / perTask, 16384L).toInt
+    else math.min(pairs / perTask + (if (pairs % perTask == 0) 0 else 1),
+      16384L).toInt
+
+  /** `a · b` for the pair-count estimates fed to [[pairScanPartitions]],
+    * saturated at `Long.MaxValue` (n² overflows a Long from n ≈ 3·10⁹,
+    * and a wrapped-negative estimate would collapse the scan to one
+    * task). Negative factors count as 0.
+    */
+  def pairCount(a: Long, b: Long): Long =
+    if (a <= 0L || b <= 0L) 0L
+    else if (a > Long.MaxValue / b) Long.MaxValue
+    else a * b
 
   /** Exact money/quantity in integer cents: fixture doubles are
     * 2-dp-generated (verified — max |x*100 - round(x*100)| < 1e-8),

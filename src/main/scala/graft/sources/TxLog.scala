@@ -18,7 +18,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact => jsonCompact, parse, render}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
@@ -100,9 +100,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   * Every data commit records the table schema after it. Appends and
   * upserts validate the writer's frame against the current table
   * schema at commit time: NEW columns are allowed (additive evolution
-  * — old files read them as null via `mergeSchema`), but a DROPPED
-  * column or a TYPE CHANGE on an existing column throws — the
-  * production write-path contract. `overwrite` replaces the schema.
+  * — reads take the logged schema, so old files read them as null),
+  * but a DROPPED column or a TYPE CHANGE on an existing column throws
+  * — the production write-path contract. `overwrite` replaces the
+  * schema.
   *
   * == Why each piece scales to 100 TB ==
   *
@@ -305,13 +306,17 @@ object TxLog {
     * (keyed by the same path strings; a file may be absent — and with
     * a non-identity [[mapping]], stats column keys are REKEYED to
     * logical names at snapshot build, so every downstream stats
-    * consumer speaks logical). Reading a snapshot is unaffected by
-    * later commits — files are immutable and vacuum-protected while
-    * referenced by any retained version.
+    * consumer speaks logical). `schema` is the logged table schema at
+    * `version` (None for logs without a schema line); [[readSnapshot]]
+    * reads with it instead of inferring one from the files. Reading a
+    * snapshot is unaffected by later commits — files are immutable and
+    * vacuum-protected while referenced by any retained version. A
+    * partial read of the same version is `snap.copy(files = …)`.
     */
   final case class Snapshot(version: Long, files: Vector[String],
                             stats: Map[String, FileStats] = Map.empty,
-                            mapping: ColMap = ColMap.identity)
+                            mapping: ColMap = ColMap.identity,
+                            schema: Option[StructType] = None)
 
   /** Commits between checkpoints; replay reads at most this many
     * commit files past the newest checkpoint. Overridable for the
@@ -714,7 +719,7 @@ object TxLog {
     val stats = st.files.iterator.collect {
       case (r, Some(fs)) => s"$table/$r" -> rekey(fs)
     }.toMap
-    Snapshot(v, files, stats, mapping)
+    Snapshot(v, files, stats, mapping, st.schemaJson.flatMap(decodeSchema))
   }
 
   /** Snapshot-isolated read; `asOfVersion` time-travels. An empty
@@ -727,15 +732,24 @@ object TxLog {
 
   /** Read a pinned [[Snapshot]] — the isolation primitive: the frame
     * sees exactly the snapshot's files regardless of later commits.
-    * `mergeSchema` makes ADDITIVE schema evolution work across
-    * versions: files written before a column existed read it as null
-    * (the lakehouse append-evolution rule; pinned in TxLogSpec).
+    * The read takes the snapshot's LOGGED schema (its physical twin
+    * under the column mapping), so building the frame runs no footer
+    * inference job (a parquet read without `.schema` runs one over the
+    * files). Snapshots of more than 32 files still pay Spark's
+    * parallel file-listing job
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). ADDITIVE schema evolution falls
+    * out of the reader's missing-column rule — files written before a
+    * column existed read it as null (the lakehouse append-evolution
+    * rule; pinned in TxLogSpec). Logs with no schema line fall back
+    * to `mergeSchema` inference.
     */
   def readSnapshot(s: SparkSession, snap: Snapshot): DataFrame = {
     require(snap.files.nonEmpty, s"version ${snap.version} has no files")
-    renameToLogical(
-      s.read.option("mergeSchema", "true").parquet(snap.files: _*),
-      snap.mapping)
+    val reader = snap.schema match {
+      case Some(logged) => s.read.schema(snap.mapping.physicalSchema(logged))
+      case None         => s.read.option("mergeSchema", "true")
+    }
+    renameToLogical(reader.parquet(snap.files: _*), snap.mapping)
   }
 
   /** Physical (on-disk) column names → logical, per the mapping:
@@ -745,8 +759,7 @@ object TxLog {
     * pushes filters and pruning through the aliases, so pushdown
     * reaches the parquet scan under the PHYSICAL names.
     */
-  private[graft] def renameToLogical(df: DataFrame,
-                                     mapping: ColMap): DataFrame =
+  private def renameToLogical(df: DataFrame, mapping: ColMap): DataFrame =
     if (mapping.isIdentity) df
     else {
       val rev = mapping.toLogical
@@ -1468,8 +1481,8 @@ object TxLog {
   }
 
   /** One commit's file delta, absolute paths: (op, adds, removes). */
-  private def commitDelta(table: String,
-                          v: Long): (String, Vector[String], Vector[String]) = {
+  private[graft] def commitDelta(table: String,
+                                 v: Long): (String, Vector[String], Vector[String]) = {
     val lines = io.readLines(commitPath(table, v).toString)
     val op = lines.find(_.startsWith("meta "))
       .map(_.split(" ")(1)).getOrElse("append")
@@ -1478,6 +1491,47 @@ object TxLog {
     val removes = lines.iterator.filter(_.startsWith("remove "))
       .map(l => s"$table/${l.substring("remove ".length)}").toVector
     (op, adds, removes)
+  }
+
+  /** One change-feed branch's data-file read: `files` under the feed's
+    * output schema `outSchema` (the logical schema at the range's end)
+    * and its physical twin under `mapping`, the mapping at the same
+    * version. It serves EVERY branch: physical names never change, so
+    * pre-rename and post-rename files read alike, and files predating
+    * additively-evolved columns read them as null. The explicit schema
+    * means no per-branch footer inference (measured: a 1000-version
+    * feed spent 50 s of driver time in 1000 spark.read.parquet
+    * inferences).
+    */
+  private[graft] def readFeedFiles(s: SparkSession, table: String,
+      files: Vector[String], outSchema: StructType,
+      mapping: ColMap): DataFrame = {
+    val missing = files.filterNot(io.exists)
+    require(missing.isEmpty,
+      s"change feed over $table needs ${missing.size} pre-image " +
+      s"file(s) that no longer exist (e.g. ${missing.headOption
+        .getOrElse("")}): a vacuum outran this CDC reader — keep " +
+      s"retention longer than the maximum feed lag")
+    val base = s.read.schema(mapping.physicalSchema(outSchema)).parquet(files: _*)
+    if (mapping.isIdentity) base
+    else base.select(outSchema.fieldNames.toIndexedSeq.map(n =>
+      col(mapping.physical(n)).as(n)): _*)
+  }
+
+  /** BALANCED pairwise union, not reduceLeft: a left-leaning chain over
+    * a long feed range builds a range-deep plan tree (10 k versions = a
+    * 10 k-deep lineage — analyzer/optimizer recursion and O(n²) tree
+    * walks); pairwise folding keeps the tree O(log n) deep at identical
+    * semantics (union is associative; row order is unspecified either
+    * way).
+    */
+  private def balancedUnion(frames: Seq[DataFrame]): DataFrame = {
+    var level = frames.toIndexedSeq
+    while (level.length > 1)
+      level = level.grouped(2).map { g =>
+        if (g.length == 2) g(0).unionByName(g(1)) else g(0)
+      }.toIndexedSeq
+    level.head
   }
 
   /** Row-level CHANGE DATA FEED for `(fromVersion, toVersion]`: every
@@ -1494,19 +1548,27 @@ object TxLog {
     * Per commit class:
     *   - `append`/`txn`: added-file rows → `insert` (metadata-only
     *     classification, no diff — the common case stays one scan);
-    *   - `compact`: content-neutral, emits nothing;
-    *   - `upsert`/`delete`/`overwrite`/`restore`: removed∖added
-    *     (`exceptAll`) → `delete`, added∖removed → `insert`. With
-    *     `key` set (the upsert key), a key present on BOTH sides is
-    *     classified `update_preimage`/`update_postimage` instead —
-    *     the Delta CDF type vocabulary.
+    *   - `compact` and the schema-only commits: content-neutral, emit
+    *     nothing;
+    *   - `upsert`/`delete`/`overwrite`/`restore`/`truncate`: rows of
+    *     removed files count −1, rows of added files +1, and each
+    *     distinct (version, row) nets to a multiplicity n: n < 0 emits
+    *     |n| `delete` rows, n > 0 emits n `insert` rows. With `key` set
+    *     (the upsert key), a non-null key with both net-removed and
+    *     net-added rows at one version is an update instead:
+    *     `update_preimage`/`update_postimage` — the Delta CDF type
+    *     vocabulary. A null key is never an update.
     *
-    * The diff is change-sized, not table-sized: upsert/delete commits
-    * remove only the files their locate step proved touched, so the
-    * frames fed to `exceptAll` are the touched files, and each
-    * version contributes one branch to a lazily-unioned plan (CDC
-    * ranges are bounded by retention; the walk is O(versions-in-range)
-    * commit-file reads on the driver).
+    * ALL rewrite versions of the range diff in ONE shuffle: their
+    * signed pre/post-image rows union into one frame, repartitioned on
+    * (`_commit_version`, key) (unkeyed: hash-grouped on the whole row),
+    * then grouped to n and, keyed, classified by a window over
+    * (`_commit_version`, key) that reuses that partitioning. The diff
+    * is change-sized, not table-sized: upsert/delete commits remove
+    * only the files their locate step proved touched, so the images
+    * are the touched files; each version adds its scans as branches of
+    * a balanced union (CDC ranges are bounded by retention; the walk
+    * is O(versions-in-range) commit-file reads on the driver).
     */
   def readChangeFeed(s: SparkSession, table: String, fromVersion: Long,
                      toVersion: Option[Long] = None,
@@ -1520,99 +1582,68 @@ object TxLog {
       require(!outSchema.fieldNames.contains(c),
         s"table $table already has a '$c' column — CDC cannot annotate it")
     }
-    val dataCols = outSchema.fieldNames.toIndexedSeq
-    // the mapping at `to` serves EVERY branch: physical names never
-    // change, so pre-rename files and post-rename files read alike —
-    // request the physical twin of the known schema, rename back
+    key.foreach(k => require(outSchema.fieldNames.contains(k),
+      s"change key '$k' is not a column of $table"))
+    val dataCols = outSchema.fieldNames.toIndexedSeq.map(col)
     val feedMapping = columnMapping(table, to)
-    def readAligned(files: Vector[String]): DataFrame = {
-      val missing = files.filterNot(io.exists)
-      require(missing.isEmpty,
-        s"change feed over $table needs ${missing.size} pre-image " +
-        s"file(s) that no longer exist (e.g. ${missing.headOption
-          .getOrElse("")}): a vacuum outran this CDC reader — keep " +
-        s"retention longer than the maximum feed lag")
-      // read with the KNOWN table schema — no per-version footer
-      // schema inference (measured: a 1000-version feed spent 50 s of
-      // driver time in 1000 spark.read.parquet inferences; explicit
-      // schema cuts the per-branch cost to plan construction). Files
-      // predating additively-evolved columns read them as null via
-      // the reader's missing-column rule; alignTo stays as the safety
-      // net for any column the reader cannot supply.
-      val physSchema = feedMapping.physicalSchema(outSchema)
-      val base = s.read.schema(physSchema).parquet(files: _*)
-      val logical =
-        if (feedMapping.isIdentity) base
-        else base.select(outSchema.fieldNames.toIndexedSeq.map(n =>
-          col(feedMapping.physical(n)).as(n)): _*)
-      TxLogRelation.alignTo(logical, outSchema)
-        .select(dataCols.map(col): _*)
-    }
-    def tag(df: DataFrame, tpe: String, v: Long): DataFrame =
-      df.withColumn("_change_type", lit(tpe))
-        .withColumn("_commit_version", lit(v))
-    val perVersion = ((fromVersion + 1) to to).flatMap { v =>
+    def readAligned(files: Vector[String]): DataFrame =
+      readFeedFiles(s, table, files, outSchema, feedMapping)
+    def stamp(df: DataFrame, v: Long): DataFrame =
+      df.withColumn("_commit_version", lit(v))
+    val inserts = Vector.newBuilder[DataFrame]
+    val images = Vector.newBuilder[DataFrame]
+    ((fromVersion + 1) to to).foreach { v =>
       val (op, adds, removes) = commitDelta(table, v)
       op match {
-        case "create" | "compact" | "altschema" | "remap" => Nil
+        case "create" | "compact" | "altschema" | "remap" => ()
         case "append" | "txn" =>
-          if (adds.isEmpty) Nil else Seq(tag(readAligned(adds), "insert", v))
-        case _ if adds.isEmpty && removes.isEmpty =>
-          // a rewrite commit that moved nothing (restore to the
-          // current version, upsert of an empty frame into an empty
-          // table): content-neutral, emits nothing. Without this
-          // short-circuit the pre-frame below calls
-          // spark.read.parquet() with ZERO paths and one such version
-          // permanently breaks every feed range spanning it with an
-          // unrelated UNABLE_TO_INFER_SCHEMA (round-12 ADVICE medium)
-          Nil
+          if (adds.nonEmpty) inserts += stamp(readAligned(adds), v)
+            .withColumn("_change_type", lit("insert"))
         case _ => // upsert | delete | overwrite | restore | truncate
-          val pre =
-            if (removes.isEmpty) readAligned(adds).limit(0)
-            else readAligned(removes)
-          val post =
-            if (adds.isEmpty) pre.limit(0) else readAligned(adds)
-          val deleted = pre.exceptAll(post)
-          val inserted = post.exceptAll(pre)
-          key match {
-            case None =>
-              Seq(tag(deleted, "delete", v), tag(inserted, "insert", v))
-            case Some(k) =>
-              require(dataCols.contains(k),
-                s"change key '$k' is not a column of $table")
-              // a key on both sides of the diff is an UPDATE; the
-              // semi/anti split is over the change-sized diff frames
-              val updKeys = deleted.select(k).intersect(inserted.select(k))
-              Seq(
-                tag(deleted.join(updKeys, Seq(k), "left_anti"), "delete", v),
-                tag(deleted.join(updKeys, Seq(k), "left_semi"),
-                  "update_preimage", v),
-                tag(inserted.join(updKeys, Seq(k), "left_anti"), "insert", v),
-                tag(inserted.join(updKeys, Seq(k), "left_semi"),
-                  "update_postimage", v))
-          }
+          // a rewrite that moved nothing (restore to the current
+          // version, upsert of an empty frame into an empty table)
+          // adds no branch: content-neutral, and never a zero-path
+          // parquet read (round-12 ADVICE medium)
+          if (removes.nonEmpty)
+            images += stamp(readAligned(removes), v).withColumn("__graft_w", lit(-1))
+          if (adds.nonEmpty)
+            images += stamp(readAligned(adds), v).withColumn("__graft_w", lit(1))
       }
     }
-    val cdfSchema = StructType(outSchema.fields ++ Seq(
-      StructField("_change_type", StringType, nullable = false),
-      StructField("_commit_version", LongType, nullable = false)))
-    if (perVersion.isEmpty)
+    val outCols = dataCols ++ Seq(col("_change_type"), col("_commit_version"))
+    val imageFrames = images.result()
+    val rewrites =
+      if (imageFrames.isEmpty) None
+      else {
+        val signed = balancedUnion(imageFrames)
+        val version = col("_commit_version")
+        val n = col("__graft_n")
+        val netted = (key match {
+          case Some(k) => signed.repartition(version, col(k))
+          case None    => signed
+        }).groupBy(version +: dataCols: _*)
+          .agg(sum(col("__graft_w")).as("__graft_n"))
+          .where(n =!= 0)
+        val plain = when(n < 0, "delete").otherwise("insert")
+        val changeType = key match {
+          case None => plain
+          case Some(k) =>
+            val w = Window.partitionBy(version, col(k))
+            when(col(k).isNotNull && min(n).over(w) < 0 && max(n).over(w) > 0,
+              when(n < 0, "update_preimage").otherwise("update_postimage"))
+              .otherwise(plain)
+        }
+        Some(netted.withColumn("_change_type", changeType)
+          .withColumn("__graft_r", explode(sequence(lit(1L), functions.abs(n))))
+          .select(outCols: _*))
+      }
+    val branches = inserts.result().map(_.select(outCols: _*)) ++ rewrites
+    if (branches.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        cdfSchema)
-    else {
-      // BALANCED pairwise union, not reduceLeft: a left-leaning chain
-      // over a long feed range builds a range-deep plan tree (10 k
-      // versions = a 10 k-deep lineage — analyzer/optimizer recursion
-      // and O(n²) tree walks); pairwise folding keeps the tree
-      // O(log range) deep at identical semantics (union is
-      // associative; row order is unspecified either way).
-      var level: IndexedSeq[DataFrame] = perVersion.toIndexedSeq
-      while (level.length > 1)
-        level = level.grouped(2).map { g =>
-          if (g.length == 2) g(0).unionByName(g(1)) else g(0)
-        }.toIndexedSeq
-      level.head
-    }
+        StructType(outSchema.fields ++ Seq(
+          StructField("_change_type", StringType, nullable = false),
+          StructField("_commit_version", LongType, nullable = false))))
+    else balancedUnion(branches)
   }
 
   /** APPLY a change-feed batch to a replica: net out `changes` (rows
@@ -1642,7 +1673,10 @@ object TxLog {
     * multiple distinct surviving rows for one key at the winning
     * version — netting would have to pick one ARBITRARILY and the
     * replica would silently diverge from the source. That ambiguity
-    * is detected and fails loudly here instead (round-12 ADVICE low).
+    * is detected and fails loudly here instead (round-12 ADVICE low):
+    * the netting window pass also compares, per key, the min and max
+    * of the winning surviving rows, and a `limit(3)` over the
+    * persisted pass names up to three offending keys.
     */
   def applyChanges(s: SparkSession, table: String, changes: DataFrame,
                    key: String): Long = {
@@ -1658,29 +1692,24 @@ object TxLog {
         .when(col("_change_type") === "delete", 1).otherwise(2)
     val w = Window.partitionBy(col(key))
       .orderBy(col("_commit_version").desc, rankExpr)
-    // ONE windowed pass computes both the guard's rank() and the
-    // netting pass's row_number() over a persisted frame — the
-    // un-persisted guard re-executed the whole change-feed plan (all
-    // pre/post-image file reads) a second time per batch (round-13
-    // ADVICE low). rank and row_number share one WindowSpec, so this
-    // is a single window exec over a single materialization.
+    // ambiguity guard, in the same window pass as the netting: if the
+    // WINNING (version, rank-class) group of some key holds >1
+    // DISTINCT surviving row, any choice is arbitrary — fail naming
+    // the key instead of diverging silently. Under the default RANGE
+    // frame, min/max at the key's first row span exactly its peers,
+    // i.e. the winning group; comparing the min and max of the whole
+    // input row lets benign exact duplicates through, and delete
+    // winners are key-only so duplicates of them are benign. The frame
+    // is persisted: the guard's limit(3) and the netting read one
+    // materialization of the change-feed plan (round-13 ADVICE low).
+    val row = struct(changes.columns.toIndexedSeq.map(col): _*)
     val annotated = changes
-      .withColumn("__graft_rk", rank().over(w))
       .withColumn("__graft_rn", row_number().over(w))
+      .withColumn("__graft_amb", col("__graft_rn") === 1 && rankExpr === 0 &&
+        !(min(row).over(w) <=> max(row).over(w)))
       .persist()
     try {
-      // ambiguity guard: if the WINNING (version, rank-class) group
-      // for some key holds >1 DISTINCT surviving row, any choice is
-      // arbitrary — fail naming the key instead of diverging silently.
-      // rank() (not row_number) ties the whole winning group at 1; the
-      // distinct (AFTER dropping the helper columns — row_number makes
-      // every row unique) collapses benign exact-duplicate rows, and
-      // delete winners are key-only so duplicates of them are benign.
-      val ambiguous = annotated.where(col("__graft_rk") === 1)
-        .where(col("_change_type").isin("insert", "update_postimage"))
-        .drop("__graft_rk", "__graft_rn")
-        .dropDuplicates()
-        .groupBy(col(key)).count().where(col("count") > 1)
+      val ambiguous = annotated.where(col("__graft_amb"))
         .select(col(key)).limit(3).collect()
       require(ambiguous.isEmpty,
         s"applyChanges: key(s) ${ambiguous.map(_.get(0)).mkString(", ")} " +
@@ -1688,7 +1717,7 @@ object TxLog {
         s"— '$key' is not unique per row in the source (the upsert-key " +
         s"precondition); netting would silently keep an arbitrary row")
       val latest = annotated.where(col("__graft_rn") === 1)
-        .drop("__graft_rk", "__graft_rn")
+        .drop("__graft_rn", "__graft_amb")
       val ups = latest
         .where(col("_change_type").isin("insert", "update_postimage"))
         .drop("_change_type", "_commit_version")
@@ -1914,7 +1943,7 @@ object TxLog {
   def truncate(table: String): Long = {
     val snap = snapshot(table)
     if (snap.files.isEmpty) return snap.version
-    val schemaJson = tableSchema(table, snap.version).map(_.json)
+    val schemaJson = snap.schema.map(_.json)
     commit(table, "truncate", snap.version, Nil,
       snap.files.map(relative(table, _)), schemaJson)
   }
@@ -1966,48 +1995,55 @@ object TxLog {
     * candidates. With `useStats = false` every file is a candidate
     * (the pre-round-10 full-scan locate, kept measurable for the
     * probe's A/B).
+    *
+    * Small update sets (≤ [[keyPruneLimit]] non-null key rows) cost one
+    * shuffle-free `limit` collect: the keys are deduplicated and pruned
+    * per key on the driver. Larger sets take one min/max job and prune
+    * on the update span only. The touched-file list is deduplicated
+    * per partition, not by a shuffle.
     */
   private[graft] def locateTouched(s: SparkSession, snap: Snapshot,
                                    updates: DataFrame, key: String,
                                    useStats: Boolean = true)
       : (Vector[String], Vector[String]) = {
+    val nonNullKeys = updates.select(col(key)).where(col(key).isNotNull)
+    // non-null keys of a type normKey can't map to the stats domain
+    // (DecimalType, Boolean, binary, …): stats can't decide anything,
+    // so EVERY file is a candidate and the semi-join below does the
+    // narrowing — conflating this with the all-null case silently
+    // skipped the rewrite and left duplicate/undead keys (round-11
+    // ADVICE high fix)
+    def spanPrune(): Vector[String] = {
+      val bounds = updates.agg(min(col(key)), max(col(key))).head()
+      normKey(bounds.get(0)).zip(normKey(bounds.get(1))) match {
+        case None => snap.files
+        case Some((umin, umax)) => pruneCandidates(snap, key, umin, umax, None)
+      }
+    }
     val candidates =
       if (!useStats) snap.files
       else {
-        val bounds = updates.agg(min(col(key)), max(col(key))).head()
-        if (bounds.isNullAt(0) || bounds.isNullAt(1))
-          Vector.empty // no non-null update keys: nothing matches (SQL
-                       // equality on null never joins)
-        else normKey(bounds.get(0)).zip(normKey(bounds.get(1))) match {
-          case None =>
-            // non-null keys of a type normKey can't map to the stats
-            // domain (DecimalType, Boolean, binary, …): stats can't
-            // decide anything, so EVERY file is a candidate and the
-            // semi-join below does the narrowing — conflating this
-            // with the all-null case silently skipped the rewrite and
-            // left duplicate/undead keys (round-11 ADVICE high fix)
-            snap.files
-          case Some((umin, umax)) =>
-            // the truncation probe must count COLLECTED rows, before
-            // any null is dropped by normKey — a null inside the
-            // sample window could otherwise mask a >limit key set and
-            // silently prune files holding the unsampled keys
-            val sampleRows = updates.select(col(key))
-              .where(col(key).isNotNull).distinct()
-              .limit(keyPruneLimit + 1).collect()
-            val keys =
-              if (sampleRows.length <= keyPruneLimit)
-                Some(sampleRows.toSeq.flatMap(r => normKey(r.get(0))))
-              else None
-            pruneCandidates(snap, key, umin, umax, keys)
+        // key ROWS, not distinct values: any set above the limit
+        // (duplicate-heavy ones too) takes the span path
+        val sample = nonNullKeys.limit(keyPruneLimit + 1).collect()
+        if (sample.length > keyPruneLimit) spanPrune()
+        else {
+          val keys = sample.iterator.map(r => normKey(r.get(0))).toVector.distinct
+          if (keys.isEmpty) Vector.empty // no non-null update keys: nothing
+                                         // matches (SQL equality on null
+                                         // never joins)
+          else if (keys.contains(None)) snap.files // unprunable key type
+          else // per-key pruning never reads the span bounds
+            pruneCandidates(snap, key, null, null, Some(keys.flatten))
         }
       }
     if (candidates.isEmpty) return (candidates, Vector.empty)
-    val touched = readSnapshot(s, Snapshot(snap.version, candidates, snap.stats, snap.mapping))
+    val touched = readSnapshot(s, snap.copy(files = candidates))
       .withColumn("_graft_file", input_file_name())
       .join(updates.select(col(key)), Seq(key), "left_semi")
-      .select(col("_graft_file")).distinct()
-      .collect().map(r => abs(Paths.get(new java.net.URI(r.getString(0)).getPath).toString))
+      .select(col("_graft_file")).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().map(f => abs(Paths.get(new java.net.URI(f).getPath).toString))
       .toSet
     (candidates, snap.files.filter(f => touched.contains(abs(f))))
   }
@@ -2069,7 +2105,7 @@ object TxLog {
       // survivors from touched files + all update rows, one rewrite
       val survivors =
         if (touchedFiles.isEmpty) u.limit(0)
-        else readSnapshot(s, Snapshot(snap.version, touchedFiles, snap.stats, snap.mapping))
+        else readSnapshot(s, snap.copy(files = touchedFiles))
           .join(u.select(col(key)), Seq(key), "left_anti")
       val rewritten = survivors.unionByName(u, allowMissingColumns = true)
       val adds = stage(s, table, rewritten, spec)
@@ -2094,7 +2130,7 @@ object TxLog {
     try {
       val (_, touchedFiles) = locateTouched(s, snap, k, key)
       if (touchedFiles.isEmpty) return snap.version
-      val survivors = readSnapshot(s, Snapshot(snap.version, touchedFiles, snap.stats, snap.mapping))
+      val survivors = readSnapshot(s, snap.copy(files = touchedFiles))
         .join(k, Seq(key), "left_anti")
       val adds = stage(s, table, survivors,
         partitionSpec(table, snap.version))
@@ -2137,7 +2173,7 @@ object TxLog {
       if (touchedFiles.isEmpty && u.isEmpty) return snap.version
       val survivors =
         if (touchedFiles.isEmpty) u.limit(0)
-        else readSnapshot(s, Snapshot(snap.version, touchedFiles, snap.stats, snap.mapping))
+        else readSnapshot(s, snap.copy(files = touchedFiles))
           .join(affected, Seq(key), "left_anti")
       val rewritten = survivors.unionByName(u, allowMissingColumns = true)
       val adds = stage(s, table, rewritten, spec)
@@ -2281,13 +2317,13 @@ object TxLog {
       .map(relative(table, _))
     val adds = target.files.filterNot(f => curSet.contains(abs(f)))
       .map(f => relative(table, f) -> target.stats.get(f))
-    val schemaJson = tableSchema(table, version).map(_.json)
+    val schemaJson = target.schema.map(_.json)
     // restoring to a state the table is already in (same live set AND
     // same schema — e.g. restore(t, currentVersion)) is a true no-op:
     // don't write an empty rewrite commit (it would carry zero
     // adds/removes and pollute history/CDC with a contentless version)
     if (adds.isEmpty && removes.isEmpty &&
-        schemaJson == tableSchema(table, cur.version).map(_.json))
+        schemaJson == cur.schema.map(_.json))
       return cur.version
     commit(table, "restore", cur.version, adds, removes, schemaJson)
   }

@@ -268,7 +268,7 @@ class TxLogV2Table(val path: String, asOf: Option[Long])
   private[sources] val snap = TxLog.snapshot(path, asOf)
 
   private[sources] val tableSchema: StructType =
-    TxLog.tableSchema(path, snap.version).getOrElse {
+    snap.schema.getOrElse {
       require(snap.files.nonEmpty,
         s"txlog table at $path has neither a logged schema nor files")
       TxLog.readSnapshot(spark, snap).schema
@@ -797,12 +797,11 @@ class TxLogRowLevelOperation(spark: SparkSession, path: String,
             // rows matching the command condition ⊆ rows matching the
             // pushed filters, so files with no filter-passing row hold
             // no matches — dropping them from the groups is sound.
-            // renameToLogical first: the files store physical names,
-            // the condition references logical ones
+            // readSnapshot renames to logical: the files store
+            // physical names, the condition references logical ones
             val base = TxLogRelation.alignTo(
-              TxLog.renameToLogical(
-                spark.read.option("mergeSchema", "true")
-                  .parquet(candidates: _*), snap.mapping), tableSchema)
+              TxLog.readSnapshot(spark, snap.copy(files = candidates)),
+              tableSchema)
             val touched = base.where(cols.reduce(_ && _))
               .select(input_file_name()).distinct()
               .collect().map(r => TxLogV2Util.normFileName(r.getString(0)))

@@ -495,14 +495,12 @@ class TxLogRelation(override val sqlContext: SQLContext, path: String,
   private val snap = TxLog.snapshot(path, asOf)
 
   private def readFiles(files: Vector[String]): DataFrame =
-    TxLog.readSnapshot(sqlContext.sparkSession,
-      TxLog.Snapshot(snap.version, files, snap.stats, snap.mapping))
+    TxLog.readSnapshot(sqlContext.sparkSession, snap.copy(files = files))
 
   // the log's recorded schema (includes additive evolution across
   // versions) when present; else inferred from the snapshot's files
   override val schema: StructType =
-    TxLog.tableSchema(path, snap.version)
-      .getOrElse(readFiles(snap.files).schema)
+    snap.schema.getOrElse(readFiles(snap.files).schema)
 
   /** Scan with FILE SKIPPING: the pushed filters are first evaluated
     * against each live file's footer min/max from the log (metadata

@@ -124,4 +124,23 @@ class PropertySpec extends SparkSuite {
         $"value_c" / 100.0)).count() == out.count(), "not idempotent")
     }
   }
+
+  test("pair-count estimates saturate: pairScanPartitions never returns 1 " +
+       "for n >= 2500, up to Long.MaxValue") {
+    val rnd = new Random(2500L)
+    // log-uniform over [2500, Long.MaxValue], plus the edges around the
+    // first n whose n(n-1) overflows a Long
+    val span = math.log(Long.MaxValue.toDouble / 2500.0)
+    val ns = Seq(2500L, 2501L, 3037000499L, 3037000500L, 3037000501L,
+      4294967296L, Long.MaxValue - 1, Long.MaxValue) ++
+      Seq.fill(5000)(math.min(Long.MaxValue.toDouble,
+        2500.0 * math.exp(rnd.nextDouble() * span)).toLong)
+    ns.foreach { n =>
+      val ordered = ops.core.pairCount(n, n - 1)
+      assert(ordered > 0L && ops.core.pairScanPartitions(ordered) > 1, s"n=$n")
+      assert(ops.core.pairScanPartitions(ordered / 2) > 1, s"n=$n unordered")
+    }
+    assert(ops.core.pairCount(Long.MaxValue, Long.MaxValue) == Long.MaxValue)
+    assert(ops.core.pairScanPartitions(Long.MaxValue) == 16384)
+  }
 }

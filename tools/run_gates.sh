@@ -1,17 +1,32 @@
 #!/bin/bash
-# Round-13 gate refresh (VERDICT r12 task 3: regenerate the 100x
-# artifact on the current build). Same pipeline as run_gates_r12b.sh,
-# run from a compiled worktree (GATE_TREE) so main-tree compiles never
-# swap classes under the gate JVMs; fixtures are REUSED when already
-# present (ScaleProbeSf1 is untouched this round — the generators are
-# deterministic, same code => same fixtures).
+# Decade-gate refresh for one round: regenerate the 10x and 100x
+# correctness artifacts on the current build, sequentially (engine
+# shuffle scratch and the DuckDB oracle's temp spill cannot share the
+# disk at 100x).
 #
-#   GATE_TREE=/tmp/gate13 tools/run_gates_r13.sh
+#   GATE_TREE=/tmp/gate<round> tools/run_gates.sh <round>
+#
+# Runs from a compiled copy of the tree (GATE_TREE, default
+# /tmp/gate<round>; `sbt -batch Test/compile` there first) so compiles
+# in the working tree never swap classes under the gate JVMs. The
+# synthetic fixtures are reused when present (the generators are
+# deterministic) and generated otherwise.
+#
+# Steps: fixtures -> 10x dump + full DuckDB gate -> 100x dump (oracle,
+# no-oracle and selfcheck keys) -> second independent-JVM dump of the
+# selfcheck keys -> full 100x DuckDB diff (~75 min, ~40 GB temp spill)
+# -> selfcheck merge. gate_10x/gate_100x write CORRECTNESS_10x.json /
+# CORRECTNESS_100x.json into $GATE_TREE — copy them back and commit.
 set -eu
-GATE_TREE="${GATE_TREE:-/tmp/gate13}"
+ROUND="${1:?usage: run_gates.sh <round>}"
+GATE_TREE="${GATE_TREE:-/tmp/gate$ROUND}"
 cd "$GATE_TREE"
 
-CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"
+# the Spark jars directory the build links against (build.sbt)
+SPARK_JARS="${SPARK_JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' build.sbt)}"
+CP="target/scala-2.13/classes:target/scala-2.13/test-classes:$SPARK_JARS/*"
+V10="/tmp/v10x_r$ROUND"
+V100="/tmp/v100x_r$ROUND"
 
 echo "=== [0/6] fixtures (gen10, gen100; reused when present) ==="
 [ -d /tmp/graft_sfsyn_v2_10 ]  || java -cp "$CP" graft.ScaleProbeSf1 gen10  2>/dev/null | grep SYNDIR10
@@ -21,14 +36,14 @@ NO_ORACLE="q_agg_approx_hll q_agg_approx_quantile q_agg_approx_topk q_dedup_minh
 SELFCHECK="q_dedup_semantic q_dedup_semantic_t9 q_dedup_components q_dedup_embed_lsh q_dedup_embed_lsh_t9"
 
 echo "=== [1/6] 10x dump (all keys) ==="
-SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_10 /tmp/v10x_r13
+SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_10 "$V10"
 
 echo "=== [2/6] 10x gate (full DuckDB diff) ==="
-python3 tools/gate_10x.py /tmp/graft_sfsyn_v2_10 /tmp/v10x_r13 13
+python3 tools/gate_10x.py /tmp/graft_sfsyn_v2_10 "$V10" "$ROUND"
 
-ORACLE_KEYS=$(python3 - <<'PYEOF'
-import json
-oracle = set(json.load(open('/tmp/v10x_r13/oracle_sql.json')))
+ORACLE_KEYS=$(V10="$V10" python3 - <<'PYEOF'
+import json, os
+oracle = set(json.load(open(os.path.join(os.environ['V10'], 'oracle_sql.json'))))
 skip = {'q_dedup_semantic', 'q_dedup_semantic_t9', 'q_dedup_components',
         'q_dedup_embed_lsh', 'q_dedup_embed_lsh_t9',
         'q_dedup_embed', 'q_sim_cosine_topk', 'q_sim_knn_label'}
@@ -37,15 +52,15 @@ PYEOF
 )
 
 echo "=== [3/6] 100x engine dump (oracle + no-oracle + selfcheck keys) ==="
-SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_100 /tmp/v100x_r13 \
+SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_100 "$V100" \
   $ORACLE_KEYS $NO_ORACLE $SELFCHECK
 
 echo "=== [4/6] second independent JVM: selfcheck keys ==="
-SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_100 /tmp/v100x_r13_b \
+SPARK_GRAFT_CPUS=16 tools/run_direct.sh verify /tmp/graft_sfsyn_v2_100 "${V100}_b" \
   $SELFCHECK
 
 echo "=== [5/6] 100x gate (FULL fresh DuckDB diff; ~75 min, ~40 GB temp spill) ==="
-python3 tools/gate_100x.py /tmp/graft_sfsyn_v2_100 /tmp/v100x_r13 13 \
+python3 tools/gate_100x.py /tmp/graft_sfsyn_v2_100 "$V100" "$ROUND" \
   $ORACLE_KEYS \
   --excluded \
   "q_dedup_semantic=DuckDB oracle infeasible at 100x: the sqrt(n)-cell kmeans+pair SQL spills >70 GB temp and dies on disk (engine side completes in ~6 min); covered by the cross-JVM selfcheck section below and exact under the full 10x gate" \
@@ -57,7 +72,7 @@ python3 tools/gate_100x.py /tmp/graft_sfsyn_v2_100 /tmp/v100x_r13 13 \
   "q_sim_cosine_topk=declared brute-force ground-truth baseline: O(n^2) by semantics in both engines at the third decade - not run on either side; scale paths q_sim_ann_{lsh,ivf,pq} are gated here; exact under the 10x gate" \
   "q_sim_knn_label=consumer of the brute-force top-k neighbor producer, O(n^2) by semantics at the third decade - not run on either side; its mechanism is exact under the 10x gate and the ANN siblings cover the scale path"
 
-echo "=== [6/6] selfcheck merge (r13 dump A vs r13 dump B, independent JVMs) ==="
-python3 tools/gate_100x_selfcheck.py /tmp/v100x_r13 /tmp/v100x_r13_b 13 $SELFCHECK
+echo "=== [6/6] selfcheck merge (dump A vs dump B, independent JVMs) ==="
+python3 tools/gate_100x_selfcheck.py "$V100" "${V100}_b" "$ROUND" $SELFCHECK
 
-echo "=== all r13 gates done ==="
+echo "=== all round-$ROUND gates done ==="
