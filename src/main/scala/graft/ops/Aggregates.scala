@@ -697,7 +697,7 @@ object Aggregates {
     val cand = items.select($"item".cast("string").as("value")).as[String]
       .select(new graft.functions.MisraGries(128).toColumn)
       .head().keys.map(_.toLong).toSeq.sorted
-    val n = core.statCount(dir + "#events_n", items)
+    val n = core.tableRows(s, dir, "events")
     items.filter($"item".isin(cand: _*))
       .groupBy($"item").agg(count(lit(1)).as("cnt"))
       .filter($"cnt" * 64 > n)

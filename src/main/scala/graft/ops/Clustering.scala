@@ -116,7 +116,7 @@ object Clustering {
     // loop shuffles are vector-count-sized — derive the reduce width
     // from n (r15, guide §2), not the session's cpu default
     val (cents, assigned) = kmeans(e, 8, 3,
-      loopParts = core.loopPartitions(core.statCount(dir + "#embeddings", e)))
+      loopParts = core.loopPartitions(core.tableRows(s, dir, "embeddings")))
     val sizes = assigned.groupBy($"cent_id").agg(count(lit(1)).as("n_members"))
     cents
       .select($"cent_id", posexplode($"c_emb").as(Seq("pos", "c")))
@@ -420,13 +420,12 @@ object Clustering {
     // k grows with the corpus (max(8, ceil(sqrt n)) — the IVF balance:
     // assignment n·k vs pair work Σ(2·cell)² ≈ 4n²/k; a FIXED k is the
     // n²/k quadratic ScaleProbeSf1 exposed in the ANN family, r5).
-    // n is stats-class metadata, memoized per JVM (core.statCount);
-    // the oracle recomputes the identical k from count(*) (IEEE sqrt,
+    // n is the embeddings footer row count (core.tableRows); the
+    // oracle recomputes the identical k from count(*) (IEEE sqrt,
     // cross-engine exact).
-    val kSem = math.max(8L, math.ceil(math.sqrt(
-      core.statCount(dir + "#embeddings", e).toDouble)).toLong).toInt
-    val cents2 = semanticCentroids(e, kSem,
-      core.statCount(dir + "#embeddings", e))
+    val n = core.tableRows(s, dir, "embeddings")
+    val kSem = math.max(8L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
+    val cents2 = semanticCentroids(e, kSem, n)
     val probeW = Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cent_id".asc)
     // cached + materialized: the pair self-join reads the membership
     // frame twice — plans are trees (the qMlKmeans cache note) — and
@@ -434,7 +433,7 @@ object Clustering {
     // node-sized chain the AQE-off scope exists for (the pagerank
     // rationale); the pair join itself stays outside, under AQE
     val m = core.noAqeMaterialized(s,
-        core.loopPartitions(core.statCount(dir + "#embeddings", e))) {
+        core.loopPartitions(n)) {
       e.crossJoin(broadcast(cents2))
         .withColumn("d2", dist2($"emb", $"c_emb"))
         .withColumn("rn", row_number().over(probeW))

@@ -147,8 +147,9 @@ object Graph {
   }
 
   /** Loop-shuffle width for this family, from the persisted pair
-    * list's row count (stats-class metadata, memoized per JVM) — the
-    * doubled edge list is 2× that.
+    * list's row count — the doubled edge list is 2× that. The pair
+    * list is derived (a join of fixture tables), so its count is a
+    * job, memoized per JVM.
     */
   private def graphLoopParts(s: SparkSession, dir: String): Int =
     core.loopPartitions(2L * core.statCount(dir + "#cspairs",

@@ -238,10 +238,10 @@ object LlmOps {
     // whole O(n²·d) scoring loop (plus the partial top-k sort) ran in
     // ONE task (measured: the key barely moved from 8 to 32 cores,
     // PERF_r14 scaling 1.12). Split the streamed side so each task
-    // scores ~250 k candidate pairs; derived from n (stats-class
-    // metadata, memoized), never from the core count, so the same
+    // scores ~250 k candidate pairs; derived from n (the embeddings
+    // footer row count), never from the core count, so the same
     // formula right-sizes at any scale.
-    val n = core.statCount(dir + "#embeddings", e)
+    val n = core.tableRows(s, dir, "embeddings")
     val parts = core.pairScanPartitions(core.pairCount(n, n - 1))
     val a0 = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0

@@ -41,14 +41,18 @@ object Relational {
       .drop("l_linenumber")
   }
 
-  /** count(*) per table, unioned — the metadata/statistics path. */
+  /** count(*) per table — the metadata/statistics path: every count
+    * comes from [[core.tableRows]] (parquet footers, or the TxLog log
+    * stats under the mirror), and the answer is a local frame sorted
+    * on the driver, so its plan is one LocalTableScan that reads no
+    * table data and runs no Spark job.
+    */
   def qScanCount(s: SparkSession, dir: String): DataFrame = {
-    val names = Seq("region", "nation", "customer", "supplier", "part",
+    import s.implicits._
+    Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
-    names.map { n =>
-      t(s, dir, n).agg(count(lit(1)).as("n_rows"))
-        .select(lit(n).as("table_name"), col("n_rows"))
-    }.reduce(_ unionAll _).orderBy(col("table_name"))
+      .sorted.map(n => (n, tableRows(s, dir, n)))
+      .toDF("table_name", "n_rows")
   }
 
   /** Predicate pushed into the parquet row-group filter. */
@@ -249,10 +253,10 @@ object Relational {
     // partition count IS the join's parallelism — and part is one
     // small parquet split, so the whole ~n²/|brands| pair evaluation
     // ran in a single task. Spread it by the estimated pair count
-    // (row and brand cardinalities are stats-class metadata, memoized
-    // per JVM); below the pairScanPartitions cutoff the plan is
-    // unchanged.
-    val n = core.statCount(dir + "#part", t(s, dir, "part"))
+    // (the row count comes from the footer; the brand cardinality is
+    // a distinct projection, so it stays a count job memoized per
+    // JVM); below the pairScanPartitions cutoff the plan is unchanged.
+    val n = core.tableRows(s, dir, "part")
     val nBrands = core.statCount(dir + "#part_brands",
       t(s, dir, "part").select($"p_brand").distinct())
     val parts = core.pairScanPartitions(core.pairCount(n, n) / math.max(1L, nBrands))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Partitioned storage layout: hive-style `partitionBy` write plus the
   * two read-side pruning mechanisms every 100 TB table lives by —
@@ -44,34 +45,61 @@ object Storage {
     * whose `peak` flag is data — NOT statically derivable by Catalyst
     * from the fact side, so only runtime (dynamic) pruning can skip
     * fact partitions for a `peak` filter. Returns the layout root.
+    *
+    * The dim's dates are the `event_date=` directories the fact write
+    * just created ([[partitionDates]]), listed through the Hadoop
+    * `FileSystem`: one driver listing instead of a second events scan
+    * and a `distinct()` shuffle. Its rows are the same set.
     */
   def layoutDir(s: SparkSession, dir: String): String =
     written.computeIfAbsent(dir, _ => {
+      import s.implicits._
       val base = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_part_layout-" + dir.replaceAll("[^A-Za-z0-9.-]", "_"))
         .getAbsolutePath
-      val ev = core.events(s, dir)
+      core.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
-      ev.repartition(col("event_date"))
+        .repartition(col("event_date"))
         .write.mode("overwrite").partitionBy("event_date")
         .parquet(s"$base/events_by_date")
-      ev.select(col("event_date")).distinct()
+      partitionDates(s, s"$base/events_by_date").toDF("event_date")
         .withColumn("peak", peakRule(col("event_date")))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/date_dim")
       base
     })
 
+  /** The `event_date` values of a tree partitioned by it, from its
+    * directory names (`__HIVE_DEFAULT_PARTITION__` is the null date).
+    */
+  private def partitionDates(s: SparkSession,
+      path: String): Seq[java.time.LocalDate] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith("event_date=") =>
+        n.stripPrefix("event_date=") match {
+          case "__HIVE_DEFAULT_PARTITION__" => null
+          case d => java.time.LocalDate.parse(d)
+        }
+      }
+  }
+
   /** The doubly-pruned fact read (shared with StorageLayoutSpec's plan
     * assertions): static `event_date >=` predicate → `PartitionFilters`
     * on the scan; broadcast-joined `peak` dim filter → DPP subquery.
+    * Both reads carry their schema, so building the frame runs no
+    * footer-inference job: the fact is the events schema plus the
+    * `event_date` partition column, the dim is read from its footer.
     */
   def prunedRead(s: SparkSession, dir: String): DataFrame = {
     val base = layoutDir(s, dir)
-    val fact = s.read.parquet(s"$base/events_by_date")
+    val fact = s.read
+      .schema(core.events(s, dir).schema.add("event_date", DateType))
+      .parquet(s"$base/events_by_date")
       .filter(col("event_date") >= lit("2024-01-05").cast("date"))
-    val dim = s.read.parquet(s"$base/date_dim").filter(col("peak"))
+    val dim = core.parquet(s, s"$base/date_dim").filter(col("peak"))
     fact.join(broadcast(dim.select(col("event_date"))), Seq("event_date"))
   }
 

@@ -135,7 +135,7 @@ object TrainingOps {
     * keeps the Hamming-4 ball a vanishing fraction of signature space,
     * so "near-dup" keeps meaning near-dup at every decade; the width
     * is a deterministic integer function of the stats-class row count
-    * (the [[lshWidth]] / statCount precedent).
+    * (the [[lshWidth]] / [[core.tableRows]] precedent).
     */
   private[graft] def simhashWidth(n: Long): Int =
     if (n <= 16384L) 16 else if (n <= 262144L) 32 else 64
@@ -157,7 +157,7 @@ object TrainingOps {
   def qDedupSimhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = t(s, dir, "documents")
-    val w = simhashWidth(core.statCount(dir + "#documents", docs))
+    val w = simhashWidth(core.tableRows(s, dir, "documents"))
     simhashPairsBanded(simhashSignatures(docs, w).transform(core.cached), w)
   }
 
@@ -320,7 +320,9 @@ object TrainingOps {
     import s.implicits._
     val pairs = s.read.parquet(ngramPairsDir(s, dir))
     // label-propagation shuffles are node-sized — reduce width from
-    // the edge count (r15, guide §2), not the cpu default
+    // the edge count (r15, guide §2), not the cpu default; the pair
+    // list is a derived index, not a fixture table, so its count stays
+    // a memoized job
     val labels = connectedComponents(pairs,
       core.loopPartitions(2L * core.statCount(dir + "#ngrampairs", pairs)))
     val sizeW = Window.partitionBy($"component")
@@ -417,7 +419,7 @@ object TrainingOps {
     // tasks — the streamed side is one parquet split, so without this
     // the whole pair loop ran single-task (the cosineTopk fix;
     // guide §2). n(n−1)/2 ordered pairs survive the a < b condition.
-    val n = core.statCount(dir + "#embeddings", e)
+    val n = core.tableRows(s, dir, "embeddings")
     val parts = core.pairScanPartitions(core.pairCount(n, n - 1) / 2)
     val a0 = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0
@@ -470,7 +472,7 @@ object TrainingOps {
     */
   def qDedupEmbedLsh(s: SparkSession, dir: String): DataFrame = {
     val e = core.cached(LlmOps.normed(s, dir))
-    val n = core.statCount(dir + "#embeddings", e)
+    val n = core.tableRows(s, dir, "embeddings")
     embedLshBanded(s, e, tau = 0.5, groups = lshBandGroups(n))
   }
 
@@ -603,7 +605,7 @@ object TrainingOps {
     import s.implicits._
     import graft.functions.DotProduct.dot
     val e = core.cached(LlmOps.normed(s, dir))
-    val n = core.statCount(dir + "#embeddings", e)
+    val n = core.tableRows(s, dir, "embeddings")
     // Band-key width sized for CANDIDATE volume, not ANN bucket
     // occupancy (r7 — the second-decade probe filled the disk at
     // 200 k vectors): with the ANN rule's E[bucket] ≈ 64, Hamming-1
@@ -670,9 +672,8 @@ object TrainingOps {
   def qSimAnnLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e0 = core.cached(LlmOps.normed(s, dir))
-    // n memoized per JVM (core.statCount) — re-executions skip the
-    // count scan; production reads n from table stats, not a job
-    val width = lshWidth(core.statCount(dir + "#embeddings", e0))
+    // n from the embeddings footer (core.tableRows): no count job
+    val width = lshWidth(core.tableRows(s, dir, "embeddings"))
     // codegen'd bucket key (r15 — the embedLshBanded note)
     val e = e0
       .withColumn("bucket",
@@ -732,9 +733,9 @@ object TrainingOps {
       import s.implicits._
       import graft.functions.DotProduct.dot
       val e = core.cached(LlmOps.normed(s, dir))
-      // n memoized per JVM (core.statCount) — the statCount scaladoc
+      // n from the embeddings footer (core.tableRows): no count job
       val nCells = math.max(16L, math.ceil(math.sqrt(
-        core.statCount(dir + "#embeddings", e).toDouble)).toLong).toInt
+        core.tableRows(s, dir, "embeddings").toDouble)).toLong).toInt
       // orderBy+limit compiles to TakeOrderedAndProject — each task
       // keeps its local top-√n and only √n·partitions rows reach the
       // driver-side merge, unlike a global row_number window which

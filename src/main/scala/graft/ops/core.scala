@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+
+import graft.sources.TxLog
 
 /** Shared helpers for all operator builders.
   *
@@ -92,40 +95,54 @@ object core {
   private val txlogMirror: Option[String] =
     sys.env.get("SPARK_GRAFT_TXLOG_MIRROR")
 
-  /** Load one fixture table from the scale-factor directory. */
+  /** Load one fixture table from the scale-factor directory. The read
+    * takes its schema from the table's parquet footer ([[parquet]]),
+    * so building the frame launches no Spark job.
+    */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     txlogMirror match {
       case None =>
         if (name == "events") events(spark, dir)
-        else spark.read.parquet(s"$dir/$name.parquet")
+        else parquet(spark, s"$dir/$name.parquet")
       case Some(root) =>
-        val df = spark.read.format("txlog")
-          .option("path", s"$root/$name").load()
         // events mirrors keep whatever this environment's parquet
         // nanos inference produced (the r6 lesson: it CHANGES between
-        // rounds) — dispatch on the served type exactly like
-        // [[events]] does: LONG → rebuild micros; NTZ → cast in the
-        // UTC session (both value-exact on the fixtures)
-        if (name == "events") df.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case org.apache.spark.sql.types.TimestampNTZType =>
-            df.withColumn("ts", col("ts").cast("timestamp"))
-          case _ => df
-        } else df
+        // rounds): the same `ts` dispatch as the raw read
+        val df = spark.read.format("txlog")
+          .option("path", s"$root/$name").load()
+        if (name == "events") eventsTs(df) else df
+    }
+
+  /** `spark.read.parquet(path)` with the schema its inference would
+    * return, read from the footer on the driver
+    * ([[org.apache.spark.sql.GraftBridge.parquetSchema]]) instead of
+    * by an inference job.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraftBridge.parquetSchema(spark, path)).parquet(path)
+
+  /** Row count of fixture table `name` from metadata, with no Spark
+    * job: the summed parquet footer row counts, or under the TxLog
+    * mirror the log's file stats ([[graft.sources.TxLog.rowCount]]).
+    * This is the n of the n-adaptive keys (LSH width, IVF cell count,
+    * semantic-dedup k, pair-scan widths) and q_scan_count's answer.
+    */
+  def tableRows(spark: SparkSession, dir: String, name: String): Long =
+    txlogMirror match {
+      case None => GraftBridge.parquetRows(spark, s"$dir/$name.parquet")
+      case Some(root) => TxLog.rowCount(spark, s"$root/$name")
     }
 
   private val countMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Stats-class row count for the n-adaptive layout keys (LSH width,
-    * IVF cell count, semantic-dedup k), memoized per key per JVM so a
-    * key re-execution never pays a second corpus scan just to re-learn
-    * n (the `Storage.written` once-per-JVM pattern; ADVICE r5). The
-    * fixtures are immutable within a JVM's lifetime, so the memo can
-    * never go stale here; at 100 TB this number comes from table
-    * statistics (catalog row counts / parquet footers), not a count
-    * job — the memo is the local stand-in for that stats lookup.
+  /** Row count of a DERIVED frame (a distinct projection, a persisted
+    * pair list), memoized per key per JVM so a key re-execution never
+    * pays a second count job just to re-learn n (the `Storage.written`
+    * once-per-JVM pattern; ADVICE r5). Fixture tables are immutable
+    * within a JVM's lifetime, so the memo can never go stale here.
+    * Table-level counts do not come here: [[tableRows]] answers them
+    * from parquet footers with no job at all.
     */
   def statCount(key: String, df: => DataFrame): Long =
     countMemo.computeIfAbsent(key, _ => df.count()).longValue()
@@ -244,8 +261,10 @@ object core {
     * raw nanos BIGINT (the original branch below); the current build
     * ignores that conf and infers TIMESTAMP_NTZ (micros, truncated)
     * directly — discovered in r6 when every events key started
-    * failing analysis on `ts div 1000`. Dispatch on the INFERRED
-    * type so every environment lands on the same TimestampType
+    * failing analysis on `ts div 1000`. Dispatch on the type the
+    * footer converts to under this session's conf (the conf set below
+    * happens first, so it is the type inference would return), so
+    * every environment lands on the same TimestampType
     * column: nanos-long → rebuild micros (lossless: every fixture
     * value has a zero sub-µs component, verified via DuckDB
     * `epoch_ns(ts) % 1000 = 0`; crafted test fixtures write raw nanos
@@ -254,15 +273,21 @@ object core {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    eventsTs(parquet(spark, s"$dir/events.parquet"))
+  }
+
+  /** The `ts` dispatch of [[events]], shared with the TxLog-mirror
+    * branch of [[t]]: nanos-long → micros, NTZ → cast in the UTC
+    * session, anything else as served.
+    */
+  private def eventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
-  }
 
   /** Run `body` with session confs temporarily overridden, restoring
     * prior values (or unsetting) on exit. Conf reads happen at

@@ -9,7 +9,6 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -18,7 +17,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact => jsonCompact, parse, render}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession, functions}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Encoders, GraftBridge, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
@@ -435,54 +434,52 @@ object TxLog {
     * (decimals-as-binary, nested paths, int96) are skipped.
     */
   private[graft] def footerStats(file: JPath): Option[FileStats] = try {
-    val in = HadoopInputFile.fromPath(new HPath(file.toUri), new Configuration())
-    val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val merged = mutable.Map.empty[String, ColStats]
-      val dropped = mutable.Set.empty[String]
-      blocks.foreach { b =>
-        b.getColumns.asScala.foreach { cc =>
-          val path = cc.getPath.toArray
-          if (path.length == 1) {
-            val name = path(0)
-            val st = cc.getStatistics
-            val pt = cc.getPrimitiveType
-            val vals: Option[(Any, Any)] =
-              if (st == null || !st.hasNonNullValue) None
-              else pt.getPrimitiveTypeName match {
-                case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64
-                    if intAnnotationProbesSafely(pt.getLogicalTypeAnnotation) =>
-                  Some((st.genericGetMin.asInstanceOf[Number].longValue(),
-                        st.genericGetMax.asInstanceOf[Number].longValue()))
-                case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
-                  Some((st.genericGetMin.asInstanceOf[Number].doubleValue(),
-                        st.genericGetMax.asInstanceOf[Number].doubleValue()))
-                case PrimitiveTypeName.BINARY
-                    if pt.getLogicalTypeAnnotation.isInstanceOf[
-                      LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-                  Some((st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
-                        st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
-                case _ => None
-              }
-            vals match {
-              case None => dropped += name
-              case Some((mn, mx)) =>
-                merged.get(name) match {
-                  case None => merged(name) = ColStats(mn, mx)
-                  case Some(prev) =>
-                    merged(name) = ColStats(
-                      if (lt(mn, prev.min).contains(true)) mn else prev.min,
-                      if (lt(prev.max, mx).contains(true)) mx else prev.max)
-                }
+    val footer = GraftBridge.parquetMetadata(
+      HadoopInputFile.fromPath(new HPath(file.toUri), new Configuration()))
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    val merged = mutable.Map.empty[String, ColStats]
+    val dropped = mutable.Set.empty[String]
+    blocks.foreach { b =>
+      b.getColumns.asScala.foreach { cc =>
+        val path = cc.getPath.toArray
+        if (path.length == 1) {
+          val name = path(0)
+          val st = cc.getStatistics
+          val pt = cc.getPrimitiveType
+          val vals: Option[(Any, Any)] =
+            if (st == null || !st.hasNonNullValue) None
+            else pt.getPrimitiveTypeName match {
+              case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64
+                  if intAnnotationProbesSafely(pt.getLogicalTypeAnnotation) =>
+                Some((st.genericGetMin.asInstanceOf[Number].longValue(),
+                      st.genericGetMax.asInstanceOf[Number].longValue()))
+              case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
+                Some((st.genericGetMin.asInstanceOf[Number].doubleValue(),
+                      st.genericGetMax.asInstanceOf[Number].doubleValue()))
+              case PrimitiveTypeName.BINARY
+                  if pt.getLogicalTypeAnnotation.isInstanceOf[
+                    LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+                Some((st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+                      st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
+              case _ => None
             }
+          vals match {
+            case None => dropped += name
+            case Some((mn, mx)) =>
+              merged.get(name) match {
+                case None => merged(name) = ColStats(mn, mx)
+                case Some(prev) =>
+                  merged(name) = ColStats(
+                    if (lt(mn, prev.min).contains(true)) mn else prev.min,
+                    if (lt(prev.max, mx).contains(true)) mx else prev.max)
+              }
           }
         }
       }
-      dropped.foreach(merged.remove)
-      Some(FileStats(rows, merged.toMap, bytes = Files.size(file)))
-    } finally reader.close()
+    }
+    dropped.foreach(merged.remove)
+    Some(FileStats(rows, merged.toMap, bytes = Files.size(file)))
   } catch { case NonFatal(_) => None }
 
   /** Is an INT32/INT64 column's raw long order the order [[normKey]]
@@ -745,11 +742,30 @@ object TxLog {
     */
   def readSnapshot(s: SparkSession, snap: Snapshot): DataFrame = {
     require(snap.files.nonEmpty, s"version ${snap.version} has no files")
-    val reader = snap.schema match {
-      case Some(logged) => s.read.schema(snap.mapping.physicalSchema(logged))
-      case None         => s.read.option("mergeSchema", "true")
+    readLogged(s.read, snap.files, snap.schema, snap.mapping)
+  }
+
+  /** `files` read as [[readSnapshot]] reads a snapshot, under the
+    * table's logged schema and column mapping at version `v` — the
+    * incremental reads ([[readChanges]], [[syncOnce]], the append-only
+    * streaming source) build their frames without a footer-inference
+    * job too. `reader` carries the caller's options.
+    */
+  private[graft] def readFilesAt(reader: DataFrameReader, table: String,
+      v: Long, files: Seq[String]): DataFrame =
+    readLogged(reader, files, tableSchema(table, v), columnMapping(table, v))
+
+  /** The one logged-schema read: the physical twin of `logical` under
+    * `mapping`, renamed back to logical names; `mergeSchema` inference
+    * only when the log has no schema line.
+    */
+  private def readLogged(reader: DataFrameReader, files: Seq[String],
+      logical: Option[StructType], mapping: ColMap): DataFrame = {
+    val r = logical match {
+      case Some(l) => reader.schema(mapping.physicalSchema(l))
+      case None    => reader.option("mergeSchema", "true")
     }
-    renameToLogical(reader.parquet(snap.files: _*), snap.mapping)
+    renameToLogical(r.parquet(files: _*), mapping)
   }
 
   /** Physical (on-disk) column names → logical, per the mapping:
@@ -1469,15 +1485,16 @@ object TxLog {
   }
 
   /** Incremental read of the rows appended in `(fromVersion, toVersion]`
-    * (default: current). Empty ranges yield no files → the caller
-    * checks [[changedFiles]] first or catches the empty-read require.
+    * (default: current), under the logged schema at the range's end.
+    * Empty ranges yield no files → the caller checks [[changedFiles]]
+    * first or catches the empty-read require.
     */
   def readChanges(s: SparkSession, table: String, fromVersion: Long,
                   toVersion: Option[Long] = None): DataFrame = {
     val to = toVersion.getOrElse(currentVersion(table))
     val files = changedFiles(table, fromVersion, to)
     require(files.nonEmpty, s"no appended files in ($fromVersion, $to]")
-    s.read.parquet(files: _*)
+    readFilesAt(s.read, table, to, files)
   }
 
   /** One commit's file delta, absolute paths: (op, adds, removes). */
@@ -1512,10 +1529,7 @@ object TxLog {
       s"file(s) that no longer exist (e.g. ${missing.headOption
         .getOrElse("")}): a vacuum outran this CDC reader — keep " +
       s"retention longer than the maximum feed lag")
-    val base = s.read.schema(mapping.physicalSchema(outSchema)).parquet(files: _*)
-    if (mapping.isIdentity) base
-    else base.select(outSchema.fieldNames.toIndexedSeq.map(n =>
-      col(mapping.physical(n)).as(n)): _*)
+    readLogged(s.read, files, Some(outSchema), mapping)
   }
 
   /** BALANCED pairwise union, not reduceLeft: a left-leaning chain over
@@ -1749,7 +1763,17 @@ object TxLog {
       // high-water mark so the range is never re-walked
       commit(dst, s"txn $writerId $cur", currentVersion(dst), Nil, Nil)
     } else {
-      appendOnce(s, dst, s.read.parquet(files: _*), writerId, cur)
+      val rows = readFilesAt(s.read, src, cur, files)
+      // src's logical names at `cur`: a column renamed or dropped at
+      // src since dst took its schema is missing here — name that
+      // cause rather than the generic missing-column write error
+      val gone = tableSchema(dst, currentVersion(dst))
+        .fold(Set.empty[String])(_.fieldNames.toSet) -- rows.columns
+      require(gone.isEmpty,
+        s"syncOnce $src -> $dst: column(s) ${gone.mkString(", ")} of " +
+        s"$dst are no longer in $src (renamed or dropped there) — " +
+        s"evolve $dst to match before syncing on")
+      appendOnce(s, dst, rows, writerId, cur)
     }
     cur - hw
   }

@@ -308,9 +308,18 @@ class TxLogStreamSource(spark: SparkSession, table: String,
       // dropping a batch's rows under a session-level
       // spark.sql.files.ignoreMissingFiles=true — exactly-once must
       // never degrade to at-most-once quietly (round-12 ADVICE fix).
-      val base = spark.read
-        .option("ignoreMissingFiles", "false")
-        .option("mergeSchema", "true").parquet(files: _*)
+      val base = TxLog.readFilesAt(
+        spark.read.option("ignoreMissingFiles", "false"),
+        table, toVersion(end), files)
+      // the read speaks the logical names at the range's end, this
+      // source's schema is pinned at start: a column renamed or
+      // dropped in between would align to all nulls. Fail loudly, as
+      // the CDC source does; the restart adopts the new schema
+      val gone = schema.fieldNames.toSet -- base.columns.toSet
+      require(gone.isEmpty,
+        s"column(s) ${gone.mkString(", ")} were renamed or dropped " +
+        s"mid-stream at $table — restart the stream to adopt the new " +
+        s"schema")
       val aligned = TxLogRelation.alignTo(base, schema)
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       GraftBridge.tagStreaming(aligned)

@@ -103,6 +103,66 @@ object GraftBridge {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** Schema of the parquet table at `path` (a file, or a flat
+    * directory of part files), read from one footer on the driver: no
+    * Spark job, where `spark.read.parquet(path)` without a schema runs
+    * one to infer it. It is what Spark's non-merging inference returns
+    * — the footer of the first data file in path order, converted
+    * under the session's current SQL conf (so `nanosAsLong` still
+    * applies) and made nullable as every file-source read makes it.
+    * Partitioned trees are not covered: their data files sit below
+    * the top-level listing.
+    */
+  def parquetSchema(s: SparkSession, path: String): types.StructType = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val state = s.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val first = parquetDataFiles(conf, path).head
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(first.getPath, parquetMetadata(HadoopInputFile.fromStatus(first, conf))),
+      new ParquetToSparkSchemaConverter(state.conf)).asNullable
+  }
+
+  /** Row count of the parquet table at `path`: the block row counts of
+    * every data file's footer, summed on the driver with no Spark job.
+    */
+  def parquetRows(s: SparkSession, path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = s.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+    parquetDataFiles(conf, path).iterator
+      .flatMap(f => parquetMetadata(HadoopInputFile.fromStatus(f, conf)).getBlocks.asScala)
+      .map(_.getRowCount).sum
+  }
+
+  /** The data files at `path` in path order, skipping `_*` and `.*`
+    * names (`_SUCCESS`, checksums) as Spark's file index does; one
+    * listing, whose statuses the footer reads reuse.
+    */
+  private def parquetDataFiles(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(conf).listStatus(p)
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.toString)
+    require(files.nonEmpty, s"no parquet data files at $path")
+    files
+  }
+
+  /** One parquet file's footer — the one footer open shared by the
+    * fixture reads above and `TxLog.footerStats`.
+    */
+  def parquetMetadata(in: org.apache.parquet.io.InputFile)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getFooter finally r.close()
+  }
+
   /** `FieldReference.column` — `private[sql]` in Spark, needed to
     * declare runtime-filter attributes on a DSv2 scan.
     */

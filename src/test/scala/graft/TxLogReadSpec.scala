@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.sources.TxLog
@@ -18,7 +16,9 @@ import graft.sources.TxLog
   * DROP COLUMN and partitioned tables, fall back to inference for a
   * log with no schema line, and build its frame without a footer
   * inference job (over a few files; above 32 files Spark still lists
-  * them in a job).
+  * them in a job). The incremental reads — [[TxLog.readChanges]],
+  * [[TxLog.syncOnce]] and the append-only streaming source — take the
+  * logged schema at their range's end the same way.
   */
 class TxLogReadSpec extends SparkSuite {
   import spark.implicits._
@@ -91,27 +91,69 @@ class TxLogReadSpec extends SparkSuite {
     val t = fresh()
     TxLog.append(spark, t, Seq(1L -> "a").toDF("id", "v"))
     TxLog.append(spark, t, Seq((2L, "b", 3)).toDF("id", "v", "x"))
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    var df: DataFrame = null
+    val jobs = JobProbe.jobs(spark, "txlog-read-build") {
+      df = TxLog.read(spark, t)
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("txlog-read-build", "build a TxLog.read frame")
-      val df = try TxLog.read(spark, t) finally sc.clearJobGroup()
-      assert(df.columns.toSeq == Seq("id", "v", "x"))
-      // listener events arrive in job order: once the marker job's start
-      // is seen, any job the build launched has been seen too
-      sc.setJobGroup("txlog-read-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("txlog-read-marker") &&
-             System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(groups.contains("txlog-read-marker"))
-      assert(!groups.contains("txlog-read-build"),
-        "the read took its schema from the log; no footer-inference job")
-    } finally sc.removeSparkListener(listener)
+    assert(df.columns.toSeq == Seq("id", "v", "x"))
+    assert(jobs == 0, "the read took its schema from the log; no footer-inference job")
+  }
+
+  /** A renamed, additively evolved append-only table: v1 (id, v),
+    * RENAME v → label, v3 (id, label, x).
+    */
+  private def evolvedAppends(): String = {
+    val t = fresh()
+    TxLog.append(spark, t, Seq(1L -> "a").toDF("id", "v"))
+    TxLog.renameColumn(t, "v", "label")
+    TxLog.append(spark, t, Seq((2L, "b", 3)).toDF("id", "label", "x"))
+    t
+  }
+
+  test("readChanges and syncOnce read under the logged schema at the range's end") {
+    val t = evolvedAppends()
+    val changes = TxLog.readChanges(spark, t, 0L)
+    assert(changes.schema == TxLog.read(spark, t).schema)
+    assert(changes.columns.toSeq == Seq("id", "label", "x"))
+    val want = Map(Seq(1L, "a", null) -> 1, Seq(2L, "b", 3) -> 1)
+    assert(rows(changes) == want)
+    val dst = fresh()
+    assert(TxLog.syncOnce(spark, t, dst, "sync-1") == TxLog.currentVersion(t))
+    assert(TxLog.read(spark, dst).columns.toSeq == Seq("id", "label", "x"))
+    assert(rows(TxLog.read(spark, dst)) == want)
+  }
+
+  test("syncOnce after a RENAME at src fails loudly and leaves dst unchanged") {
+    val src = fresh(); val dst = fresh()
+    TxLog.append(spark, src, Seq(1L -> "a").toDF("id", "v"))
+    assert(TxLog.syncOnce(spark, src, dst, "sync-1") == 1L)
+    val before = TxLog.currentVersion(dst)
+    TxLog.renameColumn(src, "v", "label")
+    TxLog.append(spark, src, Seq(2L -> "b").toDF("id", "label"))
+    val e = intercept[IllegalArgumentException] {
+      TxLog.syncOnce(spark, src, dst, "sync-1")
+    }
+    assert(e.getMessage.contains("renamed or dropped"), e.getMessage)
+    assert(TxLog.currentVersion(dst) == before, "no commit reached dst")
+    assert(TxLog.read(spark, dst).columns.toSeq == Seq("id", "v"))
+    assert(rows(TxLog.read(spark, dst)) == Map(Seq(1L, "a") -> 1))
+  }
+
+  test("building the incremental reads' frames launches no Spark job") {
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    val t = evolvedAppends()
+    val cur = TxLog.currentVersion(t)
+    val files = TxLog.changedFiles(t, 0L, cur)
+    val schema = TxLog.read(spark, t).schema
+    var frames = Seq.empty[DataFrame]
+    val jobs = JobProbe.jobs(spark, "txlog-incremental-build") {
+      frames = Seq(
+        TxLog.readChanges(spark, t, 0L),
+        TxLog.readFilesAt(spark.read, t, cur, files), // syncOnce's read
+        new graft.sources.TxLogStreamSource(spark, t, schema, 0L)
+          .getBatch(None, LongOffset(cur)))
+    }
+    frames.foreach(f => assert(f.schema.fieldNames.toSeq == Seq("id", "label", "x")))
+    assert(jobs == 0, "incremental reads took their schema from the log")
   }
 }

@@ -283,6 +283,41 @@ class TxLogStreamSpec extends SparkSuite {
     assert(!q.isActive)
   }
 
+  test("a mid-stream RENAME or DROP fails a plain stream loudly instead " +
+       "of silently nulling the pinned column") {
+    def root(x: Throwable): Throwable =
+      if (x.getCause == null) x else root(x.getCause)
+    Seq[(String, String => Unit)](
+      "rename" -> (t => {
+        TxLog.renameColumn(t, "v", "label")
+        TxLog.append(spark, t, Seq(2L -> "b").toDF("id", "label"))
+      }),
+      "drop" -> (t => {
+        TxLog.dropColumn(t, "v")
+        TxLog.append(spark, t, Seq(2L).toDF("id"))
+      })).foreach { case (what, evolve) =>
+      val t = freshTable()
+      TxLog.append(spark, t, mk(1L -> "a"))
+      val seen = mutable.ArrayBuffer.empty[(Long, String)]
+      val q = spark.readStream.format("txlog").option("path", t).load()
+        .writeStream.foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.collect().map(r => (r.getLong(0), r.getString(1)))
+          seen.synchronized { seen ++= rows }; ()
+        }.start()
+      q.processAllAvailable()
+      evolve(t)
+      val e = intercept[StreamingQueryException] {
+        q.processAllAvailable()
+        q.awaitTermination(30000)
+      }
+      assert(root(e).getMessage.contains("restart the stream"),
+        s"$what: ${root(e).getMessage}")
+      assert(!q.isActive)
+      assert(seen.synchronized(seen.toList) == List(1L -> "a"),
+        s"$what: no batch after the $what may be emitted")
+    }
+  }
+
   test("startingVersion skips the backlog; schema comes from the log") {
     val t = freshTable()
     TxLog.append(spark, t, mk(1L -> "backlog"))
