@@ -798,8 +798,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("STREAMBENCH.json")
-    val n = sys.env.getOrElse("STREAM_BENCH_EVENTS", "1000000").toInt
-    val chunk = sys.env.getOrElse("STREAM_BENCH_CHUNK", "100000").toInt
+    val n = 1000000 // timed events per pipeline
+    val chunk = 100000 // events per micro-batch
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -821,7 +821,7 @@ object StreamBench {
     }
     // state-scale + recovery probes (VERDICT r8 task 3): smaller warm
     // pass first, then the measured run
-    val stateKeys = sys.env.getOrElse("STREAM_BENCH_STATE_KEYS", "5000000").toInt
+    val stateKeys = 5000000
     benchStateScale(spark, 100000, 50000)
     val sc = benchStateScale(spark, stateKeys, chunk)
     System.err.println(f"[streambench] state_scale    ${sc.rows} rows / " +
@@ -829,7 +829,7 @@ object StreamBench {
       f"(p50 ${sc.p50Ms}%.0f ms; first-third ${sc.firstThirdP50Ms}%.0f -> " +
       f"last-third ${sc.lastThirdP50Ms}%.0f ms; state ${sc.stateRows} rows / " +
       f"${sc.stateBytes} B; matches_batch=${sc.matchesBatch})")
-    val recovKeys = sys.env.getOrElse("STREAM_BENCH_RECOVERY_KEYS", "1000000").toInt
+    val recovKeys = 1000000
     benchRecovery(spark, 50000, 25000)
     val rc = benchRecovery(spark, recovKeys, chunk)
     System.err.println(f"[streambench] recovery       ${rc.keys} keys of state: " +
@@ -845,9 +845,7 @@ object StreamBench {
       f"exact=${td.exact})")
     // 10x-volume drain (round-12 VERDICT task 5): holds the rate past
     // page-cache scale — 10 M rows through source AND sink
-    val tdn = sys.env.getOrElse("STREAM_BENCH_DRAIN10X_EVENTS",
-      (10 * n).toString).toInt
-    val td10 = benchTxLogDrain(spark, tdn, 10 * chunk)
+    val td10 = benchTxLogDrain(spark, 10 * n, 10 * chunk)
     require(td10.exact, "10x txlog drain diverged from the source frame")
     System.err.println(f"[streambench] txlog_drain10x ${td10.fedRows} fed rows / " +
       f"${td10.srcCommits} commits in ${td10.wallSec}%.2f s = " +
@@ -866,9 +864,7 @@ object StreamBench {
     // CDC replication loop (round-12): change-rows/s through
     // readChangeFeed -> foreachBatch applyChanges, exactness enforced
     benchCdcReplicate(spark, 6000, 2000) // warm the CDC + merge path
-    val cdcN = sys.env.getOrElse("STREAM_BENCH_CDC_EVENTS",
-      (n / 10).toString).toInt
-    val cdc = benchCdcReplicate(spark, cdcN, math.max(1000, chunk / 10))
+    val cdc = benchCdcReplicate(spark, n / 10, chunk / 10)
     require(cdc.exact, "CDC replica diverged from the source frame — " +
       "refusing to publish a throughput row for an inexact pipeline")
     System.err.println(f"[streambench] cdc_replicate  ${cdc.changeRows} " +

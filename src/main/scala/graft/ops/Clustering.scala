@@ -172,7 +172,7 @@ object Clustering {
   def qMlClusterPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val assigned = s.read.parquet(kmeansAssignDir(s, dir))
+    val assigned = core.parquet(s, kmeansAssignDir(s, dir))
     val w = Window.partitionBy($"cent_id").orderBy($"d2".asc, $"vec_id".asc)
     assigned
       .withColumn("rn", row_number().over(w))
@@ -319,8 +319,8 @@ object Clustering {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val idx = pqIndexDir(s, dir)
-    val books = s.read.parquet(s"$idx/books")
-    val codes = s.read.parquet(s"$idx/codes")
+    val books = core.parquet(s, s"$idx/books")
+    val codes = core.parquet(s, s"$idx/codes")
     val lut = pqSub(s, dir).filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"s".as("qs"), $"subv".as("q_sub"))
       .join(books, $"qs" === $"cs")
@@ -485,7 +485,7 @@ object Clustering {
     */
   def qDedupSemanticT9(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(semPairsDir(s, dir))
+    core.parquet(s, semPairsDir(s, dir))
       .filter($"rawcos" >= 0.9)
       .select($"a_id", $"b_id", $"cell", r6($"rawcos").as("cos"))
       .orderBy($"a_id", $"b_id")

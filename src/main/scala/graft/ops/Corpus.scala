@@ -212,60 +212,6 @@ object Corpus {
       GraftBridge.expression(xxhash64(c))))
   }
 
-  /** Hash-range-SHARDED bloom prefilter — the 100 TB form of
-    * [[qDedupIncremental]]'s single broadcast bloom, promised by
-    * SURVEY §2 and demonstrated at spec level (CorpusSpec pins
-    * sharded ≡ single output and the no-false-negative property).
-    *
-    * Why sharding: one bloom sized for the WHOLE history stops
-    * broadcasting comfortably somewhere past ~10⁹ items (tens of GB
-    * of bits for a useful FP rate). Splitting history by
-    * `pmod(xxhash64(pfx), k)` gives k independent blooms, each sized
-    * for history/k items; a probe row consults ONLY the one bloom its
-    * own hash routes to, so per-row probe cost is unchanged while
-    * total sketch capacity scales horizontally with k (and each
-    * executor needs only the shards its probe partition touches).
-    *
-    * Correctness: a bloom has no false negatives, and the row and its
-    * history twin hash to the SAME shard by construction (identical
-    * `pfx` ⇒ identical xxhash64 ⇒ identical shard), so every true
-    * duplicate survives the prefilter — sharding cannot lose a dup,
-    * only re-distribute the false positives. The exact recheck join
-    * downstream is identical.
-    *
-    * Returns the candidate rows of `batch` (columns doc_id, pfx), the
-    * same contract as the single-bloom prefilter stage.
-    */
-  def shardedBloomCandidates(hist: DataFrame, batch: DataFrame,
-      k: Int, itemsPerShard: Long, bits: Long): DataFrame = {
-    val s = hist.sparkSession
-    import s.implicits._
-    val shardOf = (c: org.apache.spark.sql.Column) =>
-      pmod(xxhash64(c), lit(k.toLong))
-    // ONE pass over history builds all k blooms (ADVICE r6: the r6
-    // form ran one filtered scalar-subquery aggregate per shard — k
-    // full history scans per prefilter call): a shard-keyed groupBy
-    // with combinable bloom partials yields a k-row frame, cached and
-    // materialized so each probe branch's scalar subquery reads the
-    // k-row cache, never the corpus. batch is cached for the same
-    // reason — its k shard-filtered branches re-scan cache storage.
-    // A shard with no history rows yields no bloom row ⇒ the scalar
-    // subquery is NULL ⇒ the probe filter drops the branch's rows,
-    // exactly like the old per-shard empty aggregate (no history in
-    // the shard ⇒ nothing can be a duplicate).
-    val blooms = core.cached(
-      hist.groupBy(shardOf($"pfx").as("shard"))
-        .agg(bloomAggOf($"pfx", itemsPerShard, bits).as("bf")))
-    blooms.count()
-    val b = core.cached(batch)
-    (0 until k).map { i =>
-      val bl = blooms.filter($"shard" === i).select($"bf")
-      b.filter(shardOf($"pfx") === i)
-        .filter(bloomProbeOf(bl, $"pfx"))
-        .select($"doc_id", $"pfx")
-    }.reduce(_ unionByName _)
-  }
-
   def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = t(s, dir, "documents")
@@ -530,7 +476,7 @@ object Corpus {
     // serves the learned merges from the persisted vocabulary artifact
     // (r7): a tokenizer is trained once and applied everywhere — the
     // pre-r7 form re-ran the whole 3-step trainer q_text_bpe measures
-    val m = s.read.parquet(bpeMergesDir(s, dir))
+    val m = core.parquet(s, bpeMergesDir(s, dir))
     val bps = m.filter($"step" === 1).select($"pair".as("bp1"))
       .crossJoin(m.filter($"step" === 2).select($"pair".as("bp2")))
       .crossJoin(m.filter($"step" === 3).select($"pair".as("bp3")))

@@ -131,7 +131,7 @@ object Graph {
 
   /** The distinct (c, s) pair list, served from the persisted index. */
   def custSuppPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(custSuppPairsDir(s, dir))
+    core.parquet(s, custSuppPairsDir(s, dir))
 
   /** The undirected customer↔supplier transaction graph, shared by
     * every key in this family: an edge per distinct (customer,

@@ -292,7 +292,7 @@ object LlmOps {
     */
   def qSimKnnLabel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val votes = s.read.parquet(cosineTopkDir(s, dir))
+    val votes = core.parquet(s, cosineTopkDir(s, dir))
       .groupBy($"a_id", $"b_label").agg(count(lit(1)).as("votes"))
     val w = Window.partitionBy($"a_id")
       .orderBy($"votes".desc, $"b_label".asc)

@@ -1,47 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import core._
-
-/** Multimodal column plumbing: image/audio/video payloads as opaque
-  * `BinaryType` columns with typed metadata, processed in
-  * deserialized batches via `mapPartitions` (the Scala analog of a
-  * pandas-batch UDF pipeline).
-  *
-  * ===== STUB NOTICE (scope shrunk in r8) ======================
-  * PPM (P6) decode is REAL since r8: [[ppmBytes]]/[[decodePpm]]/
-  * [[ppmStats]] synthesize and parse genuine netpbm containers, and
-  * q_multimodal_decode oracle-checks the parsed integer stats. The
-  * remaining `decodeStub` is a clearly-marked DETERMINISTIC FAKE
-  * standing in ONLY for codec formats that need native dependencies
-  * absent from this container (JPEG via javax.imageio's native
-  * loaders, audio/video via ffmpeg): it derives pseudo
-  * width/height/channels from a stable byte hash. Everything around
-  * it — schema, batch iteration, partitioning, column wiring — is
-  * real, tested Spark plumbing; swapping in a real codec changes
-  * only the body of `decodeStub` (decodePpm shows the pattern).
-  * =============================================================
+/** Multimodal decode without native codecs: P6 PPM (netpbm) is a
+  * complete raster format, so synthesis writes genuine PPM containers,
+  * [[decodePpm]] is a real parser (magic, comments, arbitrary header
+  * whitespace, maxval, then the w·h·3 pixel plane), and
+  * q_multimodal_decode oracle-checks the parsed integer stats against
+  * DuckDB's analytic recompute of the same deterministic pixel
+  * function.
   */
 object Multimodal {
-
-  /** One media row: payload + source-side metadata. */
-  case class MediaRow(doc_id: Long, mime: String, media: Array[Byte])
-
-  // ======================================================================
-  // REAL binary-format decode (r8, VERDICT r7 task 4): P6 PPM is a
-  // complete dependency-free raster format (netpbm), so the decode
-  // half of the multimodal story no longer needs the stub — synthesis
-  // writes genuine PPM containers, [[decodePpm]] is a real parser
-  // (magic, comments, arbitrary header whitespace, maxval, then the
-  // w·h·3 pixel plane), and q_multimodal_decode oracle-checks the
-  // parsed integer stats against DuckDB's analytic recompute of the
-  // same deterministic pixel function. The stub below now stands in
-  // ONLY for codecs that genuinely need native dependencies (JPEG,
-  // audio, video).
-  // ======================================================================
 
   /** Deterministic synthetic P6 image for a doc id: dimensions
     * w = 4 + id mod 13, h = 3 + id mod 7, pixel j's byte =
@@ -127,120 +94,5 @@ object Multimodal {
       j += 1
     }
     PpmStats(docId, w, h, 3, w.toLong * h, sr, sg, sb)
-  }
-
-  /** Decoded media features (what a real decoder would emit). */
-  case class Decoded(doc_id: Long, mime: String, n_bytes: Long,
-                     width: Int, height: Int, channels: Int,
-                     mean_byte: Double, head: Array[Byte])
-
-  // Reference-typed fields (String, Array[Byte]) are nullable under
-  // the case-class Encoder; primitives are not.
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("mime", StringType, nullable = true),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("mean_byte", DoubleType, nullable = false),
-    StructField("head", BinaryType, nullable = true)))
-
-  /** Build a media table from the documents fixture: UTF-8 bytes as
-    * the opaque payload (stands in for image bytes).
-    */
-  def mediaTable(s: SparkSession, dir: String): Dataset[MediaRow] = {
-    import s.implicits._
-    t(s, dir, "documents")
-      .select($"doc_id", lit("application/octet-stream").as("mime"),
-        encode($"text", "UTF-8").as("media"))
-      .as[MediaRow]
-  }
-
-  /** STUB: deterministic fake decode. A real implementation would
-    * parse the container format here; the fake derives stable
-    * dimensions from a polynomial byte hash so tests are exact.
-    */
-  def decodeStub(m: MediaRow): Decoded = {
-    val bytes = m.media
-    var h = 1125899906842597L // deterministic byte hash (FNV-ish fold)
-    var i = 0
-    var sum = 0L
-    while (i < bytes.length) {
-      h = 31 * h + bytes(i)
-      sum += (bytes(i) & 0xff)
-      i += 1
-    }
-    Decoded(
-      doc_id = m.doc_id,
-      mime = m.mime,
-      n_bytes = bytes.length.toLong,
-      width = 16 + math.floorMod(h, 240).toInt,       // fake dimensions
-      height = 16 + math.floorMod(h >> 8, 240).toInt, // (STUB values)
-      channels = 3,
-      mean_byte = if (bytes.isEmpty) 0.0 else sum.toDouble / bytes.length,
-      head = bytes.take(8))
-  }
-
-  /** Batch decode over partitions: payload bytes never hit the
-    * driver; each partition decodes its batch independently (the
-    * shape a 1000-executor cluster needs). `numPartitions` models the
-    * decode parallelism knob.
-    */
-  def decodeAll(media: Dataset[MediaRow], numPartitions: Int = 0): Dataset[Decoded] = {
-    val s = media.sparkSession
-    import s.implicits._
-    val parts = if (numPartitions > 0) media.repartition(numPartitions, $"doc_id")
-                else media
-    parts.mapPartitions(_.map(decodeStub))
-  }
-
-  /** Feature-extraction stage after decode: aspect ratio + size class
-    * as plain columns, ready to join back to the text/embedding side.
-    */
-  def features(decoded: Dataset[Decoded]): DataFrame = {
-    val s = decoded.sparkSession
-    import s.implicits._
-    decoded.toDF()
-      .withColumn("aspect", r4($"width" / $"height".cast("double")))
-      .withColumn("size_class",
-        when($"n_bytes" >= 400, "large")
-          .when($"n_bytes" >= 200, "medium")
-          .otherwise("small"))
-      .withColumn("head_hex", hex($"head"))
-      .drop("head")
-  }
-
-  /** STUB resize: a real implementation would rescale pixel data;
-    * the fake emits a deterministic w×h "image" by cycling the source
-    * bytes, preserving the real pipeline shape (binary in → binary of
-    * the target size out, metadata updated, row count preserved).
-    */
-  def resizeStub(d: Decoded, w: Int, h: Int): Decoded = {
-    val n = w.toLong * h * d.channels // Long: 50000×50000×3 overflows Int
-    val src = if (d.head.nonEmpty) d.head else Array[Byte](0)
-    val out = Array.tabulate[Byte](math.min(n, 8L).toInt)(i => src(i % src.length))
-    d.copy(width = w, height = h, n_bytes = n, head = out)
-  }
-
-  /** Batch resize over partitions (same distribution shape as decode). */
-  def resizeAll(decoded: Dataset[Decoded], w: Int, h: Int): Dataset[Decoded] = {
-    val s = decoded.sparkSession
-    import s.implicits._
-    decoded.mapPartitions(_.map(resizeStub(_, w, h)))
-  }
-
-  /** Frame-sample analog: take every k-th byte of the payload as a
-    * "frame" (a real video pipeline samples frames the same shape:
-    * binary in → smaller binary out, row count preserved).
-    */
-  def sampleBytes(media: Dataset[MediaRow], k: Int): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.mapPartitions(_.map { m =>
-      val sampled = m.media.grouped(k).map(_.head).toArray
-      (m.doc_id, m.media.length.toLong, sampled)
-    }).toDF("doc_id", "orig_bytes", "sampled")
-      .withColumn("sampled_bytes", octet_length($"sampled").cast("long"))
   }
 }

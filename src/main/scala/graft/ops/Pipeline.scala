@@ -87,7 +87,8 @@ object Pipeline {
       case Some(o) =>
         cleaned.write.partitionBy("lang", "split").mode("overwrite").parquet(o)
         // hand back the written data — a caller action must not
-        // recompute the whole chain
+        // recompute the whole chain; inferred, not core.parquet: the
+        // partitionBy columns live in directory names, not the footers
         spark.read.parquet(o)
       case None => cleaned
     }

@@ -339,14 +339,14 @@ object Storage {
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(_.getLen).sum
       val nOut = math.max(1, math.ceil(bytes / (1024.0 * 1024)).toInt)
-      s.read.parquet(s"$base/small").repartition(nOut)
+      core.parquet(s, s"$base/small").repartition(nOut)
         .write.mode("overwrite").parquet(s"$base/compact")
       base
     })
 
   def qCompactFiles(s: SparkSession, dir: String): DataFrame = {
     val base = compactedDir(s, dir)
-    s.read.parquet(s"$base/compact")
+    core.parquet(s, s"$base/compact")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(core.cents(col("value"))).as("sum_c"),

@@ -244,17 +244,6 @@ object Streaming {
     events.withWatermark("ts", delay)
       .dropDuplicates("user_id", "event_type")
 
-  /** Enrich an event stream with a static dimension (stream-static
-    * join: no state, dimension broadcast/rescanned per micro-batch).
-    */
-  def enrichWithCustomer(events: DataFrame, customer: DataFrame): DataFrame = {
-    val s = events.sparkSession
-    import s.implicits._
-    events.join(customer, events("user_id") === customer("c_custkey"), "inner")
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"c_name",
-        $"c_mktsegment")
-  }
-
   // ------------------------------------------------------------- registries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

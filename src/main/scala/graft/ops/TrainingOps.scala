@@ -318,7 +318,7 @@ object TrainingOps {
     */
   def qDedupComponents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = s.read.parquet(ngramPairsDir(s, dir))
+    val pairs = core.parquet(s, ngramPairsDir(s, dir))
     // label-propagation shuffles are node-sized — reduce width from
     // the edge count (r15, guide §2), not the cpu default; the pair
     // list is a derived index, not a fixture table, so its count stays
@@ -784,7 +784,7 @@ object TrainingOps {
     // serving reads the persisted per-cell index — the n·√n assignment
     // is amortized into the one-per-JVM build (see [[ivfIndexDir]]);
     // per-execution cost is the Σcell² probe join alone
-    val assigned = s.read.parquet(ivfIndexDir(s, dir))
+    val assigned = core.parquet(s, ivfIndexDir(s, dir))
     val a = assigned.select($"cent_id", $"vec_id".as("a_id"),
       $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val b = assigned.select($"cent_id".as("c2"), $"vec_id".as("b_id"),
@@ -878,8 +878,8 @@ object TrainingOps {
 
   /** Multimodal binary-column plumbing with an oracle: text bytes as
     * an opaque BinaryType payload, digests, sizes and a sampled head
-    * slice. The real decode path (images/audio) lives in
-    * `Multimodal.scala` behind a deterministic stub.
+    * slice. The real decode path (P6 PPM images) is
+    * [[qMultimodalDecode]].
     */
   def qMultimodalBinary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

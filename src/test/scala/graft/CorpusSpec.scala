@@ -314,32 +314,4 @@ class CorpusSpec extends SparkSuite {
       .agg(sum($"n_new"), sum($"n_dup")).collect()(0)
     assert(out.getLong(0) == nBatch && out.getLong(1) == trueDups.size)
   }
-
-  test("sharded blooms: no false negatives, and the exact recheck equals the single-bloom path") {
-    val docs = ops.core.t(spark, sf, "documents")
-      .select($"doc_id",
-        array_join(slice(split($"text", " "), 1, 8), " ").as("pfx"))
-    val hist = docs.filter($"doc_id" % 2 === 0)
-    val batch = docs.filter($"doc_id" % 2 === 1)
-    // 4 shards, each sized for history/4 — the horizontal-scaling form
-    val cand = ops.Corpus.shardedBloomCandidates(
-      hist, batch, k = 4, itemsPerShard = 15000L, bits = 120000L)
-    val candIds = cand.select($"doc_id").collect().map(_.getLong(0)).toSet
-    val trueDups = batch.join(hist.select($"pfx"), Seq("pfx"), "left_semi")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    // no false negatives: a dup and its history twin share a pfx, so
-    // they hash-route to the SAME shard — sharding cannot lose a dup
-    assert(trueDups.subsetOf(candIds),
-      s"sharded blooms missed dups: ${(trueDups -- candIds).take(5)}")
-    // still a real prefilter (prunes most of the batch)
-    val nBatch = batch.count()
-    assert(candIds.size < nBatch / 2,
-      s"sharded blooms pruned nothing: ${candIds.size} of $nBatch")
-    // plugged into the identical exact recheck, sharded ≡ single:
-    // both prefilters admit all dups and the semi-join removes every
-    // false positive, so the final dup set is the exact one
-    val recheck = cand.join(hist.select($"pfx"), Seq("pfx"), "left_semi")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(recheck == trueDups)
-  }
 }

@@ -16,7 +16,9 @@ import graft.ops.core
   * DuckDB-written single-file fixtures, a Spark-written multi-file
   * directory, and a crafted events fixture whose `ts` is raw nanos
   * longs. Building the frames, and q_scan_count end to end, launches
-  * no Spark job.
+  * no Spark job; nor does building a read of any persisted index
+  * ([[core.persistedIndex]] and the compaction copies), whose footer
+  * schema is also checked against inference.
   */
 class FixtureReadSpec extends SparkSuite {
   import spark.implicits._
@@ -108,6 +110,33 @@ class FixtureReadSpec extends SparkSuite {
     assert(counts.map(_.getString(0)).toSeq == tables.sorted)
     assert(counts.map(_.getLong(1)).toSeq ==
       tables.sorted.map(n => inferredT(sf, n).count()))
+  }
+
+  test("every persisted index reads its footer schema, and building the reads launches no Spark job") {
+    import graft.ops.{Clustering, Corpus, Graph, LlmOps, Storage, TrainingOps}
+    // building an index is its own (job-running) step; only the reads are probed
+    val pq = Clustering.pqIndexDir(spark, sf)
+    val compacted = Storage.compactedDir(spark, sf)
+    val dirs = Seq(
+      TrainingOps.ngramPairsDir(spark, sf), TrainingOps.ivfIndexDir(spark, sf),
+      Clustering.kmeansAssignDir(spark, sf), s"$pq/books", s"$pq/codes",
+      Clustering.semPairsDir(spark, sf), LlmOps.cosineTopkDir(spark, sf),
+      Graph.custSuppPairsDir(spark, sf), Corpus.bpeMergesDir(spark, sf),
+      s"$compacted/small", s"$compacted/compact")
+    for (d <- dirs) {
+      // flat: no partitionBy directories whose columns a footer lacks
+      assert(new java.io.File(d).listFiles().forall(_.isFile), s"$d is not flat")
+      val inferred = spark.read.parquet(d).schema
+      val footer = GraftBridge.parquetSchema(spark, d)
+      assert(footer == inferred,
+        s"$d: footer ${footer.treeString} vs inferred ${inferred.treeString}")
+    }
+    var frames = Seq.empty[DataFrame]
+    val jobs = JobProbe.jobs(spark, "persisted-index-read-build") {
+      frames = dirs.map(core.parquet(spark, _)) :+ Graph.custSuppPairs(spark, sf)
+    }
+    assert(jobs == 0, "persisted-index reads take their schema from the footer")
+    assert(frames.forall(_.columns.nonEmpty))
   }
 
   test("the listing-built date dim equals the distinct() dim it replaced") {

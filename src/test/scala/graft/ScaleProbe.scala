@@ -163,38 +163,6 @@ object ScaleProbe {
     timed("cosine full top-k (with window)") {
       ops.LlmOps.qSimCosineTopk(spark, sf).count()
     }
-    // A/B: same top-k via the bounded-heap typed aggregator.
-    // MEASURED CONCLUSION (2026-08-12, local[8] sf0.1): row-identical
-    // output, 4.7 s vs 4.7 s — the O(k) partial state does avoid the
-    // 4M-row sort, but per-row deserialization into JVM objects eats
-    // exactly what the sort cost. The window formulation stays (it's
-    // declarative and whole-stage-codegen'd); the aggregator remains
-    // the right shape when k·groups exceeds executor memory.
-    import graft.functions.{Neighbor, TopKNeighbors}
-    val b2 = e.select($"vec_id".as("b_id"), $"label".as("b_label"),
-      $"emb".as("b_emb"), $"nrm".as("b_nrm"))
-    val pairs = a.join(broadcast(b2), $"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id", $"b_label",
-        (graft.functions.DotProduct.dot($"a_emb", $"b_emb")
-          / ($"a_nrm" * $"b_nrm")).as("rawcos"))
-    val aggTopk = timed("cosine top-k via typed aggregator") {
-      val ds = pairs.as[(Long, Long, Int, Double)]
-      val out = ds.groupByKey(_._1)
-        .mapValues(t => Neighbor(t._2, t._3, t._4))
-        .agg(new TopKNeighbors(5).toColumn.name("nb"))
-        .toDF("a_id", "nb")
-        .select($"a_id", posexplode($"nb").as(Seq("i", "n")))
-        .select($"a_id", ($"i" + 1).as("rn"), $"n.bId".as("b_id"),
-          $"n.bLabel".as("b_label"), round($"n.rawcos", 6).as("cos"))
-      print(s"  (${out.count()} rows) ")
-      out
-    }
-    val winTopk = ops.LlmOps.qSimCosineTopk(spark, sf)
-      .select($"a_id", $"rn".cast("long").as("rn"), $"b_id", $"b_label", $"cos")
-    val diff = winTopk.exceptAll(aggTopk).count() +
-      aggTopk.exceptAll(winTopk).count()
-    println(s"aggregator-vs-window row diff: $diff (must be 0)")
-
     // round-4c: sequence packing at 5M docs across 64 shards — the
     // shard count is the parallelism knob; the probe confirms the
     // per-shard window prefix-sum scales linearly and shards pack

@@ -212,7 +212,11 @@ class StreamingSpec extends SparkSuite {
     val mem = MemoryStream[Ev]
     val customer = core.t(spark, sf, "customer")
     val sink = freshSink()
-    val q = Streaming.enrichWithCustomer(mem.toDF, customer)
+    val events = mem.toDF
+    val q = events
+      .join(customer, events("user_id") === customer("c_custkey"), "inner")
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"c_name",
+        $"c_mktsegment")
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName(sink).start()
     mem.addData(Seq(

@@ -50,58 +50,6 @@ class TransformWithStateSpec extends SparkSuite {
     }
   }
 
-  test("streaming transitions (transformWithState) match the batch window") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // a 3-user slice of the events fixture, replayed in ts order
-      // split across two micro-batches (a user's chain crosses the
-      // batch boundary, exercising the cross-batch state)
-      val ev = graft.ops.core.events(spark, sf)
-        .filter($"user_id" <= 2)
-        .select($"user_id", expr("unix_micros(ts)").as("ts_us"),
-          $"event_id", $"event_type")
-        .orderBy($"ts_us", $"event_id")
-        .as[(Long, Long, Long, String)].collect().toSeq
-      val (b1, b2) = ev.splitAt(ev.size / 2)
-      val mem = MemoryStream[(Long, Long, Long, String)]
-      val out = mem.toDS.groupByKey(_._1)
-        .transformWithState(new graft.streaming.TransitionProcessor,
-          TimeMode.None(), OutputMode.Append())
-      val q = out.toDF("from_type", "to_type", "gap_us")
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName("trans").start()
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable(); q.stop()
-      val streamed = spark.table("trans")
-        .groupBy($"from_type", $"to_type")
-        .agg(count(lit(1)).as("n"), sum($"gap_us").as("sum_gap"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
-        .toMap
-      val batch = graft.ops.Streaming.transitions(
-          graft.ops.core.events(spark, sf).filter($"user_id" <= 2))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getLong(2), 0L))).toMap
-      assert(streamed.keySet == batch.keySet,
-        s"transition cells differ: ${streamed.keySet} vs ${batch.keySet}")
-      for ((k, (n, _)) <- streamed)
-        assert(n == batch(k)._1, s"count mismatch at $k")
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("parquet file source streams the events fixture incrementally") {
     val s = spark
     import s.implicits._
