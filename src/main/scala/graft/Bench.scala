@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Host-contention context for the Bench and StreamBench artifacts
+    * (VERDICT r13 task 8): the r13 63-vs-54 s reading was pure
+    * firecracker steal, and the artifact couldn't say so by itself.
+    * /proc/loadavg at run start and end makes drift self-adjudicating.
+    */
+  private[graft] def loadavg(): String =
+    try java.nio.file.Files.readString(
+      java.nio.file.Paths.get("/proc/loadavg")).trim.split(" ")
+      .take(3).mkString(" ")
+    catch { case _: Throwable => "unavailable" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -48,15 +59,6 @@ object Bench {
     // Optional comma-separated key filter for local iteration
     // (SPARK_GRAFT_ONLY=q_a,q_b); the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Host-contention context for the artifact (VERDICT r13 task 8):
-    // the r13 63-vs-54 s reading was pure firecracker steal, and the
-    // artifact couldn't say so by itself. /proc/loadavg at run start
-    // and end makes drift self-adjudicating.
-    def loadavg(): String =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).trim.split(" ")
-        .take(3).mkString(" ")
-      catch { case _: Throwable => "unavailable" }
     val loadStart = loadavg()
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

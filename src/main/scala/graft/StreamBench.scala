@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode}
 
-import graft.ops.Streaming
-import graft.sources.SyntheticEvents
+import graft.ops.{Streaming, core}
+import graft.sources.{SyntheticEvents, TxLog}
 import graft.streaming.RunningCountProcessor
 
 /** Measured streaming throughput/latency (VERDICT r7 task 1): the
@@ -71,9 +71,18 @@ object StreamBench {
       SEv(id, new Timestamp(tsMicros / 1000L), user, tpe, value)
     }.sortBy(e => (e.ts.getTime, e.event_id))
 
-  private def sentinelAfter(last: SEv): SEv =
-    SEv(-1L, new Timestamp(last.ts.getTime + 12L * 3600 * 1000), -1L,
-      "sentinel", 0.0)
+  /** The two-sentinel watermark flush for the append-mode pipelines:
+    * the first sentinel (12 h past the last real event) advances the
+    * watermark past every real window / join range / session, the
+    * second's data batch performs the emission (no-data micro-batches
+    * are off, so emission needs a next batch). Type "sentinel" and
+    * user -1 keep them out of every real group.
+    */
+  private def sentinels(events: IndexedSeq[SEv]): Seq[SEv] = {
+    val t = events.last.ts.getTime + 12L * 3600 * 1000
+    (0 to 1).map(k => SEv(-1L - k, new Timestamp(t + k * 3600 * 1000L), -1L,
+      "sentinel", 0.0))
+  }
 
   /** Run feeds synchronously, one micro-batch per feed; per-batch
     * wall latency in ms.
@@ -106,30 +115,60 @@ object StreamBench {
   private def freshSink(tag: String): String =
     s"streambench_${tag}_${sinkSeq.incrementAndGet()}"
 
-  /** Run `body` with no-data micro-batches disabled. By default Spark
-    * schedules an EXTRA empty micro-batch after every data batch that
-    * advanced the watermark (to emit/evict eagerly), and
+  /** No-data micro-batches off, for [[core.withConf]]. By default
+    * Spark schedules an EXTRA empty micro-batch after every data batch
+    * that advanced the watermark (to emit/evict eagerly), and
     * processAllAvailable waits for it — a measured ~2× per-batch cost
     * on these pipelines that buys only sub-batch emission latency.
     * Disabled, emission rides the NEXT data batch (same results; the
-    * drains below feed two sentinel batches so the final windows
-    * still flush). Restores the previous setting afterwards — the
-    * suite's other streaming tests rely on the eager default.
+    * drains feed two [[sentinels]] so the final windows still flush).
+    * Scoped, not session-wide: the suite's other streaming tests rely
+    * on the eager default.
     */
-  private def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** The RocksDB state store provider, for [[core.withConf]]: the
+    * provider transformWithState runs on, and the one whose state can
+    * outgrow memory (the state-scale and recovery probes).
+    */
+  private val RocksDbState =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** One timed memory-sink pipeline run: start `out` into a fresh
+    * memory table, feed `rows` through [[timeBatches]] in `chunk`-row
+    * micro-batches, feed each `flush` row as one more micro-batch, and
+    * stop; the wall time runs from the first feed to the last flush.
+    * Then `matches` checks the sink table against the batch twin, and
+    * the table is dropped.
+    */
+  private def runPipeline[A](spark: SparkSession, mem: MemoryStream[A],
+      out: DataFrame, tag: String, mode: OutputMode, rows: IndexedSeq[A],
+      chunk: Int, flush: Seq[A] = Nil)(matches: DataFrame => Boolean): PipeResult = {
+    val sink = freshSink(tag)
+    val q = out.writeStream.outputMode(mode)
+      .format("memory").queryName(sink).start()
+    val t0 = System.nanoTime()
+    val lat = timeBatches(q,
+      rows.grouped(chunk).map(c => () => { mem.addData(c); () }))
+    flush.foreach { r => mem.addData(Seq(r)); q.processAllAvailable() }
+    val wall = (System.nanoTime() - t0) / 1e9
+    q.stop()
+    try PipeResult(rows.length.toLong, lat.length, wall,
+      pct(lat, 0.5), pct(lat, 0.95), lat.max, matches(spark.table(sink)))
+    finally spark.catalog.dropTempView(sink)
   }
 
-  private def result(rows: Long, lat: Vector[Double], wallSec: Double,
-      matches: Boolean): PipeResult =
-    PipeResult(rows, lat.length, wallSec,
-      pct(lat, 0.5), pct(lat, 0.95), lat.max, matches)
+  /** Fresh temp dirs, one per tag, deleted with
+    * [[graft.sources.TxLog.deleteTree]] however `body` ends.
+    */
+  private def withScratchDirs[T](tags: String*)(
+      body: Seq[java.nio.file.Path] => T): T = {
+    val dirs = tags.map(t => java.nio.file.Files
+      .createTempDirectory(s"graft_sbench_$t").toAbsolutePath)
+    try body(dirs) finally dirs.foreach(TxLog.deleteTree)
+  }
 
   /** Source partitions per micro-batch: a plain MemoryStream exposes
     * each batch as ONE partition, so the whole map side (window
@@ -146,37 +185,21 @@ object StreamBench {
 
   /** 1-h tumbling counts, 30-min watermark, append mode. */
   def benchWindowedAgg(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = withoutNoDataBatches(spark) {
+      chunk: Int): PipeResult = core.withConf(spark, NoDataBatchesOff) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEv](feedParts(spark))
-    val sink = freshSink("win")
-    val q = Streaming.tumblingStream(mem.toDF)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    val t0 = System.nanoTime()
-    val lat = timeBatches(q,
-      events.grouped(chunk).map(c => () => { mem.addData(c); () }))
-    // two sentinel batches: the first advances the watermark past all
-    // real windows, the second's data batch performs the emission
-    // (no-data micro-batches are off, so emission needs a next batch)
-    val s0 = sentinelAfter(events.last)
-    for (k <- 0 to 1) {
-      mem.addData(Seq(s0.copy(event_id = -1L - k,
-        ts = new Timestamp(s0.ts.getTime + k * 3600 * 1000L))))
-      q.processAllAvailable()
+    runPipeline(spark, mem, Streaming.tumblingStream(mem.toDF), "win",
+        OutputMode.Append(), events, chunk, sentinels(events)) { sink =>
+      // exact equivalence: append-mode emissions == the registered batch
+      // twin's aggregation over the same rows (sentinel's own window
+      // never seals, and the batch side never sees the sentinel)
+      val streamed = sink
+        .orderBy($"window_start", $"event_type").collect().map(_.toString).toSeq
+      val batch = Streaming.tumbling(events.toDF())
+        .orderBy($"window_start", $"event_type").collect().map(_.toString).toSeq
+      streamed == batch
     }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    // exact equivalence: append-mode emissions == the registered batch
-    // twin's aggregation over the same rows (sentinel's own window
-    // never seals, and the batch side never sees the sentinel)
-    val streamed = spark.table(sink)
-      .orderBy($"window_start", $"event_type").collect().map(_.toString).toSeq
-    val batch = Streaming.tumbling(events.toDF())
-      .orderBy($"window_start", $"event_type").collect().map(_.toString).toSeq
-    spark.catalog.dropTempView(sink)
-    result(events.length.toLong, lat, wall, streamed == batch)
   }
 
   /** Purchase-to-click attribution join — the registered
@@ -187,7 +210,7 @@ object StreamBench {
     * watermark; the time bound sizes the state.
     */
   def benchIntervalJoin(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = withoutNoDataBatches(spark) {
+      chunk: Int): PipeResult = core.withConf(spark, NoDataBatchesOff) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def shape(df: DataFrame, tpe: String, pfx: String): DataFrame = df
@@ -196,39 +219,23 @@ object StreamBench {
         $"ts".as(s"${pfx}_ts"))
     val mem = MemoryStream[SEv](feedParts(spark))
     val base = mem.toDF.withWatermark("ts", "30 minutes")
-    val sink = freshSink("join")
-    val q = Streaming.attributionJoin(
-        shape(base, "purchase", "p"), shape(base, "click", "c"))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    val t0 = System.nanoTime()
-    val lat = timeBatches(q,
-      events.grouped(chunk).map(c => () => { mem.addData(c); () }))
-    // first sentinel advances the watermark past every real join
-    // range; the second's batch performs the deferred emission
-    // (no-data micro-batches are off); type "sentinel" never enters
-    // either join side
-    val s0 = sentinelAfter(events.last)
-    for (k <- 0 to 1) {
-      mem.addData(Seq(s0.copy(event_id = -1L - k,
-        ts = new Timestamp(s0.ts.getTime + k * 3600 * 1000L))))
-      q.processAllAvailable()
+    val joined = Streaming.attributionJoin(
+      shape(base, "purchase", "p"), shape(base, "click", "c"))
+    runPipeline(spark, mem, joined, "join", OutputMode.Append(), events,
+        chunk, sentinels(events)) { sink =>
+      // sorted multisets, not sets (ADVICE r8): a duplicate emission
+      // from a replayed/ragged batch must FAIL the equivalence check,
+      // exactly like the windowed-agg pipeline's ordered compare
+      val streamed = sink
+        .select($"p_id", $"c_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val ev = events.toDF()
+      val batch = Streaming.attributionJoin(
+          shape(ev, "purchase", "p"), shape(ev, "click", "c"))
+        .select($"p_id", $"c_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      streamed == batch
     }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    // sorted multisets, not sets (ADVICE r8): a duplicate emission
-    // from a replayed/ragged batch must FAIL the equivalence check,
-    // exactly like the windowed-agg pipeline's ordered compare
-    val streamed = spark.table(sink)
-      .select($"p_id", $"c_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val ev = events.toDF()
-    val batch = Streaming.attributionJoin(
-        shape(ev, "purchase", "p"), shape(ev, "click", "c"))
-      .select($"p_id", $"c_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    spark.catalog.dropTempView(sink)
-    result(events.length.toLong, lat, wall, streamed == batch)
   }
 
   /** Per-user SESSION WINDOWS (30-min gap) with watermark-gated state
@@ -240,33 +247,20 @@ object StreamBench {
     * equivalence compare on both sides.
     */
   def benchSessionWindow(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = withoutNoDataBatches(spark) {
+      chunk: Int): PipeResult = core.withConf(spark, NoDataBatchesOff) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEv](feedParts(spark))
-    val sink = freshSink("sess")
-    val q = Streaming.sessionsStream(mem.toDF)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    val t0 = System.nanoTime()
-    val lat = timeBatches(q,
-      events.grouped(chunk).map(c => () => { mem.addData(c); () }))
-    val s0 = sentinelAfter(events.last)
-    for (k <- 0 to 1) {
-      mem.addData(Seq(s0.copy(event_id = -1L - k,
-        ts = new Timestamp(s0.ts.getTime + k * 3600 * 1000L))))
-      q.processAllAvailable()
+    runPipeline(spark, mem, Streaming.sessionsStream(mem.toDF), "sess",
+        OutputMode.Append(), events, chunk, sentinels(events)) { sink =>
+      val streamed = sink.where($"user_id" =!= -1L)
+        .orderBy($"user_id", $"session_start")
+        .collect().map(_.toString).toSeq
+      val batch = Streaming.sessions(events.toDF())
+        .orderBy($"user_id", $"session_start")
+        .collect().map(_.toString).toSeq
+      streamed == batch
     }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    val streamed = spark.table(sink).where($"user_id" =!= -1L)
-      .orderBy($"user_id", $"session_start")
-      .collect().map(_.toString).toSeq
-    val batch = Streaming.sessions(events.toDF())
-      .orderBy($"user_id", $"session_start")
-      .collect().map(_.toString).toSeq
-    spark.catalog.dropTempView(sink)
-    result(events.length.toLong, lat, wall, streamed == batch)
   }
 
   /** STREAMING DEDUP (`dropDuplicates` over (user_id, event_type) +
@@ -280,64 +274,45 @@ object StreamBench {
     * emitted row is a genuine member of its key's input group.
     */
   def benchStreamingDedup(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = withoutNoDataBatches(spark) {
+      chunk: Int): PipeResult = core.withConf(spark, NoDataBatchesOff) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SEv](feedParts(spark))
-    val sink = freshSink("dedup")
-    val q = Streaming.dedupStream(mem.toDF)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    val t0 = System.nanoTime()
-    val lat = timeBatches(q,
-      events.grouped(chunk).map(c => () => { mem.addData(c); () }))
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    val streamed = spark.table(sink)
-      .select($"user_id", $"event_type", $"event_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    spark.catalog.dropTempView(sink)
-    val inputByKey = events.groupBy(e => (e.user_id, e.event_type))
-    val oneEmissionPerKey =
-      streamed.map(s => (s._1, s._2)).distinct.size == streamed.size
-    val keysMatch =
-      streamed.map(s => (s._1, s._2)).toSet == inputByKey.keySet
-    val membersOk = streamed.forall { case (u, tpe, id) =>
-      inputByKey.get((u, tpe)).exists(_.exists(_.event_id == id))
+    runPipeline(spark, mem, Streaming.dedupStream(mem.toDF), "dedup",
+        OutputMode.Append(), events, chunk) { sink =>
+      val streamed = sink
+        .select($"user_id", $"event_type", $"event_id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      val inputByKey = events.groupBy(e => (e.user_id, e.event_type))
+      val oneEmissionPerKey =
+        streamed.map(s => (s._1, s._2)).distinct.size == streamed.size
+      val keysMatch =
+        streamed.map(s => (s._1, s._2)).toSet == inputByKey.keySet
+      val membersOk = streamed.forall { case (u, tpe, id) =>
+        inputByKey.get((u, tpe)).exists(_.exists(_.event_id == id))
+      }
+      oneEmissionPerKey && keysMatch && membersOk
     }
-    result(events.length.toLong, lat, wall,
-      oneEmissionPerKey && keysMatch && membersOk)
   }
 
   /** Per-user running (count, sum-cents) via transformWithState on the
     * RocksDB state store provider.
     */
   def benchStatefulCount(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = {
+      chunk: Int): PipeResult = core.withConf(spark, RocksDbState) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tuples = events.map(e => (e.user_id, math.round(e.value * 100)))
-      val mem = MemoryStream[(Long, Long)](feedParts(spark))
-      val sink = freshSink("tws")
-      val q = mem.toDS().groupByKey(_._1)
-        .transformWithState(new RunningCountProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n", "sum_c")
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(sink).start()
-      val t0 = System.nanoTime()
-      val lat = timeBatches(q,
-        tuples.grouped(chunk).map(c => () => { mem.addData(c); () }))
-      val wall = (System.nanoTime() - t0) / 1e9
-      q.stop()
+    val tuples = events.map(e => (e.user_id, math.round(e.value * 100)))
+    val mem = MemoryStream[(Long, Long)](feedParts(spark))
+    val counts = mem.toDS().groupByKey(_._1)
+      .transformWithState(new RunningCountProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n", "sum_c")
+    runPipeline(spark, mem, counts, "tws", OutputMode.Update(), tuples,
+        chunk) { sink =>
       // the running totals are monotone, so each key's final state is
       // its max-n sink row; must equal the batch (count, sum) per key
-      val streamed = spark.table(sink)
+      val streamed = sink
         .groupBy($"user_id")
         .agg(max(struct($"n", $"sum_c")).as("fin"))
         .select($"user_id", $"fin.n", $"fin.sum_c").collect()
@@ -345,13 +320,7 @@ object StreamBench {
       val batch = tuples.groupBy(_._1).map { case (u, vs) =>
         u -> (vs.length.toLong, vs.map(_._2).sum)
       }
-      spark.catalog.dropTempView(sink)
-      result(events.length.toLong, lat, wall, streamed == batch)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      streamed == batch
     }
   }
 
@@ -378,32 +347,21 @@ object StreamBench {
     * identical exact recount computed in batch over the same items.
     */
   def benchHeavyHitters(spark: SparkSession, events: IndexedSeq[SEv],
-      chunk: Int): PipeResult = {
+      chunk: Int): PipeResult = core.withConf(spark, RocksDbState) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val n = events.length
-      val items = skewedStreamItems(n)
-      val shards = feedParts(spark) * 2
-      val tuples = items.map(i => (math.floorMod(i.hashCode, shards), i))
-      val mem = MemoryStream[(Int, String)](feedParts(spark))
-      val sink = freshSink("mg")
-      val q = mem.toDS().groupByKey(_._1)
-        .transformWithState(new graft.streaming.MisraGriesProcessor(128),
-          TimeMode.None(), OutputMode.Update())
-        .toDF("shard", "seq", "items", "counts", "err")
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(sink).start()
-      val t0 = System.nanoTime()
-      val lat = timeBatches(q,
-        tuples.grouped(chunk).map(c => () => { mem.addData(c); () }))
-      val wall = (System.nanoTime() - t0) / 1e9
-      q.stop()
-      val candidates = spark.table(sink)
+    val n = events.length
+    val items = skewedStreamItems(n)
+    val shards = feedParts(spark) * 2
+    val tuples = items.map(i => (math.floorMod(i.hashCode, shards), i))
+    val mem = MemoryStream[(Int, String)](feedParts(spark))
+    val sketches = mem.toDS().groupByKey(_._1)
+      .transformWithState(new graft.streaming.MisraGriesProcessor(128),
+        TimeMode.None(), OutputMode.Update())
+      .toDF("shard", "seq", "items", "counts", "err")
+    runPipeline(spark, mem, sketches, "mg", OutputMode.Update(), tuples,
+        chunk) { sink =>
+      val candidates = sink
         .groupBy($"shard")
         .agg(max_by($"items", $"seq").as("items"))
         .select(explode($"items").as("item"))
@@ -417,13 +375,7 @@ object StreamBench {
       val streamed = recountOf(
         itemsDf.filter($"item".isin(candidates.toSeq: _*)))
       val batch = recountOf(itemsDf)
-      spark.catalog.dropTempView(sink)
-      result(n.toLong, lat, wall, streamed == batch && streamed.nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      streamed == batch && streamed.nonEmpty
     }
   }
 
@@ -448,54 +400,43 @@ object StreamBench {
     * two-sided anti-join count.
     */
   def benchStateScale(spark: SparkSession, nKeys: Int,
-      chunk: Int): StateScaleResult = {
+      chunk: Int): StateScaleResult = core.withConf(spark, RocksDbState) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val inserts = (0L until nKeys.toLong).map(k => (k, k % 97L))
-      val updates = (0L until nKeys.toLong / 5).map(k => (k, (k % 89L) + 1L))
-      val tuples = inserts ++ updates
-      val mem = MemoryStream[(Long, Long)](feedParts(spark))
-      val sink = freshSink("scale")
-      val q = mem.toDS().groupByKey(_._1)
-        .transformWithState(new RunningCountProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n", "sum_c")
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(sink).start()
-      val t0 = System.nanoTime()
-      val lat = timeBatches(q,
-        tuples.grouped(chunk).map(c => () => { mem.addData(c); () }))
-      val wall = (System.nanoTime() - t0) / 1e9
-      val prog = q.lastProgress
-      val (stateRows, stateBytes) = prog.stateOperators.headOption
-        .map(so => (so.numRowsTotal, so.memoryUsedBytes)).getOrElse((-1L, -1L))
-      q.stop()
-      val streamed = spark.table(sink)
-        .groupBy($"user_id")
-        .agg(max(struct($"n", $"sum_c")).as("fin"))
-        .select($"user_id", $"fin.n".as("n"), $"fin.sum_c".as("sum_c"))
-      val batch = tuples.toDF("user_id", "c")
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n"), sum($"c").as("sum_c"))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      spark.catalog.dropTempView(sink)
-      val third = math.max(1, lat.length / 3)
-      StateScaleResult(tuples.length.toLong, nKeys.toLong, lat.length, wall,
-        pct(lat, 0.5), pct(lat, 0.95),
-        pct(lat.take(third), 0.5), pct(lat.takeRight(third), 0.5),
-        stateRows, stateBytes, diff == 0L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    val inserts = (0L until nKeys.toLong).map(k => (k, k % 97L))
+    val updates = (0L until nKeys.toLong / 5).map(k => (k, (k % 89L) + 1L))
+    val tuples = inserts ++ updates
+    val mem = MemoryStream[(Long, Long)](feedParts(spark))
+    val sink = freshSink("scale")
+    val q = mem.toDS().groupByKey(_._1)
+      .transformWithState(new RunningCountProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n", "sum_c")
+      .writeStream.outputMode(OutputMode.Update())
+      .format("memory").queryName(sink).start()
+    val t0 = System.nanoTime()
+    val lat = timeBatches(q,
+      tuples.grouped(chunk).map(c => () => { mem.addData(c); () }))
+    val wall = (System.nanoTime() - t0) / 1e9
+    val prog = q.lastProgress
+    val (stateRows, stateBytes) = prog.stateOperators.headOption
+      .map(so => (so.numRowsTotal, so.memoryUsedBytes)).getOrElse((-1L, -1L))
+    q.stop()
+    val streamed = spark.table(sink)
+      .groupBy($"user_id")
+      .agg(max(struct($"n", $"sum_c")).as("fin"))
+      .select($"user_id", $"fin.n".as("n"), $"fin.sum_c".as("sum_c"))
+    val batch = tuples.toDF("user_id", "c")
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("n"), sum($"c").as("sum_c"))
+    val diff = streamed.exceptAll(batch).count() +
+      batch.exceptAll(streamed).count()
+    spark.catalog.dropTempView(sink)
+    val third = math.max(1, lat.length / 3)
+    StateScaleResult(tuples.length.toLong, nKeys.toLong, lat.length, wall,
+      pct(lat, 0.5), pct(lat, 0.95),
+      pct(lat.take(third), 0.5), pct(lat.takeRight(third), 0.5),
+      stateRows, stateBytes, diff == 0L)
   }
 
   case class RecoveryResult(events: Long, keys: Long, stateRows: Long,
@@ -514,23 +455,16 @@ object StreamBench {
     * fed rows — a lost batch reads low, a double-processed one high.
     */
   def benchRecovery(spark: SparkSession, nKeys: Int,
-      chunk: Int): RecoveryResult = {
+      chunk: Int): RecoveryResult = core.withConf(spark, RocksDbState) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_recovery_ckpt").toString
-      // the memory sink cannot recover from a checkpoint in Update
-      // mode — use the production pattern instead: foreachBatch
-      // appending parquet (recovery-capable; a replayed batch's
-      // duplicate append is harmless to the max-of-monotone check,
-      // while state-level double counting still reads high)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_recovery_out").toString
+    // the memory sink cannot recover from a checkpoint in Update
+    // mode — use the production pattern instead: foreachBatch
+    // appending parquet (recovery-capable; a replayed batch's
+    // duplicate append is harmless to the max-of-monotone check,
+    // while state-level double counting still reads high)
+    withScratchDirs("recovery_ckpt", "recovery_out") { dirs =>
+      val Seq(ckpt, outDir) = dirs.map(_.toString)
       val phaseA = (0L until nKeys.toLong).map(k => (k, k % 97L))
       val phaseB = (0L until nKeys.toLong / 10).map(k => (k, (k % 89L) + 1L))
       val mem = MemoryStream[(Long, Long)](feedParts(spark))
@@ -569,11 +503,6 @@ object StreamBench {
         batch.exceptAll(streamed).count()
       RecoveryResult((phaseA.length + phaseB.length).toLong, nKeys.toLong,
         stateRows, pct(latA, 0.5), recoveryMs, diff == 0L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 
@@ -599,13 +528,10 @@ object StreamBench {
   def benchTxLogDrain(spark: SparkSession, n: Int,
                       chunk: Int): DrainResult = {
     import spark.implicits._
-    import graft.sources.TxLog
     require(n >= 2 * chunk,
       s"txlog drain needs >= 2 chunks inside the timed window (n=$n, chunk=$chunk)")
-    def dir(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_sbench_$tag").toAbsolutePath
-    val src = dir("txsrc"); val dst = dir("txdst"); val ck = dir("txck")
-    try {
+    withScratchDirs("txsrc", "txdst", "txck") { dirs =>
+      val Seq(src, dst, ck) = dirs
       // version 1 exists before the stream starts (schema inference);
       // this bootstrap commit is OUTSIDE the timed window and excluded
       // from the rate's numerator
@@ -633,12 +559,6 @@ object StreamBench {
         DrainResult(rows, (commits - 1) * chunk, commits, batches,
           wallSec, exact)
       } finally q.stop()
-    } finally Seq(src, dst, ck).foreach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
@@ -654,13 +574,10 @@ object StreamBench {
   def benchTxLogDrainPartitioned(spark: SparkSession, n: Int,
                                  chunk: Int): DrainResult = {
     import spark.implicits._
-    import graft.sources.TxLog
     require(n >= 2 * chunk,
       s"partitioned drain needs >= 2 chunks in the timed window (n=$n, chunk=$chunk)")
-    def dir(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_sbench_$tag").toAbsolutePath
-    val src = dir("txpsrc"); val dst = dir("txpdst"); val ck = dir("txpck")
-    try {
+    withScratchDirs("txpsrc", "txpdst", "txpck") { dirs =>
+      val Seq(src, dst, ck) = dirs
       val parts = 4L
       def mk(lo: Long, hi: Long) =
         spark.range(lo, hi).select(col("id"), (col("id") % parts).as("p"))
@@ -695,12 +612,6 @@ object StreamBench {
         DrainResult(rows, (commits - 1) * chunk, commits, batches,
           wallSec, exact)
       } finally q.stop()
-    } finally Seq(src, dst, ck).foreach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
@@ -724,11 +635,8 @@ object StreamBench {
   def benchCdcReplicate(spark: SparkSession, n: Int,
                         chunk: Int): CdcResult = {
     import spark.implicits._
-    import graft.sources.TxLog
-    def dir(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_sbench_$tag").toAbsolutePath
-    val src = dir("cdcsrc"); val rep = dir("cdcrep"); val ck = dir("cdcck")
-    try {
+    withScratchDirs("cdcsrc", "cdcrep", "cdcck") { dirs =>
+      val Seq(src, rep, ck) = dirs
       def mk(lo: Long, hi: Long, tag: Long) =
         spark.range(lo, hi).select(col("id"),
           (col("id") * 2 + tag).as("v"))
@@ -776,12 +684,6 @@ object StreamBench {
           srcDf.exceptAll(repDf).isEmpty
         CdcResult(changeRows, 3L * rounds, batches, wallSec, exact)
       } finally q.stop()
-    } finally Seq(src, rep, ck).foreach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
@@ -808,6 +710,7 @@ object StreamBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val loadStart = Bench.loadavg()
     val warm = orderedEvents(20000)
     val timed = orderedEvents(n)
     val results = pipelines.map { case (name, fn) =>
@@ -912,6 +815,7 @@ object StreamBench {
     val json = s"""{"metric":"stream_events_total_sec","value":""" +
       f"${results.map(_._2.wallSec).sum}%.3f," +
       s""""unit":"sec","events":$n,"chunk":$chunk,"cpus":$cpus,""" +
+      s""""loadavg_start":"$loadStart","loadavg_end":"${Bench.loadavg()}",""" +
       s""""pipelines":{$body},$scJson,$rcJson,$tdJson}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))

@@ -25,13 +25,13 @@ import org.apache.spark.sql.types.DateType
   * `q_zorder_layout` audits that key). The read is a broadcast join
   * whose fact-side scan carries both `PartitionFilters` and a
   * `dynamicpruning` subquery — asserted in StorageLayoutSpec.
+  *
+  * Every on-disk copy here ("Write (once)": layout tree, evolved dir,
+  * bucketed database, compacted tree) is built once per (fixture dir,
+  * JVM) through [[core.persistedIndex]]: a collision-free, pid-keyed
+  * path that the JVM deletes on exit.
   */
 object Storage {
-
-  /** One layout write per (fixture dir) per JVM — the written tree is
-    * deterministic, so re-running a key re-reads, never re-writes.
-    */
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Peak-date rule shared by dim-write and oracle: day-offset from
     * 2024-01-01 ≡ 5 (mod 7) — 4 of the fixtures' 30 dates, selective
@@ -52,12 +52,8 @@ object Storage {
     * and a `distinct()` shuffle. Its rows are the same set.
     */
   def layoutDir(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(dir, _ => {
+    core.persistedIndex("part_layout", dir) { base =>
       import s.implicits._
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        "graft_part_layout-" + dir.replaceAll("[^A-Za-z0-9.-]", "_"))
-        .getAbsolutePath
       core.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .repartition(col("event_date"))
@@ -67,8 +63,7 @@ object Storage {
         .withColumn("peak", peakRule(col("event_date")))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$base/date_dim")
-      base
-    })
+    }
 
   /** The `event_date` values of a tree partitioned by it, from its
     * directory names (`__HIVE_DEFAULT_PARTITION__` is the null date).
@@ -123,11 +118,7 @@ object Storage {
     * oracle can recompute from the unevolved source table.
     */
   def evolvedDir(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(dir + "#evo", _ => {
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        "graft_schema_evo-" + dir.replaceAll("[^A-Za-z0-9.-]", "_"))
-        .getAbsolutePath
+    core.persistedIndex("schema_evo", dir) { base =>
       val docs = core.t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.filter(col("doc_id") % 2 === 0)
@@ -135,8 +126,7 @@ object Storage {
       docs.filter(col("doc_id") % 2 === 1)
         .withColumn("quality_c", (col("n_chars") % 997).cast("long"))
         .coalesce(1).write.mode("append").parquet(base)
-      base
-    })
+    }
 
   /** Read across the evolution boundary with `mergeSchema` (footer
     * union — fine at fixture scale) and aggregate per lang; pre-
@@ -163,8 +153,8 @@ object Storage {
     * the join key, `sortBy` the same key, `repartition(8, key)` first
     * so each bucket is exactly ONE file (Spark trusts `sortBy` only
     * then — multi-file buckets force a re-sort). Registered in a
-    * dedicated database whose LOCATION lives under tmpdir, so the
-    * layout works regardless of the session's warehouse conf.
+    * dedicated database named after, and LOCATED at, its index dir,
+    * so the layout works regardless of the session's warehouse conf.
     *
     * This is the co-located-join layout: at 100 TB, bucketing both
     * fact tables on the join key at write time removes the per-query
@@ -172,21 +162,12 @@ object Storage {
     * same column) runs exchange-free forever after. BucketedJoinSpec
     * asserts the sort-merge plan has ZERO exchanges below the join.
     */
-  def bucketedDb(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(dir + "#bkt", _ => {
-      val db = "graft_bkt" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val loc = new java.io.File(
-        System.getProperty("java.io.tmpdir"), db).getAbsolutePath
+  def bucketedDb(s: SparkSession, dir: String): String = {
+    def dbAt(loc: String) =
+      new java.io.File(loc).getName.replaceAll("[^A-Za-z0-9]", "_")
+    dbAt(core.persistedIndex("bkt", dir) { loc =>
+      val db = dbAt(loc)
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-      // a previous JVM may have left the managed locations behind with
-      // no entry in THIS session's in-memory catalog — CTAS refuses an
-      // existing location, so drop both ways before writing
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      for (t <- Seq("orders_b", "lineitem_b")) {
-        s.sql(s"DROP TABLE IF EXISTS $db.$t")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$loc/$t"), true)
-      }
       core.t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
         .repartition(8, col("o_orderkey"))
@@ -199,8 +180,8 @@ object Storage {
         .write.format("parquet").mode("overwrite")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(s"$db.lineitem_b")
-      db
     })
+  }
 
   /** Large–large equi-join + same-key aggregation over the bucketed
     * copies: scan (bucketed, pre-sorted) → join → groupBy(l_orderkey)
@@ -325,11 +306,7 @@ object Storage {
     * oracle on the original table, proving content fidelity.
     */
   def compactedDir(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(dir + "#cmp", _ => {
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        "graft_compact-" + dir.replaceAll("[^A-Za-z0-9.-]", "_"))
-        .getAbsolutePath
+    core.persistedIndex("compact", dir) { base =>
       core.events(s, dir).repartition(64)
         .write.mode("overwrite").parquet(s"$base/small")
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -341,8 +318,7 @@ object Storage {
       val nOut = math.max(1, math.ceil(bytes / (1024.0 * 1024)).toInt)
       core.parquet(s, s"$base/small").repartition(nOut)
         .write.mode("overwrite").parquet(s"$base/compact")
-      base
-    })
+    }
 
   def qCompactFiles(s: SparkSession, dir: String): DataFrame = {
     val base = compactedDir(s, dir)

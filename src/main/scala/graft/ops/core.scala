@@ -138,7 +138,7 @@ object core {
 
   /** Row count of a DERIVED frame (a distinct projection, a persisted
     * pair list), memoized per key per JVM so a key re-execution never
-    * pays a second count job just to re-learn n (the `Storage.written`
+    * pays a second count job just to re-learn n (the [[persistedIndex]]
     * once-per-JVM pattern; ADVICE r5). Fixture tables are immutable
     * within a JVM's lifetime, so the memo can never go stale here.
     * Table-level counts do not come here: [[tableRows]] answers them
@@ -153,9 +153,12 @@ object core {
   /** One persisted parquet artifact per (kind, fixture dir) per JVM —
     * the shared machinery behind every derived structure that is an
     * INDEX at 100 TB (the IVF cell assignment, the transaction-graph
-    * edge list): deterministic to build, immutable for the fixture's
-    * lifetime, so each JVM builds it exactly once and every
-    * subsequent key execution only reads it.
+    * edge list) and behind Storage's layout copies (the partitioned
+    * events tree + date dim, the schema-evolved documents dir, the
+    * bucketed database's location, the compacted events tree):
+    * deterministic to build, immutable for the fixture's lifetime, so
+    * each JVM builds it exactly once and every subsequent key
+    * execution only reads it.
     *
     * Path hygiene (ADVICE r6): the path embeds a full SHA-256 of the
     * fixture dir string (not a lossy sanitization — distinct dirs can
@@ -206,12 +209,6 @@ object core {
 
   private def indexDirRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Delete every index dir under `root` belonging to a pid that is
     * no longer alive — or that bears THIS JVM's pid: the sweep runs
     * (once) before this JVM's first build, so a dir already carrying
@@ -233,7 +230,7 @@ object core {
       f.getName match {
         case IdxDir(pid)
             if pid.toLong == self || !ProcessHandle.of(pid.toLong).isPresent =>
-          deleteRecursively(f)
+          TxLog.deleteTree(f.toPath)
         case _ => ()
       }
     }
@@ -248,7 +245,7 @@ object core {
     val kids = root.listFiles()
     if (kids != null) kids.foreach { f =>
       f.getName match {
-        case n @ IdxDir(_) if n.endsWith(mine) => deleteRecursively(f)
+        case n @ IdxDir(_) if n.endsWith(mine) => TxLog.deleteTree(f.toPath)
         case _ => ()
       }
     }

@@ -318,11 +318,11 @@ object TxLog {
                             schema: Option[StructType] = None)
 
   /** Commits between checkpoints; replay reads at most this many
-    * commit files past the newest checkpoint. Overridable for the
-    * metadata-scale probe (cadence sweep) via system property.
+    * commit files past the newest checkpoint. A `var` only so the
+    * metadata-scale probe can sweep the cadence; production code never
+    * reassigns it.
     */
-  def checkpointEvery: Int = sys.props.get("graft.txlog.checkpointEvery")
-    .map(_.toInt).getOrElse(10)
+  @volatile private[graft] var checkpointEvery: Int = 10
 
   private def logDir(table: String): JPath = Paths.get(table, "_graft_log")
 
@@ -818,7 +818,7 @@ object TxLog {
         Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
         name -> footerStats(dest)
       }
-      scrubStage(stageDir)
+      deleteTree(stageDir)
       names
     } else stagePartitioned(table, df0, spec, stageDir)
   }
@@ -874,16 +874,18 @@ object TxLog {
       } finally entries.close()
     }
     walk(stageDir, Map.empty, 0)
-    scrubStage(stageDir)
+    deleteTree(stageDir)
     out.result()
   }
 
-  /** Best-effort recursive scrub of an emptied stage dir
-    * (_SUCCESS markers, partition subdirs).
+  /** Best-effort recursive delete of `root`, deepest first, for scratch
+    * and cache dirs (an emptied stage dir, a staged write, an index
+    * dir). Failures are swallowed: DROP TABLE, which must fail loudly,
+    * keeps its own delete.
     */
-  private def scrubStage(stageDir: JPath): Unit =
+  private[graft] def deleteTree(root: JPath): Unit =
     try {
-      val all = Files.walk(stageDir)
+      val all = Files.walk(root)
       try all.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally all.close()
@@ -2123,19 +2125,9 @@ object TxLog {
     // the update frame feeds the locate agg, the key sample, the
     // anti-join, and the union — pin one evaluation
     val u = updates.persist()
-    try {
-      val (_, touchedFiles) = locateTouched(s, snap, u, key)
-      if (touchedFiles.isEmpty && u.isEmpty) return snap.version
-      // survivors from touched files + all update rows, one rewrite
-      val survivors =
-        if (touchedFiles.isEmpty) u.limit(0)
-        else readSnapshot(s, snap.copy(files = touchedFiles))
-          .join(u.select(col(key)), Seq(key), "left_anti")
-      val rewritten = survivors.unionByName(u, allowMissingColumns = true)
-      val adds = stage(s, table, rewritten, spec)
-      commit(table, "upsert", snap.version, adds,
-        touchedFiles.map(relative(table, _)), Some(merged.json))
-    } finally u.unpersist()
+    try rewriteTouched(s, table, snap, spec, key, u.select(col(key)), Some(u),
+      "upsert", Some(merged.json))
+    finally u.unpersist()
   }
 
   /** Merge-on-write DELETE: rows whose `key` appears in `keys` are
@@ -2151,16 +2143,9 @@ object TxLog {
     val snap = snapshot(table)
     if (snap.files.isEmpty) return snap.version
     val k = keys.select(col(key)).persist()
-    try {
-      val (_, touchedFiles) = locateTouched(s, snap, k, key)
-      if (touchedFiles.isEmpty) return snap.version
-      val survivors = readSnapshot(s, snap.copy(files = touchedFiles))
-        .join(k, Seq(key), "left_anti")
-      val adds = stage(s, table, survivors,
-        partitionSpec(table, snap.version))
-      commit(table, "delete", snap.version, adds,
-        touchedFiles.map(relative(table, _)))
-    } finally k.unpersist()
+    try rewriteTouched(s, table, snap, partitionSpec(table, snap.version),
+      key, k, None, "delete", None)
+    finally k.unpersist()
   }
 
   /** ATOMIC mixed MERGE: upsert `upserts` (by `key`) AND delete the
@@ -2192,18 +2177,33 @@ object TxLog {
     val u = upserts.persist()
     val affected = u.select(col(key))
       .unionByName(deleteKeys.select(col(key))).persist()
-    try {
-      val (_, touchedFiles) = locateTouched(s, snap, affected, key)
-      if (touchedFiles.isEmpty && u.isEmpty) return snap.version
-      val survivors =
-        if (touchedFiles.isEmpty) u.limit(0)
-        else readSnapshot(s, snap.copy(files = touchedFiles))
-          .join(affected, Seq(key), "left_anti")
-      val rewritten = survivors.unionByName(u, allowMissingColumns = true)
-      val adds = stage(s, table, rewritten, spec)
-      commit(table, "upsert", snap.version, adds,
-        touchedFiles.map(relative(table, _)), Some(merged.json))
-    } finally { u.unpersist(); affected.unpersist() }
+    try rewriteTouched(s, table, snap, spec, key, affected, Some(u),
+      "upsert", Some(merged.json))
+    finally { u.unpersist(); affected.unpersist() }
+  }
+
+  /** The locate-and-rewrite core of [[upsert]], [[delete]] and
+    * [[merge]] over a non-empty snapshot: locate the files holding a
+    * key of `remove`, keep their rows whose key is not in `remove`
+    * (anti-join), union the `add` rows, stage one rewrite and commit it
+    * as `op` with `schemaJson`, removing the touched files. Returns
+    * `snap.version` unchanged when no file is touched and there is
+    * nothing to add.
+    */
+  private def rewriteTouched(s: SparkSession, table: String, snap: Snapshot,
+      spec: Seq[String], key: String, remove: DataFrame,
+      add: Option[DataFrame], op: String, schemaJson: Option[String]): Long = {
+    val (_, touchedFiles) = locateTouched(s, snap, remove, key)
+    if (touchedFiles.isEmpty && add.forall(_.isEmpty)) return snap.version
+    val survivors =
+      if (touchedFiles.isEmpty) None
+      else Some(readSnapshot(s, snap.copy(files = touchedFiles))
+        .join(remove, Seq(key), "left_anti"))
+    val rewritten =
+      (survivors ++ add).reduce(_.unionByName(_, allowMissingColumns = true))
+    val adds = stage(s, table, rewritten, spec)
+    commit(table, op, snap.version, adds,
+      touchedFiles.map(relative(table, _)), schemaJson)
   }
 
   /** Bin-pack the live files into `targetFiles` and swap the lists in

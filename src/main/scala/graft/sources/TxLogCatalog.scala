@@ -1012,23 +1012,15 @@ class TxLogStagedWrite(spark: SparkSession, path: String,
               TxLog.stageFrame(spark, path,
                 spark.read.parquet(stagingDir.toString), spec)
             }
-          } finally cleanup(stagingDir)
+          } finally TxLog.deleteTree(stagingDir)
         finish(adds)
         ()
       }
 
       override def abort(messages: Array[WriterCommitMessage]): Unit =
-        try inner.abort(messages) finally cleanup(stagingDir)
+        try inner.abort(messages) finally TxLog.deleteTree(stagingDir)
     }
   }
-
-  private def cleanup(dir: java.nio.file.Path): Unit =
-    try {
-      val all = Files.walk(dir)
-      try all.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally all.close()
-    } catch { case NonFatal(_) => () }
 
   override def description(): String = s"TxLogStagedWrite[$path]"
 }

@@ -100,6 +100,47 @@ class StorageLayoutSpec extends SparkSuite {
     assert(viaLayout == direct)
   }
 
+  test("Storage artifacts of fixture dirs a_b and a/b get distinct, pid-keyed paths") {
+    // the two dir strings sanitize to one name under a
+    // `[^A-Za-z0-9.-]` → `_` mapping; every artifact must still be
+    // built apart, at a persistedIndex path of this JVM
+    val x = Files.createTempDirectory("graft_storage_paths").resolve("x")
+    val first = x.resolve("a_b")
+    val second = x.resolve("a").resolve("b")
+    Seq(first, second).foreach(Files.createDirectories(_))
+    for (t <- Seq("documents", "orders", "lineitem"))
+      Seq(first, second).foreach(d => Files.copy(
+        java.nio.file.Paths.get(sf, s"$t.parquet"), d.resolve(s"$t.parquet")))
+    Files.copy(java.nio.file.Paths.get(sf, "events.parquet"),
+      first.resolve("events.parquet"))
+    // the second dir's events are a strict subset, so a layout served
+    // from the wrong dir changes q_part_layout's rows
+    core.t(spark, sf, "events").where(col("event_id") % 2 === 0)
+      .write.parquet(second.resolve("events.parquet").toString)
+    def artifacts(d: String): Seq[String] = {
+      val db = ops.Storage.bucketedDb(spark, d)
+      Seq(ops.Storage.layoutDir(spark, d), ops.Storage.evolvedDir(spark, d),
+        new java.io.File(new java.net.URI(
+          spark.catalog.getDatabase(db).locationUri)).getAbsolutePath,
+        ops.Storage.compactedDir(spark, d))
+    }
+    val before = ops.Storage.qPartLayout(spark, first.toString).collect().toSeq
+    val a = artifacts(first.toString)
+    val b = artifacts(second.toString)
+    val pid = ProcessHandle.current().pid()
+    a.zip(b).foreach { case (pa, pb) =>
+      assert(pa != pb, s"one artifact path for two fixture dirs: $pa")
+      Seq(pa, pb).foreach(p => assert(
+        new java.io.File(p).getName.matches(s"graft_idx_.*-p$pid"),
+        s"$p is not a persistedIndex path of pid $pid"))
+    }
+    assert(ops.Storage.bucketedDb(spark, first.toString) !=
+      ops.Storage.bucketedDb(spark, second.toString))
+    val after = ops.Storage.qPartLayout(spark, first.toString).collect().toSeq
+    assert(after == before)
+    assert(ops.Storage.qPartLayout(spark, second.toString).collect().toSeq != before)
+  }
+
   test("runtime bloom-filter injection prunes the fact side of a selective join") {
     // the row-level sibling of DPP: a selective dim filter is turned
     // into a bloom filter evaluated on the FACT scan before the join

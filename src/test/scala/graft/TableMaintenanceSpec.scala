@@ -25,7 +25,7 @@ class TableMaintenanceSpec extends SparkSuite {
   test("q_join_bucketed: bucket dirs hold exactly one file per bucket") {
     val db = ops.Storage.bucketedDb(spark, sf)
     val loc = new java.io.File(
-      System.getProperty("java.io.tmpdir"), db)
+      new java.net.URI(spark.catalog.getDatabase(db).locationUri))
     for (t <- Seq("orders_b", "lineitem_b")) {
       val files = new java.io.File(loc, t).listFiles()
         .filter(_.getName.endsWith(".parquet"))

@@ -219,8 +219,9 @@ object TxLogProbe {
     */
   private def metadataScale(): Unit = {
     val commits = 10000
+    val defaultCadence = TxLog.checkpointEvery
     Seq(10, 100, 1000).foreach { cadence =>
-      sys.props("graft.txlog.checkpointEvery") = cadence.toString
+      TxLog.checkpointEvery = cadence
       try {
         val dir = java.nio.file.Files
           .createTempDirectory(s"graft_txmeta_$cadence")
@@ -265,7 +266,7 @@ object TxLogProbe {
           f"$ptrTailMs%.2f ms with a $tail%d-commit tail vs " +
           f"$listMs%.2f ms listing fallback; snapshot(v=${snap.version}%d," +
           f" ${snap.files.size}%d files) $snapMs%.0f ms")
-      } finally sys.props.remove("graft.txlog.checkpointEvery")
+      } finally TxLog.checkpointEvery = defaultCadence
     }
   }
 }
