@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import core._
@@ -73,12 +73,8 @@ object Graph {
     // cpu-count default — at sf0.1 that is 32 tasks per stage over a
     // ≤16 k-row frame, ~15 stages of almost pure scheduling constant
     // (the PERF_r14 anti-scaling family).
-    val confs = ("spark.sql.adaptive.enabled" -> "false") +:
-      (if (loopParts > 0)
-        Seq("spark.sql.shuffle.partitions" -> loopParts.toString)
-      else Nil)
     val (nodes, finalRanks) =
-      core.withConf(s, confs: _*) {
+      core.withoutAqe(s, loopParts) {
         // degree via a COMBINABLE groupBy over the cached edge list —
         // node-sized output, map-side partials — instead of a
         // src-partitioned window, which sort-shuffles the full
@@ -146,14 +142,17 @@ object Graph {
     pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
   }
 
+  /** Row count of the persisted pair list, from its parquet footers
+    * (no Spark job).
+    */
+  private[graft] def custSuppPairRows(s: SparkSession, dir: String): Long =
+    GraftBridge.parquetRows(s, custSuppPairsDir(s, dir))
+
   /** Loop-shuffle width for this family, from the persisted pair
-    * list's row count — the doubled edge list is 2× that. The pair
-    * list is derived (a join of fixture tables), so its count is a
-    * job, memoized per JVM.
+    * list's row count — the doubled edge list is 2× that.
     */
   private def graphLoopParts(s: SparkSession, dir: String): Int =
-    core.loopPartitions(2L * core.statCount(dir + "#cspairs",
-      custSuppPairs(s, dir)))
+    core.loopPartitions(2L * custSuppPairRows(s, dir))
 
   def qGraphPagerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -302,6 +302,12 @@ object TrainingOps {
         .write.mode("overwrite").parquet(path)
     }
 
+  /** Row count of the persisted pair list, from its parquet footers
+    * (no Spark job).
+    */
+  private[graft] def ngramPairRows(s: SparkSession, dir: String): Long =
+    GraftBridge.parquetRows(s, ngramPairsDir(s, dir))
+
   /** Near-duplicate CLUSTERS: connected components over the
     * [[qDedupNgram]] pair graph, labels = min reachable doc_id —
     * the step a real dedup pipeline runs after pair generation
@@ -320,11 +326,9 @@ object TrainingOps {
     import s.implicits._
     val pairs = core.parquet(s, ngramPairsDir(s, dir))
     // label-propagation shuffles are node-sized — reduce width from
-    // the edge count (r15, guide §2), not the cpu default; the pair
-    // list is a derived index, not a fixture table, so its count stays
-    // a memoized job
+    // the edge count (r15, guide §2), not the cpu default
     val labels = connectedComponents(pairs,
-      core.loopPartitions(2L * core.statCount(dir + "#ngrampairs", pairs)))
+      core.loopPartitions(2L * ngramPairRows(s, dir)))
     val sizeW = Window.partitionBy($"component")
     labels.select($"node".as("doc_id"), $"comp".as("component"))
       .withColumn("n_members", count(lit(1)).over(sizeW))
@@ -346,11 +350,7 @@ object TrainingOps {
     // the pair JOIN should checkpoint its edges before calling.
     // loopParts > 0 pins the loop's shuffle width (core.loopPartitions
     // — r15, guide §2); 0 keeps the session default.
-    val confs = ("spark.sql.adaptive.enabled" -> "false") +:
-      (if (loopParts > 0)
-        Seq("spark.sql.shuffle.partitions" -> loopParts.toString)
-      else Nil)
-    core.withConf(edges.sparkSession, confs: _*) {
+    core.withoutAqe(edges.sparkSession, loopParts) {
       connectedComponentsLoop(edges)
     }
   }

@@ -136,13 +136,13 @@ object core {
   private val countMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Row count of a DERIVED frame (a distinct projection, a persisted
-    * pair list), memoized per key per JVM so a key re-execution never
-    * pays a second count job just to re-learn n (the [[persistedIndex]]
-    * once-per-JVM pattern; ADVICE r5). Fixture tables are immutable
-    * within a JVM's lifetime, so the memo can never go stale here.
-    * Table-level counts do not come here: [[tableRows]] answers them
-    * from parquet footers with no job at all.
+  /** Row count of a DERIVED frame (a distinct projection), memoized
+    * per key per JVM so a key re-execution never pays a second count
+    * job just to re-learn n (the [[persistedIndex]] once-per-JVM
+    * pattern; ADVICE r5). Fixture tables are immutable within a JVM's
+    * lifetime, so the memo can never go stale here. Counts of parquet
+    * data on disk do not come here: [[tableRows]] and
+    * `GraftBridge.parquetRows` answer them from footers with no job.
     */
   def statCount(key: String, df: => DataFrame): Long =
     countMemo.computeIfAbsent(key, _ => df.count()).longValue()
@@ -334,25 +334,30 @@ object core {
   def loopPartitions(rows: Long, targetRows: Long = 262144L): Int =
     math.max(1L, math.min((rows + targetRows - 1) / targetRows, 4096L)).toInt
 
-  /** [[withConf]] specialized to the iterative-core pattern: build a
-    * frame, cache it, and MATERIALIZE it with AQE disabled, returning
-    * the cached frame for lazy downstream consumption (which runs
-    * under the session's normal confs). `partitions > 0` additionally
-    * pins `spark.sql.shuffle.partitions` for the scope — the
+  /** [[withConf]] specialized to the iterative loop cores: `body` runs
+    * with AQE disabled, and `partitions > 0` additionally pins
+    * `spark.sql.shuffle.partitions` for the scope — the
     * [[loopPartitions]] right-sizing; 0 keeps the session default.
     */
-  def noAqeMaterialized(spark: SparkSession, partitions: Int = 0)(
-      build: => DataFrame): DataFrame = {
+  def withoutAqe[T](spark: SparkSession, partitions: Int = 0)(body: => T): T = {
     val confs = ("spark.sql.adaptive.enabled" -> "false") +:
       (if (partitions > 0)
         Seq("spark.sql.shuffle.partitions" -> partitions.toString)
       else Nil)
-    withConf(spark, confs: _*) {
+    withConf(spark, confs: _*)(body)
+  }
+
+  /** [[withoutAqe]] over the build-cache-MATERIALIZE pattern: returns
+    * the cached frame for lazy downstream consumption (which runs under
+    * the session's normal confs).
+    */
+  def noAqeMaterialized(spark: SparkSession, partitions: Int = 0)(
+      build: => DataFrame): DataFrame =
+    withoutAqe(spark, partitions) {
       val f = cached(build)
       f.count()
       f
     }
-  }
 
   /** Partition count for an explicit repartition in front of a
     * brute-force pair-scoring join (guide §2: derive partitioning from

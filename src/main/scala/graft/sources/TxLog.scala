@@ -336,6 +336,13 @@ object TxLog {
   private[graft] def abs(p: String): String =
     Paths.get(p).toAbsolutePath.normalize.toString
 
+  /** A `file:` URI (a `CREATE TABLE … USING txlog` location, an
+    * `input_file_name()` value, a checkpoint location) as the
+    * filesystem path it names; any other spelling unchanged.
+    */
+  private[graft] def uriPath(p: String): String =
+    if (p.startsWith("file:")) Paths.get(new java.net.URI(p)).toString else p
+
   /** Atomic exclusive publish: hard-link `tmp` to `target`, which
     * fails (atomically, in the filesystem) if `target` already exists.
     * This is the commit point — content is fully in place the instant
@@ -392,6 +399,15 @@ object TxLog {
         }
       } catch { case NonFatal(_) => None }
     hinted.orElse(listCheckpointsAt(dir))
+  }
+
+  /** The newest checkpoint at or below `v`: where replay starts and
+    * where [[walkBack]] stops.
+    */
+  private def checkpointAtOrBelow(table: String, v: Long): Option[Long] = {
+    val dir = logDir(table)
+    if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
+    else None
   }
 
   /** The O(dir-listing) fallback: scan for `*.checkpoint` entries.
@@ -669,11 +685,7 @@ object TxLog {
   private def replay(table: String, v: Long): LogState = {
     val st = new LogState
     if (v == 0L) return st
-    val dir = logDir(table)
-    val base =
-      if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
-      else None
-    val start = base match {
+    val start = checkpointAtOrBelow(table, v) match {
       case Some(cp) =>
         io.readLines(checkpointPath(table, cp).toString)
           .foreach(l => if (l.nonEmpty) applyCheckpointLine(st, l))
@@ -810,17 +822,35 @@ object TxLog {
       s".stage-${java.util.UUID.randomUUID().toString}")
     if (spec.isEmpty) {
       df0.write.parquet(stageDir.toString)
-      val parts = Files.list(stageDir).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      val names = parts.map { p =>
-        val name = s"part-${java.util.UUID.randomUUID().toString}.parquet"
-        val dest = Paths.get(table, name)
-        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-        name -> footerStats(dest)
-      }
+      val names = publishStagedDir(table, stageDir)
       deleteTree(stageDir)
       names
     } else stagePartitioned(table, df0, spec, stageDir)
+  }
+
+  /** Move one staged parquet file into the table dir as a fresh
+    * `part-<uuid>.parquet` (atomic rename, same filesystem); returns its
+    * table-relative name and footer stats.
+    */
+  private def publishStaged(table: String, staged: JPath)
+      : (String, Option[FileStats]) = {
+    val name = s"part-${java.util.UUID.randomUUID().toString}.parquet"
+    val dest = Paths.get(table, name)
+    Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
+    name -> footerStats(dest)
+  }
+
+  /** [[publishStaged]] for every `.parquet` file of a flat stage dir,
+    * in listing order (the library write and the DSv2 write plane).
+    */
+  private[graft] def publishStagedDir(table: String, stageDir: JPath)
+      : Seq[(String, Option[FileStats])] = {
+    val listing = Files.list(stageDir)
+    val parts =
+      try listing.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toVector
+      finally listing.close()
+    parts.map(publishStaged(table, _))
   }
 
   /** Inverse of [[renameToLogical]] for the write path. */
@@ -866,10 +896,8 @@ object TxLog {
           require(depth == spec.size,
             s"staged file '$n' above the partition depth — " +
             s"partitionBy layout changed")
-          val name = s"part-${java.util.UUID.randomUUID().toString}.parquet"
-          val dest = Paths.get(table, name)
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          out += name -> footerStats(dest).map(_.copy(part = acc))
+          val (name, stats) = publishStaged(table, p)
+          out += name -> stats.map(_.copy(part = acc))
         }
       } finally entries.close()
     }
@@ -900,24 +928,33 @@ object TxLog {
     * the schema forward). None for pre-schema logs / empty tables.
     */
   private[graft] def tableSchema(table: String, v: Long): Option[StructType] = {
-    val dir = logDir(table)
-    val cp = if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
-             else None
+    val schema = lineAfter("schema ") _
+    walkBack(table, v)(schema, schema).flatMap(decodeSchema)
+  }
+
+  /** The rest of the first line of `lines` that starts with `prefix`. */
+  private def lineAfter(prefix: String)(lines: Seq[String]): Option[String] =
+    lines.find(_.startsWith(prefix)).map(_.substring(prefix.length))
+
+  /** The backward log walk behind the per-line lookups ([[tableSchema]],
+    * [[partitionSpec]], [[columnMapping]], [[lastEpoch]]): the first hit
+    * of `fromCommit` on the commit files from `v` down to the newest
+    * checkpoint at or below it, else `fromCheckpoint` on that
+    * checkpoint, which carries every such line forward — so a lookup
+    * reads at most [[checkpointEvery]] commit files, however deep the log.
+    */
+  private def walkBack[A](table: String, v: Long)(
+      fromCommit: Seq[String] => Option[A],
+      fromCheckpoint: Seq[String] => Option[A]): Option[A] = {
+    val cp = checkpointAtOrBelow(table, v)
     var i = v
     val floor = cp.getOrElse(0L)
     while (i > floor) {
-      io.readLines(commitPath(table, i).toString)
-        .find(_.startsWith("schema ")) match {
-        case Some(l) => return decodeSchema(l.substring("schema ".length))
-        case None    => ()
-      }
+      val hit = fromCommit(io.readLines(commitPath(table, i).toString))
+      if (hit.isDefined) return hit
       i -= 1
     }
-    cp.flatMap { c =>
-      io.readLines(checkpointPath(table, c).toString)
-        .find(_.startsWith("schema "))
-        .flatMap(l => decodeSchema(l.substring("schema ".length)))
-    }
+    cp.flatMap(c => fromCheckpoint(io.readLines(checkpointPath(table, c).toString)))
   }
 
   private def decodeSchema(json: String): Option[StructType] =
@@ -935,25 +972,8 @@ object TxLog {
     * (create or first partitioned write) and is immutable.
     */
   def partitionSpec(table: String, v: Long): Seq[String] = {
-    val dir = logDir(table)
-    val cp = if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
-             else None
-    var i = v
-    val floor = cp.getOrElse(0L)
-    while (i > floor) {
-      io.readLines(commitPath(table, i).toString)
-        .find(_.startsWith("partition ")) match {
-        case Some(l) => return decodeSpec(l.substring("partition ".length))
-        case None    => ()
-      }
-      i -= 1
-    }
-    cp.map { c =>
-      io.readLines(checkpointPath(table, c).toString)
-        .find(_.startsWith("partition "))
-        .map(l => decodeSpec(l.substring("partition ".length)))
-        .getOrElse(Nil)
-    }.getOrElse(Nil)
+    val spec = lineAfter("partition ") _
+    walkBack(table, v)(spec, spec).map(decodeSpec).getOrElse(Nil)
   }
 
   // ------------------------------------------------------------------
@@ -991,24 +1011,8 @@ object TxLog {
     * forward). Identity for tables that never renamed or dropped.
     */
   private[graft] def columnMapping(table: String, v: Long): ColMap = {
-    val dir = logDir(table)
-    val cp = if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
-             else None
-    var i = v
-    val floor = cp.getOrElse(0L)
-    while (i > floor) {
-      io.readLines(commitPath(table, i).toString)
-        .find(_.startsWith("colmap ")) match {
-        case Some(l) => return decodeColMap(l.substring("colmap ".length))
-        case None    => ()
-      }
-      i -= 1
-    }
-    cp.flatMap { c =>
-      io.readLines(checkpointPath(table, c).toString)
-        .find(_.startsWith("colmap "))
-        .map(l => decodeColMap(l.substring("colmap ".length)))
-    }.getOrElse(ColMap.identity)
+    val colmap = lineAfter("colmap ") _
+    walkBack(table, v)(colmap, colmap).map(decodeColMap).getOrElse(ColMap.identity)
   }
 
   private def encodeSpec(cols: Seq[String]): String =
@@ -1787,29 +1791,12 @@ object TxLog {
     * how many writers interleave.
     */
   private[graft] def lastEpoch(table: String, v: Long,
-                               writerId: String): Option[Long] = {
-    val dir = logDir(table)
-    val cp = if (io.isDirectory(dir.toString)) latestCheckpointAt(dir).filter(_ <= v)
-             else None
-    val floor = cp.getOrElse(0L)
-    var i = v
-    while (i > floor) {
-      io.readLines(commitPath(table, i).toString)
-        .find(_.startsWith("meta txn ")) match {
-        case Some(line) =>
-          val parts = line.split(" ") // meta txn <writer> <epoch> <readV>
-          if (parts.length >= 4 && parts(2) == writerId)
-            return Some(parts(3).toLong)
-        case None => ()
-      }
-      i -= 1
-    }
-    cp.flatMap { c =>
-      io.readLines(checkpointPath(table, c).toString)
-        .find(_.startsWith(s"txn $writerId "))
-        .map(_.split(" ")(2).toLong)
-    }
-  }
+                               writerId: String): Option[Long] =
+    walkBack(table, v)(
+      lines => lines.find(_.startsWith("meta txn "))
+        .map(_.split(" ")) // meta txn <writer> <epoch> <readV>
+        .collect { case p if p.length >= 4 && p(2) == writerId => p(3).toLong },
+      _.find(_.startsWith(s"txn $writerId ")).map(_.split(" ")(2).toLong))
 
   /** Transactional full overwrite: removes every file live at the read
     * version; the table schema is REPLACED by the written frame's (the
@@ -2069,7 +2056,7 @@ object TxLog {
       .join(updates.select(col(key)), Seq(key), "left_semi")
       .select(col("_graft_file")).as(Encoders.STRING)
       .mapPartitions(_.toSet.iterator)(Encoders.STRING)
-      .collect().map(f => abs(Paths.get(new java.net.URI(f).getPath).toString))
+      .collect().map(f => abs(uriPath(f)))
       .toSet
     (candidates, snap.files.filter(f => touched.contains(abs(f))))
   }

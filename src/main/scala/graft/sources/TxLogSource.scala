@@ -43,16 +43,12 @@ class TxLogSource extends RelationProvider with CreatableRelationProvider
 
   override def shortName(): String = "txlog"
 
-  private def pathOf(parameters: Map[String, String]): String = {
-    val raw = parameters.getOrElse("path", throw new IllegalArgumentException(
-      "txlog requires a 'path' option (the table root)"))
-    // CREATE TABLE ... USING txlog round-trips the location as a
-    // file: URI; the direct read/write API passes the raw string —
-    // normalize both spellings to one filesystem path
-    if (raw.startsWith("file:"))
-      java.nio.file.Paths.get(new java.net.URI(raw)).toString
-    else raw
-  }
+  // CREATE TABLE ... USING txlog round-trips the location as a file:
+  // URI; the direct read/write API passes the raw string — normalize
+  // both spellings to one filesystem path
+  private def pathOf(parameters: Map[String, String]): String =
+    TxLog.uriPath(parameters.getOrElse("path", throw new IllegalArgumentException(
+      "txlog requires a 'path' option (the table root)")))
 
   /** The `startingVersion` option is INCLUSIVE, matching the Delta
     * CDF spelling it borrows: `startingVersion = N` includes commit
@@ -178,17 +174,10 @@ class TxLogSource extends RelationProvider with CreatableRelationProvider
     // trailing slash, file: URI vs bare path — round-12 ADVICE fix)
     // must derive the SAME writer identity, or the replayed batch
     // dodges its own txn line and duplicates
-    def normCp(cp: String): String = {
-      val bare =
-        if (cp.startsWith("file:"))
-          java.nio.file.Paths.get(new java.net.URI(cp)).toString
-        else cp
-      java.nio.file.Paths.get(bare).toAbsolutePath.normalize.toString
-    }
     val writerId = parameters.get("writerId")
       .orElse(parameters.get("checkpointLocation").map(cp =>
         "ckpt-" + java.util.UUID.nameUUIDFromBytes(
-          normCp(cp).getBytes("UTF-8")).toString))
+          TxLog.abs(TxLog.uriPath(cp)).getBytes("UTF-8")).toString))
       .getOrElse(throw new IllegalArgumentException(
         "txlog sink needs a checkpointLocation (or an explicit " +
         "'writerId' option) to be exactly-once across restarts"))
@@ -258,7 +247,71 @@ class TxLogStreamSource(spark: SparkSession, table: String,
     maxVersionsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
     readerId: Option[String] = None)
-    extends Source {
+    extends TxLogVersionSource(table, afterVersion, maxVersionsPerTrigger,
+      maxBytesPerTrigger, readerId) {
+
+  override protected def readRange(from: Long, to: Long): DataFrame = {
+    val files = TxLog.changedFiles(table, from, to)
+    // vacuum's keep-set is VERSION-based and knows nothing about
+    // streaming reader offsets: a compact (de-references the appended
+    // files) followed by a short-retention vacuum can delete files a
+    // lagging reader still needs. Fail with the cause by name instead
+    // of a bare executor FileNotFound (or, under ignoreMissingFiles,
+    // a silently dropped batch — an exactly-once violation).
+    val missing = files.filterNot(TxLog.io.exists)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"streaming read of $table at versions ($from, $to] " +
+      s"needs ${missing.size} file(s) that no longer exist (e.g. " +
+      s"${missing.head}): a compact+vacuum outran this reader — keep " +
+      s"vacuum retention longer than the maximum stream lag")
+    if (files.isEmpty) GraftBridge.emptyStreamingFrame(spark, schema)
+    else {
+      // the existence check above runs at PLANNING time; a vacuum
+      // landing between it and task execution is a residual race.
+      // Pin ignoreMissingFiles=false on this read so the late loss
+      // still FAILS (executor FileNotFound) instead of silently
+      // dropping a batch's rows under a session-level
+      // spark.sql.files.ignoreMissingFiles=true — exactly-once must
+      // never degrade to at-most-once quietly (round-12 ADVICE fix).
+      val base = TxLog.readFilesAt(
+        spark.read.option("ignoreMissingFiles", "false"),
+        table, to, files)
+      // the read speaks the logical names at the range's end, this
+      // source's schema is pinned at start: a column renamed or
+      // dropped in between would align to all nulls. Fail loudly, as
+      // the CDC source does; the restart adopts the new schema
+      val gone = schema.fieldNames.toSet -- base.columns.toSet
+      require(gone.isEmpty,
+        s"column(s) ${gone.mkString(", ")} were renamed or dropped " +
+        s"mid-stream at $table — restart the stream to adopt the new " +
+        s"schema")
+      GraftBridge.tagStreaming(aligned(base))
+    }
+  }
+}
+
+/** The version-offset bookkeeping of both txlog streaming sources
+  * (the replayable-source contract: an offset IS a table version, and
+  * a batch over `(start, end]` re-reads identically after a restart):
+  * [[getOffset]] advances from the newest offset handed out, capped
+  * per trigger by [[TxLogTriggerCap]]; [[getBatch]] hands its version
+  * range to the subclass's [[readRange]]; and, with a `readerId`,
+  * consumed-through versions are registered in the source table's log
+  * for vacuum's respect_readers guard.
+  */
+abstract class TxLogVersionSource(table: String, afterVersion: Long,
+    maxVersionsPerTrigger: Option[Long], maxBytesPerTrigger: Option[Long],
+    readerId: Option[String]) extends Source {
+
+  /** The batch of versions `(from, to]`, in this source's [[schema]]. */
+  protected def readRange(from: Long, to: Long): DataFrame
+
+  /** `df` in this source's pinned schema: columns an additive evolution
+    * added since the files were written read as null until restart.
+    */
+  protected def aligned(df: DataFrame): DataFrame =
+    TxLogRelation.alignTo(df, schema)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
 
   private def toVersion(o: V1Offset): Long = o match {
     case LongOffset(v)          => v
@@ -286,44 +339,7 @@ class TxLogStreamSource(spark: SparkSession, table: String,
     lastOffset = math.max(lastOffset, toVersion(end))
     val from = start.map(toVersion).getOrElse(afterVersion)
     registerThrough(from)
-    val files = TxLog.changedFiles(table, from, toVersion(end))
-    // vacuum's keep-set is VERSION-based and knows nothing about
-    // streaming reader offsets: a compact (de-references the appended
-    // files) followed by a short-retention vacuum can delete files a
-    // lagging reader still needs. Fail with the cause by name instead
-    // of a bare executor FileNotFound (or, under ignoreMissingFiles,
-    // a silently dropped batch — an exactly-once violation).
-    val missing = files.filterNot(TxLog.io.exists)
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"streaming read of $table at versions ($from, ${toVersion(end)}] " +
-      s"needs ${missing.size} file(s) that no longer exist (e.g. " +
-      s"${missing.head}): a compact+vacuum outran this reader — keep " +
-      s"vacuum retention longer than the maximum stream lag")
-    if (files.isEmpty) GraftBridge.emptyStreamingFrame(spark, schema)
-    else {
-      // the existence check above runs at PLANNING time; a vacuum
-      // landing between it and task execution is a residual race.
-      // Pin ignoreMissingFiles=false on this read so the late loss
-      // still FAILS (executor FileNotFound) instead of silently
-      // dropping a batch's rows under a session-level
-      // spark.sql.files.ignoreMissingFiles=true — exactly-once must
-      // never degrade to at-most-once quietly (round-12 ADVICE fix).
-      val base = TxLog.readFilesAt(
-        spark.read.option("ignoreMissingFiles", "false"),
-        table, toVersion(end), files)
-      // the read speaks the logical names at the range's end, this
-      // source's schema is pinned at start: a column renamed or
-      // dropped in between would align to all nulls. Fail loudly, as
-      // the CDC source does; the restart adopts the new schema
-      val gone = schema.fieldNames.toSet -- base.columns.toSet
-      require(gone.isEmpty,
-        s"column(s) ${gone.mkString(", ")} were renamed or dropped " +
-        s"mid-stream at $table — restart the stream to adopt the new " +
-        s"schema")
-      val aligned = TxLogRelation.alignTo(base, schema)
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      GraftBridge.tagStreaming(aligned)
-    }
+    readRange(from, toVersion(end))
   }
 
   // floor of the next registration's data check — consumed-through
@@ -351,7 +367,7 @@ class TxLogStreamSource(spark: SparkSession, table: String,
     registerThrough(toVersion(end))
 
   override def stop(): Unit = ()
-  override def toString: String = s"TxLogStreamSource[$table]"
+  override def toString: String = s"${getClass.getSimpleName}[$table]"
 }
 
 /** Per-trigger offset capping shared by both streaming sources:
@@ -417,33 +433,12 @@ class TxLogCdcStreamSource(spark: SparkSession, table: String,
     changeKey: Option[String],
     maxVersionsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    readerId: Option[String] = None) extends Source {
+    readerId: Option[String] = None)
+    extends TxLogVersionSource(table, afterVersion, maxVersionsPerTrigger,
+      maxBytesPerTrigger, readerId) {
 
-  private def toVersion(o: V1Offset): Long = o match {
-    case LongOffset(v)          => v
-    case SerializedOffset(json) => json.trim.toLong
-    case other                  => other.json.trim.toLong
-  }
-
-  @volatile private var lastOffset: Long = afterVersion
-
-  override def getOffset: Option[V1Offset] = {
-    val cur = TxLog.currentVersion(table)
-    val capped = TxLogTriggerCap.next(table, lastOffset, cur,
-      maxVersionsPerTrigger, maxBytesPerTrigger)
-    if (capped > lastOffset) {
-      lastOffset = capped
-      Some(LongOffset(capped))
-    } else if (cur > afterVersion) Some(LongOffset(lastOffset))
-    else None
-  }
-
-  override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    lastOffset = math.max(lastOffset, toVersion(end))
-    val from = start.map(toVersion).getOrElse(afterVersion)
-    registerThrough(from)
-    val feed = TxLog.readChangeFeed(spark, table, from,
-      Some(toVersion(end)), changeKey)
+  override protected def readRange(from: Long, to: Long): DataFrame = {
+    val feed = TxLog.readChangeFeed(spark, table, from, Some(to), changeKey)
     // mid-stream RENAME/DROP guard (round 14): the feed speaks the
     // NEWEST logical names, this source's schema is pinned at start —
     // aligning a renamed-away column would silently null every value
@@ -456,31 +451,8 @@ class TxLogCdcStreamSource(spark: SparkSession, table: String,
       s"column(s) ${gone.mkString(", ")} were renamed or dropped " +
       s"mid-stream at $table — restart the CDC stream to adopt the " +
       s"new schema")
-    // align to the schema pinned at source creation (mid-stream
-    // additive evolution: new columns read as null until restart,
-    // like the plain source)
-    val aligned = TxLogRelation.alignTo(feed, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    GraftBridge.asStream(aligned)
+    GraftBridge.asStream(aligned(feed))
   }
-
-  // same retention-handshake registration as the plain source (see
-  // the safety notes there)
-  @volatile private var registeredThrough: Long = afterVersion
-
-  private def registerThrough(v: Long): Unit = readerId.foreach { rid =>
-    if (v > registeredThrough) {
-      if (TxLog.rangeHasData(table, registeredThrough, v))
-        TxLog.registerReader(table, rid, v)
-      registeredThrough = v
-    }
-  }
-
-  override def commit(end: V1Offset): Unit =
-    registerThrough(toVersion(end))
-
-  override def stop(): Unit = ()
-  override def toString: String = s"TxLogCdcStreamSource[$table]"
 }
 
 /** CATALOG-TABLE STALENESS (round-11 ADVICE note): this relation pins

@@ -40,7 +40,7 @@ class ClusteringSpec extends SparkSuite {
     // every ADC top-3 partner must share the query's cluster — the
     // asymmetric-distance mechanism itself, isolated from the
     // random-fixture recall caveat in the scaladoc
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString
+    val dir = tempDir("pq").toString
     (0L until 40L).map { v =>
       val c = (v % 4).toDouble
       (v, (0 until 64).map(j =>
@@ -78,7 +78,7 @@ class ClusteringSpec extends SparkSuite {
     // regime SemDeDup targets): 20 clusters x 10 near-identical
     // vectors, centered components — every within-cluster pair has
     // cos ~ 1 and must surface via the shared nearest cell
-    val dir = java.nio.file.Files.createTempDirectory("graft_semfix").toString
+    val dir = tempDir("graft_semfix").toString
     spark.range(0, 200).select($"id".as("vec_id"))
       .withColumn("c", $"vec_id" % 20)
       .withColumn("embedding", expr(

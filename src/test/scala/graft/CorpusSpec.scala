@@ -103,7 +103,7 @@ class CorpusSpec extends SparkSuite {
     // slope must be exactly 3, r6-rounded. Drives the REAL operator
     // over a temp events fixture (ts as long nanos, like the driver's
     // parquet) so a formula edit in qAggRegrSlope fails here.
-    val dir = java.nio.file.Files.createTempDirectory("regr").toString
+    val dir = tempDir("regr").toString
     val base = 1704067200L * 1000000000L
     Seq(0L, 60L, 120L)
       .map(x => (1L, base + x * 1000000000L, "a",

@@ -40,7 +40,7 @@ class EmbedLshBandedSpec extends SparkSuite {
     // fixture pattern) — within-cluster cos ~ 1 >= 0.5, cross-cluster
     // ~ 0; the batched path must find every within-cluster pair in
     // EVERY batch and dedup them to one row each.
-    val dir = java.nio.file.Files.createTempDirectory("graft_band").toString
+    val dir = tempDir("graft_band").toString
     spark.range(0, 200).select($"id".as("vec_id"))
       .withColumn("c", $"vec_id" % 20)
       .withColumn("label", ($"vec_id" % 10).cast("int"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -18,7 +16,8 @@ import graft.ops.core
   * longs. Building the frames, and q_scan_count end to end, launches
   * no Spark job; nor does building a read of any persisted index
   * ([[core.persistedIndex]] and the compaction copies), whose footer
-  * schema is also checked against inference.
+  * schema is also checked against inference, nor taking the two pair
+  * lists' row counts, which must equal `count()`.
   */
 class FixtureReadSpec extends SparkSuite {
   import spark.implicits._
@@ -69,7 +68,7 @@ class FixtureReadSpec extends SparkSuite {
   }
 
   test("a Spark-written multi-file directory reads like its inference twin") {
-    val dir = Files.createTempDirectory("graft_fixture_dirs").toString
+    val dir = tempDir("graft_fixture_dirs").toString
     tables.foreach { name =>
       core.t(spark, sf, name).repartition(3)
         .write.parquet(s"$dir/$name.parquet")
@@ -83,7 +82,7 @@ class FixtureReadSpec extends SparkSuite {
   }
 
   test("a nanos-long events fixture takes the LONG branch") {
-    val dir = Files.createTempDirectory("graft_fixture_nanos").toString
+    val dir = tempDir("graft_fixture_nanos").toString
     spark.range(0, 50).select(
       lit("t").as("event_type"), $"id".as("event_id"),
       lit(7.0).as("value"), ($"id" * 1000000123L).as("ts"),
@@ -132,11 +131,16 @@ class FixtureReadSpec extends SparkSuite {
         s"$d: footer ${footer.treeString} vs inferred ${inferred.treeString}")
     }
     var frames = Seq.empty[DataFrame]
+    var pairRows = Seq.empty[Long]
     val jobs = JobProbe.jobs(spark, "persisted-index-read-build") {
       frames = dirs.map(core.parquet(spark, _)) :+ Graph.custSuppPairs(spark, sf)
+      pairRows = Seq(TrainingOps.ngramPairRows(spark, sf), Graph.custSuppPairRows(spark, sf))
     }
-    assert(jobs == 0, "persisted-index reads take their schema from the footer")
+    assert(jobs == 0,
+      "persisted-index reads take their schema, and the pair lists their counts, from the footer")
     assert(frames.forall(_.columns.nonEmpty))
+    assert(pairRows == Seq(TrainingOps.ngramPairsDir(spark, sf), Graph.custSuppPairsDir(spark, sf))
+      .map(spark.read.parquet(_).count()))
   }
 
   test("the listing-built date dim equals the distinct() dim it replaced") {

@@ -23,7 +23,7 @@ class GraphSpec extends SparkSuite {
     // so each iteration maps r → 0.15e12 + 0.85·r, whose fixed point
     // 1e12 is hit EXACTLY in integer units (85·1e12 DIV 100 is exact).
     // Any drift here means the integer update rule changed.
-    val dir = java.nio.file.Files.createTempDirectory("pr").toString
+    val dir = tempDir("pr").toString
     Seq((100L, 1L), (200L, 2L)).toDF("o_orderkey", "o_custkey")
       .write.parquet(s"$dir/orders.parquet")
     Seq((100L, 7L), (200L, 8L)).toDF("l_orderkey", "l_suppkey")
@@ -50,7 +50,7 @@ class GraphSpec extends SparkSuite {
   test("q_graph_cooccur counts shared customers exactly on a crafted graph") {
     // supplier 10 serves c1,c2,c3; 20 serves c1,c2; 30 serves c3:
     // common(10,20)=2, common(10,30)=1, common(20,30)=0
-    val dir = java.nio.file.Files.createTempDirectory("co").toString
+    val dir = tempDir("co").toString
     val links = Seq((1L, 10L), (2L, 10L), (3L, 10L),
       (1L, 20L), (2L, 20L), (3L, 30L))
     links.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
@@ -69,7 +69,7 @@ class GraphSpec extends SparkSuite {
 
   test("q_graph_khop: exact hop distances on a crafted chain, islands absent") {
     // s0 (seed) — c100 — s5 — c200, plus an unreachable island c300—s7
-    val dir = java.nio.file.Files.createTempDirectory("kh").toString
+    val dir = tempDir("kh").toString
     val links = Seq((100L, 0L), (100L, 5L), (200L, 5L), (300L, 7L))
     links.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
       .toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
@@ -96,7 +96,7 @@ class GraphSpec extends SparkSuite {
   test("pagerank favors the hub in a star graph") {
     // one supplier serving 5 customers vs one serving a single
     // customer: the hub must out-rank the leaf supplier
-    val dir = java.nio.file.Files.createTempDirectory("pr2").toString
+    val dir = tempDir("pr2").toString
     val orders = (1L to 6L).map(c => (c * 10, c))
     orders.toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
     orders.map { case (ok, c) => (ok, if (c <= 5) 1L else 2L) }

@@ -24,7 +24,7 @@ import graft.ops.core
 class IndexGcSpec extends SparkSuite {
 
   private def freshRoot(): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft_gcspec").toFile
+    val d = tempDir("graft_gcspec").toFile
     d
   }
 

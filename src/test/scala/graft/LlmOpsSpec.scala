@@ -99,7 +99,7 @@ class LlmOpsSpec extends SparkSuite {
     // patterns, so bucketing must keep them together. n=400 gives
     // adaptive width 3 (8 buckets), so this also exercises w > 0,
     // which sf0.001's n=200 -> w=2 barely does and w=0 not at all.
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshfix").toString
+    val dir = tempDir("graft_lshfix").toString
     spark.range(0, 400).select(col("id").as("vec_id"))
       .withColumn("c", col("vec_id") % 40)
       .withColumn("label", lit(0))
@@ -181,7 +181,7 @@ class LlmOpsSpec extends SparkSuite {
     // pattern) — every within-cluster pair has cos ~ 1 and must
     // survive the longer adaptive band keys; cross-cluster pairs are
     // near-orthogonal and must be filtered by the exact cosine
-    val dir = java.nio.file.Files.createTempDirectory("graft_tau9").toString
+    val dir = tempDir("graft_tau9").toString
     spark.range(0, 200).select($"id".as("vec_id"))
       .withColumn("c", $"vec_id" % 20)
       .withColumn("label", ($"vec_id" % 10).cast("int"))

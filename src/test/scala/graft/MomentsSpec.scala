@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Value-pins for q_agg_moments against hand-derived closed forms —
   * the t2 oracle mirrors the same polynomial, so a formula slip there
   * is invisible to it (this caught the √n/n mis-scaling in review).
@@ -11,7 +9,7 @@ class MomentsSpec extends SparkSuite {
 
   /** events fixture dir with the given cent values under one type. */
   private def fixture(cents: Seq[Long]): String = {
-    val dir = Files.createTempDirectory("moments").toString
+    val dir = tempDir("moments").toString
     cents.zipWithIndex
       .map { case (c, i) => (i.toLong * 1000000000L, "a", c.toDouble / 100.0) }
       .toDF("ts", "event_type", "value")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.{core, Pipeline}
@@ -42,7 +40,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("partitioned output lays out lang=/split= directories") {
-    val out = Files.createTempDirectory("graft_pipe").toString
+    val out = tempDir("graft_pipe").toString
     val res = Pipeline.run(spark, sf, Some(out))
     val back = spark.read.parquet(out)
     assert(back.count() == res.count())

@@ -19,7 +19,7 @@ class RecoverySpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt").toString
     val mem = MemoryStream[Ev]
 
     val q1 = Streaming.tumbling(mem.toDF)
@@ -54,7 +54,7 @@ class RecoverySpec extends SparkSuite {
   private def addFile(watch: String, rows: Seq[(Long, String, Double)]): Unit = {
     val s = spark
     import s.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage").toString
+    val stage = tempDir("graft_stage").toString
     rows.toDF("user_id", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
@@ -66,8 +66,8 @@ class RecoverySpec extends SparkSuite {
   test("file-stream ingest: source offsets grow across a checkpointed restart, exactly once") {
     val s = spark
     import s.implicits._
-    val watch = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ingest_ckpt").toString
+    val watch = tempDir("graft_ingest").toString
+    val ckpt = tempDir("graft_ingest_ckpt").toString
     val schema = "user_id LONG, event_type STRING, value DOUBLE"
     def counts(sink: String) = spark.readStream.schema(schema).parquet(watch)
       .groupBy($"event_type")

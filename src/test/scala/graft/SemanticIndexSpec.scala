@@ -52,7 +52,7 @@ class SemanticIndexSpec extends SparkSuite {
     // structure: 20 clusters × 10 near-identical vectors (the
     // ClusteringSpec fixture), every within-cluster pair cos ≈ 1
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_t9fix").toString
+    val dir = tempDir("graft_t9fix").toString
     spark.range(0, 200).select($"id".as("vec_id"))
       .withColumn("c", $"vec_id" % 20)
       .withColumn("embedding", expr(

@@ -12,7 +12,7 @@ class SourceFormatsSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"fmt_$tag").toString + "/out"
+    tempDir(s"fmt_$tag").toString + "/out"
 
   private val orders = ops.core.t(spark, sf, "orders")
 

@@ -1,12 +1,41 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture — one session per suite. */
-trait SparkSuite extends AnyFunSuite {
+import graft.sources.TxLog
+
+/** Shared local SparkSession fixture — one session per suite. Temp
+  * dirs made through [[tempDir]] are deleted after the suite.
+  */
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   lazy val spark: SparkSession = SparkSuite.session
   val sf: String = "/root/testdata/sf0.001"
+
+  override protected def afterAll(): Unit =
+    try deleteTempDirs() finally super.afterAll()
+}
+
+/** Scratch dirs with an owner: [[tempDir]] makes a fresh dir under
+  * `java.io.tmpdir`, and [[deleteTempDirs]] deletes every dir it made,
+  * with everything in it ([[TxLog.deleteTree]]).
+  */
+trait TempDirs {
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  def deleteTempDirs(): Unit = {
+    tempDirs.forEach(TxLog.deleteTree(_))
+    tempDirs.clear()
+  }
 }
 
 object SparkSuite {

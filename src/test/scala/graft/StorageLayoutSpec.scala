@@ -22,7 +22,7 @@ class StorageLayoutSpec extends SparkSuite {
   }
 
   test("partitionBy(lang) write → filtered read prunes partitions") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val docs = core.t(spark, sf, "documents")
     docs.write.partitionBy("lang").mode("overwrite").parquet(dir)
 
@@ -104,7 +104,7 @@ class StorageLayoutSpec extends SparkSuite {
     // the two dir strings sanitize to one name under a
     // `[^A-Za-z0-9.-]` → `_` mapping; every artifact must still be
     // built apart, at a persistedIndex path of this JVM
-    val x = Files.createTempDirectory("graft_storage_paths").resolve("x")
+    val x = tempDir("graft_storage_paths").resolve("x")
     val first = x.resolve("a_b")
     val second = x.resolve("a").resolve("b")
     Seq(first, second).foreach(Files.createDirectories(_))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ class StreamingMergeSpec extends SparkSuite {
     val s = spark
     import s.implicits._
 
-    val base = Files.createTempDirectory("graft_stream_merge").toString
+    val base = tempDir("graft_stream_merge").toString
     val snap0 = Seq(
       (1L, "O", 1000L), (2L, "O", 2000L), (3L, "F", 3000L),
       (4L, "P", 4000L), (5L, "O", 5000L))

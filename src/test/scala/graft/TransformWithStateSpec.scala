@@ -57,7 +57,7 @@ class TransformWithStateSpec extends SparkSuite {
     // customer table (plain µs-free schema) as the file-source check
     // the file source wants a directory to watch — stage the fixture
     // file into a temp dir
-    val dir = java.nio.file.Files.createTempDirectory("graft_filesrc")
+    val dir = tempDir("graft_filesrc")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/customer.parquet"),
       dir.resolve("part-0.parquet"))

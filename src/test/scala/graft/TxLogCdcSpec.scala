@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.TxLog
 
 /** Row-level CHANGE DATA FEED over the TxLog (round-12): rewrite
@@ -17,7 +15,7 @@ class TxLogCdcSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(): String =
-    Files.createTempDirectory("graft_cdc").toString + "/t"
+    tempDir("graft_cdc").toString + "/t"
 
   private def feed(t: String, from: Long, to: Option[Long] = None,
                    key: Option[String] = None): Set[(Long, String, String, Long)] =
@@ -223,7 +221,7 @@ class TxLogCdcSpec extends SparkSuite {
 
   test("streaming replication: replica follows the source through rewrites") {
     val src = fresh(); val replica = fresh()
-    val ckpt = Files.createTempDirectory("graft_cdc_rep_ckpt").toString
+    val ckpt = tempDir("graft_cdc_rep_ckpt").toString
     TxLog.append(spark, src, Seq(1L -> "a", 2L -> "b").toDF("id", "v"))
 
     val q = spark.readStream.format("txlog").option("path", src)

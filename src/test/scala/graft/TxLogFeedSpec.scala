@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -28,7 +26,7 @@ import graft.sources.TxLog
 class TxLogFeedSpec extends SparkSuite {
 
   private def fresh(): String =
-    Files.createTempDirectory("graft_feed").toString + "/t"
+    tempDir("graft_feed").toString + "/t"
 
   /** The pre-one-shuffle readChangeFeed: per rewrite version,
     * removed∖added and added∖removed by `exceptAll`, keys on both

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -27,7 +25,7 @@ class TxLogIntegrationSpec extends SparkSuite {
 
   test("streaming CDC loop over TxLog == the registered q_merge_upsert key") {
     val s = spark
-    val t = Files.createTempDirectory("graft_txlog_cdc").toString
+    val t = tempDir("graft_txlog_cdc").toString
 
     val snap = ops.Storage.mergeSnapshot(s, dir)
     val off = ops.Storage.mergeOffset(snap)
@@ -49,7 +47,7 @@ class TxLogIntegrationSpec extends SparkSuite {
     val mem = MemoryStream[Change]
     val q = mem.toDF().writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_txlog_cdc_ck").toString)
+        tempDir("graft_txlog_cdc_ck").toString)
       .foreachBatch { (df: DataFrame, _: Long) =>
         val ups = df.filter($"op" =!= "D").drop("op")
         if (!ups.isEmpty) TxLog.upsert(s, t, ups, "o_orderkey")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
@@ -30,7 +29,7 @@ class TxLogIoSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txio").toString + "/t"
+    tempDir("graft_txio").toString + "/t"
 
   /** Counting delegate — records which primitives fire. */
   private class Counting(base: TxLogIo) extends TxLogIo {
@@ -125,7 +124,7 @@ class TxLogIoSpec extends SparkSuite {
   test("HadoopTxLogIo putIfAbsent is exclusive and torn-read-free at " +
        "the primitive level") {
     val io = new HadoopTxLogIo()
-    val dir = Files.createTempDirectory("graft_txio_prim").toString
+    val dir = tempDir("graft_txio_prim").toString
     val target = s"$dir/deep/er/00000000000000000001.commit"
     assert(io.putIfAbsent(target, "meta append 0".getBytes("UTF-8")),
       "first put must win (and create parent dirs)")
@@ -149,7 +148,7 @@ class TxLogIoSpec extends SparkSuite {
   test("facade smoke under the Hadoop seam: SQL " +
        "CREATE/INSERT/MERGE/time-travel run entirely through " +
        "HadoopTxLogIo") {
-    val wh = Files.createTempDirectory("graft_txio_wh").toString
+    val wh = tempDir("graft_txio_wh").toString
     spark.conf.set("spark.sql.catalog.txio", classOf[TxLogCatalog].getName)
     spark.conf.set("spark.sql.catalog.txio.warehouse", wh)
     val counting = new Counting(new HadoopTxLogIo())

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 import scala.util.Random
 
@@ -43,7 +41,7 @@ class TxLogModelSpec extends SparkSuite {
 
   test("30 random ops: read == model, time travel == model history, every step") {
     val rnd = new Random(0xC0FFEE11L)
-    val t = Files.createTempDirectory("graft_txmodel").toAbsolutePath.toString
+    val t = tempDir("graft_txmodel").toAbsolutePath.toString
     // model[v] = table content (multiset) at version v
     val model = mutable.Map[Long, Vector[RowT]](0L -> Vector.empty)
     var cur = 0L

@@ -13,8 +13,9 @@ import graft.sources.TxLog
   * foreachBatch sink. Numbers land in SCALING.md's round-9 section;
   * this main exists so they are reproducible, like ScaleProbeSf1.
   */
-object TxLogProbe {
+object TxLogProbe extends TempDirs {
   def main(args: Array[String]): Unit = {
+    sys.addShutdownHook(deleteTempDirs())
     val spark = SparkSession.builder()
       .master("local[4]").appName("txlog-probe")
       .config("spark.sql.shuffle.partitions", "4")
@@ -24,7 +25,7 @@ object TxLogProbe {
     import spark.implicits._
 
     // --- commit throughput + snapshot latency at depth -------------
-    val t = java.nio.file.Files.createTempDirectory("graft_txprobe")
+    val t = tempDir("graft_txprobe")
       .toAbsolutePath.toString
     val commits = 200
     val t0 = System.nanoTime()
@@ -94,7 +95,7 @@ object TxLogProbe {
     // every batch to the ONE file whose range admits its keys, so the
     // per-batch cost is locate (metadata) + one ~125 k-row rewrite —
     // the merge-on-write cost class a CDC loop pays at any scale.
-    val mt = java.nio.file.Files.createTempDirectory("graft_txmergeprobe")
+    val mt = tempDir("graft_txmergeprobe")
       .toAbsolutePath.toString
     val baseTbl = spark.range(0, 1000000L)
       .select($"id", ($"id" % 997).as("v"))
@@ -115,12 +116,12 @@ object TxLogProbe {
     // --- streaming ingest through the exactly-once sink ------------
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val ingest = java.nio.file.Files.createTempDirectory("graft_txingest")
+    val ingest = tempDir("graft_txingest")
       .toAbsolutePath.toString
     val mem = MemoryStream[Long](numPartitions = 4)
     val q = mem.toDF.toDF("id").writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_txingest_ck").toString)
+        tempDir("graft_txingest_ck").toString)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         TxLog.appendOnce(spark, ingest, df, "probe", id); ()
       }.start()
@@ -142,14 +143,14 @@ object TxLogProbe {
     // drain the 1 M-row table just ingested back out through
     // readStream.format("txlog") into the native txlog sink —
     // the whole loop is exactly-once on both edges.
-    val out = java.nio.file.Files.createTempDirectory("graft_txout")
+    val out = tempDir("graft_txout")
       .toAbsolutePath.toString
     val d0 = System.nanoTime()
     val drain = spark.readStream.format("txlog")
       .option("path", ingest).load()
       .writeStream.format("txlog").option("path", out)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_txout_ck").toString)
+        tempDir("graft_txout_ck").toString)
       .start()
     drain.processAllAvailable()
     val drainSec = (System.nanoTime() - d0) / 1e9
@@ -172,7 +173,7 @@ object TxLogProbe {
     */
   private def timeTravelAndCdc(spark: SparkSession): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_txtt")
+    val dir = tempDir("graft_txtt")
       .toAbsolutePath.toString
     (1 to 10000).foreach(i => TxLog.commit(dir, "append", i - 1L,
       Seq(f"f$i%05d.parquet" -> None), Nil))
@@ -188,7 +189,7 @@ object TxLogProbe {
       f" ($probes%d mtime probes) vs linear walk $linMs%.1f ms " +
       f"(10000 probes); agree=${linear == bisect}%b")
 
-    val t = java.nio.file.Files.createTempDirectory("graft_txcdc")
+    val t = tempDir("graft_txcdc")
       .toAbsolutePath.toString + "/t"
     TxLog.append(spark, t, Seq((1L, "a")).toDF("id", "v"))
     val rel = TxLog.relative(t, TxLog.snapshot(t).files.head)
@@ -223,8 +224,7 @@ object TxLogProbe {
     Seq(10, 100, 1000).foreach { cadence =>
       TxLog.checkpointEvery = cadence
       try {
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_txmeta_$cadence")
+        val dir = tempDir(s"graft_txmeta_$cadence")
           .toAbsolutePath.toString
         val c0 = System.nanoTime()
         (1 to commits).foreach { i =>

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.{TxLog, TxLogCatalog}
 
 /** SQL `CALL` maintenance procedures over txlog tables (round-12):
@@ -14,7 +12,7 @@ class TxLogProcedureSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft_txproc_wh").toString
+    val dir = tempDir("graft_txproc_wh").toString
     spark.conf.set("spark.sql.catalog.txp", classOf[TxLogCatalog].getName)
     spark.conf.set("spark.sql.catalog.txp.warehouse", dir)
     dir

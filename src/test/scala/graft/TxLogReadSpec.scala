@@ -24,7 +24,7 @@ class TxLogReadSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(): String =
-    Files.createTempDirectory("graft_read").toString + "/t"
+    tempDir("graft_read").toString + "/t"
 
   private def rows(df: DataFrame): Map[Seq[Any], Int] =
     df.collect().toSeq.map(_.toSeq).groupBy(identity).map {
@@ -74,7 +74,7 @@ class TxLogReadSpec extends SparkSuite {
 
   test("a log with no schema line falls back to footer inference") {
     val t = fresh()
-    val staged = Files.createTempDirectory("graft_read_stage").toString + "/out"
+    val staged = tempDir("graft_read_stage").toString + "/out"
     Seq(1L -> "a", 2L -> "b").toDF("id", "v").coalesce(1).write.parquet(staged)
     val part = Files.list(Paths.get(staged)).iterator().asScala
       .find(_.toString.endsWith(".parquet")).get

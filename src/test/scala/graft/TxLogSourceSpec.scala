@@ -17,7 +17,7 @@ class TxLogSourceSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txsrc").toAbsolutePath.toString
+    tempDir("graft_txsrc").toAbsolutePath.toString
 
   test("save modes: append, overwrite, errorIfExists, ignore") {
     val t = freshTable()

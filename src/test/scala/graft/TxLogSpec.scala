@@ -19,7 +19,7 @@ class TxLogSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_txlog")
+    val d = tempDir("graft_txlog")
     d.toAbsolutePath.toString
   }
 
@@ -187,7 +187,7 @@ class TxLogSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txlog_ckpt").toString
+    val ckpt = tempDir("graft_txlog_ckpt").toString
     val mem = MemoryStream[(Long, String)]
     def start() = mem.toDF.toDF("id", "v").writeStream
       .option("checkpointLocation", ckpt)
@@ -607,7 +607,7 @@ class TxLogSpec extends SparkSuite {
     val t = freshTable()
     (1 to TxLog.checkpointEvery + 1).foreach(i =>
       TxLog.append(spark, t, mk(i.toLong -> s"r$i")))
-    val moved = freshTable() + "_moved"
+    val moved = freshTable() + "/moved"
     Files.move(Paths.get(t), Paths.get(moved))
     assert(rows(TxLog.read(spark, moved)) ==
       (1 to TxLog.checkpointEvery + 1).map(i => i.toLong -> s"r$i").toSet,
@@ -971,7 +971,7 @@ class TxLogSpec extends SparkSuite {
       // MILLIS: raw longs are in the wrong unit for normKey's micros —
       // pruning on them would overclaim, so the column must be skipped
       spark.conf.set(conf, "TIMESTAMP_MILLIS")
-      val dMillis = Files.createTempDirectory("graft_stats_ms")
+      val dMillis = tempDir("graft_stats_ms")
       Seq((1L, ts)).toDF("id", "t").coalesce(1)
         .write.mode("overwrite").parquet(dMillis.toString)
       val ms = statsOf(dMillis)
@@ -979,7 +979,7 @@ class TxLogSpec extends SparkSuite {
         s"TIMESTAMP_MILLIS stats must be skipped, got ${ms.cols.keySet}")
       // MICROS: the same column IS recorded, as epoch micros
       spark.conf.set(conf, "TIMESTAMP_MICROS")
-      val dMicros = Files.createTempDirectory("graft_stats_us")
+      val dMicros = tempDir("graft_stats_us")
       Seq((1L, ts)).toDF("id", "t").coalesce(1)
         .write.mode("overwrite").parquet(dMicros.toString)
       val us = statsOf(dMicros)

@@ -15,7 +15,7 @@ class TxLogSqlSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft_txsql_wh").toString
+    val dir = tempDir("graft_txsql_wh").toString
     spark.conf.set("spark.sql.catalog.txsql", classOf[TxLogCatalog].getName)
     spark.conf.set("spark.sql.catalog.txsql.warehouse", dir)
     dir
@@ -52,7 +52,7 @@ class TxLogSqlSpec extends SparkSuite {
   }
 
   test("DELETE FROM matches the library delete twin, file-granular") {
-    val t = freshName(); val lib = Files.createTempDirectory("graft_txsql_lib").toString
+    val t = freshName(); val lib = tempDir("graft_txsql_lib").toString
     spark.sql(s"CREATE TABLE txsql.$t (id BIGINT, v STRING)")
     // three files with disjoint id ranges (one insert each → one file each)
     Seq(Seq(1L -> "a", 10L -> "b"), Seq(11L -> "c", 20L -> "d"),
@@ -95,7 +95,7 @@ class TxLogSqlSpec extends SparkSuite {
   }
 
   test("MERGE INTO upsert semantics match the library twin") {
-    val t = freshName(); val lib = Files.createTempDirectory("graft_txsql_lib2").toString
+    val t = freshName(); val lib = tempDir("graft_txsql_lib2").toString
     spark.sql(s"CREATE TABLE txsql.$t (id BIGINT, v STRING)")
     val base = Seq(1L -> "a", 2L -> "b", 3L -> "c").toDF("id", "v")
     TxLog.append(spark, s"$wh/$t", base)
@@ -362,7 +362,7 @@ class TxLogSqlSpec extends SparkSuite {
 
   test("path identifier: txsql.`/abs/path` loads a table by location") {
     wh
-    val dir = Files.createTempDirectory("graft_txsql_path").toString + "/tbl"
+    val dir = tempDir("graft_txsql_path").toString + "/tbl"
     TxLog.append(spark, dir, Seq(1L -> "a").toDF("id", "v"))
     assert(spark.sql(s"SELECT id, v FROM txsql.`$dir`")
       .as[(Long, String)].collect().toSet == Set(1L -> "a"))

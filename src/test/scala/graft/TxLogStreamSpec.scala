@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
@@ -21,13 +19,13 @@ class TxLogStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txstream").toAbsolutePath.toString
+    tempDir("graft_txstream").toAbsolutePath.toString
 
   private def mk(pairs: (Long, String)*): DataFrame = pairs.toDF("id", "v")
 
   test("each append commit becomes a micro-batch; restart is exactly-once") {
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txstream_ckpt").toString
+    val ckpt = tempDir("graft_txstream_ckpt").toString
     TxLog.append(spark, t, mk(1L -> "a"))
 
     // (batchId, rows) pairs observed across both query incarnations
@@ -184,7 +182,7 @@ class TxLogStreamSpec extends SparkSuite {
   test("restart from checkpoint mid-backlog under maxVersionsPerTrigger " +
        "re-emits no version (round-13 ADVICE)") {
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txstream_cap_ckpt").toString
+    val ckpt = tempDir("graft_txstream_cap_ckpt").toString
     (1 to 6).foreach(i => TxLog.append(spark, t, mk(i.toLong -> s"r$i")))
     val seen = mutable.ArrayBuffer.empty[Long]
     def start(one: Boolean) = {
@@ -346,7 +344,7 @@ class TxLogStreamSpec extends SparkSuite {
 
   test("exactly-once table-to-table: txlog stream into an appendOnce sink") {
     val src = freshTable(); val dst = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txstream_e2e").toString
+    val ckpt = tempDir("graft_txstream_e2e").toString
     TxLog.append(spark, src, mk(1L -> "a"))
     def start() = spark.readStream.format("txlog").option("path", src).load()
       .writeStream.option("checkpointLocation", ckpt)
@@ -371,7 +369,7 @@ class TxLogStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txsink_ckpt").toString
+    val ckpt = tempDir("graft_txsink_ckpt").toString
     val mem = MemoryStream[(Long, String)]
     def start() = mem.toDF.toDF("id", "v").writeStream.format("txlog")
       .option("path", t).option("checkpointLocation", ckpt).start()
@@ -403,7 +401,7 @@ class TxLogStreamSpec extends SparkSuite {
         .format("txlog").option("path", t)
         .outputMode("complete")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_txsink_bad").toString).start()
+          tempDir("graft_txsink_bad").toString).start()
     }
   }
 
@@ -411,7 +409,7 @@ class TxLogStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txsink_norm").toString
+    val ckpt = tempDir("graft_txsink_norm").toString
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF.toDF("id", "v").writeStream.format("txlog")
       .option("path", t).option("checkpointLocation", ckpt).start()
@@ -455,7 +453,7 @@ class TxLogStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txsink_part").toString
+    val ckpt = tempDir("graft_txsink_part").toString
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF.toDF("id", "lang").writeStream.format("txlog")
       .partitionBy("lang")
@@ -479,7 +477,7 @@ class TxLogStreamSpec extends SparkSuite {
 
   test("vacuum outrunning a lagging reader fails loudly, naming the cause") {
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txvac_ckpt").toString
+    val ckpt = tempDir("graft_txvac_ckpt").toString
     TxLog.append(spark, t, mk(1L -> "a"))
     val seen = mutable.Set.empty[Long]
     def start() = spark.readStream.format("txlog").option("path", t).load()
@@ -532,7 +530,7 @@ class TxLogStreamSpec extends SparkSuite {
 
   test("CDC mode: rewrite commits stream as row-level change batches") {
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("graft_txcdc_ckpt").toString
+    val ckpt = tempDir("graft_txcdc_ckpt").toString
     TxLog.append(spark, t, mk(1L -> "a", 2L -> "b"))
 
     val seen = mutable.ArrayBuffer.empty[(Long, String, String, Long)]

@@ -28,7 +28,7 @@ class WindowAggSpec extends SparkSuite {
       lit("t").as("event_type"), $"id".as("event_id"),
       lit(7.0).as("value"), ($"id" * 1000000000L).as("ts"),
       $"id".as("user_id"), lit("{}").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
+    val dir = tempDir("gini").toString
     const.write.parquet(s"$dir/events.parquet")
     val g0 = ops.Aggregates.qAggGini(spark, dir).head().getAs[Double]("gini")
     assert(g0 == 0.0)
