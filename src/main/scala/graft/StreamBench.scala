@@ -526,41 +526,12 @@ object StreamBench {
     * differences empty).
     */
   def benchTxLogDrain(spark: SparkSession, n: Int,
-                      chunk: Int): DrainResult = {
-    import spark.implicits._
-    require(n >= 2 * chunk,
-      s"txlog drain needs >= 2 chunks inside the timed window (n=$n, chunk=$chunk)")
-    withScratchDirs("txsrc", "txdst", "txck") { dirs =>
-      val Seq(src, dst, ck) = dirs
-      // version 1 exists before the stream starts (schema inference);
-      // this bootstrap commit is OUTSIDE the timed window and excluded
-      // from the rate's numerator
-      TxLog.append(spark, src.toString,
-        spark.range(0, chunk.toLong).toDF("id"))
-      val q = spark.readStream.format("txlog").option("path", src.toString)
-        .load()
-        .writeStream.format("txlog").option("path", dst.toString)
-        .option("checkpointLocation", ck.toString).start()
-      val commits = (n / chunk).toLong
-      try {
-        val t0 = System.nanoTime()
-        (1L until commits).foreach { b =>
-          TxLog.append(spark, src.toString,
-            spark.range(b * chunk, (b + 1) * chunk).toDF("id"))
-        }
-        q.processAllAvailable()
-        val wallSec = (System.nanoTime() - t0) / 1e9
-        val batches = q.recentProgress.count(_.numInputRows > 0)
-        val srcDf = TxLog.read(spark, src.toString)
-        val dstDf = TxLog.read(spark, dst.toString)
-        val rows = dstDf.count()
-        val exact = rows == commits * chunk &&
-          dstDf.exceptAll(srcDf).isEmpty && srcDf.exceptAll(dstDf).isEmpty
-        DrainResult(rows, (commits - 1) * chunk, commits, batches,
-          wallSec, exact)
-      } finally q.stop()
+                      chunk: Int): DrainResult =
+    drain(spark, n, chunk, spark.range(_, _).toDF("id"), Nil) { (src, dst) =>
+      val srcDf = TxLog.read(spark, src)
+      val dstDf = TxLog.read(spark, dst)
+      dstDf.exceptAll(srcDf).isEmpty && srcDf.exceptAll(dstDf).isEmpty
     }
-  }
 
   /** PARTITIONED-SINK drain (round-13 VERDICT #7): the same
     * txlog→txlog loop, but the sink declares a partition spec via
@@ -573,43 +544,55 @@ object StreamBench {
     */
   def benchTxLogDrainPartitioned(spark: SparkSession, n: Int,
                                  chunk: Int): DrainResult = {
-    import spark.implicits._
+    val parts = 4L
+    drain(spark, n, chunk, (lo, hi) =>
+      spark.range(lo, hi).select(col("id"), (col("id") % parts).as("p")),
+      Seq("p")) { (src, dst) =>
+      // per-partition compare THROUGH the pruned facade read — the
+      // replica must serve each partition correctly from its part
+      // tuples, not merely hold the right multiset overall
+      (0L until parts).forall { pv =>
+        val s = TxLog.read(spark, src).where(col("p") === pv)
+        val d = spark.read.format("txlog").option("path", dst)
+          .load().where(col("p") === pv)
+        d.exceptAll(s).isEmpty && s.exceptAll(d).isEmpty
+      }
+    }
+  }
+
+  /** The one txlog→txlog drain loop: `rows(lo, hi)` makes each chunk,
+    * the sink partitions by `partitionBy`, and `sameAs(src, dst)`
+    * checks the drained table against the source once the row count
+    * matches.
+    */
+  private def drain(spark: SparkSession, n: Int, chunk: Int,
+      rows: (Long, Long) => DataFrame, partitionBy: Seq[String])(
+      sameAs: (String, String) => Boolean): DrainResult = {
     require(n >= 2 * chunk,
-      s"partitioned drain needs >= 2 chunks in the timed window (n=$n, chunk=$chunk)")
-    withScratchDirs("txpsrc", "txpdst", "txpck") { dirs =>
-      val Seq(src, dst, ck) = dirs
-      val parts = 4L
-      def mk(lo: Long, hi: Long) =
-        spark.range(lo, hi).select(col("id"), (col("id") % parts).as("p"))
-      // bootstrap commit outside the timed window (schema inference)
-      TxLog.append(spark, src.toString, mk(0, chunk.toLong))
-      val q = spark.readStream.format("txlog").option("path", src.toString)
+      s"txlog drain needs >= 2 chunks inside the timed window (n=$n, chunk=$chunk)")
+    withScratchDirs("txsrc", "txdst", "txck") { dirs =>
+      val Seq(src, dst, ck) = dirs.map(_.toString)
+      // version 1 exists before the stream starts (schema inference);
+      // this bootstrap commit is OUTSIDE the timed window and excluded
+      // from the rate's numerator
+      TxLog.append(spark, src, rows(0L, chunk.toLong))
+      val q = spark.readStream.format("txlog").option("path", src)
         .load()
-        .writeStream.format("txlog").option("path", dst.toString)
-        .partitionBy("p")
-        .option("checkpointLocation", ck.toString).start()
+        .writeStream.format("txlog").option("path", dst)
+        .partitionBy(partitionBy: _*)
+        .option("checkpointLocation", ck).start()
       val commits = (n / chunk).toLong
       try {
         val t0 = System.nanoTime()
         (1L until commits).foreach { b =>
-          TxLog.append(spark, src.toString,
-            mk(b * chunk, (b + 1) * chunk))
+          TxLog.append(spark, src, rows(b * chunk, (b + 1) * chunk))
         }
         q.processAllAvailable()
         val wallSec = (System.nanoTime() - t0) / 1e9
         val batches = q.recentProgress.count(_.numInputRows > 0)
-        val rows = TxLog.read(spark, dst.toString).count()
-        // per-partition compare THROUGH the pruned facade read — the
-        // replica must serve each partition correctly from its part
-        // tuples, not merely hold the right multiset overall
-        val exact = rows == commits * chunk && (0L until parts).forall { pv =>
-          val s = TxLog.read(spark, src.toString)
-            .where(col("p") === pv)
-          val d = spark.read.format("txlog").option("path", dst.toString)
-            .load().where(col("p") === pv)
-          d.exceptAll(s).isEmpty && s.exceptAll(d).isEmpty
-        }
-        DrainResult(rows, (commits - 1) * chunk, commits, batches,
+        val drained = TxLog.read(spark, dst).count()
+        val exact = drained == commits * chunk && sameAs(src, dst)
+        DrainResult(drained, (commits - 1) * chunk, commits, batches,
           wallSec, exact)
       } finally q.stop()
     }

@@ -44,17 +44,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   * <table>/_graft_log/<v%020d>.checkpoint consolidated log state
   * }}}
   *
-  * A commit file is line-oriented; the FORMAT is the contract, not the
-  * syntax:
-  *
-  * {{{
-  * meta <op> <readVersion>          op = append|overwrite|upsert|compact
-  * meta txn <writer> <epoch> <readVersion>   (exactly-once appends)
-  * schema <spark-schema-json>       the table schema AFTER this commit
-  * add <file> <stats-json>          stats = {"rows":N,"cols":{c:{min,max}}}
-  * add <file>                       (stats unavailable for any column)
-  * remove <file>
-  * }}}
+  * Commit and checkpoint files are line-oriented; the line format
+  * lives only in the codec, [[TxLog.LogRecord]] (one decoded file),
+  * which documents every line kind.
   *
   * File names in commits AND checkpoints are relative to the table
   * root, so the log is relocatable and immune to path-spelling drift
@@ -343,20 +335,20 @@ object TxLog {
   private[graft] def uriPath(p: String): String =
     if (p.startsWith("file:")) Paths.get(new java.net.URI(p)).toString else p
 
-  /** Atomic exclusive publish: hard-link `tmp` to `target`, which
-    * fails (atomically, in the filesystem) if `target` already exists.
-    * This is the commit point — content is fully in place the instant
-    * the name exists. On HDFS the same protocol commits with
-    * `create(path, overwrite = false)`; on object stores with a
-    * conditional PUT.
-    */
   /** The commit point: one [[TxLogIo.putIfAbsent]] of the whole
-    * line-oriented file. On HDFS the same protocol commits with
+    * encoded file. On HDFS the same protocol commits with
     * `create(path, overwrite = false)`; on object stores with a
     * conditional PUT — see [[TxLogIo]].
     */
-  private def publish(lines: Seq[String], target: JPath): Boolean =
-    io.putIfAbsent(target.toString, lines.mkString("\n").getBytes(UTF_8))
+  private def publish(rec: LogRecord, target: JPath): Boolean =
+    io.putIfAbsent(target.toString,
+      LogRecord.encode(rec).mkString("\n").getBytes(UTF_8))
+
+  private def readCommit(table: String, v: Long): LogRecord =
+    LogRecord.decode(io.readLines(commitPath(table, v).toString), checkpoint = false)
+
+  private def readCheckpoint(table: String, v: Long): LogRecord =
+    LogRecord.decode(io.readLines(checkpointPath(table, v).toString), checkpoint = true)
 
   /** Latest contiguous committed version, or 0 for an empty/new table
     * (version 0 is the empty snapshot).
@@ -617,85 +609,138 @@ object TxLog {
   } catch { case NonFatal(_) => None }
 
   // ------------------------------------------------------------------
-  // Log replay
+  // Log lines: the one codec
   // ------------------------------------------------------------------
 
+  /** One commit or checkpoint file, decoded. The `_graft_log` line
+    * format lives only in [[LogRecord.decode]] and [[LogRecord.encode]]
+    * (a new line kind is added there); the FORMAT is the contract, and
+    * `encode` writes the lines in this order:
+    *
+    * {{{
+    * commit:
+    *   meta <op> <readVersion>                  no meta line = legacy append
+    *   meta txn <writer> <epoch> <readVersion>  exactly-once writer mark
+    *   schema <spark-schema-json>               schema AFTER this commit
+    *   partition <spec-json>
+    *   colmap <colmap-json>
+    *   remove <file>
+    *   add <file> <stats-json>                  stats = {"rows":N,"cols":{c:{min,max}}}
+    *   add <file>                               (stats unavailable)
+    * checkpoint:
+    *   schema | partition | colmap              as in a commit
+    *   txn <writer> <epoch>                     folded writer/reader marks
+    *   file <file> [<stats-json>]               the live files
+    * }}}
+    *
+    * A commit's txn mark and a checkpoint's txn lines both land in
+    * `txns`, a commit's adds and a checkpoint's files in `adds`. Stats
+    * stay raw JSON: only replay and [[addedBytes]] parse them. Any line
+    * the decoder does not recognize throws — a pre-r10 checkpoint of
+    * plain full-path lines, or a foreign or future log, must fail loudly
+    * instead of replaying as an empty or partial file set.
+    */
+  private[graft] final case class LogRecord(
+      checkpoint: Boolean,
+      op: Option[String] = None,
+      readVersion: Option[Long] = None,
+      txns: Vector[(String, Long)] = Vector.empty,
+      schemaJson: Option[String] = None,
+      partitionJson: Option[String] = None,
+      colmapJson: Option[String] = None,
+      removes: Vector[String] = Vector.empty,
+      adds: Vector[(String, Option[String])] = Vector.empty) {
+    /** The commit's op; a commit without a meta line is an append. */
+    def opName: String = op.getOrElse("append")
+    /** The op as [[history]] shows it: a txn commit names its writer. */
+    def opLabel: String =
+      if (opName == "txn") s"txn ${txns.head._1}" else opName
+  }
+
+  private[graft] object LogRecord {
+    def decode(lines: Seq[String], checkpoint: Boolean): LogRecord = {
+      var op = Option.empty[String]
+      var readVersion = Option.empty[Long]
+      var schemaJson, partitionJson, colmapJson = Option.empty[String]
+      val txns = Vector.newBuilder[(String, Long)]
+      val removes = Vector.newBuilder[String]
+      val adds = Vector.newBuilder[(String, Option[String])]
+      def unrecognized(line: String): Nothing = throw new IllegalStateException(
+        s"unrecognized ${if (checkpoint) "checkpoint" else "commit"} line (old, " +
+        s"foreign or future log format — refusing to silently drop files or " +
+        s"state): '${line.take(80)}'")
+      // `<writer> <epoch>` at the head of `t`
+      def mark(t: Array[String], line: String): (String, Long) =
+        if (t.length < 2) unrecognized(line) else t(0) -> t(1).toLong
+      lines.foreach { line =>
+        val sp = line.indexOf(' ')
+        val rest = line.substring(sp + 1)
+        if (line.nonEmpty) (if (sp < 0) "" else line.substring(0, sp)) match {
+          case "schema"    => schemaJson = Some(rest)
+          case "partition" => partitionJson = Some(rest)
+          case "colmap"    => colmapJson = Some(rest)
+          case "meta" if !checkpoint =>
+            val t = rest.split(" ")
+            val txn = t(0) == "txn"
+            if (txn) txns += mark(t.drop(1), line)
+            op = Some(t(0))
+            readVersion = t.lift(if (txn) 3 else 1).map(_.toLong)
+          case "txn" if checkpoint     => txns += mark(rest.split(" "), line)
+          case "remove" if !checkpoint => removes += rest
+          case k @ ("add" | "file") if (k == "file") == checkpoint =>
+            val t = rest.split(" ", 2)
+            adds += t(0) -> t.lift(1)
+          case _ => unrecognized(line)
+        }
+      }
+      LogRecord(checkpoint, op, readVersion, txns.result(), schemaJson,
+        partitionJson, colmapJson, removes.result(), adds.result())
+    }
+
+    def encode(r: LogRecord): Seq[String] = {
+      val meta = r.op.map { op =>
+        val mark = if (op == "txn") s" ${r.txns.head._1} ${r.txns.head._2}" else ""
+        s"meta $op$mark" + r.readVersion.fold("")(v => s" $v")
+      }
+      val txnLines =
+        if (r.checkpoint) r.txns.map { case (w, e) => s"txn $w $e" } else Nil
+      val addKind = if (r.checkpoint) "file" else "add"
+      meta.toSeq ++ r.schemaJson.map("schema " + _) ++
+        r.partitionJson.map("partition " + _) ++
+        r.colmapJson.map("colmap " + _) ++ txnLines ++
+        r.removes.map("remove " + _) ++
+        r.adds.map { case (f, st) => s"$addKind $f" + st.fold("")(" " + _) }
+    }
+  }
+
   /** Everything the log knows at one version: live files (relative
-    * name → stats), per-writer txn high-water marks, and the table
-    * schema json. One replay serves [[snapshot]], [[maybeCheckpoint]],
-    * and the checkpoint side of [[lastEpoch]]/[[tableSchema]].
+    * name → stats), per-writer txn high-water marks, and the schema,
+    * partition-spec and column-mapping json. One replay serves
+    * [[snapshot]], [[maybeCheckpoint]] and [[readerHwms]].
     */
   private final class LogState {
     val files = mutable.LinkedHashMap.empty[String, Option[FileStats]]
     val txns = mutable.Map.empty[String, Long]
-    var schemaJson: Option[String] = None
-    var partitionJson: Option[String] = None
-    var colmapJson: Option[String] = None
-  }
+    var schemaJson, partitionJson, colmapJson: Option[String] = None
 
-  private def applyCommitLine(st: LogState, line: String): Unit =
-    if (line.startsWith("add ")) {
-      val parts = line.split(" ", 3)
-      st.files(parts(1)) =
-        if (parts.length >= 3) parseStats(parts(2)) else None
-    } else if (line.startsWith("remove ")) {
-      st.files.remove(line.substring("remove ".length))
-    } else if (line.startsWith("schema ")) {
-      st.schemaJson = Some(line.substring("schema ".length))
-    } else if (line.startsWith("partition ")) {
-      st.partitionJson = Some(line.substring("partition ".length))
-    } else if (line.startsWith("colmap ")) {
-      st.colmapJson = Some(line.substring("colmap ".length))
-    } else if (line.startsWith("meta txn ")) {
-      val parts = line.split(" ") // meta txn <writer> <epoch> <readV>
-      if (parts.length >= 4) {
-        val (w, e) = (parts(2), parts(3).toLong)
-        if (st.txns.getOrElse(w, Long.MinValue) < e) st.txns(w) = e
+    def apply(r: LogRecord): Unit = {
+      r.txns.foreach { case (w, e) =>
+        if (txns.getOrElse(w, Long.MinValue) < e) txns(w) = e
       }
-    } else if (line.startsWith("meta ")) {
-      () // other meta line (op/readVersion — replay doesn't need it)
-    } else throw new IllegalStateException(
-      s"unrecognized commit line (foreign or future log format — " +
-      s"refusing to silently drop state): '${line.take(80)}'")
-
-  /** Checkpoint lines are file/txn/schema ONLY; anything else throws.
-    * Pre-r10 checkpoints were plain full-path lines — silently
-    * ignoring an unrecognized line would replay such a table as an
-    * EMPTY/partial file set instead of failing loudly (round-11
-    * ADVICE fix).
-    */
-  private def applyCheckpointLine(st: LogState, line: String): Unit =
-    if (line.startsWith("file ")) {
-      val parts = line.split(" ", 3)
-      st.files(parts(1)) =
-        if (parts.length >= 3) parseStats(parts(2)) else None
-    } else if (line.startsWith("txn ")) {
-      val parts = line.split(" ")
-      if (parts.length >= 3) st.txns(parts(1)) = parts(2).toLong
-    } else if (line.startsWith("schema ")) {
-      st.schemaJson = Some(line.substring("schema ".length))
-    } else if (line.startsWith("partition ")) {
-      st.partitionJson = Some(line.substring("partition ".length))
-    } else if (line.startsWith("colmap ")) {
-      st.colmapJson = Some(line.substring("colmap ".length))
-    } else throw new IllegalStateException(
-      s"unrecognized checkpoint line (old or foreign checkpoint format " +
-      s"— refusing to silently lose files): '${line.take(80)}'")
+      if (r.schemaJson.isDefined) schemaJson = r.schemaJson
+      if (r.partitionJson.isDefined) partitionJson = r.partitionJson
+      if (r.colmapJson.isDefined) colmapJson = r.colmapJson
+      r.removes.foreach(files.remove)
+      r.adds.foreach { case (f, st) => files(f) = st.flatMap(parseStats) }
+    }
+  }
 
   private def replay(table: String, v: Long): LogState = {
     val st = new LogState
     if (v == 0L) return st
-    val start = checkpointAtOrBelow(table, v) match {
-      case Some(cp) =>
-        io.readLines(checkpointPath(table, cp).toString)
-          .foreach(l => if (l.nonEmpty) applyCheckpointLine(st, l))
-        cp + 1
-      case None => 1L
-    }
-    (start to v).foreach { i =>
-      io.readLines(commitPath(table, i).toString)
-        .foreach(l => if (l.nonEmpty) applyCommitLine(st, l))
-    }
+    val cp = checkpointAtOrBelow(table, v)
+    cp.foreach(c => st.apply(readCheckpoint(table, c)))
+    (cp.fold(1L)(_ + 1) to v).foreach(i => st.apply(readCommit(table, i)))
     st
   }
 
@@ -796,20 +841,15 @@ object TxLog {
         .map(c => col(c).as(rev.getOrElse(c, c))): _*)
     }
 
-  /** Stage `df` as new parquet files in the table dir; returns
-    * `(name, footer-stats)` pairs (names relative to the table root).
-    * Staged files are invisible until a commit references them.
+  /** Stage `df` as new parquet files in the table dir, partitioned by
+    * `spec`; returns `(name, footer-stats)` pairs (names relative to
+    * the table root). Staged files are invisible until a commit
+    * references them. The DSv2 write plane stages through here when a
+    * spec applies (its own staging is partition-blind; see
+    * TxLogStagedWrite).
     */
-  /** The spec-aware staging path, exposed for the DSv2 write plane
-    * (its own staging is partition-blind; see TxLogStagedWrite).
-    */
-  private[graft] def stageFrame(s: SparkSession, table: String,
-      df: DataFrame, spec: Seq[String]): Seq[(String, Option[FileStats])] =
-    stage(s, table, df, spec)
-
-  private def stage(s: SparkSession, table: String, df: DataFrame,
-                    spec: Seq[String] = Nil)
-      : Seq[(String, Option[FileStats])] = {
+  private[graft] def stage(s: SparkSession, table: String, df: DataFrame,
+                           spec: Seq[String]): Seq[(String, Option[FileStats])] = {
     Files.createDirectories(logDir(table))
     // files store PHYSICAL column names (column mapping, round 14):
     // rename the logical frame before writing, so new files line up
@@ -927,35 +967,46 @@ object TxLog {
     * it (commit walk bounded by the newest checkpoint, which carries
     * the schema forward). None for pre-schema logs / empty tables.
     */
-  private[graft] def tableSchema(table: String, v: Long): Option[StructType] = {
-    val schema = lineAfter("schema ") _
-    walkBack(table, v)(schema, schema).flatMap(decodeSchema)
-  }
+  private[graft] def tableSchema(table: String, v: Long): Option[StructType] =
+    walkBack(table, v)(_.schemaJson).flatMap(decodeSchema)
 
-  /** The rest of the first line of `lines` that starts with `prefix`. */
-  private def lineAfter(prefix: String)(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith(prefix)).map(_.substring(prefix.length))
-
-  /** The backward log walk behind the per-line lookups ([[tableSchema]],
+  /** The backward log walk behind the per-record lookups ([[tableSchema]],
     * [[partitionSpec]], [[columnMapping]], [[lastEpoch]]): the first hit
-    * of `fromCommit` on the commit files from `v` down to the newest
-    * checkpoint at or below it, else `fromCheckpoint` on that
-    * checkpoint, which carries every such line forward — so a lookup
-    * reads at most [[checkpointEvery]] commit files, however deep the log.
+    * of `find` on the commits from `v` down to the newest checkpoint at
+    * or below it, else on that checkpoint, which carries every such
+    * line forward — so a lookup reads at most [[checkpointEvery]]
+    * commit files, however deep the log.
     */
   private def walkBack[A](table: String, v: Long)(
-      fromCommit: Seq[String] => Option[A],
-      fromCheckpoint: Seq[String] => Option[A]): Option[A] = {
+      find: LogRecord => Option[A]): Option[A] = {
     val cp = checkpointAtOrBelow(table, v)
     var i = v
     val floor = cp.getOrElse(0L)
     while (i > floor) {
-      val hit = fromCommit(io.readLines(commitPath(table, i).toString))
+      val hit = find(readCommit(table, i))
       if (hit.isDefined) return hit
       i -= 1
     }
-    cp.flatMap(c => fromCheckpoint(io.readLines(checkpointPath(table, c).toString)))
+    cp.flatMap(c => find(readCheckpoint(table, c)))
   }
+
+  /** The logged schema at `v`, else fail: the schema-only commits
+    * (ALTER ADD/RENAME/DROP COLUMN) evolve the logged schema and never
+    * infer one. `purpose` completes the message (" to evolve").
+    */
+  private def loggedSchema(table: String, v: Long,
+                           purpose: String = ""): StructType =
+    tableSchema(table, v).getOrElse(throw new IllegalStateException(
+      s"$table has no logged schema$purpose (write to it first)"))
+
+  /** The logged schema, else the one Spark infers reading the files of
+    * `snap` (logs with no schema line). `logged` is `snap.schema` for a
+    * caller holding the snapshot, or [[tableSchema]] for one that has
+    * only a version: `snap` is built only on the inference path.
+    */
+  private[graft] def loggedOrInferred(s: SparkSession,
+      logged: Option[StructType], snap: => Snapshot): StructType =
+    logged.getOrElse(readSnapshot(s, snap).schema)
 
   private def decodeSchema(json: String): Option[StructType] =
     try Some(DataType.fromJson(json).asInstanceOf[StructType])
@@ -971,10 +1022,8 @@ object TxLog {
     * forward). Empty = unpartitioned. The spec is declared once
     * (create or first partitioned write) and is immutable.
     */
-  def partitionSpec(table: String, v: Long): Seq[String] = {
-    val spec = lineAfter("partition ") _
-    walkBack(table, v)(spec, spec).map(decodeSpec).getOrElse(Nil)
-  }
+  def partitionSpec(table: String, v: Long): Seq[String] =
+    walkBack(table, v)(_.partitionJson).map(decodeSpec).getOrElse(Nil)
 
   // ------------------------------------------------------------------
   // Column mapping (round 14)
@@ -1010,10 +1059,8 @@ object TxLog {
     * bounded by the newest checkpoint, which carries the line
     * forward). Identity for tables that never renamed or dropped.
     */
-  private[graft] def columnMapping(table: String, v: Long): ColMap = {
-    val colmap = lineAfter("colmap ") _
-    walkBack(table, v)(colmap, colmap).map(decodeColMap).getOrElse(ColMap.identity)
-  }
+  private[graft] def columnMapping(table: String, v: Long): ColMap =
+    walkBack(table, v)(_.colmapJson).map(decodeColMap).getOrElse(ColMap.identity)
 
   private def encodeSpec(cols: Seq[String]): String =
     jsonCompact(render(org.json4s.JArray(
@@ -1045,14 +1092,14 @@ object TxLog {
       partitionBy.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
-            s"partition column '$c' is not in the written schema"))
+            s"partitionBy column '$c' is not in the written schema"))
         f.dataType match {
           case ByteType | ShortType | IntegerType | LongType
              | StringType | DateType => ()
           case other => throw new IllegalArgumentException(
             s"unsupported partition column type for '$c': " +
-            s"${other.catalogString} (integral, string, and date " +
-            s"partition columns round-trip exactly; others do not)")
+            s"${other.catalogString} (integral, string, and date partition " +
+            s"columns round-trip exactly; others do not)")
         }
       }
       (partitionBy, Some(encodeSpec(partitionBy)))
@@ -1093,7 +1140,7 @@ object TxLog {
       case StringType => raw
       case DateType   => java.time.LocalDate.parse(raw).toEpochDay
       case other => throw new IllegalStateException(
-        s"partition column '$col' has undeclared type $other")
+        s"column '$col' of the partition spec has undeclared type $other")
     }
   }
 
@@ -1142,8 +1189,6 @@ object TxLog {
         StructType(existing.fields ++ fresh)
     }
 
-  private def schemaLine(schema: StructType): String = s"schema ${schema.json}"
-
   // ------------------------------------------------------------------
   // Commit
   // ------------------------------------------------------------------
@@ -1153,13 +1198,18 @@ object TxLog {
     * AND (for upserts) added no new data files; else throw
     * `ConcurrentModificationException`. Pure appends and compactions
     * rebase freely; two writers rewriting the same files, or an append
-    * racing an upsert whose keys it may share, must serialize.
+    * racing an upsert whose keys it may share, must serialize. A `txn`
+    * commit records its `(writerId, epoch)` mark.
     */
   private[graft] def commit(table: String, op: String, readVersion: Long,
                             adds: Seq[(String, Option[FileStats])],
                             removes: Seq[String],
                             schemaJson: Option[String] = None,
-                            partitionJson: Option[String] = None): Long = {
+                            partitionJson: Option[String] = None,
+                            txn: Option[(String, Long)] = None): Long = {
+    val rec = LogRecord(checkpoint = false, Some(op), Some(readVersion),
+      txn.toVector, partitionJson = partitionJson, removes = removes.toVector,
+      adds = adds.map { case (f, st) => f -> st.map(statsToJson) }.toVector)
     var base = readVersion
     var attempts = 0
     // the schema line is re-merged against the table schema AT THE
@@ -1175,17 +1225,7 @@ object TxLog {
       attempts += 1
       require(attempts <= 100, s"commit livelock at $table")
       val v = base + 1
-      val lines = (s"meta $op $readVersion" +:
-        (sj.map("schema " + _).toSeq ++
-         partitionJson.map("partition " + _).toSeq)) ++
-        removes.map("remove " + _) ++
-        adds.map { case (f, st) =>
-          st match {
-            case Some(fs) => s"add $f ${statsToJson(fs)}"
-            case None     => s"add $f"
-          }
-        }
-      if (publish(lines, commitPath(table, v))) {
+      if (publish(rec.copy(schemaJson = sj), commitPath(table, v))) {
         maybeCheckpoint(table, v)
         return v
       }
@@ -1198,14 +1238,12 @@ object TxLog {
         // keys or un-truncated rows (ConcurrentAppendException
         // semantics)
         ((base + 1) to now).foreach { i =>
-          val raced = io.readLines(commitPath(table, i).toString)
-          val racedOp = raced.find(_.startsWith("meta "))
-            .map(_.split(" ")(1)).getOrElse("append")
-          if (racedOp != "compact" && raced.exists(_.startsWith("add ")))
+          val raced = readCommit(table, i)
+          if (raced.opName != "compact" && raced.adds.nonEmpty)
             throw new java.util.ConcurrentModificationException(
               s"$op at $table read v$readVersion but a concurrent " +
-              s"'$racedOp' at v$i added files that may contain matching " +
-              s"keys — retry against the new version")
+              s"'${raced.opName}' at v$i added files that may contain " +
+              s"matching keys — retry against the new version")
         }
       }
       if (removes.nonEmpty) {
@@ -1219,8 +1257,7 @@ object TxLog {
       }
       // overwrite/restore REPLACE schema by design (dropping columns
       // is legal through them) — only additive ops re-merge
-      if (op == "append" || op == "upsert" || op == "delete" ||
-          op.startsWith("txn"))
+      if (op == "append" || op == "upsert" || op == "delete" || op == "txn")
         sj = sj.map { js =>
           val incoming = DataType.fromJson(js).asInstanceOf[StructType]
           mergedWriteSchema(table, now, incoming, op).json
@@ -1264,18 +1301,11 @@ object TxLog {
   private def maybeCheckpoint(table: String, v: Long): Unit =
     if (v % checkpointEvery == 0) {
       val st = replay(table, v)
-      val lines =
-        st.schemaJson.map("schema " + _).toSeq ++
-        st.partitionJson.map("partition " + _).toSeq ++
-        st.colmapJson.map("colmap " + _).toSeq ++
-        st.txns.toSeq.sortBy(_._1).map { case (w, e) => s"txn $w $e" } ++
-        st.files.iterator.map { case (r, fs) =>
-          fs match {
-            case Some(s) => s"file $r ${statsToJson(s)}"
-            case None    => s"file $r"
-          }
-        }
-      publish(lines, checkpointPath(table, v))
+      publish(LogRecord(checkpoint = true, txns = st.txns.toVector.sortBy(_._1),
+        schemaJson = st.schemaJson, partitionJson = st.partitionJson,
+        colmapJson = st.colmapJson, adds = st.files.iterator.map {
+          case (r, fs) => r -> fs.map(statsToJson) }.toVector),
+        checkpointPath(table, v))
       // advance the O(1) discovery pointer even on a lost publish
       // race — the winner wrote the identical checkpoint at v
       advanceCheckpointPtr(logDir(table), v)
@@ -1382,8 +1412,8 @@ object TxLog {
     val merged = mergedWriteSchema(table, cur, df.schema, "appendOnce")
     val (spec, declare) = resolveSpec(table, cur, partitionBy, df.schema)
     val adds = stage(s, table, df, spec)
-    commit(table, s"txn $writerId $epoch", cur, adds, Nil,
-      Some(merged.json), declare)
+    commit(table, "txn", cur, adds, Nil, Some(merged.json), declare,
+      Some(writerId -> epoch))
   }
 
   /** writerId is a token in the space-delimited meta line — whitespace
@@ -1415,7 +1445,7 @@ object TxLog {
     val id = readerHwmPrefix + readerId
     val cur = currentVersion(table)
     if (lastEpoch(table, cur, id).exists(_ >= version)) return cur
-    commit(table, s"txn $id $version", cur, Nil, Nil)
+    commit(table, "txn", cur, Nil, Nil, txn = Some(id -> version))
   }
 
   /** Every registered reader's consumed-through version at `v`. */
@@ -1434,8 +1464,8 @@ object TxLog {
   private[graft] def rangeHasData(table: String, from: Long,
                                   to: Long): Boolean =
     ((from + 1) to to).exists { v =>
-      io.readLines(commitPath(table, v).toString).exists(l =>
-        l.startsWith("add ") || l.startsWith("remove "))
+      val r = readCommit(table, v)
+      r.adds.nonEmpty || r.removes.nonEmpty
     }
 
   /** Sum of the add-lines' logged on-disk sizes in commit `v` — the
@@ -1447,13 +1477,9 @@ object TxLog {
     * just in a bigger batch.
     */
   private[graft] def addedBytes(table: String, v: Long): Long =
-    io.readLines(commitPath(table, v).toString).iterator
-      .filter(_.startsWith("add "))
-      .map { l =>
-        val parts = l.split(" ", 3)
-        if (parts.length < 3) 0L
-        else parseStats(parts(2)).map(_.bytes).filter(_ >= 0).getOrElse(0L)
-      }.sum
+    readCommit(table, v).adds.iterator.map { case (_, st) =>
+      st.flatMap(parseStats).map(_.bytes).filter(_ >= 0).getOrElse(0L)
+    }.sum
 
   /** Data files added in versions `(from, to]` by APPEND-class commits
     * — the incremental-consumption (change-data-feed) read. Compaction
@@ -1466,14 +1492,9 @@ object TxLog {
                                   to: Long): Vector[String] = {
     val out = Vector.newBuilder[String]
     ((from + 1) to to).foreach { v =>
-      val lines = io.readLines(commitPath(table, v).toString)
-      val op = lines.find(_.startsWith("meta "))
-        .map(_.split(" ")(1)).getOrElse("append")
-      op match {
-        case "append" | "txn" =>
-          lines.foreach { l =>
-            if (l.startsWith("add ")) out += s"$table/${l.split(" ", 3)(1)}"
-          }
+      val r = readCommit(table, v)
+      r.opName match {
+        case "append" | "txn" => r.adds.foreach(a => out += s"$table/${a._1}")
         case "compact"   => () // content-neutral: nothing new to emit
         case "create"    => () // schema-only, no data files by construction
         case "altschema" => () // schema-only (ALTER TABLE ADD COLUMNS)
@@ -1506,14 +1527,8 @@ object TxLog {
   /** One commit's file delta, absolute paths: (op, adds, removes). */
   private[graft] def commitDelta(table: String,
                                  v: Long): (String, Vector[String], Vector[String]) = {
-    val lines = io.readLines(commitPath(table, v).toString)
-    val op = lines.find(_.startsWith("meta "))
-      .map(_.split(" ")(1)).getOrElse("append")
-    val adds = lines.iterator.filter(_.startsWith("add "))
-      .map(l => s"$table/${l.split(" ", 3)(1)}").toVector
-    val removes = lines.iterator.filter(_.startsWith("remove "))
-      .map(l => s"$table/${l.substring("remove ".length)}").toVector
-    (op, adds, removes)
+    val r = readCommit(table, v)
+    (r.opName, r.adds.map(a => s"$table/${a._1}"), r.removes.map(f => s"$table/$f"))
   }
 
   /** One change-feed branch's data-file read: `files` under the feed's
@@ -1596,8 +1611,8 @@ object TxLog {
     val to = toVersion.getOrElse(currentVersion(table))
     require(fromVersion <= to,
       s"change feed range ($fromVersion, $to] is empty or inverted")
-    val outSchema = tableSchema(table, to)
-      .getOrElse(read(s, table, Some(to)).schema)
+    val outSchema =
+      loggedOrInferred(s, tableSchema(table, to), snapshot(table, Some(to)))
     Seq("_change_type", "_commit_version").foreach { c =>
       require(!outSchema.fieldNames.contains(c),
         s"table $table already has a '$c' column — CDC cannot annotate it")
@@ -1767,7 +1782,7 @@ object TxLog {
     if (files.isEmpty) {
       // only content-neutral commits in range: still advance the
       // high-water mark so the range is never re-walked
-      commit(dst, s"txn $writerId $cur", currentVersion(dst), Nil, Nil)
+      commit(dst, "txn", currentVersion(dst), Nil, Nil, txn = Some(writerId -> cur))
     } else {
       val rows = readFilesAt(s.read, src, cur, files)
       // src's logical names at `cur`: a column renamed or dropped at
@@ -1792,16 +1807,8 @@ object TxLog {
     */
   private[graft] def lastEpoch(table: String, v: Long,
                                writerId: String): Option[Long] =
-    walkBack(table, v)(
-      lines => lines.find(_.startsWith("meta txn "))
-        .map(_.split(" ")) // meta txn <writer> <epoch> <readV>
-        .collect { case p if p.length >= 4 && p(2) == writerId => p(3).toLong },
-      _.find(_.startsWith(s"txn $writerId ")).map(_.split(" ")(2).toLong))
+    walkBack(table, v)(_.txns.collectFirst { case (`writerId`, e) => e })
 
-  /** Transactional full overwrite: removes every file live at the read
-    * version; the table schema is REPLACED by the written frame's (the
-    * one write that may drop or retype columns).
-    */
   /** ADDITIVE schema evolution as a SCHEMA-ONLY commit (`ALTER TABLE …
     * ADD COLUMNS`): no data moves, existing files read the new columns
     * as null (exactly like append-evolution), and the commit rebases
@@ -1819,9 +1826,7 @@ object TxLog {
         s"added column '${f.name}' must be nullable: existing files " +
         s"have no value for it")
     }
-    val schemaOf = (cur: Long) => tableSchema(table, cur).getOrElse(
-      throw new IllegalStateException(
-        s"$table has no logged schema to evolve (write to it first)"))
+    val schemaOf = (cur: Long) => loggedSchema(table, cur, " to evolve")
     if (columnMapping(table, cur0).isIdentity) {
       // no mapping: no reserved physical names to collide with — the
       // pre-r14 path, byte-identical (union rebase in commit())
@@ -1870,9 +1875,7 @@ object TxLog {
   def renameColumn(table: String, from: String, to: String): Long = {
     require(from != to, s"RENAME COLUMN $from TO $from is a no-op")
     remapCommit(table, "remap") { cur =>
-      val existing = tableSchema(table, cur).getOrElse(
-        throw new IllegalStateException(
-          s"$table has no logged schema (write to it first)"))
+      val existing = loggedSchema(table, cur)
       require(existing.fieldNames.contains(from),
         s"RENAME COLUMN at $table: no column '$from' " +
         s"(a racing rename/drop took it?)")
@@ -1901,9 +1904,7 @@ object TxLog {
     */
   def dropColumn(table: String, name: String): Long =
     remapCommit(table, "remap") { cur =>
-      val existing = tableSchema(table, cur).getOrElse(
-        throw new IllegalStateException(
-          s"$table has no logged schema (write to it first)"))
+      val existing = loggedSchema(table, cur)
       require(existing.fieldNames.contains(name),
         s"DROP COLUMN at $table: no column '$name'")
       require(existing.fields.length > 1,
@@ -1933,9 +1934,9 @@ object TxLog {
       require(attempts <= 100, s"$op livelock at $table")
       val cur = currentVersion(table)
       val (schema, map) = compute(cur)
-      val lines = Seq(s"meta $op $cur", schemaLine(schema),
-        s"colmap ${encodeColMap(map)}")
-      if (publish(lines, commitPath(table, cur + 1))) {
+      val rec = LogRecord(checkpoint = false, Some(op), Some(cur),
+        schemaJson = Some(schema.json), colmapJson = Some(encodeColMap(map)))
+      if (publish(rec, commitPath(table, cur + 1))) {
         maybeCheckpoint(table, cur + 1)
         return cur + 1
       }
@@ -1961,6 +1962,10 @@ object TxLog {
       snap.files.map(relative(table, _)), schemaJson)
   }
 
+  /** Transactional full overwrite: removes every file live at the read
+    * version; the table schema is REPLACED by the written frame's (the
+    * one write that may drop or retype columns).
+    */
   def overwrite(s: SparkSession, table: String, df: DataFrame): Long = {
     val snap = snapshot(table)
     // the partition spec is immutable and survives an overwrite: the
@@ -2291,17 +2296,9 @@ object TxLog {
     */
   def history(table: String): Seq[CommitInfo] =
     (currentVersion(table) to 1L by -1L).map { v =>
-      val lines = io.readLines(commitPath(table, v).toString)
-      val meta = lines.find(_.startsWith("meta "))
-        .map(_.split(" ")).getOrElse(Array("meta", "append"))
-      // meta <op> <readV>  |  meta txn <writer> <epoch> <readV>
-      val (op, readV) =
-        if (meta.length >= 2 && meta(1) == "txn")
-          (s"txn ${meta(2)}", if (meta.length >= 5) meta(4).toLong else v - 1)
-        else
-          (meta(1), if (meta.length >= 3) meta(2).toLong else v - 1)
-      CommitInfo(v, op, readV,
-        lines.count(_.startsWith("add ")), lines.count(_.startsWith("remove ")))
+      val r = readCommit(table, v)
+      CommitInfo(v, r.opLabel, r.readVersion.getOrElse(v - 1), r.adds.size,
+        r.removes.size)
     }
 
   /** ROLL BACK the table to `version` as ONE NEW COMMIT (never by

@@ -268,11 +268,11 @@ class TxLogV2Table(val path: String, asOf: Option[Long])
   private[sources] val snap = TxLog.snapshot(path, asOf)
 
   private[sources] val tableSchema: StructType =
-    snap.schema.getOrElse {
+    TxLog.loggedOrInferred(spark, snap.schema, {
       require(snap.files.nonEmpty,
         s"txlog table at $path has neither a logged schema nor files")
-      TxLog.readSnapshot(spark, snap).schema
-    }
+      snap
+    })
 
   override def name(): String =
     s"txlog.`$path`" + asOf.map(v => s" VERSION AS OF $v").getOrElse("")
@@ -933,7 +933,7 @@ class TxLogStagedWrite(spark: SparkSession, path: String,
               // extra columnar pass over the batch — the library
               // append writes partitioned directly; SQL DML volumes
               // are change-sized, so the pass is change-sized too.
-              TxLog.stageFrame(spark, path,
+              TxLog.stage(spark, path,
                 spark.read.parquet(stagingDir.toString), spec)
             }
           } finally TxLog.deleteTree(stagingDir)

@@ -103,9 +103,11 @@ class TxLogSource extends RelationProvider with CreatableRelationProvider
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
     val path = pathOf(parameters)
-    val st = schema
-      .orElse(TxLog.tableSchema(path, TxLog.currentVersion(path)))
-      .getOrElse(TxLog.read(sqlContext.sparkSession, path).schema)
+    val st = schema.getOrElse {
+      val v = TxLog.currentVersion(path)
+      TxLog.loggedOrInferred(sqlContext.sparkSession,
+        TxLog.tableSchema(path, v), TxLog.snapshot(path, Some(v)))
+    }
     val out =
       if (parameters.get("readChangeFeed").exists(_.toBoolean))
         StructType(st.fields ++ Seq(
@@ -481,7 +483,7 @@ class TxLogRelation(override val sqlContext: SQLContext, path: String,
   // the log's recorded schema (includes additive evolution across
   // versions) when present; else inferred from the snapshot's files
   override val schema: StructType =
-    snap.schema.getOrElse(readFiles(snap.files).schema)
+    TxLog.loggedOrInferred(sqlContext.sparkSession, snap.schema, snap)
 
   /** Scan with FILE SKIPPING: the pushed filters are first evaluated
     * against each live file's footer min/max from the log (metadata

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 
-import graft.sources.{HadoopTxLogIo, LocalTxLogIo, TxLog, TxLogCatalog, TxLogIo}
+import graft.sources.{LocalTxLogIo, TxLog, TxLogIo}
 
 /** The filesystem seam (round-13 VERDICT #5): the log protocol's
   * metadata plane flows entirely through [[TxLogIo]], whose only
@@ -15,15 +15,6 @@ import graft.sources.{HadoopTxLogIo, LocalTxLogIo, TxLog, TxLogCatalog, TxLogIo}
   * put-if-absent makes the loser rebase exactly like the native race
   * path, proving optimistic concurrency needs nothing else from the
   * store.
-  *
-  * Round 14: the suite is PARAMETERIZED over both implementations —
-  * [[LocalTxLogIo]] (java.nio hard-link publish) and
-  * [[HadoopTxLogIo]] (Hadoop `FileSystem`/`FileContext`,
-  * publish-by-exclusive-rename) — so the protocol's storage contract
-  * is demonstrated, not argued: the same workflow, the same injected
-  * race, zero protocol changes across storage APIs. A facade smoke
-  * (SQL CREATE/INSERT/MERGE/time-travel through the DSv2 catalog)
-  * also runs entirely under the Hadoop seam.
   */
 class TxLogIoSpec extends SparkSuite {
   import spark.implicits._
@@ -55,120 +46,62 @@ class TxLogIoSpec extends SparkSuite {
       { tick("replace"); base.replace(t, b) }
   }
 
-  private val impls: Seq[(String, () => TxLogIo)] = Seq(
-    "LocalTxLogIo" -> (() => LocalTxLogIo),
-    "HadoopTxLogIo" -> (() => new HadoopTxLogIo()))
-
-  for ((label, mkIo) <- impls) {
-
-    test(s"[$label] the metadata plane flows through the seam: a full " +
-         "workflow touches every primitive class") {
-      val t = freshTable()
-      val counting = new Counting(mkIo())
-      TxLog.io = counting
-      try {
-        TxLog.append(spark, t, Seq(1L -> "a", 2L -> "b").toDF("id", "v"))
-        TxLog.upsert(spark, t, Seq(2L -> "B").toDF("id", "v"), "id")
-        assert(TxLog.read(spark, t).count() == 2)
-        assert(TxLog.readChangeFeed(spark, t, 0L).count() >= 3)
-        assert(TxLog.versionAtTimestamp(t,
-          TxLog.commitTimeMicros(t, 1L))._1.contains(1L))
-        TxLog.vacuum(t)
-        TxLog.history(t)
-      } finally TxLog.io = LocalTxLogIo
-      val want = Seq("exists", "isDirectory", "listNames", "readLines",
-        "mtimeMillis", "putIfAbsent")
-      val missing = want.filterNot(counting.calls(_) > 0)
-      assert(missing.isEmpty,
-        s"primitives never exercised through the seam: $missing " +
-        s"(observed: ${counting.calls.toMap})")
-    }
-
-    test(s"[$label] an injected lost put-if-absent race rebases exactly " +
-         "like the native race path") {
-      val t = freshTable()
-      val base = mkIo()
-      TxLog.io = base
-      try {
-        TxLog.append(spark, t, Seq(1L -> "a").toDF("id", "v")) // v1
-        val injected = new AtomicInteger(1)
-        TxLog.io = new Counting(base) {
-          override def putIfAbsent(target: String,
-              b: Array[Byte]): Boolean = {
-            if (target.endsWith(".commit") &&
-                injected.getAndDecrement() > 0) {
-              // a COMPETING writer wins this exact version first: a
-              // real race, not a simulated false — the loser must
-              // re-read the log, see the interloper, and rebase to
-              // the next version
-              val competing = "meta append 1\nadd raced.parquet"
-              super.putIfAbsent(target, competing.getBytes("UTF-8"))
-            }
-            super.putIfAbsent(target, b)
-          }
-        }
-        TxLog.append(spark, t, Seq(2L -> "b").toDF("id", "v"))
-        // the interloper took v2; our append rebased to v3
-        assert(TxLog.currentVersion(t) == 3L,
-          s"lost put race must rebase to the next version, " +
-          s"at v${TxLog.currentVersion(t)}")
-        val ops = TxLog.history(t).map(_.op)
-        assert(ops.count(_ == "append") == 3, s"history: $ops")
-        // the rebased append's rows are all live
-        assert(TxLog.snapshot(t).files
-          .count(_.endsWith("raced.parquet")) == 1)
-      } finally TxLog.io = LocalTxLogIo
-    }
-  }
-
-  test("HadoopTxLogIo putIfAbsent is exclusive and torn-read-free at " +
-       "the primitive level") {
-    val io = new HadoopTxLogIo()
-    val dir = tempDir("graft_txio_prim").toString
-    val target = s"$dir/deep/er/00000000000000000001.commit"
-    assert(io.putIfAbsent(target, "meta append 0".getBytes("UTF-8")),
-      "first put must win (and create parent dirs)")
-    assert(!io.putIfAbsent(target, "interloper".getBytes("UTF-8")),
-      "second put of the same name must lose")
-    assert(io.readString(target) == "meta append 0",
-      "the losing put must not have touched the winner's content")
-    // no temp-file litter next to the commit (the losing rename
-    // deletes its temp)
-    assert(io.listNames(s"$dir/deep/er") == Seq(
-      "00000000000000000001.commit"))
-    io.replace(s"$dir/deep/er/_last_checkpoint", "10".getBytes("UTF-8"))
-    io.replace(s"$dir/deep/er/_last_checkpoint", "20".getBytes("UTF-8"))
-    assert(io.readString(s"$dir/deep/er/_last_checkpoint") == "20",
-      "replace must overwrite")
-    assert(io.mtimeMillis(target) > 0L)
-    io.deleteIfExists(target)
-    assert(!io.exists(target))
-  }
-
-  test("facade smoke under the Hadoop seam: SQL " +
-       "CREATE/INSERT/MERGE/time-travel run entirely through " +
-       "HadoopTxLogIo") {
-    val wh = tempDir("graft_txio_wh").toString
-    spark.conf.set("spark.sql.catalog.txio", classOf[TxLogCatalog].getName)
-    spark.conf.set("spark.sql.catalog.txio.warehouse", wh)
-    val counting = new Counting(new HadoopTxLogIo())
+  test("[LocalTxLogIo] the metadata plane flows through the seam: a full " +
+       "workflow touches every primitive class") {
+    val t = freshTable()
+    val counting = new Counting(LocalTxLogIo)
     TxLog.io = counting
     try {
-      spark.sql("CREATE TABLE txio.t (id BIGINT, v STRING)")
-      spark.sql("INSERT INTO txio.t VALUES (1, 'a'), (2, 'b')")
-      spark.sql(
-        """MERGE INTO txio.t t USING (SELECT 2L AS id, 'B' AS v
-          |  UNION ALL SELECT 3L, 'c') s ON t.id = s.id
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      assert(spark.sql("SELECT id, v FROM txio.t").as[(Long, String)]
-        .collect().toSet == Set(1L -> "a", 2L -> "B", 3L -> "c"))
-      assert(spark.sql("SELECT id, v FROM txio.t VERSION AS OF 2")
-        .as[(Long, String)].collect().toSet ==
-        Set(1L -> "a", 2L -> "b"))
-      assert(counting.calls("putIfAbsent") >= 3,
-        s"every commit must flow through the Hadoop seam " +
-        s"(observed: ${counting.calls.toMap})")
+      TxLog.append(spark, t, Seq(1L -> "a", 2L -> "b").toDF("id", "v"))
+      TxLog.upsert(spark, t, Seq(2L -> "B").toDF("id", "v"), "id")
+      assert(TxLog.read(spark, t).count() == 2)
+      assert(TxLog.readChangeFeed(spark, t, 0L).count() >= 3)
+      assert(TxLog.versionAtTimestamp(t,
+        TxLog.commitTimeMicros(t, 1L))._1.contains(1L))
+      TxLog.vacuum(t)
+      TxLog.history(t)
+    } finally TxLog.io = LocalTxLogIo
+    val want = Seq("exists", "isDirectory", "listNames", "readLines",
+      "mtimeMillis", "putIfAbsent")
+    val missing = want.filterNot(counting.calls(_) > 0)
+    assert(missing.isEmpty,
+      s"primitives never exercised through the seam: $missing " +
+      s"(observed: ${counting.calls.toMap})")
+  }
+
+  test("[LocalTxLogIo] an injected lost put-if-absent race rebases exactly " +
+       "like the native race path") {
+    val t = freshTable()
+    val base = LocalTxLogIo
+    TxLog.io = base
+    try {
+      TxLog.append(spark, t, Seq(1L -> "a").toDF("id", "v")) // v1
+      val injected = new AtomicInteger(1)
+      TxLog.io = new Counting(base) {
+        override def putIfAbsent(target: String,
+            b: Array[Byte]): Boolean = {
+          if (target.endsWith(".commit") &&
+              injected.getAndDecrement() > 0) {
+            // a COMPETING writer wins this exact version first: a
+            // real race, not a simulated false — the loser must
+            // re-read the log, see the interloper, and rebase to
+            // the next version
+            val competing = "meta append 1\nadd raced.parquet"
+            super.putIfAbsent(target, competing.getBytes("UTF-8"))
+          }
+          super.putIfAbsent(target, b)
+        }
+      }
+      TxLog.append(spark, t, Seq(2L -> "b").toDF("id", "v"))
+      // the interloper took v2; our append rebased to v3
+      assert(TxLog.currentVersion(t) == 3L,
+        s"lost put race must rebase to the next version, " +
+        s"at v${TxLog.currentVersion(t)}")
+      val ops = TxLog.history(t).map(_.op)
+      assert(ops.count(_ == "append") == 3, s"history: $ops")
+      // the rebased append's rows are all live
+      assert(TxLog.snapshot(t).files
+        .count(_.endsWith("raced.parquet")) == 1)
     } finally TxLog.io = LocalTxLogIo
   }
 }

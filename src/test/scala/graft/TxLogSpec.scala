@@ -1261,4 +1261,141 @@ class TxLogSpec extends SparkSuite {
     val snap = TxLog.snapshot(t)
     assert(snap.stats.values.forall(_.part.nonEmpty))
   }
+
+  // ------------------------------------------------------------------
+  // The log-line codec: one decoder and one encoder for every commit
+  // and checkpoint line
+  // ------------------------------------------------------------------
+
+  /** Every commit and checkpoint file under `table`'s log, by name. */
+  private def logFiles(table: String): Seq[java.nio.file.Path] = {
+    val ls = Files.list(Paths.get(table, "_graft_log"))
+    try ls.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".commit") || n.endsWith(".checkpoint")
+    }.toVector.sortBy(_.getFileName.toString)
+    finally ls.close()
+  }
+
+  test("codec round trip: every line a full workflow writes re-encodes " +
+       "byte-identically") {
+    val t = freshTable()
+    val tp = freshTable()
+    val every = TxLog.checkpointEvery
+    // checkpoints every 3 commits, so they carry txn, colmap and
+    // partition lines too
+    TxLog.checkpointEvery = 3
+    try {
+      TxLog.append(spark, t, mk(1L -> "a", 2L -> "b", 3L -> "c"))
+      TxLog.upsert(spark, t, mk(2L -> "B"), "id")
+      TxLog.delete(spark, t, Seq(1L).toDF("id"), "id")
+      TxLog.merge(spark, t, mk(4L -> "d"), Seq(3L).toDF("id"), "id")
+      TxLog.appendOnce(spark, t, mk(5L -> "e"), "w1", 0L)
+      TxLog.registerReader(t, "r1", 5L)
+      TxLog.addColumns(t, Seq(
+        org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.StringType)))
+      TxLog.renameColumn(t, "x", "y")
+      TxLog.dropColumn(t, "y")
+      TxLog.compact(spark, t)
+      TxLog.overwrite(spark, t, mk(9L -> "z"))
+      TxLog.restore(spark, t, 4L)
+      TxLog.truncate(t)
+      TxLog.commit(t, "append", TxLog.currentVersion(t),
+        Seq("part-legacy.parquet" -> None), Nil)
+      // one more commit puts the stats-less file into a checkpoint
+      TxLog.registerReader(t, "r2", 1L)
+      TxLog.append(spark, tp, Seq((1L, 0L), (2L, 1L)).toDF("id", "p"),
+        partitionBy = Seq("p"))
+      TxLog.append(spark, tp, Seq((3L, 0L)).toDF("id", "p"))
+      TxLog.append(spark, tp, Seq((4L, 1L)).toDF("id", "p"))
+    } finally TxLog.checkpointEvery = every
+    val kinds = collection.mutable.Set.empty[String]
+    for (f <- logFiles(t) ++ logFiles(tp)) {
+      val cp = f.getFileName.toString.endsWith(".checkpoint")
+      val bytes = new String(Files.readAllBytes(f), "UTF-8")
+      val lines = Files.readAllLines(f).asScala.toVector
+      val rec = TxLog.LogRecord.decode(lines, cp)
+      assert(TxLog.LogRecord.encode(rec).mkString("\n") == bytes,
+        s"$f does not re-encode byte-identically")
+      lines.foreach { l =>
+        assert(TxLog.LogRecord.encode(TxLog.LogRecord.decode(Seq(l), cp)) ==
+          Seq(l), s"line of $f does not round-trip: '$l'")
+        val words = l.split(" ")
+        kinds += (words(0) match {
+          case "meta" if words(1) == "txn" => "meta txn"
+          case "add" | "file" => s"${words(0)}${if (words.length > 2) "+stats" else ""}"
+          case k => k
+        })
+      }
+    }
+    val want = Set("meta", "meta txn", "schema", "partition", "colmap",
+      "remove", "add+stats", "add", "file+stats", "file", "txn")
+    assert(want.subsetOf(kinds), s"workflow missed line kinds ${want -- kinds}")
+    // and a round trip through history: every op the workflow committed
+    assert(TxLog.history(t).map(_.op).reverse == Seq("append", "upsert",
+      "delete", "upsert", "txn w1", "txn rdr-r1", "altschema", "remap",
+      "remap", "compact", "overwrite", "restore", "truncate", "append",
+      "txn rdr-r2"))
+  }
+
+  test("a legacy hand-written log reads as before: commits without a " +
+       "meta line or read version, stats-less adds, a file/txn checkpoint") {
+    val t = freshTable()
+    val log = Paths.get(t, "_graft_log")
+    Files.createDirectories(log)
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", org.apache.spark.sql.types.LongType)
+    def write(name: String, lines: String*): Unit =
+      Files.write(log.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
+    val statsA = """{"rows":3,"cols":{"id":{"min":1,"max":3}}}"""
+    val statsC = """{"rows":2,"cols":{"id":{"min":7,"max":8}},"bytes":42}"""
+    write(f"${1L}%020d.commit", s"schema ${schema.json}",
+      s"add part-a.parquet $statsA")
+    write(f"${2L}%020d.commit", "meta upsert", "remove part-a.parquet",
+      "add part-b.parquet")
+    write(f"${3L}%020d.commit", "meta txn w1 7 2",
+      s"add part-c.parquet $statsC")
+    write(f"${3L}%020d.checkpoint", s"schema ${schema.json}", "txn rdr-r 2",
+      "txn w1 7", "file part-b.parquet", s"file part-c.parquet $statsC")
+    write(f"${4L}%020d.commit", "meta append 3", "add part-d.parquet")
+    assert(TxLog.currentVersion(t) == 4L)
+    val head = TxLog.snapshot(t)
+    assert(head.files == Vector("b", "c", "d").map(n => s"$t/part-$n.parquet"))
+    assert(head.stats.keySet == Set(s"$t/part-c.parquet"))
+    assert(head.stats(s"$t/part-c.parquet").rows == 2L &&
+      head.stats(s"$t/part-c.parquet").bytes == 42L)
+    assert(head.schema == Some(schema))
+    val v1 = TxLog.snapshot(t, Some(1L))
+    assert(v1.files == Vector(s"$t/part-a.parquet") &&
+      v1.stats(s"$t/part-a.parquet").rows == 3L)
+    val v2 = TxLog.snapshot(t, Some(2L))
+    assert(v2.files == Vector(s"$t/part-b.parquet") && v2.stats.isEmpty &&
+      v2.schema == Some(schema))
+    assert(TxLog.history(t) == Seq(
+      TxLog.CommitInfo(4L, "append", 3L, 1, 0),
+      TxLog.CommitInfo(3L, "txn w1", 2L, 1, 0),
+      TxLog.CommitInfo(2L, "upsert", 1L, 1, 1),
+      TxLog.CommitInfo(1L, "append", 0L, 1, 0)))
+    assert(TxLog.lastEpoch(t, 4L, "w1") == Some(7L))
+    assert(TxLog.lastEpoch(t, 4L, "rdr-r") == Some(2L))
+    assert(TxLog.lastEpoch(t, 3L, "w1") == Some(7L))
+    assert(TxLog.lastEpoch(t, 2L, "w1") == None)
+    assert(TxLog.readerHwms(t, 4L) == Map("r" -> 2L))
+    assert(TxLog.tableSchema(t, 4L) == Some(schema))
+    assert(TxLog.tableSchema(t, 2L) == Some(schema))
+  }
+
+  test("an unrecognized commit line fails loudly instead of dropping state") {
+    val t = freshTable()
+    TxLog.append(spark, t, mk(1L -> "a"))
+    // a foreign line, and the checkpoint-only kinds in a commit
+    for (bad <- Seq("frobnicate part-x.parquet", "file part-x.parquet",
+                    "txn w1 3")) {
+      Files.write(Paths.get(t, "_graft_log", f"${2L}%020d.commit"),
+        s"meta append 1\n$bad".getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](TxLog.snapshot(t))
+      assert(e.getMessage.contains("unrecognized commit line"),
+        s"must name the commit line as the problem: ${e.getMessage}")
+    }
+  }
 }
