@@ -18,9 +18,12 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact => jsonCompact, parse, render}
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Encoders, GraftBridge, SparkSession, functions}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** A minimal ACID table format over parquet — commit log, snapshot
   * isolation, time travel, optimistic concurrency, merge-on-write
@@ -435,6 +438,12 @@ object TxLog {
   // Footer statistics
   // ------------------------------------------------------------------
 
+  /** The Hadoop conf every [[footerStats]] read opens its file under:
+    * default settings, built once (each `new Configuration()` parses
+    * the default resources again, about 3 ms a file).
+    */
+  private lazy val footerConf = new Configuration()
+
   /** Read `{rows, per-column min/max}` from a parquet file's FOOTER —
     * metadata-only, no data pages touched. Multi-row-group files merge
     * block stats; a column missing stats in ANY block is dropped
@@ -443,7 +452,7 @@ object TxLog {
     */
   private[graft] def footerStats(file: JPath): Option[FileStats] = try {
     val footer = GraftBridge.parquetMetadata(
-      HadoopInputFile.fromPath(new HPath(file.toUri), new Configuration()))
+      HadoopInputFile.fromPath(new HPath(file.toUri), footerConf))
     val blocks = footer.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
     val merged = mutable.Map.empty[String, ColStats]
@@ -490,7 +499,7 @@ object TxLog {
     Some(FileStats(rows, merged.toMap, bytes = Files.size(file)))
   } catch { case NonFatal(_) => None }
 
-  /** Is an INT32/INT64 column's raw long order the order [[normKey]]
+  /** Is an INT32/INT64 column's raw long order the order [[statsValue]]
     * probes in? Plain ints, signed ints, DATE (epoch days), and
     * TIMESTAMP in MICROS qualify. Everything else is skipped —
     * TIMESTAMP(MILLIS)/(NANOS) footers (externally staged files, or a
@@ -1710,8 +1719,12 @@ object TxLog {
     * replica would silently diverge from the source. That ambiguity
     * is detected and fails loudly here instead (round-12 ADVICE low):
     * the netting window pass also compares, per key, the min and max
-    * of the winning surviving rows, and a `limit(3)` over the
-    * persisted pass names up to three offending keys.
+    * of the winning surviving rows. One collect then takes every
+    * winner's key, whether it upserts, and that ambiguity flag; it
+    * names up to three offending keys and, for at most
+    * [[keyPruneLimit]] non-null winning keys, hands the keys to the
+    * rewrite, which then collects none of its own. A larger batch
+    * takes [[merge]]'s span and join path.
     */
   def applyChanges(s: SparkSession, table: String, changes: DataFrame,
                    key: String): Long = {
@@ -1735,7 +1748,7 @@ object TxLog {
     // i.e. the winning group; comparing the min and max of the whole
     // input row lets benign exact duplicates through, and delete
     // winners are key-only so duplicates of them are benign. The frame
-    // is persisted: the guard's limit(3) and the netting read one
+    // is persisted: the winners' collect and the rewrite read one
     // materialization of the change-feed plan (round-13 ADVICE low).
     val row = struct(changes.columns.toIndexedSeq.map(col): _*)
     val annotated = changes
@@ -1744,21 +1757,38 @@ object TxLog {
         !(min(row).over(w) <=> max(row).over(w)))
       .persist()
     try {
-      val ambiguous = annotated.where(col("__graft_amb"))
-        .select(col(key)).limit(3).collect()
+      val latest = annotated.where(col("__graft_rn") === 1)
+      // one row per key, so at most one null-key winner: keyPruneLimit
+      // + 1 rows hold every winner of a batch with few keys
+      val upsert = col("_change_type").isin("insert", "update_postimage")
+      val winners = latest.select(col(key), upsert, col("__graft_amb"))
+      val dt = winners.schema.head.dataType
+      val rows = GraftBridge.collectInternal(
+        winners.coalesce(1).limit(keyPruneLimit + 2))
+      val complete = rows.length <= keyPruneLimit + 1
+      val ambiguous =
+        if (complete) rows.iterator.filter(_.getBoolean(2)).take(3)
+          .map(r => CatalystTypeConverters.convertToScala(r.get(0, dt), dt))
+          .toSeq
+        else annotated.where(col("__graft_amb"))
+          .select(col(key)).limit(3).collect().map(_.get(0)).toSeq
       require(ambiguous.isEmpty,
-        s"applyChanges: key(s) ${ambiguous.map(_.get(0)).mkString(", ")} " +
+        s"applyChanges: key(s) ${ambiguous.mkString(", ")} " +
         s"have multiple DISTINCT surviving rows at their winning version " +
         s"— '$key' is not unique per row in the source (the upsert-key " +
         s"precondition); netting would silently keep an arbitrary row")
-      val latest = annotated.where(col("__graft_rn") === 1)
-        .drop("__graft_rn", "__graft_amb")
-      val ups = latest
-        .where(col("_change_type").isin("insert", "update_postimage"))
-        .drop("_change_type", "_commit_version")
-      val dels = latest.where(col("_change_type") === "delete")
-        .select(col(key))
-      merge(s, table, ups, dels, key)
+      val ups = latest.where(upsert)
+        .drop("_change_type", "_commit_version", "__graft_rn", "__graft_amb")
+      val keys = rows.iterator.filterNot(_.isNullAt(0))
+        .map(_.get(0, dt)).toVector
+      if (!complete || keys.length > keyPruneLimit)
+        merge(s, table, ups, latest.where(col("_change_type") === "delete")
+          .select(col(key)), key)
+      else mergeWith(s, table, ups, !rows.exists(_.getBoolean(1))) {
+        (snap, spec, schemaJson) =>
+          rewriteTouched(s, table, snap, spec, key, latest.select(col(key)),
+            FewKeys(keys, dt), Some(ups), "upsert", schemaJson)
+      }
     } finally annotated.unpersist()
   }
 
@@ -1980,10 +2010,69 @@ object TxLog {
   // Upsert with metadata-only locate pruning
   // ------------------------------------------------------------------
 
-  /** Update keys small enough to prune per-key (vs per-range); above
-    * this the locate prunes on the updates' [min, max] span only.
+  /** Remove sets of at most this many non-null key rows are collected
+    * to the driver once (one job) and pruned per key; for key types
+    * [[literalKeyType]] admits they are located and removed by literal
+    * `IN` filters. A small upsert, delete or merge on a non-empty table
+    * is then 3 jobs (collect, touched-file scan, staged write), a small
+    * [[applyChanges]] batch at most 5. Larger sets, and other key
+    * types, take the [min, max] span agg and the semi/anti joins.
     */
-  private val keyPruneLimit = 1024
+  private[graft] val keyPruneLimit = 1024
+
+  /** A rewrite's remove keys after its one [[keyPruneLimit]] decision. */
+  private sealed trait RemoveKeys
+  /** At most keyPruneLimit non-null key rows: their distinct values,
+    * in Catalyst's internal form, of type `dataType`.
+    */
+  private final case class FewKeys(values: Vector[Any], dataType: DataType)
+      extends RemoveKeys
+  /** More non-null key rows than that. */
+  private case object ManyKeys extends RemoveKeys
+
+  /** The keyPruneLimit decision over `remove`'s non-null `key` rows, in
+    * one job: the `coalesce(1)` ahead of the limit keeps the collect to
+    * one task (a limit over several partitions scans the first one, then
+    * the rest in a second job).
+    */
+  private def collectKeys(remove: DataFrame, key: String): RemoveKeys = {
+    val keys = remove.select(col(key)).where(col(key).isNotNull)
+    val dt = keys.schema.head.dataType
+    val rows = GraftBridge.collectInternal(
+      keys.coalesce(1).limit(keyPruneLimit + 1))
+    if (rows.length > keyPruneLimit) ManyKeys
+    else FewKeys(rows.iterator.map(_.get(0, dt)).toVector.distinct, dt)
+  }
+
+  /** Key types whose SQL equality a literal `IN` reproduces exactly.
+    * Not floating point (a join normalizes NaN and ±0.0, `InSet` does
+    * not), decimals, binary, collated strings or nested types.
+    */
+  private def literalKeyType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType => true
+    case StringType => true // UTF8_BINARY only: collations compare otherwise
+    case _ => false
+  }
+
+  private def integralType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** `key IN (few keys)`, standing in for the equi-join of `remove`
+    * against a table key column of type `tableType`; None where the
+    * join has to stay. Integral types may differ: the `IN` widens like
+    * the join does.
+    */
+  private def keyIn(key: String, few: FewKeys,
+                    tableType: DataType): Option[Column] =
+    if (literalKeyType(few.dataType) && literalKeyType(tableType) &&
+        (few.dataType == tableType ||
+         integralType(few.dataType) && integralType(tableType)))
+      Some(col(key).isin(few.values.map(v =>
+        GraftBridge.column(Literal(v, few.dataType))): _*))
+    else None
 
   /** Which live files COULD contain one of the update keys, decided
     * from footer stats alone — no data read. A file without stats for
@@ -2007,69 +2096,101 @@ object TxLog {
     }
 
   /** The locate step, exposed for tests/probes: stats-prune to
-    * candidate files, then semi-join ONLY those on `key` to find the
-    * files that actually contain a matching key. Returns
-    * `(candidates, touched)` — both subsets of `snap.files`, touched ⊆
-    * candidates. With `useStats = false` every file is a candidate
-    * (the pre-round-10 full-scan locate, kept measurable for the
-    * probe's A/B).
-    *
-    * Small update sets (≤ [[keyPruneLimit]] non-null key rows) cost one
-    * shuffle-free `limit` collect: the keys are deduplicated and pruned
-    * per key on the driver. Larger sets take one min/max job and prune
-    * on the update span only. The touched-file list is deduplicated
-    * per partition, not by a shuffle.
+    * candidate files, then scan ONLY those for the files that actually
+    * contain a matching key. Returns `(candidates, touched)` — both
+    * subsets of `snap.files`, touched ⊆ candidates. With `useStats =
+    * false` every file is a candidate and the scan semi-joins (the
+    * pre-round-10 full-scan locate, kept measurable for the probe's
+    * A/B).
     */
   private[graft] def locateTouched(s: SparkSession, snap: Snapshot,
                                    updates: DataFrame, key: String,
                                    useStats: Boolean = true)
       : (Vector[String], Vector[String]) = {
-    val nonNullKeys = updates.select(col(key)).where(col(key).isNotNull)
-    // non-null keys of a type normKey can't map to the stats domain
+    val l = locate(s, snap, updates, key,
+      if (useStats) Some(collectKeys(updates, key)) else None)
+    (l.candidates, l.touched)
+  }
+
+  /** The located files of a rewrite, and the literal `IN` that stands
+    * in for its remove join (see [[keyIn]]).
+    */
+  private final case class Located(candidates: Vector[String],
+      touched: Vector[String], keyIn: Option[Column])
+
+  /** [[locateTouched]] over keys already collected (`None`: no stats
+    * pruning). Few keys are pruned per key on the driver and, where
+    * [[keyIn]] allows, matched by `key IN (…)`: one scan job. Many keys
+    * take one min/max job, prune on the span and semi-join. The
+    * touched-file list is deduplicated per partition, not by a shuffle.
+    */
+  private def locate(s: SparkSession, snap: Snapshot, remove: DataFrame,
+      key: String, keys: Option[RemoveKeys]): Located = {
+    // non-null keys of a type statsValue can't map to the stats domain
     // (DecimalType, Boolean, binary, …): stats can't decide anything,
-    // so EVERY file is a candidate and the semi-join below does the
+    // so EVERY file is a candidate and the scan below does the
     // narrowing — conflating this with the all-null case silently
     // skipped the rewrite and left duplicate/undead keys (round-11
     // ADVICE high fix)
-    def spanPrune(): Vector[String] = {
-      val bounds = updates.agg(min(col(key)), max(col(key))).head()
-      normKey(bounds.get(0)).zip(normKey(bounds.get(1))) match {
-        case None => snap.files
-        case Some((umin, umax)) => pruneCandidates(snap, key, umin, umax, None)
-      }
-    }
-    val candidates =
-      if (!useStats) snap.files
-      else {
-        // key ROWS, not distinct values: any set above the limit
-        // (duplicate-heavy ones too) takes the span path
-        val sample = nonNullKeys.limit(keyPruneLimit + 1).collect()
-        if (sample.length > keyPruneLimit) spanPrune()
-        else {
-          val keys = sample.iterator.map(r => normKey(r.get(0))).toVector.distinct
-          if (keys.isEmpty) Vector.empty // no non-null update keys: nothing
-                                         // matches (SQL equality on null
-                                         // never joins)
-          else if (keys.contains(None)) snap.files // unprunable key type
-          else // per-key pruning never reads the span bounds
-            pruneCandidates(snap, key, null, null, Some(keys.flatten))
+    val candidates = keys match {
+      case None => snap.files
+      case Some(ManyKeys) =>
+        val bounds = remove.agg(min(col(key)), max(col(key))).limit(1)
+        val dt = bounds.schema.head.dataType
+        val b = GraftBridge.collectInternal(bounds).head
+        statsValue(b.get(0, dt), dt).zip(statsValue(b.get(1, dt), dt)) match {
+          case None => snap.files
+          case Some((umin, umax)) => pruneCandidates(snap, key, umin, umax, None)
         }
-      }
-    if (candidates.isEmpty) return (candidates, Vector.empty)
-    val touched = readSnapshot(s, snap.copy(files = candidates))
-      .withColumn("_graft_file", input_file_name())
-      .join(updates.select(col(key)), Seq(key), "left_semi")
+      case Some(FewKeys(values, dt)) =>
+        val norm = values.map(statsValue(_, dt))
+        if (norm.isEmpty) Vector.empty // no non-null update keys: nothing
+                                       // matches (SQL equality on null
+                                       // never joins)
+        else if (norm.contains(None)) snap.files // unprunable key type
+        else // per-key pruning never reads the span bounds
+          pruneCandidates(snap, key, null, null, Some(norm.flatten))
+    }
+    if (candidates.isEmpty) return Located(candidates, Vector.empty, None)
+    val frame = readSnapshot(s, snap.copy(files = candidates))
+    val in = keys.collect { case few: FewKeys =>
+      keyIn(key, few, frame.select(col(key)).schema.head.dataType)
+    }.flatten
+    val matched = in match {
+      case Some(c) => frame.where(c).withColumn("_graft_file", input_file_name())
+      case None => frame.withColumn("_graft_file", input_file_name())
+        .join(remove.select(col(key)), Seq(key), "left_semi")
+    }
+    val touched = matched
       .select(col("_graft_file")).as(Encoders.STRING)
       .mapPartitions(_.toSet.iterator)(Encoders.STRING)
       .collect().map(f => abs(uriPath(f)))
       .toSet
-    (candidates, snap.files.filter(f => touched.contains(abs(f))))
+    Located(candidates, snap.files.filter(f => touched.contains(abs(f))), in)
   }
 
-  /** Spark Row key values normalized to the stats value domain (Long /
-    * Double / String); timestamps → micros, dates → epoch days — the
-    * same integer physical order parquet footers record. None = null
-    * or an unprunable type.
+  /** A Catalyst internal value (a literal's, or a collected key's) of
+    * type `dt` in the stats value domain (Long / Double / String):
+    * epoch days for dates and micros for timestamps — the integer
+    * physical order parquet footers record. None = null or an
+    * unprunable type.
+    */
+  private[sources] def statsValue(v: Any, dt: DataType): Option[Any] =
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | TimestampNTZType =>
+        Option(v).map(_.asInstanceOf[Number].longValue)
+      case FloatType | DoubleType =>
+        Option(v).map(_.asInstanceOf[Number].doubleValue)
+      case StringType => Option(v).map(_.toString)
+      case _ => None
+    }
+
+  /** External key values (V1 filter values) normalized to the stats
+    * value domain (Long / Double / String); timestamps → micros, dates
+    * → epoch days — the same integer physical order parquet footers
+    * record. None = null or an unprunable type. [[statsValue]] is the
+    * twin for Catalyst internal values.
     */
   private[sources] def normKey(v: Any): Option[Any] = v match {
     case null                     => None
@@ -2099,7 +2220,7 @@ object TxLog {
     * `key`; unmatched update rows are inserted. The locate step is
     * METADATA-PRUNED: footer min/max stats eliminate files whose key
     * range cannot intersect the update keys before any scan, and the
-    * semi-join on `input_file_name` then narrows the survivors to the
+    * scan on `input_file_name` then narrows the survivors to the
     * files that actually contain a match — a point update to a huge
     * table reads O(matching files), not O(table). Returns the new
     * version. A concurrent non-compact commit that adds files
@@ -2114,11 +2235,11 @@ object TxLog {
       val adds = stage(s, table, updates, spec)
       return commit(table, "upsert", snap.version, adds, Nil, Some(merged.json))
     }
-    // the update frame feeds the locate agg, the key sample, the
-    // anti-join, and the union — pin one evaluation
+    // the update frame feeds the key collect and the union (and, for
+    // many keys, the locate agg and the joins) — pin one evaluation
     val u = updates.persist()
-    try rewriteTouched(s, table, snap, spec, key, u.select(col(key)), Some(u),
-      "upsert", Some(merged.json))
+    try rewriteTouched(s, table, snap, spec, key, u.select(col(key)),
+      collectKeys(u, key), Some(u), "upsert", Some(merged.json))
     finally u.unpersist()
   }
 
@@ -2134,10 +2255,10 @@ object TxLog {
              key: String): Long = {
     val snap = snapshot(table)
     if (snap.files.isEmpty) return snap.version
-    val k = keys.select(col(key)).persist()
-    try rewriteTouched(s, table, snap, partitionSpec(table, snap.version),
-      key, k, None, "delete", None)
-    finally k.unpersist()
+    withRemoveKeys(keys.select(col(key)), key) { (remove, ks) =>
+      rewriteTouched(s, table, snap, partitionSpec(table, snap.version),
+        key, remove, ks, None, "delete", None)
+    }
   }
 
   /** ATOMIC mixed MERGE: upsert `upserts` (by `key`) AND delete the
@@ -2155,47 +2276,95 @@ object TxLog {
     * the same merge yields an identical table.
     */
   def merge(s: SparkSession, table: String, upserts: DataFrame,
-            deleteKeys: DataFrame, key: String): Long = {
+            deleteKeys: DataFrame, key: String): Long =
+    mergeWith(s, table, upserts, upserts.isEmpty) { (snap, spec, schemaJson) =>
+      val u = upserts.persist()
+      try withRemoveKeys(
+        u.select(col(key)).unionByName(deleteKeys.select(col(key))), key) {
+        (remove, ks) => rewriteTouched(s, table, snap, spec, key, remove, ks,
+          Some(u), "upsert", schemaJson)
+      } finally u.unpersist()
+    }
+
+  /** The frame of [[merge]] and [[applyChanges]]: on an empty table,
+    * `upserts` is staged as the first commit (nothing to commit when
+    * `noUpserts`); otherwise `rewrite(snap, spec, schemaJson)` runs.
+    */
+  private def mergeWith(s: SparkSession, table: String, upserts: DataFrame,
+      noUpserts: => Boolean)(
+      rewrite: (Snapshot, Seq[String], Option[String]) => Long): Long = {
     val snap = snapshot(table)
     val merged = mergedWriteSchema(table, snap.version, upserts.schema,
       "upsert")
     val spec = partitionSpec(table, snap.version)
-    if (snap.files.isEmpty) {
-      if (upserts.isEmpty) return snap.version
-      val adds = stage(s, table, upserts, spec)
-      return commit(table, "upsert", snap.version, adds, Nil,
-        Some(merged.json))
-    }
-    val u = upserts.persist()
-    val affected = u.select(col(key))
-      .unionByName(deleteKeys.select(col(key))).persist()
-    try rewriteTouched(s, table, snap, spec, key, affected, Some(u),
-      "upsert", Some(merged.json))
-    finally { u.unpersist(); affected.unpersist() }
+    if (snap.files.nonEmpty) rewrite(snap, spec, Some(merged.json))
+    else if (noUpserts) snap.version
+    else commit(table, "upsert", snap.version, stage(s, table, upserts, spec),
+      Nil, Some(merged.json))
   }
 
-  /** The locate-and-rewrite core of [[upsert]], [[delete]] and
-    * [[merge]] over a non-empty snapshot: locate the files holding a
-    * key of `remove`, keep their rows whose key is not in `remove`
-    * (anti-join), union the `add` rows, stage one rewrite and commit it
-    * as `op` with `schemaJson`, removing the touched files. Returns
-    * `snap.version` unchanged when no file is touched and there is
-    * nothing to add.
+  /** `body` over `remove` and its collected keys. Few keys of a literal
+    * type are read once, by the collect; otherwise `remove` feeds the
+    * locate agg and both joins, so it is persisted for them.
+    */
+  private def withRemoveKeys[A](remove: DataFrame, key: String)(
+      body: (DataFrame, RemoveKeys) => A): A =
+    collectKeys(remove, key) match {
+      case few @ FewKeys(_, dt) if literalKeyType(dt) => body(remove, few)
+      case keys =>
+        val r = remove.persist()
+        try body(r, keys) finally r.unpersist()
+    }
+
+  /** The locate-and-rewrite core of [[upsert]], [[delete]], [[merge]]
+    * and [[applyChanges]] over a non-empty snapshot: locate the files
+    * holding a key of `remove`, keep their rows whose key is not in
+    * `remove`, union the `add` rows, stage one rewrite and commit it as
+    * `op` with `schemaJson`, removing the touched files. Survivors are
+    * `key IS NULL OR NOT key IN (…)` where the locate matched by
+    * literals, else the anti-join. The staged frame is sized by
+    * [[rewritePartitions]]. Returns `snap.version` unchanged when no
+    * file is touched and there is nothing to add.
     */
   private def rewriteTouched(s: SparkSession, table: String, snap: Snapshot,
-      spec: Seq[String], key: String, remove: DataFrame,
+      spec: Seq[String], key: String, remove: DataFrame, keys: RemoveKeys,
       add: Option[DataFrame], op: String, schemaJson: Option[String]): Long = {
-    val (_, touchedFiles) = locateTouched(s, snap, remove, key)
+    val located = locate(s, snap, remove, key, Some(keys))
+    val touchedFiles = located.touched
     if (touchedFiles.isEmpty && add.forall(_.isEmpty)) return snap.version
     val survivors =
       if (touchedFiles.isEmpty) None
-      else Some(readSnapshot(s, snap.copy(files = touchedFiles))
-        .join(remove, Seq(key), "left_anti"))
+      else {
+        val rows = readSnapshot(s, snap.copy(files = touchedFiles))
+        Some(located.keyIn.fold(rows.join(remove, Seq(key), "left_anti"))(in =>
+          rows.where(col(key).isNull || !in)))
+      }
     val rewritten =
       (survivors ++ add).reduce(_.unionByName(_, allowMissingColumns = true))
-    val adds = stage(s, table, rewritten, spec)
+    val adds = stage(s, table, rewritePartitions(s, rewritten), spec)
     commit(table, op, snap.version, adds,
       touchedFiles.map(relative(table, _)), schemaJson)
+  }
+
+  /** A rewrite's staged frame, coalesced with no shuffle to the
+    * partition count AQE's parallelism-first coalescing would give its
+    * estimated size: a target partition size of min(advisory partition
+    * size, max(size / default parallelism, coalescing's minimum
+    * partition size)). An unknown size leaves the partitioning as it
+    * is. Appends, overwrite and compaction keep the caller's
+    * partitioning; only the rewrite, whose partitioning is an accident
+    * of the touched files and the change set, is sized.
+    */
+  private def rewritePartitions(s: SparkSession, df: DataFrame): DataFrame = {
+    val conf = GraftBridge.sqlConf(s)
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size >= conf.defaultSizeInBytes) df
+    else {
+      val target = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        .min((size / s.sparkContext.defaultParallelism)
+          .max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)))
+      df.coalesce(((size + target - 1) / target).max(1).toInt)
+    }
   }
 
   /** Bin-pack the live files into `targetFiles` and swap the lists in

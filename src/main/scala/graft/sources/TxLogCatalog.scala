@@ -459,33 +459,21 @@ private[graft] object TxLogV2Util {
     * unknown predicate shapes, missing stats, and unmappable values
     * compile to always-admit. Values arrive as CATALYST literals
     * (UTF8String for strings, epoch days/micros for
-    * dates/timestamps) — mapped straight into the [[TxLog.normKey]]
+    * dates/timestamps) — mapped straight into the [[TxLog.statsValue]]
     * comparison domain. Beyond [[runtimeKeyLimit]] values the pruner
     * degrades to a span check (values' fold-min/max vs file range).
     */
   def compileRuntimePruner(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate)
       : Option[TxLog.FileStats] => Boolean = {
-    import org.apache.spark.sql.types._
     val admitAll = (_: Option[TxLog.FileStats]) => true
-    def normLit(value: Any, dt: DataType): Option[Any] = dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Option(value).map(_.asInstanceOf[Number].longValue)
-      case FloatType | DoubleType =>
-        Option(value).map(_.asInstanceOf[Number].doubleValue)
-      case StringType => Option(value).map(_.toString)
-      case DateType => Option(value).map(_.asInstanceOf[Number].longValue)
-      case TimestampType | TimestampNTZType =>
-        Option(value).map(_.asInstanceOf[Number].longValue)
-      case _ => None
-    }
     if (p.name != "IN" || p.children.isEmpty) return admitAll
     p.children.head match {
       case ref: NamedReference if ref.fieldNames.length == 1 =>
         val col = ref.fieldNames.head
         val lits = p.children.drop(1)
         val normOpts = lits.map(e => GraftBridge.literalValue(e)
-          .flatMap { case (v, dt) => normLit(v, dt) })
+          .flatMap { case (v, dt) => TxLog.statsValue(v, dt) })
         if (normOpts.exists(_.isEmpty))
           return admitAll // unmappable/non-literal/null value present
         val norm = normOpts.flatten.toIndexedSeq

@@ -154,6 +154,23 @@ object GraftBridge {
     files
   }
 
+  /** `df`'s rows collected to the driver as Catalyst internal rows,
+    * in one tracked SQL execution as `collect()` runs them. Values keep
+    * their internal form (epoch days, micros, UTF8String), so a literal
+    * built from one compares exactly as the value it came from — no
+    * round trip through `java.sql.Date`/`Timestamp` and their hybrid
+    * calendar.
+    */
+  def collectInternal(df: DataFrame): Array[catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
+  /** The session's SQL conf, for typed reads of Spark's own entries. */
+  def sqlConf(s: SparkSession): internal.SQLConf =
+    s.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** One parquet file's footer — the one footer open shared by the
     * fixture reads above and `TxLog.footerStats`.
     */

@@ -113,6 +113,32 @@ object TxLogProbe extends TempDirs {
       f"(${100000 / mergeSec}%.0f change-rows/s merge-on-write, " +
       f"applied=$negRows%d, stats-pruned locate per batch)")
 
+    // --- jobs per small rewrite --------------------------------------
+    // the locate-and-rewrite budget next to the timings: a 400-row
+    // upsert and an 80-row delete on a 4-file table, then their change
+    // batch applied to a replica holding the table as it was (the
+    // batch is persisted first, as a foreachBatch sink would hold it)
+    val jt = tempDir("graft_txjobs").toAbsolutePath.toString + "/t"
+    TxLog.append(spark, jt, spark.range(0, 4000L)
+      .select($"id", ($"id" % 997).as("v")).repartition(4))
+    val rep = tempDir("graft_txjobs_rep").toAbsolutePath.toString + "/t"
+    TxLog.applyChanges(spark, rep,
+      TxLog.readChangeFeed(spark, jt, 0L, key = Some("id")), "id")
+    val v0 = TxLog.currentVersion(jt)
+    val upsertJobs = JobProbe.jobs(spark, "txprobe-upsert")(
+      TxLog.upsert(spark, jt, spark.range(3800L, 4200L)
+        .select($"id", lit(-1L).as("v")), "id"))
+    val deleteJobs = JobProbe.jobs(spark, "txprobe-delete")(
+      TxLog.delete(spark, jt, spark.range(0L, 80L).toDF("id"), "id"))
+    val batch = TxLog.readChangeFeed(spark, jt, v0, key = Some("id")).persist()
+    val batchRows = batch.count()
+    val applyJobs = JobProbe.jobs(spark, "txprobe-apply")(
+      TxLog.applyChanges(spark, rep, batch, "id"))
+    batch.unpersist()
+    println(f"[txprobe] jobs per small rewrite: upsert(400 rows) " +
+      f"$upsertJobs%d, delete(80 keys) $deleteJobs%d, applyChanges" +
+      f"(their $batchRows%d-row change batch) $applyJobs%d")
+
     // --- streaming ingest through the exactly-once sink ------------
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
