@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Dist2.dist2
 import core._
+import LlmOps.{dist2Sql, embSql, nrmSql, rawCosSql}
 
 /** Embedding clustering (round 4 addition to SURVEY §2.11) — the
   * k-means build step behind semantic dedup / cluster-balanced
@@ -12,26 +14,6 @@ import core._
   */
 object Clustering {
 
-  /** Squared L2 distance as the ORDER-IDENTICAL left-to-right fold
-    * both engines run over identical doubles (codegen'd
-    * [[graft.functions.Dist2]] ↔ DuckDB
-    * `list_reduce(list_prepend(0.0, …))`) — the similarity-family
-    * rule (LlmOps scaladoc): raw doubles may drive ranking when the
-    * fold order is pinned, so argmin needs no pre-rounding.
-    *
-    * r14 (optimization): was the HOF form `aggregate(zip_with(a, b,
-    * (x,y) -> (x-y)*(x-y)), 0D, (acc,v) -> acc+v)` — a
-    * CodegenFallback chain interpreting two lambdas and allocating an
-    * intermediate array per candidate row, the dominant per-row cost
-    * of every kmeans/PQ/semantic-blocking assignment loop. The fused
-    * codegen loop runs the identical IEEE arithmetic in the identical
-    * order (Dist2Spec pins bit-equality against the HOF form on both
-    * eval paths), so ranking and the oracle hash are unchanged.
-    */
-  private def dist2(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.Dist2.dist2(a, b)
-
   /** Deterministic Lloyd k-means: md5-seeded initial centroids (the
     * q_sim_ann_ivf seeding), `iters` unrolled iterations over any
     * (vec_id, emb: array<double>) frame; returns (final centroids as
@@ -39,8 +21,8 @@ object Clustering {
     * emb)). ClusteringSpec drives it on crafted blobs.
     *
     * Cross-engine exactness, piece by piece (§5.3):
-    *  - assignment argmin ranks the raw d² fold (order-identical, see
-    *    [[dist2]]) with cent_id tiebreak;
+    *  - assignment argmin ranks the raw d² fold (order-identical with
+    *    DuckDB's, the LlmOps similarity contract) with cent_id tiebreak;
     *  - centroid recompute is the q_agg_vector_centroid pattern —
     *    per-dim DECIMAL(20,8) sums (exact, order-independent), ONE
     *    `round(sum/n, 8)` at the end (HALF_UP ↔ DuckDB round on
@@ -110,9 +92,7 @@ object Clustering {
     */
   def qMlKmeans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = t(s, dir, "embeddings")
-      .select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val e = LlmOps.embeddings(s, dir, "vec_id")
     // loop shuffles are vector-count-sized — derive the reduce width
     // from n (r15, guide §2), not the session's cpu default
     val (cents, assigned) = kmeans(e, 8, 3,
@@ -142,10 +122,8 @@ object Clustering {
   def kmeansAssignDir(s: SparkSession, dir: String): String =
     core.persistedIndex("km8x3", dir) { path =>
       import s.implicits._
-      val e = t(s, dir, "embeddings")
-        .select($"vec_id",
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      val (_, assigned) = kmeans(e, 8, 3, cacheFinal = false)
+      val (_, assigned) = kmeans(LlmOps.embeddings(s, dir, "vec_id"), 8, 3,
+        cacheFinal = false)
       assigned.select($"cent_id", $"vec_id", $"d2")
         .repartition(col("cent_id"))
         .write.mode("overwrite").parquet(path)
@@ -208,9 +186,7 @@ object Clustering {
   /** Per-(vec, subspace) slices: (vec_id, s ∈ 0..7, subv: 8 doubles). */
   private def pqSub(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "embeddings")
-      .select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    LlmOps.embeddings(s, dir, "vec_id")
       .select($"vec_id", explode(sequence(lit(0), lit(7))).as("s"), $"emb")
       .select($"vec_id", $"s", expr("slice(emb, s * 8 + 1, 8)").as("subv"))
   }
@@ -413,10 +389,7 @@ object Clustering {
   def semanticPairsRaw(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.DotProduct.dot
-    val e = t(s, dir, "embeddings")
-      .select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val e = LlmOps.embeddings(s, dir, "vec_id")
     // k grows with the corpus (max(8, ceil(sqrt n)) — the IVF balance:
     // assignment n·k vs pair work Σ(2·cell)² ≈ 4n²/k; a FIXED k is the
     // n²/k quadratic ScaleProbeSf1 exposed in the ANN family, r5).
@@ -438,14 +411,12 @@ object Clustering {
         .withColumn("d2", dist2($"emb", $"c_emb"))
         .withColumn("rn", row_number().over(probeW))
         .filter($"rn" <= 2)
-        .select($"cent_id", $"vec_id", $"emb",
-          sqrt(dot($"emb", $"emb")).as("nrm"))
+        .select($"cent_id", $"vec_id", $"emb", LlmOps.embNorm.as("nrm"))
     }
     val b = m.select($"cent_id".as("cent_b"), $"vec_id".as("b_id"),
       $"emb".as("b_emb"), $"nrm".as("b_nrm"))
     m.join(b, $"cent_id" === $"cent_b" && $"vec_id" < $"b_id")
-      .withColumn("rawcos",
-        try_divide(dot($"emb", $"b_emb"), $"nrm" * $"b_nrm"))
+      .withColumn("rawcos", LlmOps.rawCos("", "b_"))
       .filter($"rawcos" >= 0.5)
       .groupBy($"vec_id".as("a_id"), $"b_id")
       .agg(min($"cent_id").as("cell"), max($"rawcos").as("rawcos"))
@@ -506,9 +477,7 @@ object Clustering {
        |      PARTITION BY vec_id ORDER BY d2, cent_id) AS rn
        |    FROM (
        |      SELECT n.vec_id, n.emb, c.cent_id,
-       |        list_reduce(list_prepend(0.0, list_zip(n.emb, c.c_emb)
-       |          .apply(p -> (p[1]-p[2])*(p[1]-p[2]))),
-       |          (acc, v) -> acc + v) AS d2
+       |        ${dist2Sql("n.emb", "c.c_emb")} AS d2
        |      FROM e n CROSS JOIN $prev c))
        |  WHERE rn = 1),
        |${c}d AS (
@@ -534,8 +503,7 @@ object Clustering {
       extra: String = ""): String = {
     val chain = (1 to iters)
       .map(i => iterSql(s"c${i - 1}", s"a$i", s"c$i")).mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),$extra
+    s"""$embSql,$extra
        |c0 AS (
        |  SELECT crn AS cent_id, emb AS c_emb FROM (
        |    SELECT *, row_number() OVER (
@@ -553,8 +521,7 @@ object Clustering {
     * assignment), shared by q_embed_pq and q_sim_ann_pq.
     */
   private val pqCtes: String =
-    """WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+    s"""$embSql,
       |sub AS (
       |  SELECT vec_id, s, list_slice(emb, s * 8 + 1, s * 8 + 8) AS subv
       |  FROM (SELECT vec_id, emb, unnest(generate_series(0, 7)) AS s
@@ -573,9 +540,7 @@ object Clustering {
       |      PARTITION BY vec_id, s ORDER BY d2, cent_id) AS rn
       |    FROM (
       |      SELECT n.vec_id, n.s, b.cent_id,
-      |        list_reduce(list_prepend(0.0, list_zip(n.subv, b.c_sub)
-      |          .apply(p -> (p[1]-p[2])*(p[1]-p[2]))),
-      |          (acc, v) -> acc + v) AS d2
+      |        ${dist2Sql("n.subv", "b.c_sub")} AS d2
       |      FROM sub n JOIN books b ON n.s = b.cs))
       |  WHERE rn = 1)""".stripMargin
 
@@ -593,10 +558,8 @@ object Clustering {
       s"""$pqCtes,
          |lut AS (
          |  SELECT q.vec_id AS q_id, q.s AS qs, b.cent_id,
-         |    CAST(round(list_reduce(list_prepend(0.0,
-         |        list_zip(q.subv, b.c_sub)
-         |          .apply(p -> (p[1]-p[2])*(p[1]-p[2]))),
-         |        (acc, v) -> acc + v), 8) AS DECIMAL(20, 8)) AS ad
+         |    CAST(round(${dist2Sql("q.subv", "b.c_sub")}, 8)
+         |      AS DECIMAL(20, 8)) AS ad
          |  FROM sub q JOIN books b ON q.s = b.cs
          |  WHERE q.vec_id < 10),
          |sc AS (
@@ -663,23 +626,17 @@ object Clustering {
          |      PARTITION BY vec_id ORDER BY d2, cent_id) AS rn
          |    FROM (
          |      SELECT n.vec_id, n.emb, c.cent_id,
-         |        list_reduce(list_prepend(0.0, list_zip(n.emb, c.c_emb)
-         |          .apply(p -> (p[1]-p[2])*(p[1]-p[2]))),
-         |          (acc, v) -> acc + v) AS d2
+         |        ${dist2Sql("n.emb", "c.c_emb")} AS d2
          |      FROM e n CROSS JOIN c1s c))
          |  WHERE rn <= 2),
          |nm AS (
-         |  SELECT vec_id, cent_id, emb,
-         |    sqrt(list_reduce(list_prepend(0.0,
-         |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
+         |  SELECT vec_id, cent_id, emb, $nrmSql AS nrm
          |  FROM a2p)
          |SELECT a_id, b_id, CAST(min(cent_id) AS INTEGER) AS cell,
          |  round(max(rawcos), 6) AS cos
          |FROM (
          |  SELECT a.cent_id, a.vec_id AS a_id, b.vec_id AS b_id,
-         |    list_reduce(list_prepend(0.0,
-         |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-         |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+         |    ${rawCosSql("a.", "b.")} AS rawcos
          |  FROM nm a JOIN nm b ON a.cent_id = b.cent_id
          |    AND a.vec_id < b.vec_id)
          |WHERE rawcos >= $tau

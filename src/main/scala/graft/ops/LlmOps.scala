@@ -1,28 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.dot
+import graft.functions.SignBits.signBits
 import core._
 
 /** LLM-training-data pipeline operators (SURVEY §2.10): text
   * analytics, deduplication, and similarity search over the
   * `documents` / `embeddings` fixtures.
   *
-  * Determinism notes: tf-idf ranks on its ROUNDED score (ln() may
-  * differ by 1 ulp across libm implementations); cosine ranks and
-  * thresholds on the RAW score, which is safe because the dot
-  * products / norms are the identical sequential left-to-right fold
-  * in both engines (codegen'd `graft_dot` ↔ DuckDB `list_reduce` —
-  * bit-equality pinned by DotProductSpec and the three-scale-factor
-  * oracle diff). Rounding applies to output columns only.
-  *
-  * Zero-norm rule (whole similarity family, here and TrainingOps):
-  * cosine divisions go through `try_divide`, so an all-zero embedding
-  * yields NULL — matching DuckDB's `x / 0.0` — instead of an ANSI
-  * DIVIDE_BY_ZERO crash; NULL ranks last under every `DESC` rank and
-  * fails every `>= τ` threshold in BOTH engines.
+  * Determinism: tf-idf ranks on its ROUNDED score (ln() may differ
+  * by 1 ulp across libm implementations); the similarity family ranks
+  * on the RAW cosine (the contract at the similarity section).
   */
 object LlmOps {
 
@@ -205,30 +197,113 @@ object LlmOps {
   }
 
   // ------------------------------------------------------- similarity
+  //
+  // The vector contract of the embedding family (here, TrainingOps and
+  // Clustering), defined once per engine: each Spark helper below and
+  // its DuckDB twin (`…Sql`). A raw cosine is `try_divide(dot(x, y),
+  // ‖x‖·‖y‖)` over the codegen'd left-to-right `graft_dot` fold, bit-
+  // equal to DuckDB's `list_reduce(list_prepend(0.0, …))` (DotProductSpec
+  // and the oracle diff pin it), so ranks and thresholds run on it raw,
+  // ties break on (rawcos desc, b_id asc), and only survivors round
+  // (`r6`). A zero norm yields NULL — DuckDB's `x / 0.0` — never an
+  // ANSI DIVIDE_BY_ZERO; NULL ranks last under every DESC rank and
+  // fails every `>= τ` in both engines. Sign bits and d² are the same
+  // kind of fold ([[graft.functions.SignBits]], [[graft.functions.Dist2]]).
 
-  /** vec_id, double-cast embedding, L2 norm (cast once, reuse).
-    * Norm and all dot products go through the codegen'd
-    * [[graft.functions.DotProduct]] — same left-to-right summation
-    * order as the HOF form and the DuckDB oracle, ~10× faster.
+  /** `cols` of the embeddings fixture plus `embedding` as `emb:
+    * array<double>`: Cast's element-wise float→double, codegen'd and
+    * bit-equal to a per-element lambda cast (DotProductSpec).
     */
-  def normed(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.DotProduct.dot
+  private[ops] def embeddings(s: SparkSession, dir: String,
+      cols: String*): DataFrame =
     t(s, dir, "embeddings")
-      .select($"vec_id", $"label",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .withColumn("nrm", sqrt(dot($"emb", $"emb")))
+      .select(cols.map(col) :+ col("embedding").cast("array<double>").as("emb"): _*)
+
+  /** L2 norm of the `emb` column. */
+  private[ops] def embNorm: Column = sqrt(dot(col("emb"), col("emb")))
+
+  /** vec_id, label, double-cast embedding, L2 norm (cast once, reuse). */
+  def normed(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir, "vec_id", "label").withColumn("nrm", embNorm)
+
+  /** Raw cosine of `${x}emb` and `${y}emb`, normed by `${x}nrm`, `${y}nrm`. */
+  private[ops] def rawCos(x: String, y: String): Column =
+    try_divide(dot(col(s"${x}emb"), col(s"${y}emb")),
+      col(s"${x}nrm") * col(s"${y}nrm"))
+
+  /** Top-`k` per `a_id` of `pairs` carrying `a_`/`b_` vectors and
+    * norms, as (a_id, rn, b_id, `before`…, cos, `after`…). Rounding
+    * only the ≤k survivors per vector is 10⁴ BigDecimal roundings
+    * instead of 4·10⁶ (~1.5 s saved per similarity query at sf0.1).
+    */
+  private[ops] def topkByCos(pairs: DataFrame, k: Int,
+      before: Seq[String] = Nil, after: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col("a_id"))
+      .orderBy(col("rawcos").desc, col("b_id").asc)
+    pairs.withColumn("rawcos", rawCos("a_", "b_"))
+      // project the d-dimensional vectors away BEFORE the rank
+      // window: the window's hash exchange otherwise shuffles every
+      // (pair, a_emb, b_emb) row — ~d×16 bytes of dead weight per
+      // candidate pair, the dominant cost of the O(n²) family
+      .select((Seq("a_id", "b_id") ++ before ++ ("rawcos" +: after)).map(col): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select((Seq(col("a_id"), col("rn"), col("b_id")) ++ before.map(col) ++
+        (r6(col("rawcos")).as("cos") +: after.map(col))): _*)
   }
 
-  /** All-pairs cosine, top-k per left vector.
-    *
-    * Ranking runs on the RAW cosine: both engines compute it with the
-    * identical left-to-right fold over identical doubles, so the raw
-    * values are bit-equal and the (cos desc, b_id) order is already
-    * cross-engine deterministic. Rounding happens only on the ≤k
-    * surviving rows per vector — 10⁴ BigDecimal roundings instead of
-    * 4·10⁶ (measured ~1.5 s saved per similarity query at sf0.1).
+  /** Sign-band candidate pairs (a_id < b_id) of `e(vec_id, emb)`, not
+    * distinct across bands: band `bnd` keys on the sign bits of `bits`
+    * dims from `bnd * stride + 1`, and a pair is a candidate when some
+    * band's keys differ in at most one bit. The probe side also emits
+    * the `bits` one-bit flips, so Hamming-≤1 stays an equi-join, and a
+    * pair matches exactly one probe key per band.
     */
+  private[ops] def signBandPairs(e: DataFrame, bands: Seq[Int], stride: Int,
+      bits: Int): DataFrame = {
+    val bandCols = bands.map(bnd => struct(lit(bnd).as("band"),
+      signBits(col("emb"), bnd * stride + 1, bits).as("bv")))
+    val sig = e.select(col("vec_id"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("vec_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
+    val probes = sig.select(col("vec_id"), col("band"), explode(array(
+        (col("bv") +: (0 until bits).map(j => col("bv").bitwiseXOR(lit(1L << j)))): _*))
+      .as("pv"))
+    probes.as("x").join(sig.as("y"),
+        col("x.band") === col("y.band") && col("x.pv") === col("y.bv") &&
+        col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
+  }
+
+  /** DuckDB twin of [[embeddings]]: CTE `e(vec_id, emb DOUBLE[])`. */
+  private[ops] val embSql: String =
+    "WITH e AS (\n  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)"
+
+  /** DuckDB twin of [[embNorm]]: `emb`'s L2 norm, the same fold. */
+  private[ops] val nrmSql: String =
+    "sqrt(list_reduce(list_prepend(0.0,\n      list_transform(emb, x -> x * x)), (a, x) -> a + x))"
+
+  /** DuckDB twin of [[normed]]: [[embSql]] plus CTE `n(vec_id, emb, nrm)`. */
+  private[ops] val normedSql: String =
+    s"$embSql,\nn AS (\n  SELECT vec_id, emb, $nrmSql AS nrm FROM e)"
+
+  /** DuckDB twin of [[rawCos]]: `x`/`y` are column prefixes (`a.`, `c.c_`). */
+  private[ops] def rawCosSql(x: String, y: String): String =
+    s"""list_reduce(list_prepend(0.0,
+       |        list_zip(${x}emb, ${y}emb).apply(p -> p[1] * p[2])),
+       |        (acc, v) -> acc + v) / (${x}nrm * ${y}nrm)""".stripMargin
+
+  /** DuckDB twin of [[graft.functions.SignBits]] over the list `slice`. */
+  private[ops] def signBitsSql(slice: String): String =
+    s"""CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), $slice),
+       |      (acc, x) -> acc * 2 + CASE WHEN x >= 0 THEN 1 ELSE 0 END) AS BIGINT)""".stripMargin
+
+  /** DuckDB twin of [[graft.functions.Dist2]]: squared L2 distance. */
+  private[ops] def dist2Sql(x: String, y: String): String =
+    s"""list_reduce(list_prepend(0.0, list_zip($x, $y)
+       |          .apply(p -> (p[1]-p[2])*(p[1]-p[2]))),
+       |          (acc, v) -> acc + v)""".stripMargin
+
+  /** All-pairs cosine, top-k per left vector ([[topkByCos]]). */
   private[ops] def cosineTopk(s: SparkSession, dir: String, k: Int): DataFrame = {
     import s.implicits._
     val e = normed(s, dir)
@@ -247,19 +322,7 @@ object LlmOps {
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0
     val b = e.select($"vec_id".as("b_id"), $"label".as("b_label"),
       $"emb".as("b_emb"), $"nrm".as("b_nrm"))
-    val w = Window.partitionBy($"a_id").orderBy($"rawcos".desc, $"b_id".asc)
-    a.join(broadcast(b), $"a_id" =!= $"b_id")
-      .withColumn("rawcos",
-        try_divide(graft.functions.DotProduct.dot($"a_emb", $"b_emb"),
-          $"a_nrm" * $"b_nrm"))
-      // project the d-dimensional vectors away BEFORE the rank
-      // window: the window's hash exchange otherwise shuffles every
-      // (pair, a_emb, b_emb) row — ~d×16 bytes of dead weight per
-      // candidate pair, the dominant cost of the O(n²) family
-      .select($"a_id", $"b_id", $"b_label", $"rawcos")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= k)
-      .select($"a_id", $"rn", $"b_id", $"b_label", r6($"rawcos").as("cos"))
+    topkByCos(a.join(broadcast(b), $"a_id" =!= $"b_id"), k, before = Seq("b_label"))
   }
 
   /** Brute-force top-5 cosine neighbors per vector (the O(n²·d)
@@ -375,9 +438,7 @@ object LlmOps {
     */
   def qEmbedQuantize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = t(s, dir, "embeddings")
-      .select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+    val e = embeddings(s, dir, "vec_id")
     val stats = e
       .select(posexplode($"emb").as(Seq("pos", "x")))
       .groupBy($"pos").agg(min($"x").as("mn"), max($"x").as("mx"))
@@ -409,8 +470,7 @@ object LlmOps {
   }
 
   val quantizeOracleSql: String =
-    """WITH e AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+    s"""$embSql,
       |d AS (
       |  SELECT CAST(generate_subscripts(emb, 1) AS BIGINT) AS pos,
       |    unnest(emb) AS x
@@ -518,18 +578,10 @@ object LlmOps {
         |FROM x GROUP BY label, dim ORDER BY label, dim""".stripMargin,
 
     "q_sim_cosine_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e),
+      s"""$normedSql,
         |pairs AS (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id)
         |SELECT a_id, rn, b_id, b_label, round(rawcos, 6) AS cos FROM (
         |  SELECT p.*, e2.label AS b_label,
@@ -539,18 +591,10 @@ object LlmOps {
         |WHERE rn <= 5 ORDER BY a_id, rn""".stripMargin,
 
     "q_sim_knn_label" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e),
+      s"""$normedSql,
         |pairs AS (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
         |topk AS (
         |  SELECT a_id, b_id FROM (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import core._
+import LlmOps.{embSql, normedSql, nrmSql, rawCosSql, signBitsSql}
 
 /** Training-data-pipeline operators beyond SURVEY §2.10's core set:
   * language ID, quality scoring, document fingerprinting, SimHash
@@ -425,9 +426,7 @@ object TrainingOps {
     val a = if (parts > 1) a0.repartition(parts, $"a_id") else a0
     val b = e.select($"vec_id".as("b_id"), $"emb".as("b_emb"), $"nrm".as("b_nrm"))
     a.join(broadcast(b), $"a_id" < $"b_id")
-      .withColumn("rawcos",
-        try_divide(graft.functions.DotProduct.dot($"a_emb", $"b_emb"),
-          $"a_nrm" * $"b_nrm"))
+      .withColumn("rawcos", LlmOps.rawCos("a_", "b_"))
       // filter on the raw cosine (bit-identical across engines —
       // same fold order), round only survivors
       .filter($"rawcos" >= 0.5)
@@ -499,34 +498,16 @@ object TrainingOps {
   private[graft] def embedLshBanded(s: SparkSession, e: DataFrame,
       tau: Double, groups: Int): DataFrame = {
     import s.implicits._
-    import graft.functions.DotProduct.dot
     val a = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val b = e.select($"vec_id".as("b_id"), $"emb".as("b_emb"), $"nrm".as("b_nrm"))
     val batches = (0 until 8).grouped(math.max(1, 8 / groups)).toSeq
     val parts = batches.map { bands =>
-      // codegen'd band key (r15): the HOF `aggregate(slice(...))` form
-      // interpreted two lambdas + allocated a slice per band per row —
-      // graft.functions.SignBits runs the identical integer fold in
-      // one fused loop (SignBitsSpec pins equality)
-      val bandCols = bands.map { bnd =>
-        struct(lit(bnd).as("band"),
-          graft.functions.SignBits.signBits($"emb", bnd * 8 + 1, 8).as("bv"))
-      }
-      val sig = e.select($"vec_id", explode(array(bandCols: _*)).as("bk"))
-        .select($"vec_id", $"bk.band".as("band"), $"bk.bv".as("bv"))
-      val probes = sig.select($"vec_id", $"band", explode(array(
-          ($"bv" +: (0 until 8).map(j => $"bv".bitwiseXOR(lit(1L << j)))): _*))
-        .as("pv"))
-      // no per-batch distinct: within one band a Hamming-≤1 pair
-      // matches EXACTLY one probe key (the identity when equal, the
-      // single differing-bit flip otherwise), so candidates carry no
-      // intra-band duplicates and a distinct here would only pay an
-      // O(candidates) shuffle (~11 GB/band at the 100× fixture) to
-      // remove cross-band dups the final distinct removes anyway
-      val cand = probes.as("x").join(sig.as("y"),
-          $"x.band" === $"y.band" && $"x.pv" === $"y.bv" &&
-          $"x.vec_id" < $"y.vec_id")
-        .select($"x.vec_id".as("a_id"), $"y.vec_id".as("b_id"))
+      // 8 sign bits per 8-dim band. No per-batch distinct: a band adds
+      // no duplicates of its own (LlmOps.signBandPairs), so a distinct
+      // here would only pay an O(candidates) shuffle (~11 GB/band at
+      // the 100× fixture) to remove cross-band dups the final distinct
+      // removes anyway
+      val cand = LlmOps.signBandPairs(e, bands, stride = 8, bits = 8)
       // BROADCAST both embedding sides: the r9 100× attempt died on
       // disk because cand⋈a (SMJ) fed a second exchange whose rows
       // carried the 512-byte a_emb — ~48 GB of shuffle write per
@@ -537,8 +518,7 @@ object TrainingOps {
       // ~7e8-row intermediate never touches disk, and the batch's
       // only shuffles are the metadata-sized sig/probe exchanges.
       val surv = cand.join(broadcast(a), "a_id").join(broadcast(b), "b_id")
-        .withColumn("rawcos",
-          try_divide(dot($"a_emb", $"b_emb"), $"a_nrm" * $"b_nrm"))
+        .withColumn("rawcos", LlmOps.rawCos("a_", "b_"))
         // threshold on the raw cosine (bit-identical fold across
         // engines); round survivors only — module convention
         .filter($"rawcos" >= tau)
@@ -603,7 +583,6 @@ object TrainingOps {
   def dedupEmbedLshTau(s: SparkSession, dir: String,
       tau: Double = 0.9): DataFrame = {
     import s.implicits._
-    import graft.functions.DotProduct.dot
     val e = core.cached(LlmOps.normed(s, dir))
     val n = core.tableRows(s, dir, "embeddings")
     // Band-key width sized for CANDIDATE volume, not ANN bucket
@@ -620,25 +599,13 @@ object TrainingOps {
     // a production deployment buys it back with MORE BANDS (linear
     // cost), never with wider probing (multiplicative cost).
     val bits = math.max(8, math.min(16, lshWidth(n, 4L)))
-    // codegen'd band key (r15 — the embedLshBanded note)
-    val bandCols = (0 until 4).map { bnd =>
-      struct(lit(bnd).as("band"),
-        graft.functions.SignBits.signBits($"emb", bnd * 16 + 1, bits).as("bv"))
-    }
-    val sig = e.select($"vec_id", explode(array(bandCols: _*)).as("bk"))
-      .select($"vec_id", $"bk.band".as("band"), $"bk.bv".as("bv"))
-    val probes = sig.select($"vec_id", $"band", explode(array(
-        ($"bv" +: (0 until bits).map(j => $"bv".bitwiseXOR(lit(1L << j)))): _*))
-      .as("pv"))
-    val cand = probes.as("x").join(sig.as("y"),
-        $"x.band" === $"y.band" && $"x.pv" === $"y.bv" &&
-        $"x.vec_id" < $"y.vec_id")
-      .select($"x.vec_id".as("a_id"), $"y.vec_id".as("b_id"))
+    // 4 bands over 16-dim slices, keyed on their first `bits` signs
+    val cand = LlmOps.signBandPairs(e, 0 until 4, stride = 16, bits = bits)
       .distinct()
     val a = e.select($"vec_id".as("a_id"), $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val b = e.select($"vec_id".as("b_id"), $"emb".as("b_emb"), $"nrm".as("b_nrm"))
     cand.join(a, "a_id").join(b, "b_id")
-      .withColumn("rawcos", try_divide(dot($"a_emb", $"b_emb"), $"a_nrm" * $"b_nrm"))
+      .withColumn("rawcos", LlmOps.rawCos("a_", "b_"))
       .filter($"rawcos" >= tau)
       .select($"a_id", $"b_id", r6($"rawcos").as("cos"))
       .orderBy($"a_id", $"b_id")
@@ -674,7 +641,7 @@ object TrainingOps {
     val e0 = core.cached(LlmOps.normed(s, dir))
     // n from the embeddings footer (core.tableRows): no count job
     val width = lshWidth(core.tableRows(s, dir, "embeddings"))
-    // codegen'd bucket key (r15 — the embedLshBanded note)
+    // codegen'd bucket key (graft.functions.SignBits)
     val e = e0
       .withColumn("bucket",
         graft.functions.SignBits.signBits($"emb", 1, width))
@@ -682,17 +649,8 @@ object TrainingOps {
       $"nrm".as("a_nrm"))
     val b = e.select($"bucket".as("bk2"), $"vec_id".as("b_id"),
       $"emb".as("b_emb"), $"nrm".as("b_nrm"))
-    val w = Window.partitionBy($"a_id").orderBy($"rawcos".desc, $"b_id".asc)
-    a.join(b, $"bucket" === $"bk2" && $"a_id" =!= $"b_id")
-      .withColumn("rawcos",
-        try_divide(graft.functions.DotProduct.dot($"a_emb", $"b_emb"),
-          $"a_nrm" * $"b_nrm"))
-      // drop the vectors before the rank window's exchange (see
-      // LlmOps.cosineTopk)
-      .select($"a_id", $"b_id", $"rawcos", $"bucket")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 3)
-      .select($"a_id", $"rn", $"b_id", r6($"rawcos").as("cos"), $"bucket")
+    LlmOps.topkByCos(a.join(b, $"bucket" === $"bk2" && $"a_id" =!= $"b_id"),
+        3, after = Seq("bucket"))
       .orderBy($"a_id", $"rn")
   }
 
@@ -731,7 +689,6 @@ object TrainingOps {
   def ivfIndexDir(s: SparkSession, dir: String): String =
     core.persistedIndex("ivf", dir) { base =>
       import s.implicits._
-      import graft.functions.DotProduct.dot
       val e = core.cached(LlmOps.normed(s, dir))
       // n from the embeddings footer (core.tableRows): no count job
       val nCells = math.max(16L, math.ceil(math.sqrt(
@@ -762,8 +719,7 @@ object TrainingOps {
       // wants; doubles round-trip parquet bit-exactly, so serving from
       // the index is value-identical to serving from the live frame
       e.crossJoin(broadcast(cents))
-        .withColumn("c_cos",
-          try_divide(dot($"emb", $"c_emb"), $"nrm" * $"c_nrm"))
+        .withColumn("c_cos", LlmOps.rawCos("", "c_"))
         .groupBy($"vec_id")
         // coalesce to +∞: a null cosine (zero-norm vector) must rank
         // LAST like the window form's desc-nulls-last, not first like
@@ -780,7 +736,6 @@ object TrainingOps {
 
   def qSimAnnIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.DotProduct.dot
     // serving reads the persisted per-cell index — the n·√n assignment
     // is amortized into the one-per-JVM build (see [[ivfIndexDir]]);
     // per-execution cost is the Σcell² probe join alone
@@ -789,14 +744,8 @@ object TrainingOps {
       $"emb".as("a_emb"), $"nrm".as("a_nrm"))
     val b = assigned.select($"cent_id".as("c2"), $"vec_id".as("b_id"),
       $"emb".as("b_emb"), $"nrm".as("b_nrm"))
-    val w = Window.partitionBy($"a_id").orderBy($"rawcos".desc, $"b_id".asc)
-    a.join(b, $"cent_id" === $"c2" && $"a_id" =!= $"b_id")
-      .withColumn("rawcos",
-        try_divide(dot($"a_emb", $"b_emb"), $"a_nrm" * $"b_nrm"))
-      .select($"a_id", $"b_id", $"rawcos", $"cent_id")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= 3)
-      .select($"a_id", $"rn", $"b_id", r6($"rawcos").as("cos"), $"cent_id")
+    LlmOps.topkByCos(a.join(b, $"cent_id" === $"c2" && $"a_id" =!= $"b_id"),
+        3, after = Seq("cent_id"))
       .orderBy($"a_id", $"rn")
   }
 
@@ -1100,18 +1049,10 @@ object TrainingOps {
         |FROM comp ORDER BY doc_id""".stripMargin,
 
     "q_dedup_embed" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e)
+      s"""$normedSql
         |SELECT a_id, b_id, round(rawcos, 6) AS cos FROM (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM n a JOIN n b ON a.vec_id < b.vec_id)
         |WHERE rawcos >= 0.5
         |ORDER BY a_id, b_id""".stripMargin,
@@ -1121,19 +1062,10 @@ object TrainingOps {
     // Spark side's multi-probe key expansion, which exists only to
     // keep the predicate an equi-join at scale.
     "q_dedup_embed_lsh" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e),
+      s"""$normedSql,
         |sig AS (
         |  SELECT vec_id, b AS band,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |        emb[(b*8+1):(b*8+8)]),
-        |      (acc, x) -> acc * 2 + CASE WHEN x >= 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS bv
+        |    ${signBitsSql("emb[(b*8+1):(b*8+8)]")} AS bv
         |  FROM n CROSS JOIN (SELECT unnest(range(0, 8)) AS b)),
         |cand AS (
         |  SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
@@ -1141,10 +1073,7 @@ object TrainingOps {
         |    ON x.band = y.band AND x.vec_id < y.vec_id
         |  WHERE bit_count(xor(x.bv, y.bv)) <= 1)
         |SELECT a_id, b_id, round(rawcos, 6) AS cos FROM (
-        |  SELECT c.a_id, c.b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |  SELECT c.a_id, c.b_id, ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM cand c
         |  JOIN n a ON c.a_id = a.vec_id
         |  JOIN n b ON c.b_id = b.vec_id)
@@ -1156,24 +1085,15 @@ object TrainingOps {
     // 4 bands over 16-dim slices, Hamming-≤1 as bit_count(xor) ≤ 1,
     // identical rawcos fold thresholded at 0.9
     "q_dedup_embed_lsh_t9" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      s"""$normedSql,
         |p AS (
         |  SELECT greatest(8, least(16,
         |    CASE WHEN m <= 1 THEN 0
         |         ELSE least(length(bin(m - 1)), 32) END)) AS w
         |  FROM (SELECT (count(*) + 3) // 4 AS m FROM e) t),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e),
         |sig AS (
         |  SELECT vec_id, b AS band,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |        emb[(b*16+1):(b*16+(SELECT w FROM p))]),
-        |      (acc, x) -> acc * 2 + CASE WHEN x >= 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS bv
+        |    ${signBitsSql("emb[(b*16+1):(b*16+(SELECT w FROM p))]")} AS bv
         |  FROM n CROSS JOIN (SELECT unnest(range(0, 4)) AS b)),
         |cand AS (
         |  SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
@@ -1181,10 +1101,7 @@ object TrainingOps {
         |    ON x.band = y.band AND x.vec_id < y.vec_id
         |  WHERE bit_count(xor(x.bv, y.bv)) <= 1)
         |SELECT a_id, b_id, round(rawcos, 6) AS cos FROM (
-        |  SELECT c.a_id, c.b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |  SELECT c.a_id, c.b_id, ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM cand c
         |  JOIN n a ON c.a_id = a.vec_id
         |  JOIN n b ON c.b_id = b.vec_id)
@@ -1192,25 +1109,18 @@ object TrainingOps {
         |ORDER BY a_id, b_id""".stripMargin,
 
     "q_sim_ann_lsh" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      s"""$embSql,
         |p AS (
         |  SELECT CASE WHEN m <= 1 THEN 0
         |         ELSE least(length(bin(m - 1)), 32) END AS w
         |  FROM (SELECT (count(*) + 63) // 64 AS m FROM e) t),
         |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_slice(emb, 1, (SELECT w FROM p))),
-        |      (acc, x) -> acc * 2 + CASE WHEN x >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS bucket
+        |  SELECT vec_id, emb, $nrmSql AS nrm,
+        |    ${signBitsSql("list_slice(emb, 1, (SELECT w FROM p))")} AS bucket
         |  FROM e),
         |pairs AS (
         |  SELECT a.bucket, a.vec_id AS a_id, b.vec_id AS b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM n a JOIN n b
         |    ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
         |SELECT a_id, rn, b_id, round(rawcos, 6) AS cos, bucket FROM (
@@ -1219,13 +1129,7 @@ object TrainingOps {
         |WHERE rn <= 3 ORDER BY a_id, rn""".stripMargin,
 
     "q_sim_ann_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, emb,
-        |    sqrt(list_reduce(list_prepend(0.0,
-        |      list_transform(emb, x -> x * x)), (a, x) -> a + x)) AS nrm
-        |  FROM e),
+      s"""$normedSql,
         |p AS (
         |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS c
         |  FROM e),
@@ -1238,9 +1142,7 @@ object TrainingOps {
         |  WHERE crn <= (SELECT c FROM p)),
         |scored AS (
         |  SELECT n.vec_id, n.emb, n.nrm, c.cent_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(n.emb, c.c_emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (n.nrm * c.c_nrm) AS c_cos
+        |    ${rawCosSql("n.", "c.c_")} AS c_cos
         |  FROM n CROSS JOIN cents c),
         |assigned AS (
         |  SELECT cent_id, vec_id, emb, nrm FROM (
@@ -1250,9 +1152,7 @@ object TrainingOps {
         |  WHERE arn = 1),
         |pairs AS (
         |  SELECT a.cent_id, a.vec_id AS a_id, b.vec_id AS b_id,
-        |    list_reduce(list_prepend(0.0,
-        |        list_zip(a.emb, b.emb).apply(p -> p[1] * p[2])),
-        |        (acc, v) -> acc + v) / (a.nrm * b.nrm) AS rawcos
+        |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM assigned a JOIN assigned b
         |    ON a.cent_id = b.cent_id AND a.vec_id <> b.vec_id)
         |SELECT a_id, rn, b_id, round(rawcos, 6) AS cos, cent_id FROM (

@@ -229,9 +229,18 @@ object TxLog {
 
   /** Column min/max from the parquet footer. Values are Long (all
     * integer physical types, incl. timestamp micros / date days),
-    * Double, or String — compared only against like-typed values.
+    * Double, or String — compared only against like-typed values, in
+    * [[lt]]'s order. The two checks below are every pruner's: a bound
+    * [[lt]] cannot order against the value never prunes.
     */
-  final case class ColStats(min: Any, max: Any)
+  final case class ColStats(min: Any, max: Any) {
+    /** May the file hold `k`, i.e. is k ∈ [min, max] possible? */
+    def mayHold(k: Any): Boolean =
+      !lt(k, min).contains(true) && !lt(max, k).contains(true)
+    /** May the file hold a value in [lo, hi]? */
+    def mayOverlap(lo: Any, hi: Any): Boolean =
+      !(lt(max, lo).contains(true) || lt(hi, min).contains(true))
+  }
 
   /** Footer stats for one data file: exact row count + per-column
     * min/max for every top-level column whose physical type maps
@@ -1781,13 +1790,15 @@ object TxLog {
         .drop("_change_type", "_commit_version", "__graft_rn", "__graft_amb")
       val keys = rows.iterator.filterNot(_.isNullAt(0))
         .map(_.get(0, dt)).toVector
+      // the collect saw every winner's upsert flag: no flag, nothing to add
+      val upserting = rows.exists(_.getBoolean(1))
       if (!complete || keys.length > keyPruneLimit)
         merge(s, table, ups, latest.where(col("_change_type") === "delete")
           .select(col(key)), key)
-      else mergeWith(s, table, ups, !rows.exists(_.getBoolean(1))) {
-        (snap, spec, schemaJson) =>
-          rewriteTouched(s, table, snap, spec, key, latest.select(col(key)),
-            FewKeys(keys, dt), Some(ups), "upsert", schemaJson)
+      else mergeWith(s, table, ups, !upserting) { (snap, spec, schemaJson) =>
+        rewriteTouched(s, table, snap, spec, key, latest.select(col(key)),
+          FewKeys(keys, dt), if (upserting) Some(ups) else None,
+          noAdd = !upserting, "upsert", schemaJson)
       }
     } finally annotated.unpersist()
   }
@@ -2087,10 +2098,8 @@ object TxLog {
       snap.stats.get(f).flatMap(_.colRange(key)) match {
         case None => true
         case Some(cs) => keys match {
-          case Some(ks) => ks.exists(k =>
-            !lt(k, cs.min).contains(true) && !lt(cs.max, k).contains(true))
-          case None =>
-            !(lt(cs.max, umin).contains(true) || lt(umax, cs.min).contains(true))
+          case Some(ks) => ks.exists(cs.mayHold)
+          case None => cs.mayOverlap(umin, umax)
         }
       }
     }
@@ -2238,9 +2247,14 @@ object TxLog {
     // the update frame feeds the key collect and the union (and, for
     // many keys, the locate agg and the joins) — pin one evaluation
     val u = updates.persist()
-    try rewriteTouched(s, table, snap, spec, key, u.select(col(key)),
-      collectKeys(u, key), Some(u), "upsert", Some(merged.json))
-    finally u.unpersist()
+    try {
+      val keys = collectKeys(u, key)
+      // a collected non-null key proves `u` non-empty; only a collect
+      // that saw none leaves the question to a job
+      val sawNone = keys match { case FewKeys(vs, _) => vs.isEmpty; case _ => false }
+      rewriteTouched(s, table, snap, spec, key, u.select(col(key)), keys,
+        Some(u), noAdd = sawNone && u.isEmpty, "upsert", Some(merged.json))
+    } finally u.unpersist()
   }
 
   /** Merge-on-write DELETE: rows whose `key` appears in `keys` are
@@ -2257,7 +2271,7 @@ object TxLog {
     if (snap.files.isEmpty) return snap.version
     withRemoveKeys(keys.select(col(key)), key) { (remove, ks) =>
       rewriteTouched(s, table, snap, partitionSpec(table, snap.version),
-        key, remove, ks, None, "delete", None)
+        key, remove, ks, None, noAdd = true, "delete", None)
     }
   }
 
@@ -2281,8 +2295,9 @@ object TxLog {
       val u = upserts.persist()
       try withRemoveKeys(
         u.select(col(key)).unionByName(deleteKeys.select(col(key))), key) {
+        // delete keys alone can fill the key set: `u` may be empty
         (remove, ks) => rewriteTouched(s, table, snap, spec, key, remove, ks,
-          Some(u), "upsert", schemaJson)
+          Some(u), noAdd = u.isEmpty, "upsert", schemaJson)
       } finally u.unpersist()
     }
 
@@ -2324,14 +2339,17 @@ object TxLog {
     * `key IS NULL OR NOT key IN (…)` where the locate matched by
     * literals, else the anti-join. The staged frame is sized by
     * [[rewritePartitions]]. Returns `snap.version` unchanged when no
-    * file is touched and there is nothing to add.
+    * file is touched and `noAdd` — which callers decide from what their
+    * key collect already saw, so it is evaluated only then, and runs a
+    * job only where that collect could not tell.
     */
   private def rewriteTouched(s: SparkSession, table: String, snap: Snapshot,
       spec: Seq[String], key: String, remove: DataFrame, keys: RemoveKeys,
-      add: Option[DataFrame], op: String, schemaJson: Option[String]): Long = {
+      add: Option[DataFrame], noAdd: => Boolean, op: String,
+      schemaJson: Option[String]): Long = {
     val located = locate(s, snap, remove, key, Some(keys))
     val touchedFiles = located.touched
-    if (touchedFiles.isEmpty && add.forall(_.isEmpty)) return snap.version
+    if (touchedFiles.isEmpty && noAdd) return snap.version
     val survivors =
       if (touchedFiles.isEmpty) None
       else {

@@ -447,8 +447,10 @@ private[graft] object TxLogV2Util {
   }
 
   /** Above this many runtime IN-values, prune per-SPAN (the values'
-    * overall [min, max]) instead of per-value — the same truncation
-    * rule as [[TxLog.upsert]]'s locate.
+    * overall [min, max]) instead of per-value. The values are already
+    * on the driver, so the limit only bounds the per-file check; it is
+    * not [[TxLog.keyPruneLimit]], which bounds the rows a rewrite
+    * collects (1,024).
     */
   private val runtimeKeyLimit = 4096
 
@@ -483,9 +485,7 @@ private[graft] object TxLogV2Util {
         if (norm.length <= runtimeKeyLimit) {
           fs => fs.flatMap(_.colRange(col)) match {
             case None => true // no stats for this column: must read
-            case Some(cs) => norm.exists(k =>
-              !TxLog.lt(k, cs.min).contains(true) &&
-              !TxLog.lt(cs.max, k).contains(true))
+            case Some(cs) => norm.exists(cs.mayHold)
           }
         } else {
           // span prune: fold the values' min/max once in the same
@@ -497,9 +497,7 @@ private[graft] object TxLogV2Util {
           }
           fs => fs.flatMap(_.colRange(col)) match {
             case None => true
-            case Some(cs) =>
-              !(TxLog.lt(cs.max, mn).contains(true) ||
-                TxLog.lt(mx, cs.min).contains(true))
+            case Some(cs) => cs.mayOverlap(mn, mx)
           }
         }
       case _ => admitAll // nested/complex reference: must read

@@ -571,12 +571,9 @@ object TxLogRelation {
   private[graft] def admits(fs: Option[TxLog.FileStats], f: Filter): Boolean = {
     def range(a: String): Option[TxLog.ColStats] =
       fs.flatMap(_.colRange(a)) // footer min/max, or the partition value
-    // k ∈ [min, max] possible?
     def mayEqual(a: String, v: Any): Boolean =
       (range(a), TxLog.normKey(v)) match {
-        case (Some(cs), Some(k)) =>
-          !(TxLog.lt(k, cs.min).contains(true) ||
-            TxLog.lt(cs.max, k).contains(true))
+        case (Some(cs), Some(k)) => cs.mayHold(k)
         case _ => true
       }
     // some x > v (strict) / x >= v possible?

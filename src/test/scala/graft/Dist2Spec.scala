@@ -6,7 +6,7 @@ import graft.functions.Dist2
 import graft.ops.LlmOps
 
 /** r14 optimization pin: the codegen'd squared-L2 expression that
-  * replaced the interpreted HOF form in Clustering.dist2 must be
+  * replaced the interpreted HOF form in Clustering's d² must be
   * BIT-identical to it — the clustering/PQ/semantic keys rank raw d²
   * folds, so any ULP drift would flip argmin ties and break the
   * DuckDB oracle hash.

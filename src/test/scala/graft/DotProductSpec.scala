@@ -24,6 +24,41 @@ class DotProductSpec extends SparkSuite {
     assert(pairs.filter($"hof" =!= $"fast").count() == 0)
   }
 
+  test("the array<double> cast equals the per-element CAST lambda bit for bit, codegen and interpreted") {
+    import spark.implicits._
+    import java.lang.Float.{MAX_VALUE => FMax, MIN_VALUE => FSub}
+    val vecs: Seq[Option[Seq[java.lang.Float]]] = Seq(
+      Some(Seq(Float.NaN, 0.0f, -0.0f, FSub, -FSub, 1.0e-40f, FMax, -FMax)
+        .map(Float.box)),
+      Some(Seq(Float.box(1.5f), null, Float.box(-2.25f))),
+      None,
+      Some(Seq.empty))
+    val dir = tempDir("graft_castspec").resolve("v").toString
+    vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "embedding")
+      .write.parquet(dir)
+    def bits(xs: Seq[Any]): Seq[Option[Long]] = xs.map(x =>
+      Option(x).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double])))
+    def both(mode: String, wholeStage: String): Seq[(Option[Seq[Option[Long]]], Option[Seq[Option[Long]]])] =
+      ops.core.withConf(spark, "spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> wholeStage) {
+        spark.read.parquet(dir)
+          .select($"id", $"embedding".cast("array<double>").as("c"),
+            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("l"))
+          .orderBy($"id").collect().toSeq
+          .map(r => (Option(r.getSeq[Any](1)).map(bits), Option(r.getSeq[Any](2)).map(bits)))
+      }
+    val codegen = both("CODEGEN_ONLY", "true")
+    val interpreted = both("NO_CODEGEN", "false")
+    assert(codegen.map(_._1) == codegen.map(_._2))
+    assert(interpreted.map(_._1) == interpreted.map(_._2))
+    assert(codegen == interpreted)
+    // the edge values did reach the comparison
+    val first = codegen.head._1.get
+    assert(first.size == 8 && first.forall(_.isDefined))
+    assert(first(1) != first(2), "+0.0 and -0.0 keep their sign bits")
+    assert(codegen(1)._1.get(1).isEmpty && codegen(2)._1.isEmpty)
+  }
+
   test("graft_dot interpreted eval matches codegen result") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData

@@ -94,6 +94,27 @@ class TxLogRewriteSpec extends SparkSuite {
       TxLog.merge(spark, t, mUp, mDel, "id")) == 3)
   }
 
+  test("a rewrite that touches no file runs no job to learn whether it adds rows") {
+    val t = longTable(1000, 4)
+    // every key above the table's range: stats prune all four files,
+    // and the key collect already proved the upsert non-empty — key
+    // collect and staged write, no isEmpty job
+    val miss = upd(5000L until 5400L, "o")
+    assert(checkRewrite(t, "id", miss, Some(miss))(
+      TxLog.upsert(spark, t, miss, "id")) == 2)
+    // a delete-only change batch that touches no file: the winners'
+    // collect carries no upsert flag, so no isEmpty job runs over the
+    // (empty) upsert rows — 3 jobs, 4 with it — and nothing commits
+    val v = TxLog.currentVersion(t)
+    val deletes = changes((7000L until 7010L).map(i => (i, s"d$i", "delete", 1L)))
+    assert(JobProbe.jobs(spark, "apply-delete-miss")(
+      TxLog.applyChanges(spark, t, deletes, "id")) == 3)
+    assert(TxLog.currentVersion(t) == v)
+    // an empty upsert on a non-empty table commits nothing
+    assert(TxLog.upsert(spark, t, upd(Nil, "e"), "id") == v)
+    assert(TxLog.currentVersion(t) == v)
+  }
+
   test("keyPruneLimit rows take the literal path, one more row the span and join path") {
     val n = TxLog.keyPruneLimit
     val t = longTable(4000, 4)

@@ -11,10 +11,17 @@ Usage:
 
 Run Verify first:
   sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/v"
+
+Each key's oracle runs on its own DuckDB connection, capped at half
+the host's RAM and spilling under <verifyOutDir>/.duckdb_spill (removed
+after the key); a `TIME <key> <s> s` line gives its wall time.
 """
 import json
 import math
+import os
+import shutil
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -29,11 +36,23 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+def host_mem_bytes() -> int:
+    for line in Path("/proc/meminfo").read_text().splitlines():
+        if line.startswith("MemTotal:"):
+            return int(line.split()[1]) * 1024
+    return 8 << 30
+
+
+def connect(sf_dir: str, spill_dir: Path) -> duckdb.DuckDBPyConnection:
+    """One DuckDB connection over the fixture tables, sized to the host:
+    a memory limit at half its RAM (a heavy oracle spills instead of
+    exhausting memory) and spills under `spill_dir`, next to the dump
+    on the large disk rather than in DuckDB's default temp location.
+    """
     con = duckdb.connect()
-    con.execute("SET threads=8")
+    con.execute(f"SET threads={min(8, os.cpu_count() or 1)}")
+    con.execute(f"SET memory_limit='{host_mem_bytes() // 2 >> 20}MB'")
+    con.execute(f"SET temp_directory='{spill_dir}'")
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
@@ -43,6 +62,13 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}/*.parquet'")
         elif p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    spill_dir = Path(out_dir) / ".duckdb_spill"
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
     n_pass = n_fail = 0
     keys = sorted(oracle) if not only else sorted(only)
@@ -56,18 +82,26 @@ def main():
         if key not in oracle:
             print(f"SKIP {key}: no oracle SQL (rows={len(got)})")
             continue
+        # a fresh connection per key: one key's buffers and spill files
+        # never carry over into the next key's budget
+        t0 = time.monotonic()
+        con = connect(sf_dir, spill_dir)
         try:
             want = norm(con.sql(oracle[key]).df())
         except Exception as e:
             print(f"FAIL {key}: oracle SQL error: {e}")
             n_fail += 1
             continue
+        finally:
+            con.close()
+            shutil.rmtree(spill_dir, ignore_errors=True)
+            print(f"TIME {key} {time.monotonic() - t0:.1f} s", flush=True)
         ok, msg = compare(got, want)
         if ok:
-            print(f"PASS {key} ({len(got)} rows)")
+            print(f"PASS {key} ({len(got)} rows)", flush=True)
             n_pass += 1
         else:
-            print(f"FAIL {key}: {msg}")
+            print(f"FAIL {key}: {msg}", flush=True)
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {len(keys)} total")
     sys.exit(1 if n_fail else 0)
