@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's entry points — see SURVEY.md §7.
   *
-  * Every operator key from SURVEY §2 registers here: a DataFrame
-  * builder in `queries` and (when DuckDB-expressible) matching ANSI
-  * SQL in `oracleSql`. Builders live in `graft.ops.*` by category.
+  * Every operator key from SURVEY §2 registers once, in its family's
+  * `keys` (`graft.ops.*`, by category): a DataFrame builder and, when
+  * DuckDB-expressible, matching ANSI SQL. `queries` and `oracleSql`
+  * are derived from those lists.
   */
 object SparkEntry {
 
@@ -14,19 +15,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.qAggGroupby(spark, "/root/testdata/sf0.001")
 
+  /** Every operator family, listed once. */
+  val families: Seq[ops.core.Family] = Seq(ops.Relational, ops.Windows,
+    ops.Aggregates, ops.Scalars, ops.Streaming, ops.LlmOps, ops.TrainingOps,
+    ops.Pipeline, ops.Corpus, ops.Graph, ops.Clustering, ops.Storage)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.Windows.queries ++ ops.Aggregates.queries ++
-    ops.Scalars.queries ++ ops.Streaming.queries ++ ops.LlmOps.queries ++
-    ops.TrainingOps.queries ++ ops.Pipeline.queries ++ ops.Corpus.queries ++
-    ops.Graph.queries ++ ops.Clustering.queries ++ ops.Storage.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    families.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
-    ops.Relational.oracle ++ ops.Windows.oracle ++ ops.Aggregates.oracle ++
-    ops.Scalars.oracle ++ ops.Streaming.oracle ++ ops.LlmOps.oracle ++
-    ops.TrainingOps.oracle ++ ops.Pipeline.oracle ++ ops.Corpus.oracle ++
-    ops.Graph.oracle ++ ops.Clustering.oracle ++ ops.Storage.oracle
+  lazy val oracleSql: Map[String, String] = families.flatMap(_.oracle).toMap
 }

@@ -295,32 +295,49 @@ object StreamBench {
     }
   }
 
-  /** Per-user running (count, sum-cents) via transformWithState on the
-    * RocksDB state store provider.
+  /** Per-user running (count, sum) over `(user_id, c)` rows:
+    * [[RunningCountProcessor]] under transformWithState, one Update row
+    * per key a batch changes. The stateful-count, state-scale and
+    * recovery rows all run this query.
     */
+  private def runningCounts(spark: SparkSession,
+      mem: MemoryStream[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    mem.toDS().groupByKey(_._1)
+      .transformWithState(new RunningCountProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n", "sum_c")
+  }
+
+  /** Whether the [[runningCounts]] rows in `sink` end in the batch
+    * (count, sum) per user over `fed`, compared both ways. The totals
+    * are monotone, so each user's final state is its max-n row: a lost
+    * batch reads low, a double-processed one high, and a replayed sink
+    * append not at all.
+    */
+  private def countsMatchBatch(spark: SparkSession, sink: DataFrame,
+      fed: Seq[(Long, Long)]): Boolean = {
+    import spark.implicits._
+    val streamed = sink
+      .groupBy($"user_id")
+      .agg(max(struct($"n", $"sum_c")).as("fin"))
+      .select($"user_id", $"fin.n".as("n"), $"fin.sum_c".as("sum_c"))
+    val batch = fed.toDF("user_id", "c")
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("n"), sum($"c").as("sum_c"))
+    streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty
+  }
+
+  /** [[runningCounts]] on the RocksDB state store provider. */
   def benchStatefulCount(spark: SparkSession, events: IndexedSeq[SEv],
       chunk: Int): PipeResult = core.withConf(spark, RocksDbState) {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val tuples = events.map(e => (e.user_id, math.round(e.value * 100)))
     val mem = MemoryStream[(Long, Long)](feedParts(spark))
-    val counts = mem.toDS().groupByKey(_._1)
-      .transformWithState(new RunningCountProcessor,
-        TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "n", "sum_c")
-    runPipeline(spark, mem, counts, "tws", OutputMode.Update(), tuples,
-        chunk) { sink =>
-      // the running totals are monotone, so each key's final state is
-      // its max-n sink row; must equal the batch (count, sum) per key
-      val streamed = sink
-        .groupBy($"user_id")
-        .agg(max(struct($"n", $"sum_c")).as("fin"))
-        .select($"user_id", $"fin.n", $"fin.sum_c").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-      val batch = tuples.groupBy(_._1).map { case (u, vs) =>
-        u -> (vs.length.toLong, vs.map(_._2).sum)
-      }
-      streamed == batch
+    runPipeline(spark, mem, runningCounts(spark, mem), "tws",
+        OutputMode.Update(), tuples, chunk) { sink =>
+      countsMatchBatch(spark, sink, tuples)
     }
   }
 
@@ -396,8 +413,7 @@ object StreamBench {
     * means state size does not degrade per-batch cost) and the state
     * store's own row/byte counters from the final progress. The
     * equivalence check is fully distributed (no driver-side map of
-    * 5 M keys): streamed finals == batch group-by, compared with a
-    * two-sided anti-join count.
+    * 5 M keys): [[countsMatchBatch]].
     */
   def benchStateScale(spark: SparkSession, nKeys: Int,
       chunk: Int): StateScaleResult = core.withConf(spark, RocksDbState) {
@@ -408,10 +424,7 @@ object StreamBench {
     val tuples = inserts ++ updates
     val mem = MemoryStream[(Long, Long)](feedParts(spark))
     val sink = freshSink("scale")
-    val q = mem.toDS().groupByKey(_._1)
-      .transformWithState(new RunningCountProcessor,
-        TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "n", "sum_c")
+    val q = runningCounts(spark, mem)
       .writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName(sink).start()
     val t0 = System.nanoTime()
@@ -422,21 +435,13 @@ object StreamBench {
     val (stateRows, stateBytes) = prog.stateOperators.headOption
       .map(so => (so.numRowsTotal, so.memoryUsedBytes)).getOrElse((-1L, -1L))
     q.stop()
-    val streamed = spark.table(sink)
-      .groupBy($"user_id")
-      .agg(max(struct($"n", $"sum_c")).as("fin"))
-      .select($"user_id", $"fin.n".as("n"), $"fin.sum_c".as("sum_c"))
-    val batch = tuples.toDF("user_id", "c")
-      .groupBy($"user_id")
-      .agg(count(lit(1)).as("n"), sum($"c").as("sum_c"))
-    val diff = streamed.exceptAll(batch).count() +
-      batch.exceptAll(streamed).count()
+    val matches = countsMatchBatch(spark, spark.table(sink), tuples)
     spark.catalog.dropTempView(sink)
     val third = math.max(1, lat.length / 3)
     StateScaleResult(tuples.length.toLong, nKeys.toLong, lat.length, wall,
       pct(lat, 0.5), pct(lat, 0.95),
       pct(lat.take(third), 0.5), pct(lat.takeRight(third), 0.5),
-      stateRows, stateBytes, diff == 0L)
+      stateRows, stateBytes, matches)
   }
 
   case class RecoveryResult(events: Long, keys: Long, stateRows: Long,
@@ -469,10 +474,7 @@ object StreamBench {
       val phaseB = (0L until nKeys.toLong / 10).map(k => (k, (k % 89L) + 1L))
       val mem = MemoryStream[(Long, Long)](feedParts(spark))
       def startQuery(): StreamingQuery =
-        mem.toDS().groupByKey(_._1)
-          .transformWithState(new RunningCountProcessor,
-            TimeMode.None(), OutputMode.Update())
-          .toDF("user_id", "n", "sum_c")
+        runningCounts(spark, mem)
           .writeStream.outputMode(OutputMode.Update())
           .option("checkpointLocation", ckpt)
           .foreachBatch { (df: DataFrame, _: Long) =>
@@ -492,17 +494,9 @@ object StreamBench {
       qB.processAllAvailable()
       val recoveryMs = (System.nanoTime() - t0) / 1e6
       qB.stop()
-      val streamed = spark.read.parquet(outDir)
-        .groupBy($"user_id")
-        .agg(max(struct($"n", $"sum_c")).as("fin"))
-        .select($"user_id", $"fin.n".as("n"), $"fin.sum_c".as("sum_c"))
-      val batch = (phaseA ++ phaseB).toDF("user_id", "c")
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n"), sum($"c").as("sum_c"))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
       RecoveryResult((phaseA.length + phaseB.length).toLong, nKeys.toLong,
-        stateRows, pct(latA, 0.5), recoveryMs, diff == 0L)
+        stateRows, pct(latA, 0.5), recoveryMs,
+        countsMatchBatch(spark, spark.read.parquet(outDir), phaseA ++ phaseB))
     }
   }
 

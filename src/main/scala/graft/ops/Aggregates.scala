@@ -11,7 +11,7 @@ import core._
   * ordered collect, exact percentiles, and the approximate sketches
   * (HLL distinct, approximate quantile — unit-test-only, no oracle).
   */
-object Aggregates {
+object Aggregates extends Family {
 
   /** NULL grouping keys from rollup/cube replaced by a sentinel so the
     * cross-engine sort order is stable (SURVEY §7.3 hard part 6).
@@ -704,41 +704,17 @@ object Aggregates {
       .orderBy($"item")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_agg_heavyhitters" -> (qAggHeavyHitters _),
-    "q_agg_rollup" -> (qAggRollup _),
-    "q_agg_cube" -> (qAggCube _),
-    "q_agg_groupingsets" -> (qAggGroupingsets _),
-    "q_agg_stats" -> (qAggStats _),
-    "q_agg_collect" -> (qAggCollect _),
-    "q_agg_percentile" -> (qAggPercentile _),
-    "q_agg_bool" -> (qAggBool _),
-    "q_agg_histogram" -> (qAggHistogram _),
-    "q_agg_argmax" -> (qAggArgmax _),
-    "q_agg_bitmap_distinct" -> (qAggBitmapDistinct _),
-    "q_agg_outliers" -> (qAggOutliers _),
-    "q_agg_mode" -> (qAggMode _),
-    "q_agg_listagg" -> (qAggListagg _),
-    "q_profile_table" -> (qProfileTable _),
-    "q_agg_entropy" -> (qAggEntropy _),
-    "q_agg_gini" -> (qAggGini _),
-    "q_agg_try_arith" -> (qAggTryArith _),
-    "q_agg_decay" -> (qAggDecay _),
-    "q_agg_regr_slope" -> (qAggRegrSlope _),
-    "q_agg_corr" -> (qAggCorr _),
-    "q_agg_moments" -> (qAggMoments _),
-    "q_agg_approx_hll" -> (qAggApproxHll _),
-    "q_agg_approx_quantile" -> (qAggApproxQuantile _),
-    "q_agg_approx_topk" -> (qAggApproxTopk _)
-  )
-
   private val qtyC = centsSql("l_quantity")
 
-  val oracle: Map[String, String] = Map(
+  val keys: Seq[Key] = Seq(
+    // the three sketches have no DuckDB twin; unit tests bound their error
+    Key("q_agg_approx_hll", qAggApproxHll),
+    Key("q_agg_approx_quantile", qAggApproxQuantile),
+    Key("q_agg_approx_topk", qAggApproxTopk),
     // plain exact group-by + HAVING: the two-pass MG output IS the
     // exact heavy set, so the oracle needs no sketch emulation; item
     // derivation mirrors the Spark integer math digit for digit
-    "q_agg_heavyhitters" ->
+    Key("q_agg_heavyhitters", qAggHeavyHitters,
       """WITH it AS (
         |  SELECT CASE WHEN 33 - length(bin(u + 1)) <= 6
         |              THEN CAST(33 - length(bin(u + 1)) AS BIGINT)
@@ -750,9 +726,9 @@ object Aggregates {
         |SELECT item, count(*) AS cnt
         |FROM it GROUP BY item
         |HAVING 64 * count(*) > (SELECT count(*) FROM events)
-        |ORDER BY item""".stripMargin,
+        |ORDER BY item""".stripMargin),
 
-    "q_agg_rollup" ->
+    Key("q_agg_rollup", qAggRollup,
       s"""SELECT coalesce(l_returnflag, '$All') AS flag_s,
         |  coalesce(l_linestatus, '$All') AS status_s,
         |  CAST(grouping(l_returnflag, l_linestatus) AS INTEGER) AS gid,
@@ -760,9 +736,9 @@ object Aggregates {
         |  CAST(sum($qtyC) AS BIGINT) AS sum_qty_c
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, flag_s, status_s""".stripMargin,
+        |ORDER BY gid, flag_s, status_s""".stripMargin),
 
-    "q_agg_cube" ->
+    Key("q_agg_cube", qAggCube,
       s"""SELECT coalesce(l_returnflag, '$All') AS flag_s,
         |  coalesce(l_linestatus, '$All') AS status_s,
         |  CAST(grouping(l_returnflag, l_linestatus) AS INTEGER) AS gid,
@@ -770,9 +746,9 @@ object Aggregates {
         |  CAST(sum($qtyC) AS BIGINT) AS sum_qty_c
         |FROM lineitem
         |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, flag_s, status_s""".stripMargin,
+        |ORDER BY gid, flag_s, status_s""".stripMargin),
 
-    "q_agg_groupingsets" ->
+    Key("q_agg_groupingsets", qAggGroupingsets,
       s"""SELECT coalesce(l_returnflag, '$All') AS flag_s,
         |  coalesce(l_linestatus, '$All') AS status_s,
         |  CAST(grouping(l_returnflag, l_linestatus) AS INTEGER) AS gid,
@@ -780,9 +756,9 @@ object Aggregates {
         |  CAST(sum($qtyC) AS BIGINT) AS sum_qty_c
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY gid, flag_s, status_s""".stripMargin,
+        |ORDER BY gid, flag_s, status_s""".stripMargin),
 
-    "q_agg_stats" ->
+    Key("q_agg_stats", qAggStats,
       """WITH s AS (
         |  SELECT l_returnflag,
         |    CAST(count(*) AS DOUBLE) AS n,
@@ -812,15 +788,15 @@ object Aggregates {
         |    round((n*sxy - sx*sy) /
         |          (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)), 6)
         |  END AS corr_qty_price
-        |FROM s ORDER BY l_returnflag""".stripMargin,
+        |FROM s ORDER BY l_returnflag""".stripMargin),
 
-    "q_agg_collect" ->
+    Key("q_agg_collect", qAggCollect,
       """SELECT o_custkey,
         |  string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS prios_csv,
         |  count(*) AS n_orders
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
 
-    "q_agg_argmax" ->
+    Key("q_agg_argmax", qAggArgmax,
       """SELECT o_orderstatus,
         |  arg_max(o_orderkey, CAST(round(o_totalprice*100) AS BIGINT)
         |    * 2147483648 + o_orderkey) AS priciest_key,
@@ -828,25 +804,25 @@ object Aggregates {
         |    * 2147483648 + o_orderkey) AS cheapest_key,
         |  max(CAST(round(o_totalprice*100) AS BIGINT)) AS max_total_c,
         |  min(CAST(round(o_totalprice*100) AS BIGINT)) AS min_total_c
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "q_agg_histogram" ->
+    Key("q_agg_histogram", qAggHistogram,
       """SELECT least(CAST(floor(CAST(round(o_totalprice*100) AS BIGINT)
         |      / 5000000) AS BIGINT), 9) AS bucket,
         |  count(*) AS n,
         |  min(CAST(round(o_totalprice*100) AS BIGINT)) AS lo_c,
         |  max(CAST(round(o_totalprice*100) AS BIGINT)) AS hi_c
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
 
-    "q_agg_try_arith" ->
+    Key("q_agg_try_arith", qAggTryArith,
       """SELECT l_orderkey, l_linenumber,
         |  round(CAST(round(l_extendedprice*100) AS BIGINT)
         |    / nullif(CAST(round(l_discount*100) AS BIGINT), 0), 6)
         |    AS price_per_disc,
         |  CAST(round(l_discount*100) AS BIGINT) = 0 AS is_div0
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_agg_gini" ->
+    Key("q_agg_gini", qAggGini,
       """WITH r AS (
         |  SELECT event_type, CAST(round(value*100) AS BIGINT) AS x,
         |    row_number() OVER (PARTITION BY event_type
@@ -859,9 +835,9 @@ object Aggregates {
         |        - (count(*) + 1) * sum(CAST(x AS HUGEINT)) AS DOUBLE)
         |      / CAST(count(*) * sum(CAST(x AS HUGEINT)) AS DOUBLE) END, 6)
         |    AS gini
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_agg_entropy" ->
+    Key("q_agg_entropy", qAggEntropy,
       """WITH counts AS (
         |  SELECT user_id, event_type, count(*) AS c
         |  FROM events GROUP BY 1, 2),
@@ -874,9 +850,9 @@ object Aggregates {
         |      * ln(c.c / CAST(t.n AS DOUBLE)), 12) AS DECIMAL(28, 12)))
         |    AS DOUBLE) AS entropy
         |FROM counts c JOIN totals t USING (user_id)
-        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin,
+        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin),
 
-    "q_agg_decay" ->
+    Key("q_agg_decay", qAggDecay,
       """WITH mx AS (SELECT max(ts) AS mx_ts FROM events)
         |SELECT user_id, count(*) AS n_events,
         |  CAST(CAST(sum(
@@ -885,9 +861,9 @@ object Aggregates {
         |    * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS DOUBLE)
         |    / 1000000.0 AS decayed_value
         |FROM events, mx
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_agg_corr" ->
+    Key("q_agg_corr", qAggCorr,
       """WITH e AS (
         |  SELECT l_returnflag,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS x,
@@ -906,9 +882,9 @@ object Aggregates {
         |      / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
         |         * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
         |  END AS corr_price_qty
-        |FROM st ORDER BY l_returnflag""".stripMargin,
+        |FROM st ORDER BY l_returnflag""".stripMargin),
 
-    "q_agg_moments" ->
+    Key("q_agg_moments", qAggMoments,
       """WITH e AS (
         |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x
         |  FROM events),
@@ -951,24 +927,24 @@ object Aggregates {
         |  CASE WHEN t2 > 0 THEN
         |    round((t4 / nn) / ((t2 / nn) * (t2 / nn)) - 3.0, 6)
         |  END AS kurtosis_excess
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
-    "q_profile_table" ->
+    Key("q_profile_table", qProfileTable,
       Seq("event_id", "ts", "user_id", "event_type", "value", "props")
         .map(c =>
           s"""SELECT '$c' AS col_name, count(*) AS n_rows,
              |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_null,
              |  count(DISTINCT $c) AS n_distinct FROM events""".stripMargin)
-        .mkString("\n", "\nUNION ALL\n", "\nORDER BY col_name"),
+        .mkString("\n", "\nUNION ALL\n", "\nORDER BY col_name")),
 
-    "q_agg_listagg" ->
+    Key("q_agg_listagg", qAggListagg,
       """SELECT lang, source, count(*) AS n_docs,
         |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
         |    AS doc_ids
-        |FROM documents GROUP BY 1, 2 ORDER BY lang, source""".stripMargin,
+        |FROM documents GROUP BY 1, 2 ORDER BY lang, source""".stripMargin),
 
-    "q_agg_regr_slope" ->
+    Key("q_agg_regr_slope", qAggRegrSlope,
       """WITH e AS (
         |  SELECT user_id,
         |    date_diff('second', TIMESTAMP '2024-01-01', ts) AS xs,
@@ -985,18 +961,18 @@ object Aggregates {
         |    round(CAST(n_events * sxy - sx * sy AS DOUBLE)
         |          / CAST(n_events * sxx - sx * sx AS DOUBLE), 6)
         |  END AS slope
-        |FROM st ORDER BY user_id""".stripMargin,
+        |FROM st ORDER BY user_id""".stripMargin),
 
-    "q_agg_mode" ->
+    Key("q_agg_mode", qAggMode,
       """SELECT o_orderstatus, mode_priority, cnt FROM (
         |  SELECT o_orderstatus, o_orderpriority AS mode_priority,
         |    count(*) AS cnt,
         |    row_number() OVER (PARTITION BY o_orderstatus
         |      ORDER BY count(*) DESC, o_orderpriority ASC) AS rn
         |  FROM orders GROUP BY o_orderstatus, o_orderpriority)
-        |WHERE rn = 1 ORDER BY o_orderstatus""".stripMargin,
+        |WHERE rn = 1 ORDER BY o_orderstatus""".stripMargin),
 
-    "q_agg_outliers" ->
+    Key("q_agg_outliers", qAggOutliers,
       """WITH ev AS (
         |  SELECT event_type, CAST(round(value*100) AS BIGINT) AS v_c
         |  FROM events),
@@ -1015,26 +991,26 @@ object Aggregates {
         |  CAST(sum(CASE WHEN d.adev > 3.0 * m.mad THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_outliers
         |FROM dev d JOIN mad m USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin),
 
-    "q_agg_bitmap_distinct" ->
+    Key("q_agg_bitmap_distinct", qAggBitmapDistinct,
       """SELECT event_type,
         |  count(DISTINCT user_id) AS n_users,
         |  count(*) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_agg_bool" ->
+    Key("q_agg_bool", qAggBool,
       """SELECT l_returnflag,
         |  bool_and(CAST(round(l_quantity*100) AS BIGINT) > 0) AS all_qty_pos,
         |  bool_or(CAST(round(l_discount*100) AS BIGINT) = 0) AS some_no_disc,
         |  CAST(count_if(CAST(round(l_tax*100) AS BIGINT) = 0) AS BIGINT) AS n_tax_free,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_agg_percentile" ->
+    Key("q_agg_percentile", qAggPercentile,
       """SELECT event_type, count(*) AS n,
         |  round(quantile_cont(CAST(round(value*100) AS BIGINT), 0.5) / 100.0, 4) AS p50,
         |  round(quantile_cont(CAST(round(value*100) AS BIGINT), 0.9) / 100.0, 4) AS p90
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
   )
 }

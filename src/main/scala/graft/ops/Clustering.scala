@@ -12,7 +12,7 @@ import LlmOps.{dist2Sql, embSql, nrmSql, rawCosSql}
   * curation of training corpora (cluster, then prune or rebalance
   * per cluster).
   */
-object Clustering {
+object Clustering extends Family {
 
   /** Deterministic Lloyd k-means: md5-seeded initial centroids (the
     * q_sim_ann_ivf seeding), `iters` unrolled iterations over any
@@ -462,14 +462,6 @@ object Clustering {
       .orderBy($"a_id", $"b_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ml_kmeans" -> (qMlKmeans _),
-    "q_ml_cluster_prune" -> (qMlClusterPrune _),
-    "q_embed_pq" -> (qEmbedPq _),
-    "q_sim_ann_pq" -> (qSimAnnPq _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_dedup_semantic_t9" -> (qDedupSemanticT9 _))
-
   private def iterSql(prev: String, a: String, c: String): String =
     s"""$a AS (
        |  SELECT cent_id, vec_id, d2, emb FROM (
@@ -544,17 +536,17 @@ object Clustering {
       |      FROM sub n JOIN books b ON n.s = b.cs))
       |  WHERE rn = 1)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_embed_pq" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_embed_pq", qEmbedPq,
       s"""$pqCtes
          |SELECT vec_id,
          |  CAST(sum((cent_id - 1) * (CAST(1 AS BIGINT) << (4 * s)))
          |    AS BIGINT) AS code,
          |  CAST(sum(CAST(round(d2, 8) AS DECIMAL(20, 8))) AS DOUBLE)
          |    AS recon_err
-         |FROM asg GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+         |FROM asg GROUP BY vec_id ORDER BY vec_id""".stripMargin),
 
-    "q_sim_ann_pq" ->
+    Key("q_sim_ann_pq", qSimAnnPq,
       s"""$pqCtes,
          |lut AS (
          |  SELECT q.vec_id AS q_id, q.s AS qs, b.cent_id,
@@ -572,29 +564,29 @@ object Clustering {
          |FROM (SELECT *, row_number() OVER (
          |        PARTITION BY q_id ORDER BY adist, vec_id) AS rk
          |      FROM sc)
-         |WHERE rk <= 3 ORDER BY q_id, rk""".stripMargin,
+         |WHERE rk <= 3 ORDER BY q_id, rk""".stripMargin),
 
-    "q_dedup_semantic" -> semanticSql("0.5"),
+    Key("q_dedup_semantic", qDedupSemantic, semanticSql("0.5")),
 
     // identical recompute at the production threshold — the Spark
     // side serves the persisted pair artifact, and the raw-cosine
     // threshold is exact in both engines (order-identical fold)
-    "q_dedup_semantic_t9" -> semanticSql("0.9"),
+    Key("q_dedup_semantic_t9", qDedupSemanticT9, semanticSql("0.9")),
 
-    "q_ml_kmeans" ->
+    Key("q_ml_kmeans", qMlKmeans,
       s"""${kmeansCtes("8")},
          |sizes AS (SELECT cent_id, count(*) AS n_members FROM a3 GROUP BY 1)
          |SELECT d.cent_id, s.n_members, d.dim, d.c
          |FROM c3d d JOIN sizes s USING (cent_id)
-         |ORDER BY d.cent_id, d.dim""".stripMargin,
+         |ORDER BY d.cent_id, d.dim""".stripMargin),
 
-    "q_ml_cluster_prune" ->
+    Key("q_ml_cluster_prune", qMlClusterPrune,
       s"""${kmeansCtes("8")}
          |SELECT cent_id, rn, vec_id, round(d2, 6) AS d2 FROM (
          |  SELECT cent_id, vec_id, d2, row_number() OVER (
          |    PARTITION BY cent_id ORDER BY d2, vec_id) AS rn
          |  FROM a3)
-         |WHERE rn <= 10 ORDER BY cent_id, rn""".stripMargin)
+         |WHERE rn <= 10 ORDER BY cent_id, rn""".stripMargin))
 
   /** The semantic-dedup recompute, parameterized by the cosine
     * threshold — τ = 0.5 for the registered build key, τ = 0.9 for

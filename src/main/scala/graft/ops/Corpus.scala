@@ -12,7 +12,7 @@ import core._
   * re-expressed as declarative Spark plans (capability sentence:
   * `/root/reference/README.md:2`).
   */
-object Corpus {
+object Corpus extends Family {
 
   /** Gopher-style repetition metrics per document: the fraction of
     * tokens taken by the single most frequent token, and the fraction
@@ -597,21 +597,6 @@ object Corpus {
       .orderBy($"doc_id", $"chunk_idx")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rag_chunk" -> (qRagChunk _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_mix_weights" -> (qMixWeights _),
-    "q_text_repetition" -> (qTextRepetition _),
-    "q_dedup_chunk" -> (qDedupChunk _),
-    "q_text_lang_keywords" -> (qTextLangKeywords _),
-    "q_text_contamination" -> (qTextContamination _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_text_perplexity" -> (qTextPerplexity _),
-    "q_text_bpe" -> (qTextBpe _),
-    "q_text_bpe_apply" -> (qTextBpeApply _),
-    "q_drift_kl" -> (qDriftKl _),
-    "q_dedup_incremental" -> (qDedupIncremental _))
-
   /** One BPE merge step as oracle CTEs: pair counts from sPrev,
     * best pair bN, merged symbols sN.
     */
@@ -629,8 +614,8 @@ object Corpus {
        |  SELECT freq, replace(sym, b.pr, replace(b.pr, '||', '')) AS sym
        |  FROM $sPrev, $b b)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_dedup_incremental" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_dedup_incremental", qDedupIncremental,
       """WITH d AS (
         |  SELECT doc_id, lang,
         |    array_to_string((string_split(text, ' '))[1:8], ' ') AS pfx
@@ -644,8 +629,8 @@ object Corpus {
         |SELECT lang, count(*) AS n_new,
         |  CAST(sum(is_dup) AS BIGINT) AS n_dup,
         |  CAST(count(*) - sum(is_dup) AS BIGINT) AS n_uniq
-        |FROM flag GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_rag_chunk" ->
+        |FROM flag GROUP BY lang ORDER BY lang""".stripMargin),
+    Key("q_rag_chunk", qRagChunk,
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS a,
         |    greatest(0, (len(string_split(text, ' ')) - 16 + 7) // 8) AS k
@@ -655,9 +640,9 @@ object Corpus {
         |  CAST(len(list_slice(a, i * 8 + 1, i * 8 + 16)) AS BIGINT) AS n_tok,
         |  substring(md5(array_to_string(
         |    list_slice(a, i * 8 + 1, i * 8 + 16), ' ')), 1, 16) AS chunk_sig
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    "q_pack_sequences" ->
+    Key("q_pack_sequences", qPackSequences,
       """WITH d AS (
         |  SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
@@ -674,9 +659,9 @@ object Corpus {
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddle,
         |  round(CAST(sum(n_tok) AS BIGINT) /
         |    (CAST((max(cum) + 127) // 128 AS DOUBLE) * 128), 6) AS fill_rate
-        |FROM w GROUP BY shard ORDER BY shard""".stripMargin,
+        |FROM w GROUP BY shard ORDER BY shard""".stripMargin),
 
-    "q_mix_weights" ->
+    Key("q_mix_weights", qMixWeights,
       """WITH per AS (
         |  SELECT source, count(*) AS n_docs,
         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -688,9 +673,9 @@ object Corpus {
         |  round(LEAST(1.0, CAST(tot_tok AS DOUBLE)
         |    / (CAST(k AS DOUBLE) * n_tokens)), 6) AS weight,
         |  CAST(LEAST(n_tokens, tot_tok // k) AS BIGINT) AS post_tokens
-        |FROM per, tot ORDER BY source""".stripMargin,
+        |FROM per, tot ORDER BY source""".stripMargin),
 
-    "q_drift_kl" ->
+    Key("q_drift_kl", qDriftKl,
       """WITH tok AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS tok
         |  FROM documents),
@@ -707,9 +692,9 @@ object Corpus {
         |    * CAST(bl.c_lw AS DECIMAL(8, 0))) AS DOUBLE)
         |    / CAST(max(lt.n_l) AS DOUBLE), 6) AS kl
         |FROM bl JOIN g USING (tok) JOIN lt USING (lang) CROSS JOIN tot
-        |GROUP BY bl.lang ORDER BY lang""".stripMargin,
+        |GROUP BY bl.lang ORDER BY lang""".stripMargin),
 
-    "q_text_bpe" ->
+    Key("q_text_bpe", qTextBpe,
       s"""WITH s0 AS (
          |  SELECT count(*) AS freq, ${symbolizeSql("word")} AS sym
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word
@@ -723,9 +708,9 @@ object Corpus {
          |  SELECT CAST(1 AS INTEGER) AS step, pr AS pair, n FROM b1
          |  UNION ALL SELECT CAST(2 AS INTEGER), pr, n FROM b2
          |  UNION ALL SELECT CAST(3 AS INTEGER), pr, n FROM b3)
-         |ORDER BY step""".stripMargin,
+         |ORDER BY step""".stripMargin),
 
-    "q_text_bpe_apply" ->
+    Key("q_text_bpe_apply", qTextBpeApply,
       s"""WITH s0 AS (
          |  SELECT count(*) AS freq, ${symbolizeSql("word")} AS sym
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word
@@ -746,9 +731,9 @@ object Corpus {
          |        b3.pr, replace(b3.pr, '||', '')), '|'), '||'))
          |    END)) AS BIGINT) AS n_subwords
          |FROM documents, b1, b2, b3
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    "q_text_lang_keywords" ->
+    Key("q_text_lang_keywords", qTextLangKeywords,
       """WITH tok AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS tok
         |  FROM documents),
@@ -763,9 +748,9 @@ object Corpus {
         |    PARTITION BY lang ORDER BY ratio DESC, tok ASC) AS rk
         |  FROM j)
         |SELECT lang, rk, tok, c_lang, c_all, round(ratio, 6) AS affinity
-        |FROM r WHERE rk <= 3 ORDER BY lang, rk""".stripMargin,
+        |FROM r WHERE rk <= 3 ORDER BY lang, rk""".stripMargin),
 
-    "q_text_repetition" ->
+    Key("q_text_repetition", qTextRepetition,
       """WITH tok AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok,
         |    len(string_split(text, ' ')) AS n_tokens
@@ -792,9 +777,9 @@ object Corpus {
         |  FROM top t LEFT JOIN bg USING (doc_id))
         |SELECT doc_id, lang, n_tokens, top_tok_frac, dup_bigram_frac,
         |  (top_tok_frac <= 0.12 AND dup_bigram_frac <= 0.05) AS keep
-        |FROM scored ORDER BY doc_id""".stripMargin,
+        |FROM scored ORDER BY doc_id""".stripMargin),
 
-    "q_dedup_chunk" ->
+    Key("q_dedup_chunk", qDedupChunk,
       """WITH tok AS (
         |  SELECT doc_id,
         |    CAST(generate_subscripts(string_split(text, ' '), 1) AS BIGINT) AS pos,
@@ -812,9 +797,9 @@ object Corpus {
         |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_first,
         |  round(CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
         |        / CAST(count(*) AS DOUBLE), 6) AS frac_unique
-        |FROM ranked GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM ranked GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "q_text_contamination" ->
+    Key("q_text_contamination", qTextContamination,
       """WITH toks AS (
         |  SELECT doc_id, lang, source, string_split(text, ' ') AS w
         |  FROM documents),
@@ -835,9 +820,9 @@ object Corpus {
         |SELECT pd.doc_id, pd.lang, pd.n_grams, ct.n_contaminated,
         |  round(ct.n_contaminated / CAST(pd.n_grams AS DOUBLE), 6)
         |    AS contamination
-        |FROM pd JOIN ct USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM pd JOIN ct USING (doc_id) ORDER BY doc_id""".stripMargin),
 
-    "q_sample_stratified" ->
+    Key("q_sample_stratified", qSampleStratified,
       """WITH tagged AS (
         |  SELECT lang, n_chars,
         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
@@ -852,9 +837,9 @@ object Corpus {
         |       AS BIGINT) AS kept_chars,
         |  round(sum(CASE WHEN bucket < rate THEN 1 ELSE 0 END)
         |        / CAST(count(*) AS DOUBLE), 6) AS kept_share
-        |FROM tagged GROUP BY lang, rate ORDER BY lang""".stripMargin,
+        |FROM tagged GROUP BY lang, rate ORDER BY lang""".stripMargin),
 
-    "q_text_perplexity" ->
+    Key("q_text_perplexity", qTextPerplexity,
       """WITH pdt AS (
         |  SELECT doc_id, lang, tok, count(*) AS c_doc FROM (
         |    SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
@@ -871,5 +856,5 @@ object Corpus {
         |SELECT doc_id, lang, CAST(sum(c_doc) AS BIGINT) AS n_tokens,
         |  round(-CAST(sum(term) AS DOUBLE)
         |        / CAST(sum(c_doc) AS DOUBLE), 6) AS avg_nll
-        |FROM terms GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin)
+        |FROM terms GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin))
 }

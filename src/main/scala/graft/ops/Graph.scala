@@ -11,7 +11,7 @@ import core._
   * measure — the two iterative-graph shapes a data-engine user
   * actually runs (capability sentence: `/root/reference/README.md:2`).
   */
-object Graph {
+object Graph extends Family {
 
   /** PageRank over the undirected customer↔supplier interaction graph
     * (an edge per distinct (customer, supplier) pair that transacted,
@@ -294,12 +294,6 @@ object Graph {
       .orderBy($"dist", $"node_type", $"node_key")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_graph_pagerank" -> (qGraphPagerank _),
-    "q_graph_degree" -> (qGraphDegree _),
-    "q_graph_cooccur" -> (qGraphCooccur _),
-    "q_graph_khop" -> (qGraphKhop _))
-
   /** One BFS relaxation round as an oracle CTE. */
   private def khopStep(prev: String, next: String): String =
     s"""$next AS (
@@ -310,8 +304,8 @@ object Graph {
        |    FROM edges e JOIN $prev p ON e.src = p.node)
        |  GROUP BY node)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_graph_khop" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_graph_khop", qGraphKhop,
       s"""WITH eg AS (
          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -325,9 +319,9 @@ object Graph {
          |SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
          |         AS node_type,
          |       node // 2 AS node_key, dist
-         |FROM d3 ORDER BY dist, node_type, node_key""".stripMargin,
+         |FROM d3 ORDER BY dist, node_type, node_key""".stripMargin),
 
-    "q_graph_cooccur" ->
+    Key("q_graph_cooccur", qGraphCooccur,
       """WITH eg AS (
         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -343,9 +337,9 @@ object Graph {
         |  SELECT *, row_number() OVER (
         |    PARTITION BY sup ORDER BY common DESC, partner) AS rk
         |  FROM sym)
-        |WHERE rk <= 3 ORDER BY sup, rk""".stripMargin,
+        |WHERE rk <= 3 ORDER BY sup, rk""".stripMargin),
 
-    "q_graph_degree" ->
+    Key("q_graph_degree", qGraphDegree,
       """WITH eg AS (
         |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -356,9 +350,9 @@ object Graph {
         |         AS node_type,
         |       deg, count(*) AS n_nodes
         |FROM deg GROUP BY 1, 2
-        |ORDER BY node_type, deg""".stripMargin,
+        |ORDER BY node_type, deg""".stripMargin),
 
-    "q_graph_pagerank" ->
+    Key("q_graph_pagerank", qGraphPagerank,
       """WITH eg AS (
         |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -396,5 +390,5 @@ object Graph {
         |         AS node_type,
         |       node // 2 AS node_key, d.deg, r AS rank_micro
         |FROM r5 JOIN deg d ON d.src = r5.node
-        |ORDER BY rank_micro DESC, node_type, node_key LIMIT 20""".stripMargin)
+        |ORDER BY rank_micro DESC, node_type, node_key LIMIT 20""".stripMargin))
 }

@@ -16,7 +16,7 @@ import core._
   * by 1 ulp across libm implementations); the similarity family ranks
   * on the RAW cosine (the contract at the similarity section).
   */
-object LlmOps {
+object LlmOps extends Family {
 
   /** doc_id, word (split on single space — the corpus contract).
     * THE tokenization definition: TrainingOps reuses it so the
@@ -501,28 +501,16 @@ object LlmOps {
       |    AS sq_err
       |FROM dd ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_wordcount" -> (qTextWordcount _),
-    "q_text_tfidf" -> (qTextTfidf _),
-    "q_text_ngram" -> (qTextNgram _),
-    "q_text_stats" -> (qTextStats _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_sim_cosine_topk" -> (qSimCosineTopk _),
-    "q_sim_knn_label" -> (qSimKnnLabel _),
-    "q_multimodal_join" -> (qMultimodalJoin _),
-    "q_agg_vector_centroid" -> (qAggVectorCentroid _),
-    "q_embed_quantize" -> (qEmbedQuantize _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_text_wordcount" ->
+  val keys: Seq[Key] = Seq(
+    // xxhash64 signatures have no DuckDB twin; property-tested
+    Key("q_dedup_minhash", qDedupMinhash),
+    Key("q_text_wordcount", qTextWordcount,
       """SELECT word, count(*) AS n, count(DISTINCT doc_id) AS n_docs
         |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |      FROM documents)
-        |GROUP BY word ORDER BY word""".stripMargin,
+        |GROUP BY word ORDER BY word""".stripMargin),
 
-    "q_text_tfidf" ->
+    Key("q_text_tfidf", qTextTfidf,
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
         |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -536,9 +524,9 @@ object LlmOps {
         |  SELECT *, row_number() OVER (PARTITION BY doc_id
         |    ORDER BY score DESC, word ASC) AS rn
         |  FROM scored)
-        |WHERE rn <= 5 ORDER BY doc_id, rn""".stripMargin,
+        |WHERE rn <= 5 ORDER BY doc_id, rn""".stripMargin),
 
-    "q_text_ngram" ->
+    Key("q_text_ngram", qTextNgram,
       """WITH tok AS (
         |  SELECT doc_id, lang,
         |    CAST(generate_subscripts(string_split(text, ' '), 1) AS BIGINT) AS pos,
@@ -547,26 +535,26 @@ object LlmOps {
         |SELECT a.lang AS lang, concat(a.word, ' ', b.word) AS bigram,
         |  count(*) AS n
         |FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "q_text_stats" ->
+    Key("q_text_stats", qTextStats,
       """SELECT lang, count(*) AS n_docs,
         |  round(CAST(sum(n_chars) AS BIGINT) / CAST(count(*) AS DOUBLE), 6)
         |    AS avg_chars,
         |  round(CAST(sum(len(string_split(text, ' '))) AS BIGINT)
         |    / CAST(count(*) AS DOUBLE), 6) AS avg_tokens
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "q_dedup_exact" ->
+    Key("q_dedup_exact", qDedupExact,
       """SELECT lang, n_chars, doc_id, source FROM (
         |  SELECT *, row_number() OVER (PARTITION BY lang, n_chars
         |    ORDER BY doc_id) AS rn
         |  FROM documents)
-        |WHERE rn = 1 ORDER BY lang, n_chars""".stripMargin,
+        |WHERE rn = 1 ORDER BY lang, n_chars""".stripMargin),
 
-    "q_embed_quantize" -> quantizeOracleSql,
+    Key("q_embed_quantize", qEmbedQuantize, quantizeOracleSql),
 
-    "q_agg_vector_centroid" ->
+    Key("q_agg_vector_centroid", qAggVectorCentroid,
       """WITH x AS (
         |  SELECT label,
         |    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
@@ -575,9 +563,9 @@ object LlmOps {
         |  FROM embeddings)
         |SELECT label, dim, count(*) AS n,
         |  round(CAST(sum(v) AS DOUBLE) / count(*), 6) AS c
-        |FROM x GROUP BY label, dim ORDER BY label, dim""".stripMargin,
+        |FROM x GROUP BY label, dim ORDER BY label, dim""".stripMargin),
 
-    "q_sim_cosine_topk" ->
+    Key("q_sim_cosine_topk", qSimCosineTopk,
       s"""$normedSql,
         |pairs AS (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -588,9 +576,9 @@ object LlmOps {
         |    row_number() OVER (PARTITION BY a_id
         |      ORDER BY rawcos DESC, b_id ASC) AS rn
         |  FROM pairs p JOIN embeddings e2 ON p.b_id = e2.vec_id)
-        |WHERE rn <= 5 ORDER BY a_id, rn""".stripMargin,
+        |WHERE rn <= 5 ORDER BY a_id, rn""".stripMargin),
 
-    "q_sim_knn_label" ->
+    Key("q_sim_knn_label", qSimKnnLabel,
       s"""$normedSql,
         |pairs AS (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -614,9 +602,9 @@ object LlmOps {
         |SELECT p.a_id, p.pred_label, p.votes, e3.label,
         |  p.pred_label = e3.label AS correct
         |FROM pred p JOIN embeddings e3 ON p.a_id = e3.vec_id
-        |ORDER BY p.a_id""".stripMargin,
+        |ORDER BY p.a_id""".stripMargin),
 
-    "q_multimodal_join" ->
+    Key("q_multimodal_join", qMultimodalJoin,
       """WITH j AS (
         |  SELECT d.lang, e.label,
         |    CAST(round((e.embedding::DOUBLE[])[1], 8) AS DECIMAL(20,8)) AS x1,
@@ -629,6 +617,6 @@ object LlmOps {
         |  round(CAST(sum(x2) AS DOUBLE) / count(*), 6) AS c2_avg,
         |  round(CAST(sum(x3) AS DOUBLE) / count(*), 6) AS c3_avg,
         |  round(CAST(sum(x4) AS DOUBLE) / count(*), 6) AS c4_avg
-        |FROM j GROUP BY lang ORDER BY lang""".stripMargin
+        |FROM j GROUP BY lang ORDER BY lang""".stripMargin)
   )
 }

@@ -16,7 +16,7 @@ import core._
   * materialization points are the aggregation/join shuffles the
   * semantics require.
   */
-object Pipeline {
+object Pipeline extends Family {
 
   /** Stage 1: quality gate — drop low-lexical-diversity and too-short
     * docs (thresholds are pipeline parameters).
@@ -113,11 +113,8 @@ object Pipeline {
       .orderBy($"lang", $"split")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pipeline_e2e" -> (qPipelineE2e _))
-
-  val oracle: Map[String, String] = Map(
-    "q_pipeline_e2e" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_pipeline_e2e", qPipelineE2e,
       """WITH gated AS (
         |  SELECT doc_id, text, lang,
         |    len(string_split(text, ' ')) AS n_tokens,
@@ -141,5 +138,5 @@ object Pipeline {
         |SELECT lang, split, count(*) AS n_docs,
         |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
         |  CAST(sum(n_distinct) AS BIGINT) AS sum_distinct
-        |FROM split GROUP BY 1, 2 ORDER BY lang, split""".stripMargin)
+        |FROM split GROUP BY 1, 2 ORDER BY lang, split""".stripMargin))
 }

@@ -15,7 +15,7 @@ import core._
   * a total ORDER BY with a unique tiebreaker and keeps money math in
   * exact integer cents (SURVEY §5.3 determinism rules).
   */
-object Relational {
+object Relational extends Family {
 
   /** Monotonic suffix for qSqlRecursive's temp view names. */
   private val sqlrSeq = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -659,55 +659,14 @@ object Relational {
 
   // ------------------------------------------------------------- registries
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sql_text" -> (qSqlText _),
-    "q_sql_recursive" -> (qSqlRecursive _),
-    "q_join_salted" -> (qJoinSalted _),
-    "q_scan_full" -> (qScanFull _),
-    "q_scan_pruned" -> (qScanPruned _),
-    "q_scan_count" -> (qScanCount _),
-    "q_scan_pushdown" -> (qScanPushdown _),
-    "q_project_arith" -> (qProjectArith _),
-    "q_filter_pred" -> (qFilterPred _),
-    "q_filter_null3vl" -> (qFilterNull3vl _),
-    "q_filter_subquery" -> (qFilterSubquery _),
-    "q_join_inner" -> (qJoinInner _),
-    "q_join_broadcast" -> (qJoinBroadcast _),
-    "q_join_merge_large" -> (qJoinMergeLarge _),
-    "q_join_left" -> (qJoinLeft _),
-    "q_join_right" -> (qJoinRight _),
-    "q_join_full" -> (qJoinFull _),
-    "q_join_semi" -> (qJoinSemi _),
-    "q_join_anti" -> (qJoinAnti _),
-    "q_join_cross" -> (qJoinCross _),
-    "q_join_theta" -> (qJoinTheta _),
-    "q_join_range" -> (qJoinRange _),
-    "q_join_asof" -> (qJoinAsof _),
-    "q_join_multiway" -> (qJoinMultiway _),
-    "q_join_lateral" -> (qJoinLateral _),
-    "q_agg_global" -> (qAggGlobal _),
-    "q_agg_groupby" -> (qAggGroupby _),
-    "q_agg_distinct" -> (qAggDistinct _),
-    "q_agg_multidistinct" -> (qAggMultidistinct _),
-    "q_agg_having" -> (qAggHaving _),
-    "q_sort_multi" -> (qSortMulti _),
-    "q_topk_global" -> (qTopkGlobal _),
-    "q_limit_offset" -> (qLimitOffset _),
-    "q_set_union_all" -> (qSetUnionAll _),
-    "q_set_union_dist" -> (qSetUnionDist _),
-    "q_set_intersect" -> (qSetIntersect _),
-    "q_set_except" -> (qSetExcept _),
-    "q_set_by_name" -> (qSetByName _)
-  )
-
   private val centsSql = Map(
     "qty" -> core.centsSql("l_quantity"),
     "price" -> core.centsSql("l_extendedprice"),
     "disc" -> core.centsSql("l_discount"),
     "tax" -> core.centsSql("l_tax"))
 
-  val oracle: Map[String, String] = Map(
-    "q_sql_recursive" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_sql_recursive", qSqlRecursive,
       """WITH RECURSIVE eg AS (
         |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -725,9 +684,9 @@ object Relational {
         |         AS node_type,
         |       node // 2 AS node_key, CAST(min(dist) AS INTEGER) AS dist
         |FROM walk GROUP BY 1, 2
-        |ORDER BY dist, node_type, node_key""".stripMargin,
+        |ORDER BY dist, node_type, node_key""".stripMargin),
 
-    "q_sql_text" ->
+    Key("q_sql_text", qSqlText,
       """WITH rev AS (
         |  SELECT c.c_mktsegment AS segment, c.c_custkey AS custkey,
         |    c.c_name AS name,
@@ -743,25 +702,25 @@ object Relational {
         |  FROM rev)
         |SELECT segment, rk, custkey, name, rev_c
         |FROM ranked WHERE rk <= 3
-        |ORDER BY segment, rk""".stripMargin,
+        |ORDER BY segment, rk""".stripMargin),
 
     // plain join on purpose: the salted Spark plan must produce the
     // UNSALTED join's exact result
-    "q_join_salted" ->
+    Key("q_join_salted", qJoinSalted,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS sum_price_c
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
-    "q_scan_full" ->
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber",
+    Key("q_scan_full", qScanFull,
+      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber"),
 
-    "q_scan_pruned" ->
+    Key("q_scan_pruned", qScanPruned,
       """SELECT l_orderkey, l_quantity, l_shipdate FROM lineitem
-        |ORDER BY l_orderkey, l_quantity, l_shipdate, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_quantity, l_shipdate, l_linenumber""".stripMargin),
 
-    "q_scan_count" ->
+    Key("q_scan_count", qScanCount,
       """SELECT * FROM (
         |  SELECT 'region' AS table_name, count(*) AS n_rows FROM region UNION ALL
         |  SELECT 'nation', count(*) FROM nation UNION ALL
@@ -773,24 +732,24 @@ object Relational {
         |  SELECT 'events', count(*) FROM events UNION ALL
         |  SELECT 'documents', count(*) FROM documents UNION ALL
         |  SELECT 'embeddings', count(*) FROM embeddings
-        |) ORDER BY table_name""".stripMargin,
+        |) ORDER BY table_name""".stripMargin),
 
-    "q_scan_pushdown" ->
+    Key("q_scan_pushdown", qScanPushdown,
       s"""SELECT l_orderkey, l_linenumber, l_shipdate,
         |  ${centsSql("price")} AS price_c
         |FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_project_arith" ->
+    Key("q_project_arith", qProjectArith,
       s"""SELECT l_orderkey, l_linenumber,
         |  ${centsSql("price")} AS price_c,
         |  ${centsSql("disc")} AS disc_pct,
         |  ${centsSql("tax")} AS tax_pct,
         |  ${centsSql("price")} * (100 - ${centsSql("disc")}) AS revenue_c4,
         |  ${centsSql("price")} * (100 - ${centsSql("disc")}) * (100 + ${centsSql("tax")}) AS charge_c6
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_filter_pred" ->
+    Key("q_filter_pred", qFilterPred,
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c
         |FROM orders
@@ -798,48 +757,48 @@ object Relational {
         |  AND o_orderstatus IN ('F','O')
         |  AND CAST(round(o_totalprice*100) AS BIGINT) BETWEEN 1000000 AND 20000000
         |  AND NOT (o_orderstatus = 'P')
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_filter_null3vl" ->
+    Key("q_filter_null3vl", qFilterNull3vl,
       """SELECT l_orderkey, l_linenumber,
         |  nullif(l_returnflag, 'N') AS rf_null,
         |  nullif(l_linestatus, 'F') AS ls_null,
         |  nullif(l_returnflag, 'N') IS NULL AS rf_is_null,
         |  nullif(l_returnflag, 'N') IS NOT DISTINCT FROM nullif(l_linestatus, 'F') AS nsafe_eq,
         |  nullif(l_returnflag, 'N') IS DISTINCT FROM nullif(l_linestatus, 'F') AS is_distinct
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_filter_subquery" ->
+    Key("q_filter_subquery", qFilterSubquery,
       """SELECT o_orderkey, o_custkey, o_orderstatus
         |FROM orders o
         |WHERE o_custkey IN (SELECT c_custkey FROM customer
         |                    WHERE c_mktsegment = 'BUILDING')
         |  AND EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 30)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_join_inner" ->
+    Key("q_join_inner", qJoinInner,
       """SELECT o_orderkey, c_custkey, c_name,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_join_broadcast" ->
+    Key("q_join_broadcast", qJoinBroadcast,
       s"""SELECT r_name, n_name, count(*) AS n_lines,
         |  CAST(sum(${centsSql("price")} * (100 - ${centsSql("disc")})) AS BIGINT) AS revenue_c4
         |FROM lineitem
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
 
-    "q_join_merge_large" ->
+    Key("q_join_merge_large", qJoinMergeLarge,
       s"""SELECT o_orderstatus, count(*) AS n_lines,
         |  CAST(sum(${centsSql("qty")}) AS BIGINT) AS sum_qty_c
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "q_join_left" ->
+    Key("q_join_left", qJoinLeft,
       """SELECT c_custkey, c_mktsegment, o_orderkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c
         |FROM customer LEFT JOIN (
@@ -847,9 +806,9 @@ object Relational {
         |  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
         |    AND o_orderdate < TIMESTAMP '1996-01-01') o
         |ON c_custkey = o_custkey
-        |ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""".stripMargin,
+        |ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""".stripMargin),
 
-    "q_join_right" ->
+    Key("q_join_right", qJoinRight,
       """SELECT c_custkey, c_mktsegment, o_orderkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c
         |FROM (
@@ -857,9 +816,9 @@ object Relational {
         |  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
         |    AND o_orderdate < TIMESTAMP '1996-01-01') o
         |RIGHT JOIN customer ON c_custkey = o_custkey
-        |ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""".stripMargin,
+        |ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST""".stripMargin),
 
-    "q_join_full" ->
+    Key("q_join_full", qJoinFull,
       """SELECT c_custkey, c_mktsegment, o_orderkey, o_custkey
         |FROM (SELECT c_custkey, c_mktsegment FROM customer
         |      WHERE c_mktsegment = 'BUILDING') c
@@ -869,27 +828,27 @@ object Relational {
         |    AND o_orderdate < TIMESTAMP '1996-01-01'
         |    AND o_orderpriority = '1-URGENT') o
         |ON c_custkey = o_custkey
-        |ORDER BY c_custkey ASC NULLS FIRST, o_orderkey ASC NULLS FIRST""".stripMargin,
+        |ORDER BY c_custkey ASC NULLS FIRST, o_orderkey ASC NULLS FIRST""".stripMargin),
 
-    "q_join_semi" ->
+    Key("q_join_semi", qJoinSemi,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_join_anti" ->
+    Key("q_join_anti", qJoinAnti,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey
         |    AND o_orderdate >= TIMESTAMP '1995-01-01'
         |    AND o_orderdate < TIMESTAMP '1996-01-01')
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_join_cross" ->
+    Key("q_join_cross", qJoinCross,
       """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
+        |ORDER BY r_name, n_name""".stripMargin),
 
-    "q_join_theta" ->
+    Key("q_join_theta", qJoinTheta,
       """SELECT a.p_brand, count(*) AS n_pairs,
         |  CAST(sum(CAST(round(b.p_retailprice*100) AS BIGINT)
         |         - CAST(round(a.p_retailprice*100) AS BIGINT)) AS BIGINT) AS sum_gap_c
@@ -897,9 +856,9 @@ object Relational {
         |  ON a.p_brand = b.p_brand
         | AND CAST(round(a.p_retailprice*100) AS BIGINT)
         |     < CAST(round(b.p_retailprice*100) AS BIGINT)
-        |GROUP BY a.p_brand ORDER BY a.p_brand""".stripMargin,
+        |GROUP BY a.p_brand ORDER BY a.p_brand""".stripMargin),
 
-    "q_join_range" ->
+    Key("q_join_range", qJoinRange,
       """SELECT e1.user_id, e1.event_id AS e1_id, e2.event_id AS e2_id,
         |  CAST(date_diff('second', e1.ts, e2.ts) AS BIGINT) AS gap_sec
         |FROM events e1 JOIN events e2
@@ -907,9 +866,9 @@ object Relational {
         | AND e1.event_id < e2.event_id
         | AND e2.ts >= e1.ts
         | AND e2.ts <= e1.ts + INTERVAL 10 MINUTE
-        |ORDER BY e1_id, e2_id""".stripMargin,
+        |ORDER BY e1_id, e2_id""".stripMargin),
 
-    "q_join_asof" ->
+    Key("q_join_asof", qJoinAsof,
       """SELECT p_id, user_id, p_ts, prior_id, prior_ts, prior_type FROM (
         |  SELECT p.event_id AS p_id, p.user_id, p.ts AS p_ts,
         |    pr.event_id AS prior_id, pr.ts AS prior_ts,
@@ -920,9 +879,9 @@ object Relational {
         |  JOIN (SELECT * FROM events
         |        WHERE event_type IN ('signup','click')) pr
         |    ON p.user_id = pr.user_id AND pr.ts < p.ts
-        |) WHERE rn = 1 ORDER BY p_id""".stripMargin,
+        |) WHERE rn = 1 ORDER BY p_id""".stripMargin),
 
-    "q_join_multiway" ->
+    Key("q_join_multiway", qJoinMultiway,
       s"""SELECT r_name, n_name, count(*) AS n_lines,
         |  CAST(sum(${centsSql("price")} * (100 - ${centsSql("disc")})) AS BIGINT) AS revenue_c4
         |FROM lineitem
@@ -930,9 +889,9 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
 
-    "q_join_lateral" ->
+    Key("q_join_lateral", qJoinLateral,
       """SELECT n.n_name, t.o_orderkey, t.total_c
         |FROM nation n,
         |LATERAL (
@@ -941,18 +900,18 @@ object Relational {
         |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |  WHERE c.c_nationkey = n.n_nationkey
         |  ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2) t
-        |ORDER BY n.n_name, t.total_c DESC, t.o_orderkey""".stripMargin,
+        |ORDER BY n.n_name, t.total_c DESC, t.o_orderkey""".stripMargin),
 
-    "q_agg_global" ->
+    Key("q_agg_global", qAggGlobal,
       s"""SELECT count(*) AS n_rows,
         |  CAST(sum(${centsSql("qty")}) AS BIGINT) AS sum_qty_c,
         |  CAST(sum(${centsSql("price")}) AS BIGINT) AS sum_price_c,
         |  min(${centsSql("price")}) AS min_price_c,
         |  max(${centsSql("price")}) AS max_price_c,
         |  round(CAST(sum(${centsSql("price")}) AS BIGINT) / 100.0 / count(*), 6) AS avg_price
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin),
 
-    "q_agg_groupby" ->
+    Key("q_agg_groupby", qAggGroupby,
       s"""SELECT l_returnflag, l_linestatus,
         |  count(*) AS count_order,
         |  CAST(sum(${centsSql("qty")}) AS BIGINT) AS sum_qty_c,
@@ -965,80 +924,80 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q_agg_distinct" ->
+    Key("q_agg_distinct", qAggDistinct,
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
         |  count(*) AS n_lines
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q_agg_multidistinct" ->
+    Key("q_agg_multidistinct", qAggMultidistinct,
       s"""SELECT l_linestatus,
         |  count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps,
         |  CAST(sum(${centsSql("qty")}) AS BIGINT) AS sum_qty_c
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
 
-    "q_agg_having" ->
+    Key("q_agg_having", qAggHaving,
       """SELECT o_custkey, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_total_c
         |FROM orders GROUP BY o_custkey
-        |HAVING count(*) > 15 ORDER BY o_custkey""".stripMargin,
+        |HAVING count(*) > 15 ORDER BY o_custkey""".stripMargin),
 
-    "q_sort_multi" ->
+    Key("q_sort_multi", qSortMulti,
       """SELECT c_custkey, nullif(c_mktsegment, 'MACHINERY') AS seg_null,
         |  CAST(round(c_acctbal*100) AS BIGINT) AS acctbal_c
         |FROM customer
         |ORDER BY seg_null ASC NULLS FIRST, acctbal_c DESC NULLS LAST,
-        |  c_custkey ASC""".stripMargin,
+        |  c_custkey ASC""".stripMargin),
 
-    "q_topk_global" ->
+    Key("q_topk_global", qTopkGlobal,
       """SELECT o_orderkey, CAST(round(o_totalprice*100) AS BIGINT) AS total_c
-        |FROM orders ORDER BY total_c DESC, o_orderkey ASC LIMIT 10""".stripMargin,
+        |FROM orders ORDER BY total_c DESC, o_orderkey ASC LIMIT 10""".stripMargin),
 
-    "q_limit_offset" ->
+    Key("q_limit_offset", qLimitOffset,
       """SELECT o_orderkey, o_custkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c
-        |FROM orders ORDER BY o_orderkey LIMIT 20 OFFSET 100""".stripMargin,
+        |FROM orders ORDER BY o_orderkey LIMIT 20 OFFSET 100""".stripMargin),
 
-    "q_set_union_all" ->
+    Key("q_set_union_all", qSetUnionAll,
       """SELECT * FROM (
         |  SELECT event_id, user_id, CAST(round(value*100) AS BIGINT) AS value_c
         |  FROM events WHERE event_type = 'click'
         |  UNION ALL
         |  SELECT event_id, user_id, CAST(round(value*100) AS BIGINT)
         |  FROM events WHERE CAST(round(value*100) AS BIGINT) > 10000
-        |) ORDER BY event_id, user_id, value_c""".stripMargin,
+        |) ORDER BY event_id, user_id, value_c""".stripMargin),
 
-    "q_set_union_dist" ->
+    Key("q_set_union_dist", qSetUnionDist,
       """SELECT event_id, user_id, CAST(round(value*100) AS BIGINT) AS value_c
         |FROM events WHERE event_type = 'click'
         |UNION
         |SELECT event_id, user_id, CAST(round(value*100) AS BIGINT)
         |FROM events WHERE CAST(round(value*100) AS BIGINT) > 10000
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_set_intersect" ->
+    Key("q_set_intersect", qSetIntersect,
       """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_set_except" ->
+    Key("q_set_except", qSetExcept,
       """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |EXCEPT
         |SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
         |  AND o_orderdate < TIMESTAMP '1996-01-01'
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_set_by_name" ->
+    Key("q_set_by_name", qSetByName,
       """SELECT * FROM (
         |  SELECT event_id, user_id, CAST(round(value*100) AS BIGINT) AS value_c
         |  FROM events WHERE event_type = 'signup'
         |  UNION ALL
         |  SELECT event_id, user_id, CAST(round(value*100) AS BIGINT)
         |  FROM events WHERE event_type = 'error'
-        |) ORDER BY event_id""".stripMargin
+        |) ORDER BY event_id""".stripMargin)
   )
 }

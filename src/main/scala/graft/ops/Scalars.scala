@@ -15,7 +15,7 @@ import core._
   * rounds (avoided — explicit floor first); int-typed Spark results
   * are cast to BIGINT to match DuckDB's wider defaults.
   */
-object Scalars {
+object Scalars extends Family {
 
   def qStrBasic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -528,39 +528,8 @@ object Scalars {
       .orderBy($"user_id", $"event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_str_basic" -> (qStrBasic _),
-    "q_str_split" -> (qStrSplit _),
-    "q_str_regexp" -> (qStrRegexp _),
-    "q_str_like" -> (qStrLike _),
-    "q_date_parts" -> (qDateParts _),
-    "q_date_arith" -> (qDateArith _),
-    "q_ts_funcs" -> (qTsFuncs _),
-    "q_ts_retention" -> (qTsRetention _),
-    "q_ts_ohlc" -> (qTsOhlc _),
-    "q_ts_anomaly" -> (qTsAnomaly _),
-    "q_ts_interp" -> (qTsInterp _),
-    "q_zorder_layout" -> (qZorderLayout _),
-    "q_math_funcs" -> (qMathFuncs _),
-    "q_cond_funcs" -> (qCondFuncs _),
-    "q_cast_funcs" -> (qCastFuncs _),
-    "q_array_funcs" -> (qArrayFuncs _),
-    "q_array_hof" -> (qArrayHof _),
-    "q_explode" -> (qExplode _),
-    "q_explode_outer" -> (qExplodeOuter _),
-    "q_str_encode" -> (qStrEncode _),
-    "q_date_seq" -> (qDateSeq _),
-    "q_math_bitwise" -> (qMathBitwise _),
-    "q_map_funcs" -> (qMapFuncs _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_json_variant" -> (qJsonVariant _),
-    "q_struct_funcs" -> (qStructFuncs _),
-    "q_pivot" -> (qPivot _),
-    "q_unpivot" -> (qUnpivot _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_str_basic" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_str_basic", qStrBasic,
       """SELECT c_custkey,
         |  upper(c_name) AS name_upper,
         |  lower(c_mktsegment) AS seg_lower,
@@ -572,27 +541,27 @@ object Scalars {
         |  replace(c_name, 'Customer', 'Cust') AS name_repl,
         |  length(c_name) AS name_len,
         |  strpos(c_name, '#') AS hash_pos
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_str_split" ->
+    Key("q_str_split", qStrSplit,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  string_split(text, ' ')[1] AS first_token
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_str_regexp" ->
+    Key("q_str_regexp", qStrRegexp,
       """SELECT c_custkey,
         |  CAST(regexp_extract(c_name, 'Customer#([0-9]+)', 1) AS BIGINT) AS cust_num,
         |  regexp_replace(c_mktsegment, '[AEIOU]', '_', 'g') AS seg_masked,
         |  regexp_matches(c_name, '[0-9]{3}$') AS ends_3digits
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_str_like" ->
+    Key("q_str_like", qStrLike,
       """SELECT p_partkey, p_name, p_type FROM part
         |WHERE p_name LIKE '%e%' AND (p_name LIKE 'r%' OR p_name LIKE '_r%')
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin),
 
-    "q_date_parts" ->
+    Key("q_date_parts", qDateParts,
       """SELECT month_start,
         |  year(month_start) AS yr,
         |  quarter(month_start) AS qtr,
@@ -604,25 +573,25 @@ object Scalars {
         |    count(*) AS n_orders,
         |    CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_total_c
         |  FROM orders GROUP BY 1)
-        |ORDER BY month_start""".stripMargin,
+        |ORDER BY month_start""".stripMargin),
 
-    "q_date_arith" ->
+    Key("q_date_arith", qDateArith,
       """SELECT o_orderkey, o_orderdate,
         |  o_orderdate + INTERVAL 30 DAY AS due_ts,
         |  CAST(date_diff('day', o_orderdate::DATE, DATE '2000-01-01') AS BIGINT)
         |    AS days_to_y2k,
         |  last_day(o_orderdate::DATE) AS eom
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "q_ts_funcs" ->
+    Key("q_ts_funcs", qTsFuncs,
       """SELECT event_id,
         |  hour(ts) AS hr, minute(ts) AS mi, second(ts) AS sec,
         |  CAST(date_diff('second', TIMESTAMP '1970-01-01', ts) AS BIGINT)
         |    AS epoch_s,
         |  date_trunc('hour', ts)::TIMESTAMP AS hour_start
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "q_ts_retention" ->
+    Key("q_ts_retention", qTsRetention,
       """WITH active AS (
         |  SELECT DISTINCT user_id, date_trunc('week', ts)::DATE AS week
         |  FROM events)
@@ -634,9 +603,9 @@ object Scalars {
         |      AS BIGINT) / CAST(count(*) AS DOUBLE), 6) AS retention
         |FROM active a LEFT JOIN active b
         |  ON a.user_id = b.user_id AND b.week = a.week + 7
-        |GROUP BY a.week ORDER BY a.week""".stripMargin,
+        |GROUP BY a.week ORDER BY a.week""".stripMargin),
 
-    "q_ts_ohlc" ->
+    Key("q_ts_ohlc", qTsOhlc,
       """WITH base AS (
         |  SELECT event_type,
         |    time_bucket(INTERVAL '15 minutes', ts) AS bar_start,
@@ -654,9 +623,9 @@ object Scalars {
         |SELECT event_type, bar_start, count(*) AS n,
         |  max(o_c) AS open_c, max(v_c) AS high_c,
         |  min(v_c) AS low_c, max(c_c) AS close_c
-        |FROM w GROUP BY 1, 2 ORDER BY event_type, bar_start""".stripMargin,
+        |FROM w GROUP BY 1, 2 ORDER BY event_type, bar_start""".stripMargin),
 
-    "q_ts_anomaly" ->
+    Key("q_ts_anomaly", qTsAnomaly,
       """WITH e AS (
         |  SELECT event_id, event_type, ts, CAST(ts AS DATE) AS d,
         |    CAST(round(value*100) AS BIGINT) AS y
@@ -676,9 +645,9 @@ object Scalars {
         |  round(CAST(num AS DOUBLE) / sqrt(CAST(den AS DOUBLE)), 4) AS z
         |FROM f
         |WHERE n >= 20 AND den > 0 AND num * num > 9 * den
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_ts_interp" ->
+    Key("q_ts_interp", qTsInterp,
       """WITH e AS (
         |  SELECT user_id, event_id, ts,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS t,
@@ -711,9 +680,9 @@ object Scalars {
         |    WHEN prev_v IS NOT NULL THEN CAST(prev_v AS DOUBLE)
         |    WHEN next_v IS NOT NULL THEN CAST(next_v AS DOUBLE)
         |    END, 4) AS v_interp
-        |FROM w ORDER BY user_id, event_id""".stripMargin,
+        |FROM w ORDER BY user_id, event_id""".stripMargin),
 
-    "q_zorder_layout" ->
+    Key("q_zorder_layout", qZorderLayout,
       """WITH o AS (
         |  SELECT o_custkey,
         |    CAST(CAST(o_orderdate AS DATE) - DATE '1990-01-01' AS BIGINT)
@@ -731,9 +700,9 @@ object Scalars {
         |SELECT (xd | (yd << 1)) // 1048576 AS bucket, count(*) AS n,
         |  min(o_custkey) AS min_cust, max(o_custkey) AS max_cust,
         |  min(dday) AS min_day, max(dday) AS max_day
-        |FROM s4 GROUP BY 1 ORDER BY bucket""".stripMargin,
+        |FROM s4 GROUP BY 1 ORDER BY bucket""".stripMargin),
 
-    "q_math_funcs" ->
+    Key("q_math_funcs", qMathFuncs,
       """SELECT event_id, x,
         |  abs(x - 10000) AS abs_dev,
         |  CAST(ceil(x / 100.0) AS BIGINT) AS ceil_units,
@@ -746,9 +715,9 @@ object Scalars {
         |  round(exp(x % 5), 6) AS exp_mod5,
         |  round(pow(x % 9, 2.5), 6) AS pow_mod9
         |FROM (SELECT event_id, CAST(round(value*100) AS BIGINT) AS x FROM events)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_cond_funcs" ->
+    Key("q_cond_funcs", qCondFuncs,
       """SELECT o_orderkey,
         |  CASE WHEN total_c > 20000000 THEN 'big'
         |       WHEN total_c > 10000000 THEN 'mid'
@@ -758,9 +727,9 @@ object Scalars {
         |  greatest(total_c % 1000, 500) AS floor500
         |FROM (SELECT *, CAST(round(o_totalprice*100) AS BIGINT) AS total_c
         |      FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_cast_funcs" ->
+    Key("q_cast_funcs", qCastFuncs,
       """SELECT c_custkey,
         |  CAST(bal_c AS VARCHAR) AS bal_str,
         |  CAST(CAST(bal_c AS VARCHAR) AS BIGINT) AS bal_roundtrip,
@@ -771,9 +740,9 @@ object Scalars {
         |  CAST(bal_c AS DOUBLE) AS bal_dbl
         |FROM (SELECT c_custkey, c_name,
         |      CAST(round(c_acctbal*100) AS BIGINT) AS bal_c FROM customer)
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_array_funcs" ->
+    Key("q_array_funcs", qArrayFuncs,
       """SELECT vec_id, label,
         |  len(emb) AS dim,
         |  round(emb[1], 6) AS e1,
@@ -784,9 +753,9 @@ object Scalars {
         |  round(sqrt(list_reduce(list_prepend(0.0,
         |    list_transform(emb, x -> x * x)), (a, x) -> a + x)), 6) AS l2_norm
         |FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
 
-    "q_array_hof" ->
+    Key("q_array_hof", qArrayHof,
       """SELECT vec_id,
         |  round(list_reduce(list_prepend(0.0,
         |    list_transform(emb, x -> x * 2)), (a, x) -> a + x), 6) AS sum_scaled,
@@ -795,31 +764,31 @@ object Scalars {
         |    list_zip(emb, emb).apply(x -> x[1] * x[2])), (a, x) -> a + x), 6)
         |    AS self_dot
         |FROM (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
 
-    "q_explode" ->
+    Key("q_explode", qExplode,
       """SELECT doc_id,
         |  CAST(generate_subscripts(string_split(text, ' '), 1) AS BIGINT) AS pos,
         |  unnest(string_split(text, ' ')) AS word
-        |FROM documents ORDER BY doc_id, pos""".stripMargin,
+        |FROM documents ORDER BY doc_id, pos""".stripMargin),
 
-    "q_str_encode" ->
+    Key("q_str_encode", qStrEncode,
       """SELECT c_custkey,
         |  to_base64(encode(c_mktsegment)) AS seg_b64,
         |  decode(from_base64(to_base64(encode(c_mktsegment)))) AS seg_roundtrip,
         |  hex(encode(c_name)) AS name_hex,
         |  decode(from_hex(hex(encode(c_name)))) AS name_roundtrip
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_date_seq" ->
+    Key("q_date_seq", qDateSeq,
       """SELECT o_orderkey,
         |  unnest(generate_series(date_trunc('month', o_orderdate),
         |    date_trunc('month', o_orderdate + INTERVAL 90 DAY),
         |    INTERVAL 1 MONTH))::TIMESTAMP AS month_start
         |FROM orders WHERE o_orderkey < 100
-        |ORDER BY o_orderkey, month_start""".stripMargin,
+        |ORDER BY o_orderkey, month_start""".stripMargin),
 
-    "q_math_bitwise" ->
+    Key("q_math_bitwise", qMathBitwise,
       """SELECT event_id,
         |  event_id & user_id AS band,
         |  event_id | user_id AS bor,
@@ -827,9 +796,9 @@ object Scalars {
         |  user_id << 3 AS shl3,
         |  event_id >> 2 AS shr2,
         |  CAST(bit_count(event_id) AS BIGINT) AS popcount
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "q_explode_outer" ->
+    Key("q_explode_outer", qExplodeOuter,
       """SELECT d.doc_id, u.word
         |FROM (SELECT doc_id,
         |        CASE WHEN len(string_split(text, ' ')) >= 20
@@ -837,18 +806,18 @@ object Scalars {
         |             ELSE [] END AS toks
         |      FROM documents) d
         |LEFT JOIN LATERAL (SELECT unnest(d.toks) AS word) u ON true
-        |ORDER BY d.doc_id, u.word ASC NULLS FIRST""".stripMargin,
+        |ORDER BY d.doc_id, u.word ASC NULLS FIRST""".stripMargin),
 
-    "q_map_funcs" ->
+    Key("q_map_funcs", qMapFuncs,
       """SELECT user_id,
         |  count(*) FILTER (WHERE event_type = 'click') AS n_click,
         |  count(*) FILTER (WHERE event_type = 'error') AS n_error,
         |  count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
         |  count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
         |  count(*) FILTER (WHERE event_type = 'view') AS n_view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_json_extract" ->
+    Key("q_json_extract", qJsonExtract,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
         |    AS sum_k,
@@ -856,9 +825,9 @@ object Scalars {
         |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
         |  round(CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
         |    AS BIGINT) / count(*), 6) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_json_variant" ->
+    Key("q_json_variant", qJsonVariant,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT)
         |    AS sum_k,
@@ -867,25 +836,25 @@ object Scalars {
         |  max(length(json_extract_string(props, '$.k'))) AS max_kw,
         |  count(CAST(json_extract_string(props, '$.missing') AS BIGINT))
         |    AS n_missing
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q_struct_funcs" ->
+    Key("q_struct_funcs", qStructFuncs,
       """SELECT c_custkey,
         |  c_custkey AS s_id,
         |  CAST(round(c_acctbal*100) AS BIGINT) + 100 AS bal_plus_1,
         |  c_mktsegment AS seg_nested
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_pivot" ->
+    Key("q_pivot", qPivot,
       """SELECT user_id,
         |  count(*) FILTER (WHERE event_type = 'click') AS click,
         |  count(*) FILTER (WHERE event_type = 'error') AS error,
         |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
         |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
         |  count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_unpivot" ->
+    Key("q_unpivot", qUnpivot,
       """WITH p AS (
         |  SELECT user_id,
         |    count(*) FILTER (WHERE event_type = 'click') AS click,
@@ -896,6 +865,6 @@ object Scalars {
         |  FROM events GROUP BY user_id)
         |SELECT user_id, event_type, cnt
         |FROM p UNPIVOT (cnt FOR event_type IN (click, error, purchase, signup, view))
-        |ORDER BY user_id, event_type""".stripMargin
+        |ORDER BY user_id, event_type""".stripMargin)
   )
 }

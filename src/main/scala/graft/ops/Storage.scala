@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
+import core.{Family, Key}
+
 /** Partitioned storage layout: hive-style `partitionBy` write plus the
   * two read-side pruning mechanisms every 100 TB table lives by —
   * static partition pruning (a literal predicate on the partition
@@ -31,7 +33,7 @@ import org.apache.spark.sql.types.DateType
   * JVM) through [[core.persistedIndex]]: a collision-free, pid-keyed
   * path that the JVM deletes on exit.
   */
-object Storage {
+object Storage extends Family {
 
   /** Peak-date rule shared by dim-write and oracle: day-offset from
     * 2024-01-01 ≡ 5 (mod 7) — 4 of the fixtures' 30 dates, selective
@@ -330,15 +332,8 @@ object Storage {
       .orderBy(col("event_type"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_part_layout" -> (qPartLayout _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_join_bucketed" -> (qJoinBucketed _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_compact_files" -> (qCompactFiles _))
-
-  val oracle: Map[String, String] = Map(
-    "q_part_layout" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_part_layout", qPartLayout,
       """WITH f AS (
         |  SELECT event_type, CAST(ts AS DATE) AS event_date,
         |    CAST(round(value*100) AS BIGINT) AS v_c
@@ -348,8 +343,8 @@ object Storage {
         |SELECT event_type, count(*) AS n,
         |  CAST(sum(v_c) AS BIGINT) AS sum_c,
         |  count(DISTINCT event_date) AS n_days
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_schema_evolution" ->
+        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Key("q_schema_evolution", qSchemaEvolution,
       """WITH evo AS (
         |  SELECT lang, n_chars,
         |    CASE WHEN doc_id % 2 = 1
@@ -359,8 +354,8 @@ object Storage {
         |  count(quality_c) AS n_evolved,
         |  CAST(sum(quality_c) AS BIGINT) AS sum_q,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM evo GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_join_bucketed" ->
+        |FROM evo GROUP BY lang ORDER BY lang""".stripMargin),
+    Key("q_join_bucketed", qJoinBucketed,
       """SELECT l_orderkey, count(*) AS n_lines,
         |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
         |    AS rev_c,
@@ -368,8 +363,8 @@ object Storage {
         |    AS total_c
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY l_orderkey HAVING l_orderkey % 100 = 0
-        |ORDER BY l_orderkey""".stripMargin,
-    "q_merge_upsert" ->
+        |ORDER BY l_orderkey""".stripMargin),
+    Key("q_merge_upsert", qMergeUpsert,
       """WITH snap AS (
         |  SELECT o_orderkey, o_orderstatus,
         |    CAST(round(o_totalprice*100) AS BIGINT) AS total_c
@@ -393,10 +388,10 @@ object Storage {
         |  CAST(sum(total_c) AS BIGINT) AS sum_c,
         |  CAST(sum(CASE WHEN o_orderkey > (SELECT mx FROM off)
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_compact_files" ->
+        |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Key("q_compact_files", qCompactFiles,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_c,
         |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))
 }

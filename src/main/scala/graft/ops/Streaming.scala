@@ -15,7 +15,7 @@ import core._
   * MemoryStream runtime tests for watermark/state behaviors that no
   * batch SQL can express).
   */
-object Streaming {
+object Streaming extends Family {
 
   // ----------------------------------------------------- shared transforms
 
@@ -246,42 +246,31 @@ object Streaming {
 
   // ------------------------------------------------------------- registries
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_tumbling" -> (qStreamTumbling _),
-    "q_stream_sliding" -> (qStreamSliding _),
-    "q_stream_session" -> (qStreamSession _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_join_interval" -> (qStreamJoinInterval _),
-    "q_stream_topk" -> (qStreamTopk _),
-    "q_events_funnel" -> (qEventsFunnel _),
-    "q_events_transitions" -> (qEventsTransitions _)
-  )
-
   private val valC = core.centsSql("value")
 
-  val oracle: Map[String, String] = Map(
-    "q_stream_tumbling" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_stream_tumbling", qStreamTumbling,
       s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
         |  count(*) AS n, CAST(sum($valC) AS BIGINT) AS sum_value_c
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
 
     // Sliding windows, epoch-aligned like Spark's window(): every event
     // belongs to the 4 slots ending at-or-after it. Window start is
     // rebuilt with timezone-free timestamp arithmetic (to_timestamp
     // would yield TIMESTAMPTZ and shift under a non-UTC session).
-    "q_stream_sliding" ->
+    Key("q_stream_sliding", qStreamSliding,
       s"""SELECT TIMESTAMP '1970-01-01'
         |    + CAST((CAST(floor(epoch(ts)/900) AS BIGINT) - slot) * 900 AS BIGINT)
         |      * INTERVAL 1 SECOND AS window_start,
         |  event_type, count(*) AS n, CAST(sum($valC) AS BIGINT) AS sum_value_c
         |FROM events CROSS JOIN (VALUES (0),(1),(2),(3)) s(slot)
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
 
     // Gaps-and-islands sessionization: Spark's session_window merges
     // touching ranges, so a gap of exactly 30 minutes merges; only a
     // strictly greater gap breaks (verified empirically by
     // StreamingSpec's boundary test).
-    "q_stream_session" ->
+    Key("q_stream_session", qStreamSession,
       s"""WITH flagged AS (
         |  SELECT user_id, ts, $valC AS value_c,
         |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -297,16 +286,16 @@ object Streaming {
         |  max(ts) + INTERVAL 30 MINUTE AS session_end,
         |  count(*) AS n_events, CAST(sum(value_c) AS BIGINT) AS sum_value_c
         |FROM islands GROUP BY user_id, sess
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
 
-    "q_stream_dedup" ->
+    Key("q_stream_dedup", qStreamDedup,
       s"""SELECT user_id, event_type, event_id, ts, $valC AS value_c
         |FROM (SELECT *, row_number() OVER (
         |        PARTITION BY user_id, event_type ORDER BY event_id) AS rn
         |      FROM events)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
+        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
 
-    "q_stream_topk" ->
+    Key("q_stream_topk", qStreamTopk,
       s"""WITH counts AS (
         |  SELECT date_trunc('hour', ts) AS window_start, event_type,
         |    count(*) AS n, CAST(sum($valC) AS BIGINT) AS sum_value_c
@@ -315,12 +304,12 @@ object Streaming {
         |  SELECT *, row_number() OVER (PARTITION BY window_start
         |    ORDER BY n DESC, event_type ASC) AS rk
         |  FROM counts)
-        |WHERE rk <= 3 ORDER BY window_start, rk""".stripMargin,
+        |WHERE rk <= 3 ORDER BY window_start, rk""".stripMargin),
 
     // Interval join: µs delta floored to whole seconds with integer
     // division on both engines (Spark DIV ↔ DuckDB //) — no double
     // rounding in the comparison path.
-    "q_stream_join_interval" ->
+    Key("q_stream_join_interval", qStreamJoinInterval,
       """SELECT p.event_id AS p_id, c.event_id AS c_id,
         |  p.user_id AS user_id,
         |  date_diff('microsecond', c.ts, p.ts) // 1000000 AS lead_sec
@@ -328,9 +317,9 @@ object Streaming {
         |  ON p.user_id = c.user_id
         | AND p.event_type = 'purchase' AND c.event_type = 'click'
         | AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 10 MINUTE
-        |ORDER BY p_id, c_id""".stripMargin,
+        |ORDER BY p_id, c_id""".stripMargin),
 
-    "q_events_funnel" ->
+    Key("q_events_funnel", qEventsFunnel,
       """WITH s1 AS (
         |  SELECT user_id, min(ts) AS s_ts FROM events
         |  WHERE event_type = 'signup' GROUP BY 1),
@@ -346,11 +335,11 @@ object Streaming {
         |  count(*) AS n_users FROM s1
         |UNION ALL SELECT 2, 'view_after_signup', count(*) FROM s2
         |UNION ALL SELECT 3, 'purchase_after_view', count(*) FROM s3
-        |ORDER BY stage""".stripMargin,
+        |ORDER BY stage""".stripMargin),
 
     // mean gap from exact integer µs sums, divided once — HUGEINT
     // sum cast to DOUBLE matches Spark's DECIMAL(38,0) → double
-    "q_events_transitions" ->
+    Key("q_events_transitions", qEventsTransitions,
       """WITH nx AS (
         |  SELECT event_type,
         |    lead(event_type) OVER (
@@ -362,6 +351,6 @@ object Streaming {
         |  round(CAST(sum(CAST(gap_us AS HUGEINT)) AS DOUBLE)
         |        / (CAST(count(*) AS DOUBLE) * 1000000.0), 6) AS avg_gap_sec
         |FROM nx WHERE next_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY event_type, next_type""".stripMargin
+        |GROUP BY 1, 2 ORDER BY event_type, next_type""".stripMargin)
   )
 }

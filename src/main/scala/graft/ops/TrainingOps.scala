@@ -13,7 +13,7 @@ import LlmOps.{embSql, normedSql, nrmSql, rawCosSql, signBitsSql}
   * an LSH-bucketed approximate-nearest-neighbor path. These are the
   * ops a 100 TB corpus pipeline runs between ingest and training.
   */
-object TrainingOps {
+object TrainingOps extends Family {
 
   private def words(s: SparkSession, dir: String): DataFrame =
     LlmOps.words(s, dir)
@@ -865,26 +865,6 @@ object TrainingOps {
       .orderBy($"doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal_decode" -> (qMultimodalDecode _),
-    "q_text_langid" -> (qTextLangid _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_text_tokens" -> (qTextTokens _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_components" -> (qDedupComponents _),
-    "q_dedup_embed" -> (qDedupEmbed _),
-    "q_dedup_embed_lsh" -> (qDedupEmbedLsh _),
-    "q_dedup_embed_lsh_t9" -> (qDedupEmbedLshT9 _),
-    "q_sim_ann_lsh" -> (qSimAnnLsh _),
-    "q_sim_ann_ivf" -> (qSimAnnIvf _),
-    "q_sample_hash" -> (qSampleHash _),
-    "q_sample_fixed" -> (qSampleFixed _),
-    "q_split_train_val" -> (qSplitTrainVal _),
-    "q_multimodal_binary" -> (qMultimodalBinary _)
-  )
-
   /** q_dedup_ngram's oracle, shared: q_dedup_components embeds it as
     * the edge-set CTE of its recursive closure.
     */
@@ -926,7 +906,9 @@ object TrainingOps {
       |WHERE inter / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.2
       |ORDER BY a_id, b_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val keys: Seq[Key] = Seq(
+    // xxhash64 fingerprints have no DuckDB twin; property-tested
+    Key("q_dedup_simhash", qDedupSimhash),
     // analytic recompute of the synthetic pixel function — no binary
     // parsing oracle-side; any Spark-side parser misread shifts the
     // channel sums (see qMultimodalDecode scaladoc)
@@ -934,7 +916,7 @@ object TrainingOps {
     // moments-shift pattern): fixture doc_ids are nonnegative, but
     // the asymmetry of a bare % (sign-following in DuckDB) vs
     // floorMod would be a latent divergence for any negative id
-    "q_multimodal_decode" ->
+    Key("q_multimodal_decode", qMultimodalDecode,
       """WITH d AS (
         |  SELECT doc_id,
         |    CAST(4 + ((doc_id % 13) + 13) % 13 AS INTEGER) AS width,
@@ -956,8 +938,8 @@ object TrainingOps {
         |    THEN (((doc_id * 31 + 7 * j) % 256) + 256) % 256 END) AS BIGINT)
         |    AS sum_b
         |FROM px GROUP BY doc_id, width, height
-        |ORDER BY doc_id""".stripMargin,
-    "q_text_langid" ->
+        |ORDER BY doc_id""".stripMargin),
+    Key("q_text_langid", qTextLangid,
       """WITH tok AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
         |  FROM documents),
@@ -983,9 +965,9 @@ object TrainingOps {
         |  d.lang,
         |  coalesce(p.cand_lang, 'unknown') = d.lang AS correct
         |FROM documents d LEFT JOIN pred p ON d.doc_id = p.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
-    "q_text_quality" ->
+    Key("q_text_quality", qTextQuality,
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
         |  FROM documents),
@@ -1008,9 +990,9 @@ object TrainingOps {
         |  round(0.4 * (n_distinct / CAST(n_tokens AS DOUBLE))
         |      + 0.3 * (1.0 - n_stop / CAST(n_tokens AS DOUBLE))
         |      + 0.3 * (least(n_tokens, 100) / 100.0), 6) AS quality
-        |FROM per ORDER BY doc_id""".stripMargin,
+        |FROM per ORDER BY doc_id""".stripMargin),
 
-    "q_text_fingerprint" ->
+    Key("q_text_fingerprint", qTextFingerprint,
       """WITH f AS (
         |  SELECT doc_id,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -1019,20 +1001,20 @@ object TrainingOps {
         |                  % 1000000007) AS fp
         |  FROM documents)
         |SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS n_same_fp
-        |FROM f ORDER BY doc_id""".stripMargin,
+        |FROM f ORDER BY doc_id""".stripMargin),
 
-    "q_text_tokens" ->
+    Key("q_text_tokens", qTextTokens,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS ws_tokens,
         |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
         |    AS bpe_tokens,
         |  round(n_chars / CAST(len(regexp_extract_all(text,
         |    '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS DOUBLE), 6) AS chars_per_token
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_dedup_ngram" -> NgramOracleSql,
+    Key("q_dedup_ngram", qDedupNgram, NgramOracleSql),
 
-    "q_dedup_components" ->
+    Key("q_dedup_components", qDedupComponents,
       s"""WITH RECURSIVE pairs AS ($NgramOracleSql),
         |und AS (
         |  SELECT a_id AS x, b_id AS y FROM pairs
@@ -1046,22 +1028,22 @@ object TrainingOps {
         |  FROM walk GROUP BY x)
         |SELECT doc_id, component,
         |  count(*) OVER (PARTITION BY component) AS n_members
-        |FROM comp ORDER BY doc_id""".stripMargin,
+        |FROM comp ORDER BY doc_id""".stripMargin),
 
-    "q_dedup_embed" ->
+    Key("q_dedup_embed", qDedupEmbed,
       s"""$normedSql
         |SELECT a_id, b_id, round(rawcos, 6) AS cos FROM (
         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |    ${rawCosSql("a.", "b.")} AS rawcos
         |  FROM n a JOIN n b ON a.vec_id < b.vec_id)
         |WHERE rawcos >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // Hamming-≤1 band match is expressed directly (bit_count ≤ 1
     // inside the band equi-join) — semantically identical to the
     // Spark side's multi-probe key expansion, which exists only to
     // keep the predicate an equi-join at scale.
-    "q_dedup_embed_lsh" ->
+    Key("q_dedup_embed_lsh", qDedupEmbedLsh,
       s"""$normedSql,
         |sig AS (
         |  SELECT vec_id, b AS band,
@@ -1078,13 +1060,13 @@ object TrainingOps {
         |  JOIN n a ON c.a_id = a.vec_id
         |  JOIN n b ON c.b_id = b.vec_id)
         |WHERE rawcos >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
     // production-τ twin: adaptive band width re-derived from count(*)
     // with the same integer math (bin()/`//`, clamped to [8, 16]),
     // 4 bands over 16-dim slices, Hamming-≤1 as bit_count(xor) ≤ 1,
     // identical rawcos fold thresholded at 0.9
-    "q_dedup_embed_lsh_t9" ->
+    Key("q_dedup_embed_lsh_t9", qDedupEmbedLshT9,
       s"""$normedSql,
         |p AS (
         |  SELECT greatest(8, least(16,
@@ -1106,9 +1088,9 @@ object TrainingOps {
         |  JOIN n a ON c.a_id = a.vec_id
         |  JOIN n b ON c.b_id = b.vec_id)
         |WHERE rawcos >= 0.9
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
 
-    "q_sim_ann_lsh" ->
+    Key("q_sim_ann_lsh", qSimAnnLsh,
       s"""$embSql,
         |p AS (
         |  SELECT CASE WHEN m <= 1 THEN 0
@@ -1126,9 +1108,9 @@ object TrainingOps {
         |SELECT a_id, rn, b_id, round(rawcos, 6) AS cos, bucket FROM (
         |  SELECT *, row_number() OVER (PARTITION BY a_id
         |    ORDER BY rawcos DESC, b_id ASC) AS rn FROM pairs)
-        |WHERE rn <= 3 ORDER BY a_id, rn""".stripMargin,
+        |WHERE rn <= 3 ORDER BY a_id, rn""".stripMargin),
 
-    "q_sim_ann_ivf" ->
+    Key("q_sim_ann_ivf", qSimAnnIvf,
       s"""$normedSql,
         |p AS (
         |  SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS c
@@ -1158,24 +1140,24 @@ object TrainingOps {
         |SELECT a_id, rn, b_id, round(rawcos, 6) AS cos, cent_id FROM (
         |  SELECT *, row_number() OVER (PARTITION BY a_id
         |    ORDER BY rawcos DESC, b_id ASC) AS rn FROM pairs)
-        |WHERE rn <= 3 ORDER BY a_id, rn""".stripMargin,
+        |WHERE rn <= 3 ORDER BY a_id, rn""".stripMargin),
 
-    "q_sample_fixed" ->
+    Key("q_sample_fixed", qSampleFixed,
       """SELECT doc_id, md5('fix' || CAST(doc_id AS VARCHAR)) AS hk,
         |  lang, source, n_chars
         |FROM documents
-        |ORDER BY hk, doc_id LIMIT 100""".stripMargin,
+        |ORDER BY hk, doc_id LIMIT 100""".stripMargin),
 
-    "q_sample_hash" ->
+    Key("q_sample_hash", qSampleHash,
       """SELECT doc_id,
         |  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
         |    AS bucket,
         |  lang, n_chars
         |FROM documents
         |WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 5
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_split_train_val" ->
+    Key("q_split_train_val", qSplitTrainVal,
       """WITH tagged AS (
         |  SELECT lang,
         |    CASE WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90
@@ -1186,14 +1168,14 @@ object TrainingOps {
         |  round(count(*) / CAST(max(p.n_lang) AS DOUBLE), 6) AS share
         |FROM tagged t JOIN per p ON t.lang = p.lang
         |GROUP BY t.lang, t.split
-        |ORDER BY t.lang, t.split""".stripMargin,
+        |ORDER BY t.lang, t.split""".stripMargin),
 
-    "q_multimodal_binary" ->
+    Key("q_multimodal_binary", qMultimodalBinary,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS md5_hex,
         |  sha256(text) AS sha256_hex,
         |  substring(hex(encode(text)), 1, 8) AS head_hex
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)
   )
 }

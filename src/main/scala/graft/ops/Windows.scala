@@ -10,7 +10,7 @@ import core._
   * unique tiebreaker (event_id / orderkey / partkey) so that ranks,
   * ntiles and frames are identical across engines (SURVEY §5.3).
   */
-object Windows {
+object Windows extends Family {
 
   /** Per-customer order sequence by date. */
   def qWinRownumber(s: SparkSession, dir: String): DataFrame = {
@@ -345,25 +345,8 @@ object Windows {
       .orderBy($"user_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_win_streak" -> (qWinStreak _),
-    "q_win_gap_fill" -> (qWinGapFill _),
-    "q_win_sessionize" -> (qWinSessionize _),
-    "q_win_rownumber" -> (qWinRownumber _),
-    "q_win_rank" -> (qWinRank _),
-    "q_win_ntile" -> (qWinNtile _),
-    "q_win_lag_lead" -> (qWinLagLead _),
-    "q_scd2_intervals" -> (qScd2Intervals _),
-    "q_win_runsum" -> (qWinRunsum _),
-    "q_win_moving" -> (qWinMoving _),
-    "q_win_rangeframe" -> (qWinRangeframe _),
-    "q_win_firstlast" -> (qWinFirstlast _),
-    "q_win_distribution" -> (qWinDistribution _),
-    "q_win_topk_group" -> (qWinTopkGroup _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_scd2_intervals" ->
+  val keys: Seq[Key] = Seq(
+    Key("q_scd2_intervals", qScd2Intervals,
       """SELECT user_id, CAST(seq AS INTEGER) AS seq, value_c,
         |  valid_from, valid_to, (valid_to IS NULL) AS is_current
         |FROM (
@@ -374,9 +357,9 @@ object Windows {
         |    lead(ts) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS valid_to
         |  FROM events WHERE event_type = 'purchase')
-        |ORDER BY user_id, seq""".stripMargin,
+        |ORDER BY user_id, seq""".stripMargin),
 
-    "q_win_streak" ->
+    Key("q_win_streak", qWinStreak,
       """WITH numbered AS (
         |  SELECT user_id, event_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -393,9 +376,9 @@ object Windows {
         |  FROM islands)
         |SELECT user_id, event_type AS streak_type, len AS streak_len,
         |  first_id
-        |FROM ranked WHERE rn = 1 ORDER BY user_id""".stripMargin,
+        |FROM ranked WHERE rn = 1 ORDER BY user_id""".stripMargin),
 
-    "q_win_gap_fill" ->
+    Key("q_win_gap_fill", qWinGapFill,
       """SELECT user_id, event_id,
         |  CAST(round(value*100) AS BIGINT) AS v_c,
         |  coalesce(
@@ -404,9 +387,9 @@ object Windows {
         |      OVER (PARTITION BY user_id ORDER BY ts, event_id
         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
         |    -1) AS v_filled
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
 
-    "q_win_sessionize" ->
+    Key("q_win_sessionize", qWinSessionize,
       """WITH l AS (
         |  SELECT user_id, event_id, ts,
         |    CAST(date_diff('microseconds',
@@ -433,54 +416,54 @@ object Windows {
         |  CAST(max(date_diff('second', TIMESTAMP '1970-01-01', ts))
         |    - min(date_diff('second', TIMESTAMP '1970-01-01', ts))
         |    AS BIGINT) AS dur_sec
-        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_seq""".stripMargin,
+        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_seq""".stripMargin),
 
-    "q_win_rownumber" ->
+    Key("q_win_rownumber", qWinRownumber,
       """SELECT o_custkey, o_orderkey, o_orderdate,
         |  row_number() OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderdate, o_orderkey) AS rn
-        |FROM orders ORDER BY o_custkey, rn""".stripMargin,
+        |FROM orders ORDER BY o_custkey, rn""".stripMargin),
 
-    "q_win_rank" ->
+    Key("q_win_rank", qWinRank,
       """SELECT p_brand, p_partkey, p_size,
         |  rank() OVER (PARTITION BY p_brand ORDER BY p_size) AS rnk,
         |  dense_rank() OVER (PARTITION BY p_brand ORDER BY p_size) AS drnk
-        |FROM part ORDER BY p_brand, p_size, p_partkey""".stripMargin,
+        |FROM part ORDER BY p_brand, p_size, p_partkey""".stripMargin),
 
-    "q_win_ntile" ->
+    Key("q_win_ntile", qWinNtile,
       """SELECT c_custkey, CAST(round(c_acctbal*100) AS BIGINT) AS acctbal_c,
         |  ntile(4) OVER (ORDER BY CAST(round(c_acctbal*100) AS BIGINT),
         |                 c_custkey) AS quartile
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_win_lag_lead" ->
+    Key("q_win_lag_lead", qWinLagLead,
       """SELECT user_id, event_id,
         |  CAST(date_diff('second',
         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
         |    ts) AS BIGINT) AS gap_sec,
         |  lead(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id)
         |    AS next_id
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "q_win_runsum" ->
+    Key("q_win_runsum", qWinRunsum,
       """SELECT o_custkey, o_orderkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) OVER (
         |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS run_total_c
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
 
-    "q_win_moving" ->
+    Key("q_win_moving", qWinMoving,
       """SELECT user_id, event_id,
         |  round(CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT)
         |    / 100.0 / count(*) OVER w, 6) AS mov_avg
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "q_win_rangeframe" ->
+    Key("q_win_rangeframe", qWinRangeframe,
       """SELECT o_orderkey, o_orderstatus,
         |  strftime(o_orderdate, '%Y-%m') AS o_month,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c,
@@ -491,9 +474,9 @@ object Windows {
         |WINDOW w AS (PARTITION BY o_orderstatus, strftime(o_orderdate, '%Y-%m')
         |  ORDER BY CAST(round(o_totalprice*100) AS BIGINT)
         |  RANGE BETWEEN 100000 PRECEDING AND 100000 FOLLOWING)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_win_firstlast" ->
+    Key("q_win_firstlast", qWinFirstlast,
       """SELECT p_brand, p_partkey,
         |  CAST(round(p_retailprice*100) AS BIGINT) AS price_c,
         |  first_value(p_partkey) OVER w AS cheapest_key,
@@ -502,9 +485,9 @@ object Windows {
         |WINDOW w AS (PARTITION BY p_brand
         |  ORDER BY CAST(round(p_retailprice*100) AS BIGINT), p_partkey
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin),
 
-    "q_win_distribution" ->
+    Key("q_win_distribution", qWinDistribution,
       """SELECT p_brand, p_partkey,
         |  CAST(round(p_retailprice*100) AS BIGINT) AS price_c,
         |  cume_dist() OVER w AS cd,
@@ -516,9 +499,9 @@ object Windows {
         |FROM part
         |WINDOW w AS (PARTITION BY p_brand
         |  ORDER BY CAST(round(p_retailprice*100) AS BIGINT), p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin),
 
-    "q_win_topk_group" ->
+    Key("q_win_topk_group", qWinTopkGroup,
       """SELECT o_custkey, o_orderkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS total_c,
         |  row_number() OVER (PARTITION BY o_custkey
@@ -526,6 +509,6 @@ object Windows {
         |    o_orderkey ASC) AS rn
         |FROM orders
         |QUALIFY rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin
+        |ORDER BY o_custkey, rn""".stripMargin)
   )
 }

@@ -414,4 +414,34 @@ object core {
     */
   def r4(c: Column): Column = round(c, 4)
   def r6(c: Column): Column = round(c, 6)
+
+  /** One registered operator key: its name, its builder over a fixture
+    * dir, and its DuckDB oracle SQL (`None` for the declared no-oracle
+    * keys, whose results no DuckDB query reproduces).
+    */
+  final class Key private (val name: String,
+      val build: (SparkSession, String) => DataFrame,
+      val oracle: Option[String])
+
+  object Key {
+    def apply(name: String, build: (SparkSession, String) => DataFrame): Key =
+      new Key(name, build, None)
+    def apply(name: String, build: (SparkSession, String) => DataFrame,
+        oracle: String): Key = new Key(name, build, Some(oracle))
+  }
+
+  /** An operator family. `keys` registers each of its keys once;
+    * `queries` and `oracle` are derived from it. Declare `keys` below
+    * every val its SQL reads: an object initializer that reads a val
+    * declared further down gets `null`, and the SQL then says "null".
+    */
+  trait Family {
+    def keys: Seq[Key]
+
+    def queries: Map[String, (SparkSession, String) => DataFrame] =
+      keys.map(k => k.name -> k.build).toMap
+
+    def oracle: Map[String, String] =
+      keys.flatMap(k => k.oracle.map(k.name -> _)).toMap
+  }
 }

@@ -7,7 +7,8 @@ key is value-identical, the recorded oracle agreement transfers to
 this build without re-paying the ~75-min 100x DuckDB pass.
 
 Usage: python3 tools/dump_equal.py <dirA> <dirB> <out.json> [key ...]
-(default keys: every subdir of dirA present in both)
+(default keys: every key dir of either dump, dot-dirs such as
+.duckdb_spill skipped; a key missing on one side is a FAIL)
 """
 import json
 import sys
@@ -30,15 +31,17 @@ def main():
     a, b, out = Path(sys.argv[1]), Path(sys.argv[2]), Path(sys.argv[3])
     keys = sys.argv[4:]
     if not keys:
-        keys = sorted(d.name for d in a.iterdir()
-                      if d.is_dir() and (b / d.name).is_dir())
-    rows, n_fail = {}, 0
+        keys = sorted({d.name for side in (a, b) for d in side.iterdir()
+                       if d.is_dir() and not d.name.startswith(".")})
+    rows, n_fail, n_missing = {}, 0, 0
     for key in keys:
         pa, pb = a / key, b / key
         if not pa.is_dir() or not pb.is_dir():
             rows[key] = {"identical": False,
                          "why": f"missing: a={pa.is_dir()} b={pb.is_dir()}"}
             n_fail += 1
+            n_missing += 1
+            print(f"FAIL {key} (missing)", flush=True)
             continue
         try:
             da, db = canon(pd.read_parquet(pa)), canon(pd.read_parquet(pb))
@@ -54,9 +57,10 @@ def main():
               flush=True)
     doc = {"dir_a": str(a), "dir_b": str(b),
            "n_identical": len(rows) - n_fail, "n_fail": n_fail,
-           "keys": rows}
+           "n_missing": n_missing, "keys": rows}
     out.write_text(json.dumps(doc, indent=1) + "\n")
-    print(f"dump_equal: {len(rows) - n_fail} identical, {n_fail} fail")
+    print(f"dump_equal: {len(rows) - n_fail} identical, {n_fail} fail "
+          f"({n_missing} missing)")
     sys.exit(1 if n_fail else 0)
 
 

@@ -33,15 +33,8 @@ from pathlib import Path
 
 import pandas as pd
 
-from diff_oracle import compare, norm
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = norm(df)
-    if len(df.columns):
-        df = df.sort_values(by=list(df.columns), kind="mergesort")
-        df = df.reset_index(drop=True)
-    return df
+from diff_oracle import compare
+from dump_equal import canon
 
 
 def main():
