@@ -1273,8 +1273,8 @@ object TxLog {
             s"$op at $table read v$readVersion but ${gone.size} of its " +
             s"rewrite set no longer live at v$now (concurrent rewrite)")
       }
-      // overwrite/restore REPLACE schema by design (dropping columns
-      // is legal through them) — only additive ops re-merge
+      // overwrite/restore REPLACE schema by design (dropping columns is
+      // legal through them), compact logs none — only additive ops re-merge
       if (op == "append" || op == "upsert" || op == "delete" || op == "txn")
         sj = sj.map { js =>
           val incoming = DataType.fromJson(js).asInstanceOf[StructType]
@@ -2031,6 +2031,29 @@ object TxLog {
     */
   private[graft] val keyPruneLimit = 1024
 
+  /** Above this many keys already on the driver, [[keysPruner]] tests
+    * their [min, max] span instead of each key. It bounds only the
+    * per-file check (the runtime filter's `IN` values arrive this way),
+    * not the rows a rewrite collects, which [[keyPruneLimit]] bounds.
+    */
+  private val spanPruneAbove = 4096
+
+  /** The one key-set pruner, "may this file hold one of `keys`" for a
+    * file whose range for the key column is `cs` (`keys` in the stats
+    * domain, see [[statsValue]]): each key up to [[spanPruneAbove]]
+    * keys, above that their span, folded here once in [[lt]]'s order.
+    */
+  private[sources] def keysPruner(keys: IndexedSeq[Any]): ColStats => Boolean =
+    if (keys.length <= spanPruneAbove) cs => keys.exists(cs.mayHold)
+    else {
+      var mn = keys.head; var mx = keys.head
+      keys.tail.foreach { k =>
+        if (lt(k, mn).contains(true)) mn = k
+        if (lt(mx, k).contains(true)) mx = k
+      }
+      _.mayOverlap(mn, mx)
+    }
+
   /** A rewrite's remove keys after its one [[keyPruneLimit]] decision. */
   private sealed trait RemoveKeys
   /** At most keyPruneLimit non-null key rows: their distinct values,
@@ -2088,21 +2111,17 @@ object TxLog {
   /** Which live files COULD contain one of the update keys, decided
     * from footer stats alone — no data read. A file without stats for
     * `key` is conservatively a candidate. `keys` (when the update key
-    * set is small) prunes per-key; otherwise the update span prunes
-    * by range intersection.
+    * set is small) prunes through [[keysPruner]]; otherwise the update
+    * span prunes by range intersection.
     */
   private[graft] def pruneCandidates(snap: Snapshot, key: String,
                                      umin: Any, umax: Any,
-                                     keys: Option[Seq[Any]]): Vector[String] =
-    snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.colRange(key)) match {
-        case None => true
-        case Some(cs) => keys match {
-          case Some(ks) => ks.exists(cs.mayHold)
-          case None => cs.mayOverlap(umin, umax)
-        }
-      }
-    }
+                                     keys: Option[Seq[Any]]): Vector[String] = {
+    val mayHold = keys.fold((cs: ColStats) => cs.mayOverlap(umin, umax))(
+      ks => keysPruner(ks.toIndexedSeq))
+    snap.files.filter(f =>
+      snap.stats.get(f).flatMap(_.colRange(key)).forall(mayHold))
+  }
 
   /** The locate step, exposed for tests/probes: stats-prune to
     * candidate files, then scan ONLY those for the files that actually
@@ -2165,17 +2184,30 @@ object TxLog {
     val in = keys.collect { case few: FewKeys =>
       keyIn(key, few, frame.select(col(key)).schema.head.dataType)
     }.flatten
-    val matched = in match {
-      case Some(c) => frame.where(c).withColumn("_graft_file", input_file_name())
-      case None => frame.withColumn("_graft_file", input_file_name())
-        .join(remove.select(col(key)), Seq(key), "left_semi")
+    val touched = in match {
+      case Some(c) => filesHolding(candidates, frame.where(c))
+      case None => filesHolding(candidates, frame,
+        _.join(remove.select(col(key)), Seq(key), "left_semi"))
     }
-    val touched = matched
+    Located(candidates, touched, in)
+  }
+
+  /** The touched-file scan: the files of `files` (the files `rows` is
+    * read from) that hold a row of `rows`, kept by `keep` after each
+    * row is tagged with its file. One job: the tags are deduplicated
+    * per partition, not by a shuffle. Filter `rows` before passing it,
+    * not in `keep`: `input_file_name()` is nondeterministic, so
+    * Catalyst pushes no filter above the tag into the parquet scan.
+    * `keep` is for what must see the tag's input, the semi-join.
+    */
+  private[sources] def filesHolding(files: Vector[String], rows: DataFrame,
+      keep: DataFrame => DataFrame = identity): Vector[String] = {
+    val touched = keep(rows.withColumn("_graft_file", input_file_name()))
       .select(col("_graft_file")).as(Encoders.STRING)
       .mapPartitions(_.toSet.iterator)(Encoders.STRING)
       .collect().map(f => abs(uriPath(f)))
       .toSet
-    Located(candidates, snap.files.filter(f => touched.contains(abs(f))), in)
+    files.filter(f => touched.contains(abs(f)))
   }
 
   /** A Catalyst internal value (a literal's, or a collected key's) of
@@ -2185,15 +2217,21 @@ object TxLog {
     * unprunable type.
     */
   private[sources] def statsValue(v: Any, dt: DataType): Option[Any] =
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-           TimestampType | TimestampNTZType =>
-        Option(v).map(_.asInstanceOf[Number].longValue)
-      case FloatType | DoubleType =>
-        Option(v).map(_.asInstanceOf[Number].doubleValue)
-      case StringType => Option(v).map(_.toString)
-      case _ => None
-    }
+    toStatsDomain(dt).flatMap(m => Option(v).map(m))
+
+  /** Whether values of `dt` map into the stats domain ([[statsValue]]). */
+  private[sources] def statsType(dt: DataType): Boolean =
+    toStatsDomain(dt).isDefined
+
+  /** [[statsValue]]'s type list: the map of a non-null value of `dt`. */
+  private def toStatsDomain(dt: DataType): Option[Any => Any] = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType | TimestampNTZType =>
+      Some(_.asInstanceOf[Number].longValue)
+    case FloatType | DoubleType => Some(_.asInstanceOf[Number].doubleValue)
+    case StringType => Some(_.toString)
+    case _ => None
+  }
 
   /** External key values (V1 filter values) normalized to the stats
     * value domain (Long / Double / String); timestamps → micros, dates
@@ -2388,7 +2426,9 @@ object TxLog {
   /** Bin-pack the live files into `targetFiles` and swap the lists in
     * one metadata commit — data moves once, readers never block, and a
     * concurrent rewrite of a compacted file conflicts (the compact
-    * loses and can be retried).
+    * loses and can be retried). Content-neutral, so it commits no
+    * schema line: one that lost a publish race to ADD or RENAME
+    * COLUMN rebases without republishing the schema it read.
     *
     * `clusterBy` additionally RANGE-CLUSTERS the rewrite (range
     * partition + sort within partitions on the given columns): the
@@ -2413,7 +2453,7 @@ object TxLog {
     // `targetFiles` becomes the per-partition target
     val adds = stage(s, table, frame, partitionSpec(table, snap.version))
     commit(table, "compact", snap.version, adds,
-      snap.files.map(relative(table, _)), Some(frame.schema.json))
+      snap.files.map(relative(table, _)))
   }
 
   /** Z-ORDERED compaction: like `compact(clusterBy = …)` but laid out
@@ -2453,7 +2493,7 @@ object TxLog {
       .sortWithinPartitions(z)
     val adds = stage(s, table, frame, partitionSpec(table, snap.version))
     commit(table, "compact", snap.version, adds,
-      snap.files.map(relative(table, _)), Some(frame.schema.json))
+      snap.files.map(relative(table, _)))
   }
 
   /** Exact row count answered from LOG METADATA alone whenever every

@@ -6,7 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter}
@@ -16,7 +16,6 @@ import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predica
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.sql.sources.{Filter => V1Filter}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -303,19 +302,19 @@ class TxLogV2Table(val path: String, asOf: Option[Long])
 
 private[graft] object TxLogV2Util {
 
-  /** V1 filters → RESOLVED Catalyst predicates against `schema`, for
-    * pushing into the delegate parquet scan (row-group/page pruning).
-    * Resolution rides a throwaway LocalRelation analysis; anything
-    * untranslatable is simply not pushed (Spark re-applies every
-    * filter above the scan regardless).
+  /** Filter columns ([[TxLogRelation.toColumn]]) → RESOLVED Catalyst
+    * predicates against `schema`, for pushing into the delegate parquet
+    * scan (row-group/page pruning). Resolution rides a throwaway
+    * LocalRelation analysis; anything unresolvable is simply not pushed
+    * (Spark re-applies every filter above the scan regardless).
     */
-  def resolveFilters(spark: SparkSession, filters: Seq[V1Filter],
+  def resolveFilters(spark: SparkSession, filters: Seq[Column],
       schema: StructType): Seq[Expression] =
     if (filters.isEmpty) Nil
     else {
       val dummy = spark.createDataFrame(
         java.util.Collections.emptyList[Row](), schema)
-      filters.flatMap(TxLogRelation.toColumn).flatMap { c =>
+      filters.flatMap { c =>
         try dummy.where(c).queryExecution.analyzed match {
           case f: LogicalFilter => Some(f.condition)
           case _ => None
@@ -393,66 +392,19 @@ private[graft] object TxLogV2Util {
     disjoint.toDouble / (sorted.length - 1)
   }
 
-  /** Every column of a [[TxLog.normKey]]-mapped type whose pruning
-    * range ([[TxLog.FileStats.colRange]]: footer stats or partition
-    * tuple) is present in EVERY candidate file — the columns runtime
-    * filtering can actually skip on. Schema order.
+  /** Every column of a stats-domain type ([[TxLog.statsType]]) whose
+    * pruning range ([[TxLog.FileStats.colRange]]: footer stats or
+    * partition tuple) is present in EVERY candidate file — the columns
+    * runtime filtering can actually skip on. Schema order.
     */
   def coveredPruningColumns(snap: TxLog.Snapshot, schema: StructType,
-      candidates: Vector[String]): Seq[String] = {
-    import org.apache.spark.sql.types._
-    def normable(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType | DateType | TimestampType |
-           TimestampNTZType => true
-      case _ => false
-    }
+      candidates: Vector[String]): Seq[String] =
     schema.fields.iterator
-      .filter(f => normable(f.dataType))
+      .filter(f => TxLog.statsType(f.dataType))
       .map(_.name)
       .filter(c => candidates.nonEmpty && candidates.forall(f =>
         snap.stats.get(f).exists(_.colRange(c).isDefined)))
       .toSeq
-  }
-
-  /** Rewrite a V1 filter's attribute references through `rename`
-    * (logical → physical for the mapped delegate scan); None = an
-    * unsupported shape, simply not pushed (Spark re-applies every
-    * filter above the scan regardless).
-    */
-  def renameFilter(f: V1Filter, rename: String => String)
-      : Option[V1Filter] = {
-    import org.apache.spark.sql.sources._
-    f match {
-      case EqualTo(a, v)            => Some(EqualTo(rename(a), v))
-      case EqualNullSafe(a, v)      => Some(EqualNullSafe(rename(a), v))
-      case GreaterThan(a, v)        => Some(GreaterThan(rename(a), v))
-      case GreaterThanOrEqual(a, v) =>
-        Some(GreaterThanOrEqual(rename(a), v))
-      case LessThan(a, v)           => Some(LessThan(rename(a), v))
-      case LessThanOrEqual(a, v)    => Some(LessThanOrEqual(rename(a), v))
-      case In(a, vs)                => Some(In(rename(a), vs))
-      case IsNull(a)                => Some(IsNull(rename(a)))
-      case IsNotNull(a)             => Some(IsNotNull(rename(a)))
-      case StringStartsWith(a, v)   => Some(StringStartsWith(rename(a), v))
-      case StringEndsWith(a, v)     => Some(StringEndsWith(rename(a), v))
-      case StringContains(a, v)     => Some(StringContains(rename(a), v))
-      case And(l, r) => for { lc <- renameFilter(l, rename)
-                              rc <- renameFilter(r, rename) } yield And(lc, rc)
-      case Or(l, r)  => for { lc <- renameFilter(l, rename)
-                              rc <- renameFilter(r, rename) } yield Or(lc, rc)
-      case Not(c)    => renameFilter(c, rename).map(Not)
-      case _         => None
-    }
-  }
-
-  /** Above this many runtime IN-values, prune per-SPAN (the values'
-    * overall [min, max]) instead of per-value. The values are already
-    * on the driver, so the limit only bounds the per-file check; it is
-    * not [[TxLog.keyPruneLimit]], which bounds the rows a rewrite
-    * collects (1,024).
-    */
-  private val runtimeKeyLimit = 4096
 
   /** Compile one RUNTIME V2 predicate (the `IN (col, v1, …, vn)`
     * shape `translateRuntimeFilterV2` emits from an executed
@@ -462,8 +414,7 @@ private[graft] object TxLogV2Util {
     * compile to always-admit. Values arrive as CATALYST literals
     * (UTF8String for strings, epoch days/micros for
     * dates/timestamps) — mapped straight into the [[TxLog.statsValue]]
-    * comparison domain. Beyond [[runtimeKeyLimit]] values the pruner
-    * degrades to a span check (values' fold-min/max vs file range).
+    * comparison domain and pruned by [[TxLog.keysPruner]].
     */
   def compileRuntimePruner(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate)
@@ -482,24 +433,9 @@ private[graft] object TxLogV2Util {
         if (norm.isEmpty)
           // zero matching rows: no group holds a match, prune all
           return (_: Option[TxLog.FileStats]) => false
-        if (norm.length <= runtimeKeyLimit) {
-          fs => fs.flatMap(_.colRange(col)) match {
-            case None => true // no stats for this column: must read
-            case Some(cs) => norm.exists(cs.mayHold)
-          }
-        } else {
-          // span prune: fold the values' min/max once in the same
-          // total order the file ranges use
-          var mn = norm.head; var mx = norm.head
-          norm.tail.foreach { k =>
-            if (TxLog.lt(k, mn).contains(true)) mn = k
-            if (TxLog.lt(mx, k).contains(true)) mx = k
-          }
-          fs => fs.flatMap(_.colRange(col)) match {
-            case None => true
-            case Some(cs) => cs.mayOverlap(mn, mx)
-          }
-        }
+        val mayHold = TxLog.keysPruner(norm)
+        // no stats for this column: must read
+        fs => fs.flatMap(_.colRange(col)).forall(mayHold)
       case _ => admitAll // nested/complex reference: must read
     }
   }
@@ -532,29 +468,15 @@ class TxLogScanBuilder(spark: SparkSession, snap: TxLog.Snapshot,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = {
-    val survivors = snap.files.filter { f =>
-      val fs = snap.stats.get(f)
-      pushed.forall(TxLogRelation.admits(fs, _))
-    }
-    if (survivors.isEmpty) new TxLogEmptyScan(required, snap.version)
-    else {
-      // with stats-covered columns, also declare RUNTIME filter
-      // attributes so ordinary joins get dynamic file skipping (the
-      // star-join DPP shape; see TxLogRuntimeScan)
-      // attrs must come from the PRUNED schema: PartitionPruning
-      // resolves every declared attribute against the relation's
-      // (column-pruned) output and throws on a miss
-      val attrs = TxLogV2Util.coveredPruningColumns(snap, required,
-        survivors)
-      if (attrs.isEmpty)
-        new TxLogScan(spark, snap, tableSchema, survivors, required,
-          pushed.toSeq)
-      else
-        new TxLogRuntimeScan(spark, snap, tableSchema, survivors, required,
-          pushed.toSeq, attrs)
-    }
-  }
+  // with stats-covered columns, also declare RUNTIME filter attributes
+  // so ordinary joins get dynamic file skipping (the star-join DPP
+  // shape; see TxLogRuntimeScan). They must come from the PRUNED
+  // schema: PartitionPruning resolves every declared attribute against
+  // the relation's (column-pruned) output and throws on a miss
+  override def build(): Scan =
+    TxLogScan.over(spark, snap, tableSchema,
+      TxLogRelation.survivors(snap, pushed), required, pushed.toSeq,
+      TxLogV2Util.coveredPruningColumns(snap, required, _))
 }
 
 /** The txlog DSv2 data scan over `initial` (the files log-stats
@@ -585,7 +507,7 @@ class TxLogScan(spark: SparkSession, snap: TxLog.Snapshot,
     val physTable = mapping.physicalSchema(tableSchema)
     val b = GraftBridge.parquetScanBuilder(spark, files, physTable)
     GraftBridge.pushCatalystFilters(b, TxLogV2Util.resolveFilters(spark,
-      pushed.flatMap(TxLogV2Util.renameFilter(_, mapping.physical)), physTable))
+      pushed.flatMap(TxLogRelation.toColumn(_, mapping.physical)), physTable))
     b match {
       case r: SupportsPushDownRequiredColumns =>
         r.pruneColumns(mapping.physicalSchema(required))
@@ -663,6 +585,28 @@ class TxLogScan(spark: SparkSession, snap: TxLog.Snapshot,
   }
 }
 
+object TxLogScan {
+
+  /** The one scan choice over `files` of `snap`: an empty scan when no
+    * file is left, else the data scan, with runtime file skipping when
+    * `runtimeAttrs` (asked only for a non-empty file set) names any
+    * column. `onFilter` makes it a row-level group scan (see
+    * [[TxLogRuntimeScan]]).
+    */
+  def over(spark: SparkSession, snap: TxLog.Snapshot, tableSchema: StructType,
+      files: Vector[String], required: StructType, pushed: Seq[V1Filter],
+      runtimeAttrs: Vector[String] => Seq[String],
+      onFilter: Option[Vector[String] => Unit] = None): Scan =
+    if (files.isEmpty) new TxLogEmptyScan(required, snap.version)
+    else {
+      val attrs = runtimeAttrs(files)
+      if (attrs.isEmpty)
+        new TxLogScan(spark, snap, tableSchema, files, required, pushed)
+      else new TxLogRuntimeScan(spark, snap, tableSchema, files, required,
+        pushed, attrs, onFilter)
+    }
+}
+
 /** [[TxLogScan]] + RUNTIME file skipping (`SupportsRuntimeV2Filtering`):
   * the scan declares [[filterAttributes]], Spark hands the collected
   * values of a dynamic-pruning subquery to [[filter]] as `IN`
@@ -738,10 +682,10 @@ class TxLogEmptyScan(schema: StructType, version: Long)
 /** The group-based row-level operation behind SQL UPDATE / DELETE /
   * MERGE: groups are FILES. Spark pushes the command's condition into
   * [[GroupScanBuilder]]; candidate files come from log stats
-  * ([[TxLogRelation.admits]]) and are refined to the files that
-  * actually CONTAIN a matching row (one metadata-sized
-  * `input_file_name` distinct — the locate step of [[TxLog.upsert]]
-  * re-expressed for SQL). The scan then returns EVERY row of those
+  * ([[TxLogRelation.survivors]]) and are refined to the files that
+  * actually CONTAIN a matching row (the touched-file scan of
+  * [[TxLog.upsert]]'s locate step, [[TxLog.filesHolding]], re-expressed
+  * for SQL). The scan then returns EVERY row of those
   * groups (no row filters reach the reader — carry-over rows must
   * survive; Spark's rewrite applies the row-level semantics), the
   * replacement rows stage through the shared parquet write path, and
@@ -797,47 +741,27 @@ class TxLogRowLevelOperation(spark: SparkSession, path: String,
       required = requiredSchema
 
     override def build(): Scan = {
-      val candidates = snap.files.filter { f =>
-        cond.forall(TxLogRelation.admits(snap.stats.get(f), _))
-      }
+      val candidates = TxLogRelation.survivors(snap, cond)
+      val cols = cond.toSeq.flatMap(TxLogRelation.toColumn(_))
+      // rows matching the command condition ⊆ rows matching the pushed
+      // filters, so files with no filter-passing row hold no matches —
+      // dropping them from the groups is sound. readSnapshot renames
+      // to logical: the files store physical names, the condition
+      // references logical ones
       val groups =
-        if (cond.isEmpty || candidates.isEmpty) candidates
-        else {
-          val cols = cond.toSeq.flatMap(TxLogRelation.toColumn)
-          if (cols.isEmpty) candidates
-          else {
-            // rows matching the command condition ⊆ rows matching the
-            // pushed filters, so files with no filter-passing row hold
-            // no matches — dropping them from the groups is sound.
-            // readSnapshot renames to logical: the files store
-            // physical names, the condition references logical ones
-            val base = TxLogRelation.alignTo(
-              TxLog.readSnapshot(spark, snap.copy(files = candidates)),
-              tableSchema)
-            val touched = base.where(cols.reduce(_ && _))
-              .select(input_file_name()).distinct()
-              .collect().map(r => TxLog.abs(TxLog.uriPath(r.getString(0))))
-              .toSet
-            candidates.filter(f => touched.contains(TxLog.abs(f)))
-          }
-        }
+        if (cols.isEmpty || candidates.isEmpty) candidates
+        else TxLog.filesHolding(candidates, TxLogRelation.alignTo(
+          TxLog.readSnapshot(spark, snap.copy(files = candidates)),
+          tableSchema).where(cols.reduce(_ && _)))
       groupFiles = groups
-      if (groups.isEmpty) new TxLogEmptyScan(required, snap.version)
-      else {
-        // declare runtime group-filter attributes so Spark's
-        // RowLevelOperationRuntimeGroupFiltering narrows the groups
-        // for conditions it can NOT push as static filters — above
-        // all MERGE, whose ON condition references the source table
-        val runtimeAttrs =
-          TxLogV2Util.pruningAttributes(path, snap, required, groups)
-        if (runtimeAttrs.isEmpty)
-          // no stats-covered column anywhere: plain group scan (the
-          // rule would have nothing to collect values of)
-          new TxLogScan(spark, snap, tableSchema, groups, required, Nil)
-        else
-          new TxLogRuntimeScan(spark, snap, tableSchema, groups, required,
-            Nil, runtimeAttrs, Some(fs => groupFiles = fs))
-      }
+      // declare the runtime group-filter attribute so Spark's
+      // RowLevelOperationRuntimeGroupFiltering narrows the groups for
+      // conditions it can NOT push as static filters — above all
+      // MERGE, whose ON condition references the source table; with no
+      // stats-covered column it stays a plain group scan
+      TxLogScan.over(spark, snap, tableSchema, groups, required, Nil,
+        TxLogV2Util.pruningAttributes(path, snap, required, _),
+        Some(fs => groupFiles = fs))
     }
   }
 }

@@ -499,10 +499,7 @@ class TxLogRelation(override val sqlContext: SQLContext, path: String,
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
     val spark = sqlContext.sparkSession
-    val survivors = snap.files.filter { f =>
-      val fs = snap.stats.get(f)
-      filters.forall(TxLogRelation.admits(fs, _))
-    }
+    val survivors = TxLogRelation.survivors(snap, filters)
     val base =
       if (survivors.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -510,7 +507,7 @@ class TxLogRelation(override val sqlContext: SQLContext, path: String,
     // surviving old files may predate additively-evolved columns the
     // table schema (and requiredColumns) carry — read them as null
     val aligned = TxLogRelation.alignTo(base, schema)
-    val pushed = filters.flatMap(TxLogRelation.toColumn)
+    val pushed = filters.flatMap(TxLogRelation.toColumn(_))
     val filtered = pushed.foldLeft(aligned)(_.filter(_))
     val pruned =
       if (requiredColumns.isEmpty) filtered.select(lit(1)) // count(*)-style
@@ -559,6 +556,13 @@ object TxLogRelation {
       .foldLeft(df)((d, f) =>
         d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
+
+  /** The survivor filter: the live files of `snap` whose log stats
+    * [[admits]] every one of `filters`, in snapshot order.
+    */
+  private[graft] def survivors(snap: TxLog.Snapshot,
+                               filters: Array[Filter]): Vector[String] =
+    snap.files.filter(f => filters.forall(admits(snap.stats.get(f), _)))
 
   /** May a file with footer stats `fs` contain rows satisfying `f`?
     * `true` = must read (conservative: missing stats, unmappable
@@ -625,26 +629,28 @@ object TxLogRelation {
 
   /** Best-effort DSv1 Filter → Column translation; None = cannot push
     * (Spark still applies the filter itself). Covers the classes the
-    * parquet reader can use as row-group/page pruners.
+    * parquet reader can use as row-group/page pruners. `name` maps each
+    * attribute first (logical → physical for a mapped delegate scan).
     */
-  private[graft] def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case StringContains(a, v)     => Some(col(a).contains(v))
+  private[graft] def toColumn(f: Filter,
+      name: String => String = identity): Option[Column] = f match {
+    case EqualTo(a, v)            => Some(col(name(a)) === lit(v))
+    case EqualNullSafe(a, v)      => Some(col(name(a)) <=> lit(v))
+    case GreaterThan(a, v)        => Some(col(name(a)) > lit(v))
+    case GreaterThanOrEqual(a, v) => Some(col(name(a)) >= lit(v))
+    case LessThan(a, v)           => Some(col(name(a)) < lit(v))
+    case LessThanOrEqual(a, v)    => Some(col(name(a)) <= lit(v))
+    case In(a, vs)                => Some(col(name(a)).isin(vs.toIndexedSeq: _*))
+    case IsNull(a)                => Some(col(name(a)).isNull)
+    case IsNotNull(a)             => Some(col(name(a)).isNotNull)
+    case StringStartsWith(a, v)   => Some(col(name(a)).startsWith(v))
+    case StringEndsWith(a, v)     => Some(col(name(a)).endsWith(v))
+    case StringContains(a, v)     => Some(col(name(a)).contains(v))
     case And(l, r)                =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
+      for { lc <- toColumn(l, name); rc <- toColumn(r, name) } yield lc && rc
     case Or(l, r)                 =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case Not(c)                   => toColumn(c).map(not)
+      for { lc <- toColumn(l, name); rc <- toColumn(r, name) } yield lc || rc
+    case Not(c)                   => toColumn(c, name).map(not)
     case _                        => None
   }
 }

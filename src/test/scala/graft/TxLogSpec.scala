@@ -1235,6 +1235,63 @@ class TxLogSpec extends SparkSuite {
       .collect().toSet == Set(1L -> "a"))
   }
 
+  /** Runs `body` with `race` committed just ahead of `body`'s first
+    * commit publish, at the same version: that publish loses and
+    * `body`'s commit rebases over `race`'s.
+    */
+  private def losingFirstPublish(race: => Unit)(body: => Unit): Unit = {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    TxLog.io = new graft.sources.TxLogIo {
+      private val base = graft.sources.LocalTxLogIo
+      override def exists(p: String) = base.exists(p)
+      override def isDirectory(p: String) = base.isDirectory(p)
+      override def listNames(d: String) = base.listNames(d)
+      override def readLines(p: String) = base.readLines(p)
+      override def readString(p: String) = base.readString(p)
+      override def mtimeMillis(p: String) = base.mtimeMillis(p)
+      override def deleteIfExists(p: String) = base.deleteIfExists(p)
+      override def replace(tg: String, b: Array[Byte]) = base.replace(tg, b)
+      override def putIfAbsent(tg: String, b: Array[Byte]) = {
+        if (tg.endsWith(".commit") && armed.getAndSet(false)) race
+        base.putIfAbsent(tg, b)
+      }
+    }
+    try body finally TxLog.io = graft.sources.LocalTxLogIo
+  }
+
+  test("a compaction that loses its publish to ADD COLUMNS keeps the " +
+       "added column") {
+    val t = freshTable()
+    TxLog.append(spark, t, mk(1L -> "a").coalesce(1))
+    TxLog.append(spark, t, mk(2L -> "b").coalesce(1))
+    losingFirstPublish(TxLog.addColumns(t, Seq(
+      org.apache.spark.sql.types.StructField("extra",
+        org.apache.spark.sql.types.StringType, nullable = true)))) {
+      assert(TxLog.compact(spark, t) == 4L, "compaction rebases past v3")
+    }
+    assert(TxLog.snapshot(t).files.size == 1)
+    assert(TxLog.read(spark, t).columns.toSeq == Seq("id", "v", "extra"),
+      "compaction must not republish its pre-race schema line")
+    assert(rows(TxLog.read(spark, t)) == Set(1L -> "a", 2L -> "b"))
+  }
+
+  test("a compaction that loses its publish to RENAME COLUMN keeps the " +
+       "new name in the schema line") {
+    val t = freshTable()
+    TxLog.append(spark, t, mk(1L -> "a").coalesce(1))
+    TxLog.append(spark, t, mk(2L -> "b").coalesce(1))
+    losingFirstPublish(TxLog.renameColumn(t, "v", "y")) {
+      assert(TxLog.compact(spark, t) == 4L, "compaction rebases past v3")
+    }
+    val snap = TxLog.snapshot(t)
+    assert(snap.files.size == 1)
+    assert(snap.schema.map(_.fieldNames.toSeq).contains(Seq("id", "y")),
+      s"the logged schema must keep the rename: ${snap.schema}")
+    assert(TxLog.read(spark, t).columns.toSeq == Seq("id", "y"))
+    assert(TxLog.read(spark, t).select("id", "y").as[(Long, String)]
+      .collect().toSet == Set(1L -> "a", 2L -> "b"))
+  }
+
   test("partition columns are rename/drop-protected; the mapping " +
        "survives a checkpoint") {
     val t = freshTable()

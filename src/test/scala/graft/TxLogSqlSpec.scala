@@ -94,6 +94,31 @@ class TxLogSqlSpec extends SparkSuite {
     assert(cand.size == 1, s"rewritten file must carry stats: $cand")
   }
 
+  test("SQL DELETE and UPDATE with a pushable condition each run 4 jobs") {
+    // three files with disjoint id ranges, one append each
+    def threeFiles(): String = {
+      val t = freshName()
+      spark.sql(s"CREATE TABLE txsql.$t (id BIGINT, v STRING)")
+      Seq(Seq(1L -> "a", 10L -> "b"), Seq(11L -> "c", 20L -> "d"),
+          Seq(21L -> "e", 30L -> "f")).foreach { batch =>
+        TxLog.append(spark, s"$wh/$t", batch.toDF("id", "v").coalesce(1))
+      }
+      t
+    }
+    val d = threeFiles()
+    assert(JobProbe.jobs(spark, "sql-delete") {
+      spark.sql(s"DELETE FROM txsql.$d WHERE id = 11"); ()
+    } == 4)
+    assert(rows(d) == Set(1L -> "a", 10L -> "b", 20L -> "d", 21L -> "e",
+      30L -> "f"))
+    val u = threeFiles()
+    assert(JobProbe.jobs(spark, "sql-update") {
+      spark.sql(s"UPDATE txsql.$u SET v = 'z' WHERE id = 21"); ()
+    } == 4)
+    assert(rows(u) == Set(1L -> "a", 10L -> "b", 11L -> "c", 20L -> "d",
+      21L -> "z", 30L -> "f"))
+  }
+
   test("MERGE INTO upsert semantics match the library twin") {
     val t = freshName(); val lib = tempDir("graft_txsql_lib2").toString
     spark.sql(s"CREATE TABLE txsql.$t (id BIGINT, v STRING)")
@@ -536,6 +561,42 @@ class TxLogSqlSpec extends SparkSuite {
     spark.sql(s"REFRESH TABLE txsql.$t")
     assert(spark.sql(s"SELECT * FROM txsql.$t").columns.toSeq == Seq("id"))
     assert(spark.sql(s"SELECT * FROM txsql.$t").count() == 3)
+  }
+
+  test("runtime key-set pruner: per key up to 4,096 IN values, by span " +
+       "above, conservative otherwise") {
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import graft.sources.TxLogV2Util
+    def in(vs: Any*): Predicate = new Predicate("IN",
+      (Expressions.column("id") +: vs.map(v => Expressions.literal(v): Expression))
+        .toArray)
+    // id ranges [0, 9], [100, 109], [200, 209], [10000, 10009], and a
+    // file with no id stats
+    val files = Seq(0L, 100L, 200L, 10000L).map(lo => Some(TxLog.FileStats(
+      10, Map("id" -> TxLog.ColStats(lo, lo + 9))))) :+
+      Some(TxLog.FileStats(10, Map.empty))
+    def admitted(p: Predicate): Seq[Int] = {
+      val prune = TxLogV2Util.compileRuntimePruner(p)
+      files.indices.filter(i => prune(files(i)))
+    }
+    assert(admitted(in(5L, 205L)) == Seq(0, 2, 4))
+    // 4,096 values, none in [100, 109]: per key drops that file
+    val few = (0L until 100L) ++ (110L until 4106L)
+    assert(few.size == 4096)
+    assert(admitted(in(few: _*)) == Seq(0, 2, 4))
+    // one more value: the span [0, 4106] admits a superset
+    val spanned = admitted(in(few :+ 4106L: _*))
+    assert(spanned == Seq(0, 1, 2, 4))
+    assert(Seq(0, 2, 4).forall(spanned.contains))
+    // an empty IN matches no row: every file goes, statless ones too
+    assert(admitted(in()) == Nil)
+    // a null or unmappable literal admits every file
+    assert(admitted(in(5L, null)) == files.indices)
+    assert(admitted(in(true)) == files.indices)
+    // any other predicate admits everything
+    assert(admitted(new Predicate("=", Array[Expression](
+      Expressions.column("id"), Expressions.literal(5L)))) == files.indices)
   }
 
   test("TRUNCATE TABLE: one commit, schema survives, history travels") {

@@ -3,7 +3,8 @@
 # TxLogMirror tools — same classpath and JVM flags as the sbt-forked
 # run (build.sbt), minus sbt's ~40 s startup and [info] prefixes.
 # Compile first (`sbt -batch compile`); this runs whatever is in
-# target/scala-2.13/classes.
+# target/scala-2.13/classes, with src/main/resources (the txlog
+# DataSourceRegister service file, which compile does not copy).
 #
 #   tools/run_direct.sh bench                # graft.Bench (env-driven)
 #   tools/run_direct.sh verify <sf> <out> [keys...]
@@ -35,5 +36,5 @@ exec java $ADDOPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${EXTRA_JVM:-} \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:$REPO/src/main/resources:/opt/spark/jars/*" \
   "$MAIN" "$@"

@@ -24,7 +24,7 @@ cd "$GATE_TREE"
 
 # the Spark jars directory the build links against (build.sbt)
 SPARK_JARS="${SPARK_JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' build.sbt)}"
-CP="target/scala-2.13/classes:target/scala-2.13/test-classes:$SPARK_JARS/*"
+CP="target/scala-2.13/classes:src/main/resources:target/scala-2.13/test-classes:$SPARK_JARS/*"
 V10="/tmp/v10x_r$ROUND"
 V100="/tmp/v100x_r$ROUND"
 
